@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
 
 /** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line with per-query wall seconds, COLD and WARM.
@@ -43,28 +44,42 @@ import org.apache.spark.sql.SparkSession
   * — a property of the fresh benchmark JVM, not of the plan.
   */
 object Bench {
+  /** One timed execution + the JVM-counter deltas it spanned. */
+  final case class Timing(sec: Double, gcMs: Long, cgN: Long, jitMs: Long)
+
+  // JVM-level counters: GC time/count, whole-stage-codegen compile
+  // count, and TOTAL JIT (C1+C2) compilation time — the last is what
+  // distinguishes "the solver loop ran interpreted while C2 caught up"
+  // from a genuinely expensive plan.
+  private def jvmStats(): (Long, Long, Long, Long) = {
+    import scala.jdk.CollectionConverters._
+    val gc = java.lang.management.ManagementFactory
+      .getGarbageCollectorMXBeans.asScala
+    val cg = org.apache.spark.metrics.source.CodegenMetrics
+    val jit = Option(java.lang.management.ManagementFactory
+      .getCompilationMXBean).filter(_.isCompilationTimeMonitoringSupported)
+      .map(_.getTotalCompilationTime).getOrElse(0L)
+    (gc.map(_.getCollectionTime).sum, gc.map(_.getCollectionCount).sum,
+      cg.METRIC_COMPILATION_TIME.getCount, jit)
+  }
+
+  /** Builds and fully executes one query: its [[Timing]], or the exception
+    * text when it throws — a failed execution is never a timing. */
+  def timeOnce(spark: SparkSession, sfDir: String,
+               fn: (SparkSession, String) => DataFrame): Either[String, Timing] = {
+    val (g0, _, c0, j0) = jvmStats()
+    val t0 = System.nanoTime()
+    try {
+      fn(spark, sfDir).queryExecution.toRdd.count()
+      val sec = (System.nanoTime() - t0) / 1e9
+      val (g1, _, c1, j1) = jvmStats()
+      Right(Timing(sec, g1 - g0, c1 - c0, j1 - j0))
+    } catch { case e: Throwable => Left(e.toString) }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // A/B knob: SPARK_GRAFT_EXTENSIONS=1 injects graft.GraftExtensions the
-    // way a production spark-submit would, to measure the injection's cost
-    // (a session-build-time function-registry insert) against the default
-    // no-extensions session the driver benchmarks.
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // The generated-class cache defaults to 100 entries; a 130+-query
-      // registry evicts everything between the cold and warm passes, so
-      // "warm" numbers were re-paying janino compilation. Static conf —
-      // must be set before the first session is built (fine here: Bench
-      // owns the JVM).
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-    val spark = (if (sys.env.get("SPARK_GRAFT_EXTENSIONS").exists(_.nonEmpty))
-      builder.config("spark.sql.extensions", "graft.GraftExtensions")
-    else builder).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     // Warm up the session (JVM, codegen, file listing) outside any query's
     // timing window.
     spark.range(1000).selectExpr("sum(id)").collect()
@@ -74,34 +89,6 @@ object Bench {
     val dengMetrics = graft.functions.Deng2020.attachMetrics(spark)
     val memoStats = graft.functions.IwFull.attachMetrics(spark) ++
       graft.functions.QfmFull.attachMetrics(spark)
-
-    // JVM-level counters: GC time/count, whole-stage-codegen compile
-    // count, and TOTAL JIT (C1+C2) compilation time — the last is what
-    // distinguishes "the solver loop ran interpreted while C2 caught up"
-    // from a genuinely expensive plan.
-    def jvmStats(): (Long, Long, Long, Long) = {
-      import scala.jdk.CollectionConverters._
-      val gc = java.lang.management.ManagementFactory
-        .getGarbageCollectorMXBeans.asScala
-      val cg = org.apache.spark.metrics.source.CodegenMetrics
-      val jit = Option(java.lang.management.ManagementFactory
-        .getCompilationMXBean).filter(_.isCompilationTimeMonitoringSupported)
-        .map(_.getTotalCompilationTime).getOrElse(0L)
-      (gc.map(_.getCollectionTime).sum, gc.map(_.getCollectionCount).sum,
-        cg.METRIC_COMPILATION_TIME.getCount, jit)
-    }
-
-    /** One timed execution + the JVM-counter deltas it spanned. */
-    final case class Timing(sec: Double, gcMs: Long, cgN: Long, jitMs: Long)
-    def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Timing = {
-      val (g0, _, c0, j0) = jvmStats()
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).queryExecution.toRdd.count() }
-      catch { case _: Throwable => -1L }
-      val sec = (System.nanoTime() - t0) / 1e9
-      val (g1, _, c1, j1) = jvmStats()
-      Timing(sec, g1 - g0, c1 - c0, j1 - j0)
-    }
 
     // fO2 formulation auto-decisions (memo vs dedup — Fo2Dedup.choose):
     // which regime each probed input landed in, with the probe estimates
@@ -139,8 +126,21 @@ object Bench {
         .map(_.split(",").toSet)
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => onlyQ.forall(_.contains(n)) }
+    // A failed execution is logged and left out of every map and total;
+    // its query is listed under `failed` in both JSON lines.
+    val failed = mutable.LinkedHashSet.empty[String]
+    def sweep(qs: Seq[(String, (SparkSession, String) => DataFrame)]): Seq[(String, Timing)] =
+      qs.flatMap { case (name, fn) =>
+        timeOnce(spark, sfDir, fn) match {
+          case Right(t) => Some(name -> t)
+          case Left(err) =>
+            System.err.println(s"[bench] $name failed: $err")
+            failed += name
+            None
+        }
+      }
     val s0 = jvmStats()
-    val cold = ordered.map { case (name, fn) => name -> timeOnce(fn) }
+    val cold = sweep(ordered)
     val coldDiag = passDiag("cold pass", s0)
     // Warm = per-query MINIMUM of two post-cold passes. One warm pass is
     // at the mercy of container contention — the r10 driver run timed
@@ -150,14 +150,14 @@ object Bench {
     // already use; two passes bound the added wall cost at one extra
     // registry sweep.
     val s1 = jvmStats()
-    val warm1 = ordered.map { case (name, fn) => name -> timeOnce(fn) }
+    val warm1 = sweep(ordered)
     val warmDiag = passDiag("warm pass 1", s1)
     val s2 = jvmStats()
-    val warm2 = ordered.map { case (name, fn) => name -> timeOnce(fn) }
+    val warm2 = sweep(ordered)
     val warm2Diag = passDiag("warm pass 2", s2)
-    val warmMin2 = warm1.zip(warm2).map { case ((n, a), (_, b)) =>
-      n -> (if (a.sec <= b.sec) a else b)
-    }
+    val bestWarm = (warm1 ++ warm2).groupBy(_._1)
+      .map { case (n, ts) => n -> ts.map(_._2).minBy(_.sec) }
+    val warmMin2 = ordered.flatMap { case (n, _) => bestWarm.get(n).map(n -> _) }
     // Sanity flag at ANY magnitude: on a JIT-warmed JVM the best-of-2
     // warm can only beat cold, so warm > cold + margin means every warm
     // pass of that query ran under contention (the r12 blind spot: the
@@ -166,7 +166,7 @@ object Bench {
     // absorbs timer noise on par-speed queries.
     val coldByName = cold.toMap
     def inverted(n: String, w: Timing): Boolean =
-      w.sec > coldByName(n).sec * 1.05 + 0.2
+      coldByName.get(n).exists(c => w.sec > c.sec * 1.05 + 0.2)
     val flagged = warmMin2.collect { case (n, w) if inverted(n, w) => n }
     // Self-healing: re-time the flagged queries at session end (the
     // contention window has usually moved by then) and take the overall
@@ -179,15 +179,17 @@ object Bench {
         System.err.println(s"[bench] warm>cold inversions, re-timing at " +
           s"session end: ${flagged.mkString(",")}")
         val byName = ordered.toMap
-        flagged.map { n =>
-          val t = (1 to 2).map(_ => timeOnce(byName(n))).minBy(_.sec)
-          System.err.println(f"[bench] re-timed $n: ${t.sec}%.3fs")
-          n -> t
+        flagged.flatMap { n =>
+          sweep(Seq.fill(2)(n -> byName(n))).map(_._2).minByOption(_.sec).map { t =>
+            System.err.println(f"[bench] re-timed $n: ${t.sec}%.3fs")
+            n -> t
+          }
         }.toMap
       }
     val warm = warmMin2.map { case (n, w) =>
       n -> retried.get(n).filter(_.sec < w.sec).getOrElse(w)
     }
+    val warmByName = warm.toMap
     val warmAnomalies = warm.collect { case (n, w) if inverted(n, w) => n }
     if (warmAnomalies.nonEmpty)
       System.err.println(s"[bench] WARM-ANOMALY (best warm of 2+2 passes " +
@@ -204,8 +206,7 @@ object Bench {
     // cold with flagged queries replaced by warm + their measured
     // jit+gc — the contention-robust headline companion.
     val coldAnomalies = warm.collect {
-      case (n, w) if {
-        val c = coldByName(n)
+      case (n, w) if coldByName.get(n).exists { c =>
         val gap = c.sec - w.sec
         gap > 2.0 && (c.jitMs + c.gcMs) / 1000.0 < 0.5 * gap
       } => n
@@ -215,38 +216,26 @@ object Bench {
         s"covered by jit+gc; treat these cold numbers as contention): " +
         coldAnomalies.mkString(","))
     val coldAnomalySet = coldAnomalies.toSet
-    val totalColdExplained = warm.map { case (n, w) =>
-      val c = coldByName(n)
-      if (coldAnomalySet(n)) w.sec + (c.jitMs + c.gcMs) / 1000.0 else c.sec
+    val totalColdExplained = cold.map { case (n, c) =>
+      if (coldAnomalySet(n)) warmByName(n).sec + (c.jitMs + c.gcMs) / 1000.0
+      else c.sec
     }.sum
-    // Outlier chase (round-7 verdict): SPARK_GRAFT_REBENCH=q_a,q_b times
-    // the named queries twice more at the END of the session — if a cold/
-    // warm number was session noise (GC, codegen churn), these two extra
-    // timings expose it without touching the comparable cold/warm protocol.
-    for (names <- sys.env.get("SPARK_GRAFT_REBENCH").filter(_.nonEmpty)) {
-      val pick = names.split(",").toSet
-      val s2 = jvmStats()
-      for ((name, fn) <- ordered if pick(name); i <- 1 to 2)
-        System.err.println(f"[bench] rebench $name #$i: ${timeOnce(fn).sec}%.3fs")
-      passDiag("rebench", s2)
-    }
     // Per-query cold diagnosis for the slowest cold queries: the JVM
     // deltas each one spanned, next to its warm time. These carry the
     // explanation of a driver-session cold spike INSIDE the artifact.
-    val warmByName = warm.toMap
     val slowDiag = cold.sortBy(-_._2.sec).take(8).map { case (name, t) =>
       val w = warmByName.get(name).map(_.sec).getOrElse(-1.0)
       f"""{"q":"$name","sec":${t.sec}%.3f,"warm_sec":$w%.3f,""" +
         f""""gc_s":${t.gcMs / 1000.0}%.1f,"jit_s":${t.jitMs / 1000.0}%.1f,""" +
         f""""codegen_compiles":${t.cgN}}"""
     }.mkString("[", ",", "]")
+    def jsonList(xs: Iterable[String]): String =
+      xs.map("\"" + _ + "\"").mkString("[", ",", "]")
     val diag =
       s"""{"cold":$coldDiag,"warm":$warmDiag,"warm2":$warm2Diag,""" +
         s""""warm_protocol":"per-query min of 2 post-cold passes",""" +
-        s""""warm_anomalies":${warmAnomalies.map("\"" + _ + "\"")
-          .mkString("[", ",", "]")},""" +
-        s""""cold_anomalies":${coldAnomalies.map("\"" + _ + "\"")
-          .mkString("[", ",", "]")},""" +
+        s""""warm_anomalies":${jsonList(warmAnomalies)},""" +
+        s""""cold_anomalies":${jsonList(coldAnomalies)},""" +
         f""""total_cold_explained":$totalColdExplained%.3f,""" +
         s""""caches":${cacheJson()},""" +
         s""""fo2_decisions":${fo2DecisionsJson()},""" +
@@ -259,7 +248,7 @@ object Bench {
     val total = cold.map(_._2.sec).sum
     val totalWarm = warm.map(_._2.sec).sum
     val line =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":${jsonMap(cold)},"total_warm":$totalWarm%.3f,"queries_warm":${jsonMap(warm)},"diag":$diag,"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":${jsonMap(cold)},"total_warm":$totalWarm%.3f,"queries_warm":${jsonMap(warm)},"diag":$diag,"failed":${jsonList(failed)},"sf":"$sfDir"}"""
     // full per-query map (cold + warm) as the sole content of a known file
     try java.nio.file.Files.writeString(java.nio.file.Path.of("BENCH_LAST.json"), line)
     catch { case _: Throwable => () }
@@ -279,7 +268,7 @@ object Bench {
       kept += 1
     }
     val compact =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":{${entries.toString}},"queries_omitted":${cold.size - kept},"queries_full":"BENCH_LAST.json","total_warm":$totalWarm%.3f,"total_cold_explained":$totalColdExplained%.3f,"n_queries":${cold.size},"pass_diag":{"cold":$coldDiag,"warm":$warmDiag},"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":{${entries.toString}},"queries_omitted":${cold.size - kept},"queries_full":"BENCH_LAST.json","total_warm":$totalWarm%.3f,"total_cold_explained":$totalColdExplained%.3f,"n_queries":${cold.size},"pass_diag":{"cold":$coldDiag,"warm":$warmDiag},"failed":${jsonList(failed)},"sf":"$sfDir"}"""
     // Stop Spark BEFORE printing so shutdown chatter (block-manager /
     // context-cleaner log lines) cannot land after the JSON: the harness
     // parses the LAST stdout line, so these two prints must be final.

@@ -1,59 +1,53 @@
 package graft
 import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.execution.FormattedMode
+import java.nio.file.{Files, Path, Paths}
 
-/** Dev tool: write `.explain("formatted")` of every registered query to
-  * <outDir>/<name>_<tag>.txt, plus a one-line-per-query summary
-  * (exchange count, join operators, scan count) to <outDir>/_summary_<tag>.tsv.
-  * Not part of the driver contract — used by the optimization rounds to
-  * capture before/after plan evidence (guide §1 / §7.2).
+/** Dev tool, not part of the driver contract: the plan of every registered
+  * query (or of the named ones) to `<outDir>/<name>_<mode>.txt`, and one
+  * [[PlanShape]] row per query to `<outDir>/_summary_<mode>.tsv`.
+  *
+  *  - `initial` plans only: the plan shipped to the scheduler.
+  *  - `runtime` first executes the query (`toRdd.count()`) and records the
+  *    plan after adaptive execution, where `real` counts the materialised
+  *    shuffle exchanges and `reused` the ones served by exchange reuse.
+  *
+  * {{{runMain graft.DumpPlans <sfDir> <outDir> <initial|runtime> [q_a,q_b]}}}
   */
 object DumpPlans {
+  private val Modes: Set[String] = Set("initial", "runtime")
+
   def main(args: Array[String]): Unit = {
-    val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val outDir = if (args.length > 1) args(1) else "plans/r15"
-    val tag = if (args.length > 2) args(2) else "before"
-    val only: Option[Set[String]] =
-      if (args.length > 3) Some(args(3).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-    val rows = new StringBuilder
-    SparkEntry.queries.toSeq.sortBy(_._1)
+    require(args.length >= 3 && Modes(args(2)),
+      "usage: DumpPlans <sfDir> <outDir> <initial|runtime> [q_a,q_b]")
+    val spark = Sessions.local()
+    try dump(spark, args(0), args(1), args(2), args.lift(3).map(_.split(",").toSet))
+    finally spark.stop()
+  }
+
+  /** Writes the plans and the summary; returns the summary's path. A query
+    * that fails to build, plan or run gets an `ERROR` row. */
+  def dump(spark: SparkSession, sfDir: String, outDir: String, mode: String,
+           only: Option[Set[String]] = None): Path = {
+    require(Modes(mode), s"mode must be one of ${Modes.mkString("|")}, got $mode")
+    Files.createDirectories(Paths.get(outDir))
+    val rows = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-      .foreach { case (name, fn) =>
+      .map { case (name, fn) =>
         try {
           val df = fn(spark, sfDir)
-          val plan = df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-          Files.writeString(Paths.get(s"$outDir/${name}_$tag.txt"), plan)
-          def cnt(p: String) = p.r.findAllIn(plan).length
-          val ex = cnt("\\bExchange\\b")
-          val smj = cnt("\\bSortMergeJoin\\b")
-          val bhj = cnt("\\bBroadcastHashJoin\\b")
-          val shj = cnt("\\bShuffledHashJoin\\b")
-          val bnl = cnt("\\bBroadcastNestedLoopJoin\\b")
-          val cart = cnt("\\bCartesianProduct\\b")
-          val scans = cnt("Scan parquet")
-          val sorts = cnt("\\bSort \\[")
-          val wins = cnt("\\bWindow\\b")
-          val aggs = cnt("\\bHashAggregate\\b") + cnt("\\bObjectHashAggregate\\b") +
-            cnt("\\bSortAggregate\\b")
-          rows.append(s"$name\tex=$ex\tsmj=$smj\tbhj=$bhj\tshj=$shj\tbnl=$bnl" +
-            s"\tcart=$cart\tscan=$scans\tsort=$sorts\twin=$wins\tagg=$aggs\n")
-          System.err.println(s"[plans] $name ok (ex=$ex)")
+          if (mode == "runtime") df.queryExecution.toRdd.count()
+          Files.writeString(Paths.get(outDir, s"${name}_$mode.txt"),
+            df.queryExecution.explainString(FormattedMode))
+          val row = s"$name\t${PlanShape.of(df).tsv}"
+          System.err.println(s"[plans] $row")
+          row
         } catch { case e: Throwable =>
-          rows.append(s"$name\tERROR\t${e.getMessage}\n")
-          System.err.println(s"[plans] $name failed: ${e.getMessage}")
+          System.err.println(s"[plans] $name failed: $e")
+          s"$name\tERROR\t${e.toString.linesIterator.nextOption().getOrElse("")}"
         }
       }
-    Files.writeString(Paths.get(s"$outDir/_summary_$tag.tsv"), rows.toString)
-    spark.stop()
+    Files.writeString(Paths.get(outDir, s"_summary_$mode.tsv"),
+      rows.map(_ + "\n").mkString)
   }
 }

@@ -115,7 +115,7 @@ object Bloom {
     Array.tabulate(a.length)(i => a(i) | b(i))
   }
 
-  /** Probe `docs` against a built filter: per document, the count of its
+  /** Look `docs` up in a built filter: per document, the count of its
     * distinct shingles whose every bit is set, and the contaminated flag.
     * Shuffle-free codegen'd projection; works unchanged on a streaming
     * DataFrame (the words array is a plan constant).

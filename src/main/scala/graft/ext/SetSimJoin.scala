@@ -52,15 +52,17 @@ object SetSimJoin {
     // partitioning) instead of re-running scan+explode+its own _id
     // exchange as an independent corpus subtree.
     //
-    // ONE materialised token table (guide §8 / the SpanDedup precedent):
-    // the token-df aggregate branches off BELOW any exchange, so without
-    // an anchor the scan + tokenize + shingle hashing (the operator's
-    // dominant per-row cost) ran once per consumer — the r16 runtime
-    // audit showed 2 Generates / 2 scans in the final plan. The explicit
-    // doc-keyed exchange carries (_id, _n, _tok) longs only, is the
-    // runtime reuse anchor for the df branch, AND already satisfies the
-    // rank window's required partitioning, so net exchange count is
-    // unchanged while the heavy hashing runs once.
+    // The explicit doc-keyed exchange carries (_id, _n, _tok) longs only
+    // and already satisfies the rank window's required partitioning, so
+    // it adds no exchange to the ranked chain; the prefix and set-table
+    // consumers reuse it at runtime. It does NOT anchor the token-df
+    // branch: that branch needs only (_id, _tok), column pruning drops
+    // _n from its copy of the exchange, and the two copies are no longer
+    // canonically equal. The AQE-final plan (DumpPlans runtime, sf0.001)
+    // shows one scan, shared through the reused scan-floor exchange, but
+    // gen=2: the shingle hashing + explode run once per branch, and the
+    // explode's inferred non-empty filter, pushed below the floor,
+    // hashes each doc a third time.
     val spark = docs.sparkSession
     val nPart = math.max(spark.sparkContext.defaultParallelism,
       spark.sessionState.conf.numShufflePartitions)
@@ -139,9 +141,9 @@ object SetSimJoin {
     require(threshold > 0 && threshold <= 1,
       s"threshold must be in (0, 1], got $threshold")
     // Same single-window restructure as [[jaccardJoin]]: _n rides the
-    // explode, the set table derives from the ranked chain — and the same
-    // doc-keyed anchor exchange so the token-df branch reuses ONE
-    // scan + shingle-hashing pass instead of re-running it.
+    // explode, the set table derives from the ranked chain, and the same
+    // doc-keyed exchange — with the same runtime shape: one shared scan,
+    // but the token-df branch hashes and explodes its own copy (gen=2).
     val spark = docs.sparkSession
     val nPart = math.max(spark.sparkContext.defaultParallelism,
       spark.sessionState.conf.numShufflePartitions)

@@ -108,8 +108,8 @@ object Fo2Dedup {
   /** The probe's LocalLimit only bounds its cost when the input is
     * scan-shaped: narrow operators over a leaf stop reading after
     * ProbeRows rows, but a limit ABOVE a join/aggregate/window still
-    * executes the full upstream lineage once. Probe only plans made of
-    * leaves + projections/filters; anything heavier keeps the memo path
+    * executes the full upstream lineage once. Only plans made of leaves
+    * + projections/filters are probed; anything heavier keeps the memo path
     * (whose cost the caller already accepted). Repartitions never reach
     * this walk: [[stripRepartitions]] removes them first — probing ABOVE
     * a shuffling repartition would run the exchange's full map side

@@ -62,12 +62,10 @@ class AsOfBloomSpec extends SparkSpec {
   }
 
   test("asof plans one shuffle and no join node") {
-    val plan = AsOfJoin.asof(probes, quotes, Seq("k"), "t", "t", Seq("price"))
-      .queryExecution.executedPlan.toString
+    val df = AsOfJoin.asof(probes, quotes, Seq("k"), "t", "t", Seq("price"))
+    val plan = df.queryExecution.executedPlan.toString
     assert(!plan.contains("Join"), plan)
-    val exch = raw"(^|[^A-Za-z])Exchange\s".r
-    val n = plan.linesIterator.count(l =>
-      exch.findFirstIn(l).isDefined && !l.contains("BroadcastExchange"))
+    val n = PlanShape.of(df).shuffles
     assert(n == 1, s"expected exactly 1 shuffle, got $n:\n$plan")
   }
 

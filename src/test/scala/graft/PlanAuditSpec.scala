@@ -95,8 +95,7 @@ class PlanAuditSpec extends SparkSpec {
       val plan = df.queryExecution.executedPlan.toString
       assert(!plan.contains("CartesianProduct") &&
         !plan.contains("BroadcastNestedLoopJoin"), s"$name: nested loop")
-      val exch = raw"(^|[^A-Za-z])Exchange\s".r
-      val n = plan.linesIterator.count(l => exch.findFirstIn(l).isDefined)
+      val n = PlanShape.of(df).shuffles
       // word-count agg; round adds the pair agg + the rank's range
       // partitioning (train() itself runs limit(1), not a global sort)
       assert(n <= 4, s"$name: $n exchanges > 4")
@@ -124,15 +123,13 @@ class PlanAuditSpec extends SparkSpec {
     spark.conf.set(graft.functions.Fo2Dedup.DedupKey, "true")
     try {
       for (name <- Seq("q_fo2_qfm_full", "q_fo2_iw_full")) {
-        val plan = Queries.queries(name)(spark, sfDir)
-          .queryExecution.executedPlan.toString
+        val df = Queries.queries(name)(spark, sfDir)
+        val plan = df.queryExecution.executedPlan.toString
         assert(plan.contains("HashAggregate"), s"$name: no distinct aggregate")
         assert(plan.contains("BroadcastHashJoin"), s"$name: no broadcast join")
         assert(!plan.contains("SortMergeJoin"),
           s"$name: dedup path shuffles the fact table")
-        val exch = raw"(^|[^A-Za-z])Exchange\s".r
-        val n = plan.linesIterator.count(l =>
-          exch.findFirstIn(l).isDefined && !l.contains("BroadcastExchange"))
+        val n = PlanShape.of(df).shuffles
         info(s"$name dedup-on: $n shuffle exchange(s)")
         // repartition spread + the 2-column distinct agg + final orderBy;
         // the fact table itself never shuffles
@@ -174,9 +171,10 @@ class PlanAuditSpec extends SparkSpec {
                            // explicit anchor exchange (13 -> 17 -> 21) —
                            // but every copy is pruning-pinned canonically
                            // equal and collapses at runtime: the runtime
-                           // budget above pins 5 materialised / 6 reused,
-                           // ONE corpus shingle-hashing pass total (the
-                           // anchor made the df branch stop re-scanning)
+                           // budget below pins 5 materialised / 6 reused;
+                           // one corpus scan (the df branch reuses the scan
+                           // floor) but two shingle-hashing passes (gen=2:
+                           // the df branch's pruned anchor is not reused)
     "q_range_join" -> 4,  // scan floor x2 + band agg + orderBy (interval
                           // side broadcasts; final agg rides the map side)
     "q_cms_counts" -> 4,  // scan floor + token agg + topk + orderBy; the
@@ -415,9 +413,10 @@ class PlanAuditSpec extends SparkSpec {
     "q_setsim_join" -> ((5, 6)),        // RR floor + doc-keyed anchor +
                                         // df(_tok) + rank window spared
                                         // (anchor partitioning) + orderBy;
-                                        // df branch, prefix-b and the set
-                                        // table all ride the ONE anchor —
-                                        // one shingle-hashing pass total
+                                        // prefix-b and the set table ride
+                                        // the anchor; the df branch reuses
+                                        // only the RR floor and hashes its
+                                        // own shingles (gen=2, one scan)
     "q_containment_join" -> ((5, 7)),   // same shape, B side unranked but
                                         // pin-aligned to the ranked chain
     "q_tfidf_topterms" -> ((5, 1)),     // (doc, term) tf agg pair + df
@@ -466,13 +465,9 @@ class PlanAuditSpec extends SparkSpec {
       case (name, (realMax, reusedMin)) =>
         val df = Queries.queries(name)(spark, sfDir)
         df.queryExecution.toRdd.count()
-        // post-execution, the adaptive plan string leads with the final
-        // plan; cut at the Initial Plan section
-        val fin = df.queryExecution.executedPlan.toString
-          .split("== Initial Plan ==")(0)
-        val real = fin.linesIterator.count(l =>
-          l.contains("+- Exchange ") && !l.contains("ReusedExchange"))
-        val reused = fin.linesIterator.count(_.contains("ReusedExchange"))
+        // post-execution, the walk sees the AQE-final plan
+        val shape = PlanShape.of(df)
+        val (real, reused) = (shape.shuffles, shape.reused)
         info(s"$name: real=$real (max $realMax), reused=$reused " +
           s"(min $reusedMin)")
         (if (real > realMax)
@@ -487,12 +482,8 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("shuffle-exchange budgets hold for the heaviest queries") {
-    val exch = raw"(^|[^A-Za-z])Exchange\s".r // not ReusedExchange/Broadcast
     val over = exchangeBudgets.toSeq.sortBy(_._1).flatMap { case (name, budget) =>
-      val plan = Queries.queries(name)(spark, sfDir)
-        .queryExecution.executedPlan.toString
-      val n = plan.linesIterator.count(l =>
-        exch.findFirstIn(l).isDefined && !l.contains("BroadcastExchange"))
+      val n = PlanShape.of(Queries.queries(name)(spark, sfDir)).shuffles
       info(s"$name: $n shuffle exchange(s), budget $budget")
       if (n > budget) Some(s"$name: $n exchanges > budget $budget") else None
     }
@@ -505,12 +496,10 @@ class PlanAuditSpec extends SparkSpec {
     * Pinned exactly: a refactor that sneaks a join (or a second shuffle)
     * into this plan loses the reason the operator scales. */
   test("q_asof_join plans zero join nodes over exactly its budgeted shuffles") {
-    val plan = Queries.queries("q_asof_join")(spark, sfDir)
-      .queryExecution.executedPlan.toString
+    val df = Queries.queries("q_asof_join")(spark, sfDir)
+    val plan = df.queryExecution.executedPlan.toString
     assert(!plan.contains("Join"), s"as-of join plan contains a join node:\n$plan")
-    val exch = raw"(^|[^A-Za-z])Exchange\s".r
-    val n = plan.linesIterator.count(l =>
-      exch.findFirstIn(l).isDefined && !l.contains("BroadcastExchange"))
+    val n = PlanShape.of(df).shuffles
     info(s"q_asof_join: $n shuffle exchange(s)")
     assert(n == 2, // the ONE key shuffle + the registry-wide final orderBy
       s"q_asof_join: $n shuffle exchanges, pinned at 2 (key hash + orderBy)")

@@ -11,18 +11,11 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
+  lazy val session: SparkSession = Sessions.local("4", Map(
     // the production wiring under test in GraftExtensionsSpec: native
     // kernels injected into the SQL function registry at session build
-    .config("spark.sql.extensions", "graft.GraftExtensions")
+    "spark.sql.extensions" -> "graft.GraftExtensions",
     // catalog-backed bucketed tables (BucketingSpec) go to a temp warehouse
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+    "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft_warehouse").toString))
 }
