@@ -86,9 +86,7 @@ object Bench {
     try spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1).count()
     catch { case _: Throwable => () }
 
-    val dengMetrics = graft.functions.Deng2020.attachMetrics(spark)
-    val memoStats = graft.functions.IwFull.attachMetrics(spark) ++
-      graft.functions.QfmFull.attachMetrics(spark)
+    val memoStats = graft.functions.MemoStats.attachSolvers(spark)
 
     // fO2 formulation auto-decisions (memo vs dedup — Fo2Dedup.choose):
     // which regime each probed input landed in, with the probe estimates
@@ -97,13 +95,8 @@ object Bench {
         .mkString("[", ",", "]")
 
     def cacheJson(): String =
-      (Seq(
-        "deng_vol" ->
-          f"""{"hits":${dengMetrics.volHits.value},"misses":${dengMetrics.volMisses.value},"fill_s":${dengMetrics.volFillNanos.value / 1e9}%.3f}""",
-        "deng_dvdp" ->
-          f"""{"hits":${dengMetrics.dvdpHits.value},"misses":${dengMetrics.dvdpMisses.value},"fill_s":${dengMetrics.dvdpFillNanos.value / 1e9}%.3f}""") ++
-        memoStats.map(s => s.name.replace('.', '_') -> s.json))
-        .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+      memoStats.map(s => s""""${s.name.replace('.', '_')}":${s.json}""")
+        .mkString("{", ",", "}")
 
     def passDiag(tag: String, before: (Long, Long, Long, Long)): String = {
       val (gcMs0, gcN0, cgN0, jit0) = before
@@ -113,7 +106,7 @@ object Bench {
       System.err.println(f"[bench] $tag: gc=${(gcMs1 - gcMs0) / 1000.0}%.1fs" +
         f" (${gcN1 - gcN0} collections), jit=${(jit1 - jit0) / 1000.0}%.1fs," +
         f" codegenCompiles=${cgN1 - cgN0} (meanCompile=${mean}%.0fms);" +
-        f" ${dengMetrics.render}; ${memoStats.map(_.render).mkString("; ")}")
+        f" ${memoStats.map(_.render).mkString("; ")}")
       f"""{"gc_s":${(gcMs1 - gcMs0) / 1000.0}%.1f,"gc_n":${gcN1 - gcN0},""" +
         f""""jit_s":${(jit1 - jit0) / 1000.0}%.1f,""" +
         f""""codegen_compiles":${cgN1 - cgN0}}"""

@@ -10,9 +10,7 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     val spark = Sessions.local()
-    val dengMetrics = graft.functions.Deng2020.attachMetrics(spark)
-    val fo2Stats = graft.functions.IwFull.attachMetrics(spark) ++
-      graft.functions.QfmFull.attachMetrics(spark)
+    val memoStats = graft.functions.MemoStats.attachSolvers(spark)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -45,8 +43,7 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    System.err.println(s"[verify] ${dengMetrics.render}; " +
-      fo2Stats.map(_.render).mkString("; "))
+    System.err.println(s"[verify] ${memoStats.map(_.render).mkString("; ")}")
     spark.stop()
   }
 }

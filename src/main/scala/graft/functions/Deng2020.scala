@@ -7,69 +7,46 @@ package graft.functions
   * activities, and the outer per-row Fe3Fe2 fixed point. Parameters are the
   * "12.5molpc" fit from Deng's published code.
   *
-  * dVdP depends only on (T, P): memoised per executor so the EOS work
-  * collapses to distinct-condition cardinality.
+  * dVdP depends only on (T, P): memoised per executor in two [[Memo]]s
+  * so the EOS work collapses to distinct-condition cardinality.
   */
 object Deng2020 {
 
-  /** Memo-cache observability (round-7 bench: a 42 s cold outlier on
-    * `q_fe3fe2_deng2020` was undiagnosable because the EOS memo fill was
-    * invisible). Spark accumulators, not JVM statics, so executor-side
-    * increments flow back to the driver with task completion on a real
-    * cluster; `attach` is called by Verify/Bench after session build, and
-    * the solver closure re-publishes the captured instance on the executor
-    * (`ensure`, re-armed per task) so remote JVMs increment a copy that is
-    * still owned by a running task — multi-executor counts are
-    * approximate, local-mode counts exact (see [[ensureMetrics]]). When
-    * never attached, the hot path pays one volatile null-check. */
-  final case class CacheMetrics(
-      volHits: org.apache.spark.util.LongAccumulator,
-      volMisses: org.apache.spark.util.LongAccumulator,
-      volFillNanos: org.apache.spark.util.LongAccumulator,
-      dvdpHits: org.apache.spark.util.LongAccumulator,
-      dvdpMisses: org.apache.spark.util.LongAccumulator,
-      dvdpFillNanos: org.apache.spark.util.LongAccumulator)
-      extends Serializable {
-    def render: String =
-      f"deng2020 volCache hits=${volHits.value} misses=${volMisses.value} " +
-        f"fill=${volFillNanos.value / 1e9}%.2fs; " +
-        f"dVdPCache hits=${dvdpHits.value} misses=${dvdpMisses.value} " +
-        f"fill=${dvdpFillNanos.value / 1e9}%.2fs"
+  /** The two EOS memos' [[MemoStats]], named `deng.vol` and `deng.dvdp`
+    * (round-7 bench: a 42 s cold outlier on `q_fe3fe2_deng2020` was
+    * undiagnosable because the EOS memo fill was invisible). Counting
+    * follows the [[MemoStats]] rule: local-mode counts exact; on remote
+    * executors the solver closures in `graft.api.Melt.fe3Fe2` republish
+    * the captured stats per task ([[ensureMetrics]]), so counts are
+    * present there but approximate at task boundaries. When never
+    * attached, the hot path pays one volatile null-check per memo. */
+  final case class CacheMetrics(vol: MemoStats, dvdp: MemoStats) {
+    def volHits: Counter = vol.hits
+    def volMisses: Counter = vol.misses
+    def volFillNanos: Counter = vol.fillNanos
+    def dvdpHits: Counter = dvdp.hits
+    def dvdpMisses: Counter = dvdp.misses
+    def dvdpFillNanos: Counter = dvdp.fillNanos
   }
 
-  @volatile private var cacheMetrics: CacheMetrics = _
-
   def attachMetrics(spark: org.apache.spark.sql.SparkSession): CacheMetrics = {
-    val sc = spark.sparkContext
-    val m = CacheMetrics(
-      sc.longAccumulator("graft.deng2020.volCache.hits"),
-      sc.longAccumulator("graft.deng2020.volCache.misses"),
-      sc.longAccumulator("graft.deng2020.volCache.fillNanos"),
-      sc.longAccumulator("graft.deng2020.dVdPCache.hits"),
-      sc.longAccumulator("graft.deng2020.dVdPCache.misses"),
-      sc.longAccumulator("graft.deng2020.dVdPCache.fillNanos"))
-    cacheMetrics = m
+    val m = CacheMetrics(MemoStats.attach(spark, "deng.vol"),
+      MemoStats.attach(spark, "deng.dvdp"))
+    volCache.attach(m.vol)
+    dVdPCache.attach(m.dvdp)
     m
   }
 
-  def currentMetrics: Option[CacheMetrics] = Option(cacheMetrics)
+  def currentMetrics: Option[CacheMetrics] =
+    for (v <- volCache.attached; d <- dVdPCache.attached)
+      yield CacheMetrics(v, d)
 
-  /** Executor-side republish of a closure-captured instance. The static
-    * points at the copy of a RUNNING task: a completion listener clears it
-    * when the owning task finishes, so the next task republishes its own
-    * live copy instead of incrementing an accumulator whose value already
-    * shipped to the driver. Increments racing a task's completion can drop
-    * — multi-executor counts are approximate (observability, not
-    * accounting); local mode is exact because attachMetrics installed the
-    * driver's originals and this method never fires. */
-  private[graft] def ensureMetrics(m: CacheMetrics): Unit =
-    if (cacheMetrics == null) {
-      cacheMetrics = m
-      val tc = org.apache.spark.TaskContext.get()
-      if (tc != null) tc.addTaskCompletionListener[Unit] { _ =>
-        if (cacheMetrics eq m) cacheMetrics = null
-      }
-    }
+  /** Executor-side republish of a closure-captured instance
+    * ([[Memo.publish]]). */
+  private[graft] def ensureMetrics(m: CacheMetrics): Unit = {
+    volCache.publish(m.vol)
+    dVdPCache.publish(m.dvdp)
+  }
 
   val R = 8.31446261815324
   val Avogadro = 6.02214076e23
@@ -150,52 +127,25 @@ object Deng2020 {
     vSol / formulaUnits * Avogadro * a3ToCm3
   }
 
-  /** trapezoid integral of dV (m3) over P (Pa) from 1 bar to P_bar with a
-    * 500-bar grid (`Fe3Fe2_models.py:702-733`). */
-  private val dVdPCache =
-    new java.util.concurrent.ConcurrentHashMap[(Double, Double, String), java.lang.Double]()
-
   /** Volume at integration-grid points, cached per (T, P, endmember): the
     * grid is a fixed 500-bar lattice and the driver tables carry ~250
     * distinct temperatures, so across rows the same solves recur
     * constantly (~10k distinct entries at sf0.1 vs ~200 fresh EOS solves
     * per row without the cache). */
-  private val volCache =
-    new java.util.concurrent.ConcurrentHashMap[(Double, Double, Boolean, String), java.lang.Double]()
-  // computeIfAbsent, not get/put: with plain get/put every task on a cold
-  // executor solves the SAME grid volumes concurrently before the first
-  // put lands (32 threads x ~11k entries = O(distinct x cores) duplicate
-  // EOS solves, the 3.6 s first-run spike the round-4 probe measured).
-  // computeIfAbsent serialises per key, so cold cost is paid once per
-  // executor; the lock is per hash bin and the steady state is pure reads.
-  private def volumeCached(tK: Double, p: Double, fe3: Boolean,
-                           meltFe: String): Double = {
-    if (volCache.size() > 500000) volCache.clear()
-    val m = cacheMetrics
-    if (m == null)
-      volCache.computeIfAbsent((tK, p, fe3, meltFe),
-        _ => volume(tK, p, fe3, meltFe)).doubleValue
-    else {
-      // `filled` distinguishes a real fill from a computeIfAbsent that
-      // found the key (or lost the per-bin race to a concurrent filler —
-      // counted as a hit, because this thread did no EOS work)
-      var filled = false
-      val v = volCache.computeIfAbsent((tK, p, fe3, meltFe), { _ =>
-        filled = true
-        val t0 = System.nanoTime()
-        val r = volume(tK, p, fe3, meltFe)
-        m.volFillNanos.add(System.nanoTime() - t0)
-        r
-      })
-      if (filled) m.volMisses.add(1) else m.volHits.add(1)
-      v.doubleValue
-    }
-  }
+  private[graft] val volCache =
+    new Memo[(Double, Double, Boolean, String), java.lang.Double](500000)
 
+  private def volumeCached(tK: Double, p: Double, fe3: Boolean,
+                           meltFe: String): Double =
+    volCache.getOrFill((tK, p, fe3, meltFe))(volume(tK, p, fe3, meltFe))
+      .doubleValue
+
+  private[graft] val dVdPCache =
+    new Memo[(Double, Double, String), java.lang.Double](100000)
+
+  /** trapezoid integral of dV (m3) over P (Pa) from 1 bar to P_bar with a
+    * 500-bar grid (`Fe3Fe2_models.py:702-733`). */
   def dVdP(tK: Double, pBar: Double, meltFe: String = "12.5molpc"): Double = {
-    if (dVdPCache.size() > 100000) dVdPCache.clear()
-    val m = cacheMetrics
-    var filled = false
     // Key by the GRID LENGTH, not the raw pressure: the trapezoid runs
     // over the fixed 500-bar lattice points below pBar+step, so every
     // pBar mapping to the same point count yields the bit-identical
@@ -210,9 +160,7 @@ object Deng2020 {
     val step = 5e2
     val nGrid = Iterator.iterate(1.0)(_ + step)
       .takeWhile(_ < pBar + step).size
-    val out = dVdPCache.computeIfAbsent((tK, nGrid.toDouble, meltFe), { _ =>
-      filled = true
-      val t0 = System.nanoTime()
+    dVdPCache.getOrFill((tK, nGrid.toDouble, meltFe)) {
       val grid = Iterator.iterate(1.0)(_ + step).take(nGrid).toArray
       val dv = grid.map(p => (volumeCached(tK, p, fe3 = true, meltFe) -
         volumeCached(tK, p, fe3 = false, meltFe)) * 1e-6)
@@ -222,11 +170,8 @@ object Deng2020 {
         integral += 0.5 * (dv(i) + dv(i - 1)) * (grid(i) - grid(i - 1)) * 1e5
         i += 1
       }
-      if (m != null) m.dvdpFillNanos.add(System.nanoTime() - t0)
       integral
-    }).doubleValue
-    if (m != null) { if (filled) m.dvdpMisses.add(1) else m.dvdpHits.add(1) }
-    out
+    }.doubleValue
   }
 
   /** Gibbs free energy at reference P (`Fe3Fe2_models.py:599-612`). */

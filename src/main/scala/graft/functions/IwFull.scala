@@ -192,8 +192,8 @@ object IwFull {
   /** Spec hook: entries currently memoised (no-insertion law). */
   private[graft] def fO2CacheSize: Int = cache.size
 
-  /** Export hit/miss/fill/eviction accumulators for both memo caches
-    * (Deng2020-style; called by Verify/Bench after session build). */
+  /** Export hit/miss/fill/eviction counters for both memo caches
+    * (called by Verify/Bench after session build). */
   def attachMetrics(spark: org.apache.spark.sql.SparkSession): Seq[MemoStats] = {
     val g = MemoStats.attach(spark, "iw.gridCache")
     val f = MemoStats.attach(spark, "iw.fO2Cache")

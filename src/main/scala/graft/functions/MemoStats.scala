@@ -1,20 +1,40 @@
 package graft.functions
 
+import java.util.concurrent.atomic.LongAdder
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.util.LongAccumulator
+import org.apache.spark.util.AccumulatorV2
 
-/** Deng2020-style memo observability, generalised for the fO2 EOS solvers
-  * (round-9: `bench_ab/r8_deng_cache_study.md` proved a thrashing memo is
-  * invisible without hit/miss/fill counters — IwFull/QfmFull now export
-  * the same accumulators Deng2020 does). Attached by Verify/Bench after
-  * session build; local-mode counts are exact (UDFs run in the driver
-  * JVM), multi-executor counts need a per-task republish like
-  * [[Deng2020.ensureMetrics]] — these caches skip that and simply report
-  * nothing on remote executors (observability, not accounting). */
-final case class MemoStats(name: String,
-    hits: LongAccumulator, misses: LongAccumulator,
-    fillNanos: LongAccumulator, evicted: LongAccumulator)
-    extends Serializable {
+/** A Spark accumulator whose `add` is safe under concurrent threads.
+  * Local-mode task threads all add to the driver's ONE registered
+  * instance (the solver memos live in JVM statics, not in task
+  * closures); `LongAccumulator.add` is a plain read-modify-write there
+  * and loses adds under contention, a `LongAdder` does not. Per-task
+  * copies on remote executors merge back like any accumulator. */
+final class Counter extends AccumulatorV2[Long, Long] {
+  private val sum = new LongAdder
+  override def isZero: Boolean = sum.sum() == 0L
+  override def copy(): Counter = { val c = new Counter; c.add(value); c }
+  override def reset(): Unit = sum.reset()
+  override def add(v: Long): Unit = sum.add(v)
+  override def merge(other: AccumulatorV2[Long, Long]): Unit = add(other.value)
+  override def value: Long = sum.sum()
+}
+
+/** Hit/miss/fill/eviction counts of one [[Memo]]
+  * (`bench_ab/r8_deng_cache_study.md` proved a thrashing memo is invisible
+  * without them). Attached by Verify/Bench after session build.
+  *
+  * Counting rule, one for every solver memo:
+  *  - local mode: exact. Task threads run in the driver JVM and add to
+  *    the driver's [[Counter]]s, which do not lose concurrent adds;
+  *  - remote executors: present only where a closure captured the stats
+  *    and republishes them per task ([[Memo.publish]]); increments
+  *    racing a task's completion can drop, so counts are approximate at
+  *    task boundaries (observability, not accounting). Memos without a
+  *    capturing closure report nothing remotely. */
+final case class MemoStats(name: String, hits: Counter, misses: Counter,
+                           fillNanos: Counter, evicted: Counter) {
   def render: String =
     f"$name hits=${hits.value} misses=${misses.value} " +
       f"fill=${fillNanos.value / 1e9}%.2fs evicted=${evicted.value}"
@@ -27,12 +47,20 @@ final case class MemoStats(name: String,
 
 object MemoStats {
   def attach(spark: SparkSession, name: String): MemoStats = {
-    val sc = spark.sparkContext
-    MemoStats(name,
-      sc.longAccumulator(s"graft.$name.hits"),
-      sc.longAccumulator(s"graft.$name.misses"),
-      sc.longAccumulator(s"graft.$name.fillNanos"),
-      sc.longAccumulator(s"graft.$name.evicted"))
+    def counter(field: String): Counter = {
+      val c = new Counter
+      spark.sparkContext.register(c, s"graft.$name.$field")
+      c
+    }
+    MemoStats(name, counter("hits"), counter("misses"), counter("fillNanos"),
+      counter("evicted"))
+  }
+
+  /** Fresh stats on every solver memo, in Bench artifact order. */
+  def attachSolvers(spark: SparkSession): Seq[MemoStats] = {
+    val deng = Deng2020.attachMetrics(spark)
+    Seq(deng.vol, deng.dvdp) ++ IwFull.attachMetrics(spark) ++
+      QfmFull.attachMetrics(spark)
   }
 }
 
@@ -61,7 +89,23 @@ final class Memo[K, V](cap: Int) {
   private val evicting = new java.util.concurrent.atomic.AtomicBoolean(false)
 
   def attach(s: MemoStats): Unit = stats = s
+  def attached: Option[MemoStats] = Option(stats)
   def size: Int = m.size()
+
+  /** Executor-side republish of closure-captured stats, the one way
+    * counts reach the driver from a remote JVM. The memo points at the
+    * copy of a RUNNING task: a completion listener detaches it when the
+    * owning task finishes, so the next task republishes its own live copy
+    * instead of adding to one whose value already shipped to the driver.
+    * A no-op wherever stats are attached (the driver JVM, local mode). */
+  def publish(s: MemoStats): Unit =
+    if (stats == null) {
+      stats = s
+      val tc = TaskContext.get()
+      if (tc != null) tc.addTaskCompletionListener[Unit] { _ =>
+        if (stats eq s) stats = null
+      }
+    }
 
   /** Read-only membership probe (spec hook — no fill, no eviction). */
   private[graft] def contains(k: K): Boolean = m.containsKey(k)
@@ -79,14 +123,11 @@ final class Memo[K, V](cap: Int) {
     val st = stats
     if (st == null) m.computeIfAbsent(k, _ => fill)
     else {
+      // `filled` tells a real fill from a lookup that found the key (or
+      // lost the per-bin race to a concurrent filler — a hit, because this
+      // thread did no work)
       var filled = false
-      val v = m.computeIfAbsent(k, { _ =>
-        filled = true
-        val t0 = System.nanoTime()
-        val r = fill
-        st.fillNanos.add(System.nanoTime() - t0)
-        r
-      })
+      val v = m.computeIfAbsent(k, { _ => filled = true; timed(st)(fill) })
       if (filled) st.misses.add(1) else st.hits.add(1)
       v
     }
@@ -104,13 +145,14 @@ final class Memo[K, V](cap: Int) {
     val st = stats
     if (v != null) { if (st != null) st.hits.add(1); v }
     else if (st == null) fill
-    else {
-      st.misses.add(1)
-      val t0 = System.nanoTime()
-      val r = fill
-      st.fillNanos.add(System.nanoTime() - t0)
-      r
-    }
+    else { st.misses.add(1); timed(st)(fill) }
+  }
+
+  private def timed(st: MemoStats)(fill: => V): V = {
+    val t0 = System.nanoTime()
+    val r = fill
+    st.fillNanos.add(System.nanoTime() - t0)
+    r
   }
 
   private def evictSome(): Unit = {

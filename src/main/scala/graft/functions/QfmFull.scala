@@ -52,8 +52,8 @@ object QfmFull {
   def transitionPressures(tK: Double): (Double, Double, Double) =
     transitionCache.getOrFill(tK)(transitionsAt.apply(tK))
 
-  /** Export hit/miss/fill/eviction accumulators for both memo caches
-    * (Deng2020-style; called by Verify/Bench after session build). */
+  /** Export hit/miss/fill/eviction counters for both memo caches
+    * (called by Verify/Bench after session build). */
   def attachMetrics(spark: org.apache.spark.sql.SparkSession): Seq[MemoStats] = {
     val t = MemoStats.attach(spark, "qfm.transitionCache")
     val f = MemoStats.attach(spark, "qfm.fO2Cache")

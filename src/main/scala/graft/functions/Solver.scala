@@ -68,21 +68,6 @@ object Solver {
     b
   }
 
-  /** Expand a bracket around an initial guess until f changes sign, then
-    * Brent. For monotone-ish physical functions (phase-transition pressures). */
-  def brentWithExpansion(f: Double => Double, guess: Double,
-                         lo: Double, hi: Double): Double = {
-    var a = guess; var b = guess * 2.0 + 1.0
-    var fa = f(a); var fb = f(b)
-    var i = 0
-    while (fa * fb > 0.0 && i < 60) {
-      if (math.abs(fa) < math.abs(fb)) { a = math.max(lo, a - (b - a)); fa = f(a) }
-      else { b = math.min(hi, b + (b - a)); fb = f(b) }
-      i += 1
-    }
-    if (fa * fb > 0.0) Double.NaN else brent(f, a, b)
-  }
-
   /** Damped 2-D Newton with forward-difference Jacobian (stand-in for
     * scipy.optimize.root(hybr); same fixed points, documented algorithmic
     * difference). Returns the solution vector. */

@@ -50,6 +50,20 @@ object StreamingOps {
       "boundaries can diverge from batch semantics (see " +
       s"$MaxGroupBufferKey and the overflow accumulator)")
 
+  /** One group's micro-batch rows in `cap`-sized chunks, each sorted by
+    * the caller with state threaded across them: every row past the first
+    * chunk is counted on `overflow`, and the first overflow is logged. */
+  private def capped[T](op: String, key: Any, rows: Iterator[T], cap: Int,
+                        overflow: org.apache.spark.util.LongAccumulator)
+      : Iterator[Seq[T]] =
+    rows.grouped(cap).zipWithIndex.map { case (chunk, i) =>
+      if (i > 0) {
+        if (i == 1) warnOverflow(op, key, cap)
+        overflow.add(chunk.size)
+      }
+      chunk
+    }
+
   /** Read the events table as a file-source stream (one-file-per-trigger
     * emulation for tests; on a cluster this is a Kafka/file drop source). */
   def eventsStream(spark: SparkSession, dir: String): DataFrame =
@@ -319,14 +333,7 @@ object StreamingOps {
           // bounded sort buffer: cap-sized chunks, state threaded across
           // them; exact for in-order arrival, overflow counted (see
           // MaxGroupBufferKey)
-          var first = true
-          var warned = false
-          rows.grouped(cap).foreach { chunk =>
-            if (first) first = false
-            else {
-              if (!warned) { warnOverflow("streamingAsOf", user, cap); warned = true }
-              overflow.add(chunk.size)
-            }
+          capped("streamingAsOf", user, rows, cap, overflow).foreach { chunk =>
             val sorted = chunk.sortBy(r =>
               (r._3, if (r._4 == "purchase") 0 else 1, r._1))
             for ((id, _, ms, tpe, v) <- sorted) {
@@ -372,24 +379,16 @@ object StreamingOps {
             SessionState(Long.MaxValue, Long.MinValue, 0L))
           val closed = Seq.newBuilder[SessionOut]
           // bounded sort buffer, as in streamingAsOf (MaxGroupBufferKey)
-          var first = true
-          var warned = false
-          rows.map(_._2).grouped(cap).foreach { chunk =>
-          if (first) first = false
-          else {
-            if (!warned) { warnOverflow("sessionize", user, cap); warned = true }
-            overflow.add(chunk.size)
-          }
-          val sorted = chunk.sorted
-          for (ms <- sorted) {
-            if (st.n > 0 && ms - st.lastMs > gapMs) {
-              closed += SessionOut(user, st.startMs, st.lastMs, st.n)
-              st = SessionState(ms, ms, 1L)
-            } else {
-              st = SessionState(math.min(st.startMs, ms), math.max(st.lastMs, ms),
-                st.n + 1)
+          capped("sessionize", user, rows.map(_._2), cap, overflow).foreach { chunk =>
+            for (ms <- chunk.sorted) {
+              if (st.n > 0 && ms - st.lastMs > gapMs) {
+                closed += SessionOut(user, st.startMs, st.lastMs, st.n)
+                st = SessionState(ms, ms, 1L)
+              } else {
+                st = SessionState(math.min(st.startMs, ms), math.max(st.lastMs, ms),
+                  st.n + 1)
+              }
             }
-          }
           }
           if (state.hasTimedOut && st.n > 0) {
             closed += SessionOut(user, st.startMs, st.lastMs, st.n)
@@ -453,15 +452,8 @@ object StreamingOps {
         case (user, rows, state: GroupState[FunnelState]) =>
           var times = state.getOption.map(_.times).getOrElse(Nil)
           val before = times.size
-          var first = true
-          var warned = false
-          rows.grouped(cap).foreach { chunk =>
-            if (first) first = false
-            else {
-              if (!warned) { warnOverflow("streamingFunnel", user, cap); warned = true }
-              overflow.add(chunk.size)
-            }
-            val sorted = chunk.toSeq.sortBy(r => (r._3, stepRank(r._4), r._1))
+          capped("streamingFunnel", user, rows, cap, overflow).foreach { chunk =>
+            val sorted = chunk.sortBy(r => (r._3, stepRank(r._4), r._1))
             for ((_, _, ms, tpe) <- sorted) {
               val reach = times.size
               if (reach == 0) {
@@ -526,17 +518,10 @@ object StreamingOps {
         case (user, rows, state: GroupState[TouchState]) =>
           var touches = state.getOption.map(_.touches).getOrElse(Nil)
           val out = Seq.newBuilder[AttribOut]
-          var first = true
-          var warned = false
-          rows.grouped(cap).foreach { chunk =>
-            if (first) first = false
-            else {
-              if (!warned) { warnOverflow("streamingAttribution", user, cap); warned = true }
-              overflow.add(chunk.size)
-            }
+          capped("streamingAttribution", user, rows, cap, overflow).foreach { chunk =>
             // same-ms touches land BEFORE the conversion (the batch RANGE
             // frame is at-or-before by ms, blind to event_id)
-            for ((id, _, ms, tpe) <- chunk.toSeq.sortBy(r =>
+            for ((id, _, ms, tpe) <- chunk.sortBy(r =>
                 (r._3, if (r._4 == convType) 1 else 0, r._1))) {
               if (tpe == convType) {
                 val inWin = touches.filter(p => p / 8 >= ms - lookbackMs &&

@@ -1,8 +1,10 @@
 package graft
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import graft.functions.{Fo2Dedup, IwFull, QfmFull}
+import graft.api.{MagmaConfig, Melt}
+import graft.core.{CType, CUnit, MagmaDF}
+import graft.functions.{Deng2020, Fo2Dedup, IwFull, QfmFull}
 
 /** Formulation-invariance law for the conf-keyed fO2 dedup path
   * ([[graft.functions.Fo2Dedup]]): the distinct+broadcast-join plan must
@@ -20,6 +22,20 @@ class Fo2DedupSpec extends SparkSpec {
       (4L, null, 3000.0),    // null T — null-safe join must keep the row
       (5L, 1623.15, null))   // null P
       .toDF("id", "T_K", "P_bar")
+  }
+
+  /** `df` (with `T_K`, `P_bar`) as one fixed basalt at fO2 1e-8 bar,
+    * through the public API's deng2020 solver closure — which captures
+    * the Deng memo stats attached when it is built. */
+  private def dengFe3Fe2(df: DataFrame): DataFrame = {
+    val oxides = Seq("SiO2" -> 48.5, "TiO2" -> 1.2, "Al2O3" -> 15.3,
+      "FeO" -> 9.0, "MnO" -> 0.17, "MgO" -> 7.8, "CaO" -> 11.0,
+      "Na2O" -> 2.6, "K2O" -> 0.7, "P2O5" -> 0.25, "H2O" -> 1.5)
+    val melts = oxides.foldLeft(df.withColumn("fO2", lit(1e-8))) {
+      case (d, (c, wt)) => d.withColumn(c, lit(wt))
+    }
+    new Melt(MagmaDF.wrap(melts, CUnit.WtPc, CType.Oxide),
+      MagmaConfig(fe3fe2Model = "deng2020")).fe3Fe2().df
   }
 
   private def collectBoth(f: org.apache.spark.sql.DataFrame =>
@@ -120,15 +136,16 @@ class Fo2DedupSpec extends SparkSpec {
     }
     done.await()
     pool.shutdown()
-    // misses/hits ride Spark LongAccumulators whose add() is only safe for
-    // the per-task copies real executors use, so this shared-instance
-    // hammer can undercount them — the serialized counter is `evicted`
-    // (only the CAS winner increments it). With all 320k keys distinct,
-    // every surviving entry was inserted exactly once, so conservation
-    // pins the evictor exactly: evicted == inserted - size. The old
+    // With all 320k keys distinct, every lookup is a miss and every
+    // surviving entry was inserted exactly once: the counters must not
+    // lose one of the 16 threads' concurrent adds, and conservation pins
+    // the evictor exactly: evicted == inserted - size. The old
     // concurrent-eviction code failed this by counting each other's
     // removals (r9 bench: evicted 4x inserts).
     val inserted = threads.toLong * perThread
+    assert(st.misses.value == inserted && st.hits.value == 0L,
+      s"${st.misses.value} misses + ${st.hits.value} hits for $inserted " +
+        "distinct lookups")
     assert(st.evicted.value == inserted - m.size,
       s"evicted ${st.evicted.value} != inserted $inserted - size ${m.size}")
     assert(st.evicted.value > 0, "thrash must evict")
@@ -207,38 +224,68 @@ class Fo2DedupSpec extends SparkSpec {
   test("production fO2 memo caches: fresh accumulators count every call, " +
       "eviction accounting conserves (evicted <= inserted)") {
     import org.apache.spark.sql.functions.{col, lit, sum}
-    // attach FRESH accumulators to the live caches (what Bench/Verify do),
-    // then push a real 200-row solve through both families via the public
-    // entry points (200 < MinAutoRows, so the memoised-UDF path runs)
+    // attach FRESH counters to the live caches (what Bench/Verify do),
+    // then push a real solve through every family via the public entry
+    // points, forced onto the memoised-UDF path. 8 partitions on the
+    // 4-thread session: task threads add to the driver's shared counters
+    // concurrently, and every add must land.
     val qfmStats = QfmFull.attachMetrics(spark)
     val iwStats = IwFull.attachMetrics(spark)
-    // ONE partition: the memo counts on the shared (driver-JVM) stats
-    // instance are only exact single-threaded — concurrent task threads
-    // lose LongAccumulator adds (the documented local-mode caveat in
-    // MemoStats; the serialized-by-CAS `evicted` is exact regardless)
-    val df = spark.range(200).repartition(1).select(
+    val deng = Deng2020.attachMetrics(spark)
+    val n = 400000L
+    val df = spark.range(0, n, 1, 8).select(
       ((col("id") % 10).cast("double") * 50.0 + lit(1273.15)).as("T_K"),
       ((col("id") % 20).cast("double") * 250.0 + lit(1000.0)).as("P_bar"))
-    QfmFull.withQfm(df, "T_K", "P_bar").agg(sum("fO2")).head()
-    IwFull.withIw(df, "T_K", "P_bar").agg(sum("fO2")).head()
+    spark.conf.set(Fo2Dedup.DedupKey, "false")
+    try {
+      QfmFull.withQfm(df, "T_K", "P_bar").agg(sum("fO2")).head()
+      IwFull.withIw(df, "T_K", "P_bar").agg(sum("fO2")).head()
+    } finally spark.conf.unset(Fo2Dedup.DedupKey)
+    dengFe3Fe2(df).agg(sum("Fe3Fe2")).head()
     val top = (qfmStats ++ iwStats).filter(_.name.endsWith("fO2Cache"))
     assert(top.size == 2, top.map(_.name).toString)
-    for (st <- top) {
+    for (st <- top :+ deng.dvdp) {
       // every row goes through the top-level cache exactly once
-      assert(st.hits.value + st.misses.value == 200L,
-        s"${st.name}: ${st.hits.value} hits + ${st.misses.value} misses != 200")
+      assert(st.hits.value + st.misses.value == n,
+        s"${st.name}: ${st.hits.value} hits + ${st.misses.value} misses != $n")
+    }
+    for (st <- top) {
       // the caches persist across suites, so the hit/miss split is not
       // pinned — but with 20 distinct (T, P) conditions (lcm(10,20)=20
-      // joint values over 200 rows) a working cache must mostly hit
+      // joint values) a working cache must mostly hit
       assert(st.misses.value <= 20L,
         s"${st.name}: ${st.misses.value} misses for 20 distinct conditions")
     }
-    for (st <- qfmStats ++ iwStats) {
+    for (st <- qfmStats ++ iwStats ++ Seq(deng.vol, deng.dvdp)) {
       // eviction accounting (the r9 concurrent-evictor bug): a cache can
       // never have dropped more entries than were ever inserted
       assert(st.evicted.value <= st.misses.value,
         s"${st.name}: evicted ${st.evicted.value} > inserted ${st.misses.value}")
     }
+  }
+
+  test("closure-captured Deng memo stats republish per task: counts " +
+      "reach the driver with its own stats detached, and no task's copy " +
+      "outlives its task") {
+    val deng = Deng2020.attachMetrics(spark)
+    val n = 4000L
+    val df = spark.range(0, n, 1, 8).select(
+      ((col("id") % 10).cast("double") * 50.0 + lit(1273.15)).as("T_K"),
+      ((col("id") % 20).cast("double") * 250.0 + lit(1000.0)).as("P_bar"))
+    val fe3 = dengFe3Fe2(df) // the solver closure captures `deng` here
+    // detach the driver side: the task threads now see no stats, as on a
+    // remote executor, and must republish their deserialized copies
+    Deng2020.volCache.attach(null)
+    Deng2020.dVdPCache.attach(null)
+    fe3.agg(sum("Fe3Fe2")).head()
+    val lookups = deng.dvdpHits.value + deng.dvdpMisses.value
+    // local task threads share one static, so a copy published by one task
+    // can take another task's adds after its value shipped: present, but
+    // approximate at task boundaries
+    assert(lookups > 0L && lookups <= n,
+      s"$lookups dVdP lookups reached the driver for $n rows")
+    assert(Deng2020.currentMetrics.isEmpty,
+      "a task's stats copy stayed published after its task completed")
   }
 
   test("auto probe strips repartitions: a repartition(n) input is probed " +

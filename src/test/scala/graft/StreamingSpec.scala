@@ -132,6 +132,51 @@ class StreamingSpec extends SparkSpec {
       assert(overflow.value == 120L - 16L,
         s"overflow counted ${overflow.value}, expected 104 (120 rows - cap 16)")
     } finally spark.conf.unset(StreamingOps.MaxGroupBufferKey)
+
+    // the same law for sessionize and attribution, against their own
+    // uncapped run: ONE user, 120 in-order rows, a 10^7 ms gap every 20
+    // rows (so sessions close inside the batch), every 5th row a purchase
+    val touchRows = (0 until 120).map { i =>
+      val tpe = if (i % 5 == 0) "purchase" else if (i % 2 == 0) "view"
+        else "click"
+      (i.toLong, (i * 1000L + (i / 20) * 10000000L) * 1000000L, 7L, tpe)
+    }
+    def capLaw(name: String, op: org.apache.spark.sql.DataFrame =>
+        (org.apache.spark.sql.DataFrame, org.apache.spark.util.LongAccumulator))
+        : Unit = {
+      // sessionize's processing-time timeout asks for another batch on
+      // every trigger; without data-less batches its stream can go idle
+      val noDataBatches = "spark.sql.streaming.noDataMicroBatches.enabled"
+      def run(cap: Option[String]) = {
+        cap.foreach(spark.conf.set(StreamingOps.MaxGroupBufferKey, _))
+        spark.conf.set(noDataBatches, "false")
+        try {
+          val mem = MemoryStream[(Long, Long, Long, String)]
+          val (out, overflow) =
+            op(mem.toDF().toDF("event_id", "ts", "user_id", "event_type"))
+          val table = s"${name}_${cap.getOrElse("uncapped")}"
+          val q = out.writeStream.format("memory").queryName(table)
+            .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
+          mem.addData(touchRows: _*)
+          q.processAllAvailable()
+          q.stop()
+          (spark.table(table).collect().toSet, overflow.value)
+        } finally {
+          spark.conf.unset(StreamingOps.MaxGroupBufferKey)
+          spark.conf.unset(noDataBatches)
+        }
+      }
+      val (want, uncappedOverflow) = run(None)
+      val (got, overflow) = run(Some("16"))
+      assert(want.nonEmpty && uncappedOverflow == 0L, s"$name: $want")
+      assert(got == want, s"$name: chunked rows diverged from uncapped")
+      assert(overflow == 120L - 16L,
+        s"$name: overflow counted $overflow, expected 104 (120 rows - cap 16)")
+    }
+    capLaw("sessionize_hotkey",
+      StreamingOps.sessionizeWithMetrics(_, gapMs = 600000L))
+    capLaw("attrib_hotkey",
+      StreamingOps.streamingAttributionWithMetrics(_, Seq("view", "click")))
   }
 
   test("streamingAssignClusters batch parity: arriving docs get the same " +
