@@ -135,7 +135,7 @@ object QfmSql {
          |     WHEN pair = 1 THEN ${gPair(co, st, withLandau1 = false)("mid")}
          |     ELSE ${gPair(fa, ri, withLandau1 = false)("mid")} END"""
         .stripMargin.replace("\n", " ")
-    // row-level VdP with transitions (QfmFull.vdpWithTransitions)
+    // row-level VdP with transitions (QfmFull's per-T plan, AtT.fO2)
     val baseSiO2 = s"(${q.tait("least(pk, tqc)")} + ${lpdQ("least(pk, tqc)")})"
     val e1 = s"((${co.tait("least(pk, tcs)")}) - (${co.tait("tqc")}))"
     val e2 = s"((${st.tait("pk")}) - (${st.tait("tcs")}))"

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.{IaconoMarziano, QfmFull}
+import graft.functions.{Fe3Fe2Iterative, IaconoMarziano, QfmFull}
 import graft.Queries.Q
 
 /** Solver-backed operators. Every query carries a full DuckDB oracle: the
@@ -28,6 +28,18 @@ object SolverQueries {
   private def spread(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < target) df.repartition(target) else df
+  }
+
+  /** Fe3Fe2 of every melt by one iterative model, fO2 from QFM 1-bar. */
+  private def fe3Fe2Iterative(model: String)(s: org.apache.spark.sql.SparkSession,
+      dir: String): org.apache.spark.sql.DataFrame = {
+    val f = Fe3Fe2Iterative.udf(meltEls, model)
+    val fO2 = graft.expr.E.toColumn(
+      graft.models.Fo2Buffers.qfm1bar(graft.expr.C("T_K")))
+    Tables.meltsRangedDF(s, dir)
+      .select(col("sample_id"),
+        round(f(wtArray, col("T_K"), col("P_bar"), fO2), 6).as("Fe3Fe2"))
+      .orderBy("sample_id")
   }
 
   def all: Seq[Q] = Seq(
@@ -132,52 +144,16 @@ object SolverQueries {
     // speciation), fO2 from QFM 1-bar. oneill2006/armstrong2019 carry
     // recursive-CTE oracles (Fe3Fe2IterSql); deng2020/sun2024-deng mirror
     // their EOS-integral dVdP lattice + solvers through DengSql.
-    Q("q_fe3fe2_oneill2006_iterative", (s, dir) => {
-      val f = udf((wt: Seq[Double], tK: Double, pBar: Double, fO2: Double) =>
-        graft.functions.Fe3Fe2Iterative.oneill2006(
-          IaconoMarziano.Comp(meltEls, wt.toArray).molNorm, tK, pBar, fO2))
-      val fO2 = graft.expr.E.toColumn(
-        graft.models.Fo2Buffers.qfm1bar(graft.expr.C("T_K")))
-      Tables.meltsRangedDF(s, dir)
-        .select(col("sample_id"),
-          round(f(wtArray, col("T_K"), col("P_bar"), fO2), 6).as("Fe3Fe2"))
-        .orderBy("sample_id")
-    }, Some(Fe3Fe2IterSql.oneill2006)),
-    Q("q_fe3fe2_armstrong2019_iterative", (s, dir) => {
-      val f = udf((wt: Seq[Double], tK: Double, pBar: Double, fO2: Double) =>
-        graft.functions.Fe3Fe2Iterative.armstrong2019(
-          IaconoMarziano.Comp(meltEls, wt.toArray).molNorm, tK, pBar, fO2))
-      val fO2 = graft.expr.E.toColumn(
-        graft.models.Fo2Buffers.qfm1bar(graft.expr.C("T_K")))
-      Tables.meltsRangedDF(s, dir)
-        .select(col("sample_id"),
-          round(f(wtArray, col("T_K"), col("P_bar"), fO2), 6).as("Fe3Fe2"))
-        .orderBy("sample_id")
-    }, Some(Fe3Fe2IterSql.armstrong2019)),
+    Q("q_fe3fe2_oneill2006_iterative", fe3Fe2Iterative("oneill2006"),
+      Some(Fe3Fe2IterSql.oneill2006)),
+    Q("q_fe3fe2_armstrong2019_iterative", fe3Fe2Iterative("armstrong2019"),
+      Some(Fe3Fe2IterSql.armstrong2019)),
     // Reference-default sun2024 (dV="deng": EOS-integral Gamma). The
     // oracle-checked q_fe3fe2_sun2024 is the dV="parameterised" variant.
-    Q("q_fe3fe2_sun2024_deng", (s, dir) => {
-      val f = udf((wt: Seq[Double], tK: Double, pBar: Double, fO2: Double) =>
-        graft.functions.Fe3Fe2Iterative.sun2024DengVdP(
-          IaconoMarziano.Comp(meltEls, wt.toArray).molNorm, tK, pBar, fO2))
-      val fO2 = graft.expr.E.toColumn(
-        graft.models.Fo2Buffers.qfm1bar(graft.expr.C("T_K")))
-      Tables.meltsRangedDF(s, dir)
-        .select(col("sample_id"),
-          round(f(wtArray, col("T_K"), col("P_bar"), fO2), 6).as("Fe3Fe2"))
-        .orderBy("sample_id")
-    }, Some(DengSql.sun2024)),
-    Q("q_fe3fe2_deng2020", (s, dir) => {
-      val f = udf((wt: Seq[Double], tK: Double, pBar: Double, fO2: Double) =>
-        graft.functions.Deng2020.fe3Fe2(
-          IaconoMarziano.Comp(meltEls, wt.toArray).molNorm, tK, pBar, fO2))
-      val fO2 = graft.expr.E.toColumn(
-        graft.models.Fo2Buffers.qfm1bar(graft.expr.C("T_K")))
-      Tables.meltsRangedDF(s, dir)
-        .select(col("sample_id"),
-          round(f(wtArray, col("T_K"), col("P_bar"), fO2), 6).as("Fe3Fe2"))
-        .orderBy("sample_id")
-    }, Some(DengSql.deng2020)),
+    Q("q_fe3fe2_sun2024_deng", fe3Fe2Iterative("sun2024"),
+      Some(DengSql.sun2024)),
+    Q("q_fe3fe2_deng2020", fe3Fe2Iterative("deng2020"),
+      Some(DengSql.deng2020)),
     // Multimodal decode: each doc gets a REAL minimal container (PNG with
     // CRC'd IHDR / JPEG with a marker scan past APP0+COM to SOF0 / GIF
     // logical screen) synthesized from its key, and the real header

@@ -145,28 +145,7 @@ final class Melt(val mdf: MagmaDF, config: MagmaConfig = MagmaConfig.get) {
           Fe3Fe2.sun2024(ctx, C(tCol), C(fO2Col), C(pCol))))
       case m if MagmaConfig.iterativeFe3Fe2.contains(m) =>
         val els = mdf.staged.schema.elements.toArray
-        val f: (Map[String, Double], Double, Double, Double) => Double =
-          m match {
-            case "oneill2006" => graft.functions.Fe3Fe2Iterative.oneill2006
-            case "armstrong2019" => graft.functions.Fe3Fe2Iterative.armstrong2019
-            case "deng2020" =>
-              // capture any attached cache metrics into the UDF closure so
-              // remote executors publish to the driver's accumulators
-              val mm = graft.functions.Deng2020.currentMetrics.orNull
-              (mol, t, p, fo2) => {
-                if (mm != null) graft.functions.Deng2020.ensureMetrics(mm)
-                graft.functions.Deng2020.fe3Fe2(mol, t, p, fo2)
-              }
-            case "sun2024" =>
-              val mm = graft.functions.Deng2020.currentMetrics.orNull
-              (mol, t, p, fo2) => {
-                if (mm != null) graft.functions.Deng2020.ensureMetrics(mm)
-                graft.functions.Fe3Fe2Iterative.sun2024DengVdP(mol, t, p, fo2)
-              }
-          }
-        val u = org.apache.spark.sql.functions.udf(
-          (wt: Seq[Double], tK: Double, pBar: Double, fO2: Double) =>
-            f(IaconoMarziano.Comp(els, wt.toArray).molNorm, tK, pBar, fO2))
+        val u = graft.functions.Fe3Fe2Iterative.udf(els, m)
         addCol(as, u(org.apache.spark.sql.functions.array(els.map(col): _*),
           col(tCol), col(pCol), col(fO2Col)))
       case m if Fe3Fe2.closedForm.contains(m) =>

@@ -36,17 +36,7 @@ object SqlFunctions {
         Allison.mixedSaturation(comp(wt), tK)._1)
     spark.udf.register("saturation_pressure_shishkina",
       (wt: Seq[Double]) => Shishkina.mixedSaturation(comp(wt))._1)
-    spark.udf.register("fe3fe2_deng2020",
-      (wt: Seq[Double], tK: Double, pBar: Double, fO2: Double) =>
-        Deng2020.fe3Fe2(comp(wt).molNorm, tK, pBar, fO2))
-    spark.udf.register("fe3fe2_oneill2006",
-      (wt: Seq[Double], tK: Double, pBar: Double, fO2: Double) =>
-        Fe3Fe2Iterative.oneill2006(comp(wt).molNorm, tK, pBar, fO2))
-    spark.udf.register("fe3fe2_armstrong2019",
-      (wt: Seq[Double], tK: Double, pBar: Double, fO2: Double) =>
-        Fe3Fe2Iterative.armstrong2019(comp(wt).molNorm, tK, pBar, fO2))
-    spark.udf.register("fe3fe2_sun2024",
-      (wt: Seq[Double], tK: Double, pBar: Double, fO2: Double) =>
-        Fe3Fe2Iterative.sun2024DengVdP(comp(wt).molNorm, tK, pBar, fO2))
+    for (m <- Seq("deng2020", "oneill2006", "armstrong2019", "sun2024"))
+      spark.udf.register(s"fe3fe2_$m", Fe3Fe2Iterative.udf(els, m))
   }
 }

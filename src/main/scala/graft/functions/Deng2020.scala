@@ -8,7 +8,12 @@ package graft.functions
   * "12.5molpc" fit from Deng's published code.
   *
   * dVdP depends only on (T, P): memoised per executor in two [[Memo]]s
-  * so the EOS work collapses to distinct-condition cardinality.
+  * so the EOS work collapses to distinct-condition cardinality. The
+  * composition side runs on the per-schema cation plan
+  * ([[Fe3Fe2Iterative.CationPlan]]): a row computes its cation base and
+  * Margules sum as a few array loops, with no Map, tuple or boxed key
+  * (the dVdP key is a [[DVdPKey]] of primitives); the Map signature is an
+  * adapter over the same kernel.
   */
 object Deng2020 {
 
@@ -16,7 +21,7 @@ object Deng2020 {
     * (round-7 bench: a 42 s cold outlier on `q_fe3fe2_deng2020` was
     * undiagnosable because the EOS memo fill was invisible). Counting
     * follows the [[MemoStats]] rule: local-mode counts exact; on remote
-    * executors the solver closures in `graft.api.Melt.fe3Fe2` republish
+    * executors the solver closures of [[Fe3Fe2Iterative.udf]] republish
     * the captured stats per task ([[ensureMetrics]]), so counts are
     * present there but approximate at task boundaries. When never
     * attached, the hot path pays one volatile null-check per memo. */
@@ -140,8 +145,25 @@ object Deng2020 {
     volCache.getOrFill((tK, p, fe3, meltFe))(volume(tK, p, fe3, meltFe))
       .doubleValue
 
-  private[graft] val dVdPCache =
-    new Memo[(Double, Double, String), java.lang.Double](100000)
+  /** dVdP memo key: T, the integration grid's point count and the
+    * parameter set, in primitive fields. Doubles compare with `==`: a NaN
+    * T never hits, and 0.0 and -0.0 share a key. */
+  private[graft] final case class DVdPKey(tK: Double, nGrid: Int,
+                                          meltFe: String)
+
+  private[graft] val dVdPCache = new Memo[DVdPKey, java.lang.Double](100000)
+
+  private val gridStep = 5e2
+
+  /** Points of the 500-bar lattice 1, 501, ... below pBar + step, counted
+    * by the same float walk that builds the lattice in [[dVdP]]'s fill. */
+  private def gridLength(pBar: Double): Int = {
+    val end = pBar + gridStep
+    var n = 0
+    var p = 1.0
+    while (p < end) { n += 1; p += gridStep }
+    n
+  }
 
   /** trapezoid integral of dV (m3) over P (Pa) from 1 bar to P_bar with a
     * 500-bar grid (`Fe3Fe2_models.py:702-733`). */
@@ -155,17 +177,16 @@ object Deng2020 {
     // the round-7 "42 s cold" outlier, measured by the fill metrics as
     // 2.3M misses / 92 s of fill. Grid lengths number ~dozens, so the
     // key space is now bounded by |T| x |lengths| regardless of scale.
-    // The length is computed with the SAME takeWhile float walk as the
-    // fill below — no closed-form boundary drift.
-    val step = 5e2
-    val nGrid = Iterator.iterate(1.0)(_ + step)
-      .takeWhile(_ < pBar + step).size
-    dVdPCache.getOrFill((tK, nGrid.toDouble, meltFe)) {
-      val grid = Iterator.iterate(1.0)(_ + step).take(nGrid).toArray
+    val nGrid = gridLength(pBar)
+    dVdPCache.getOrFill(DVdPKey(tK, nGrid, meltFe)) {
+      val grid = new Array[Double](nGrid)
+      var p = 1.0
+      var i = 0
+      while (i < nGrid) { grid(i) = p; p += gridStep; i += 1 }
       val dv = grid.map(p => (volumeCached(tK, p, fe3 = true, meltFe) -
         volumeCached(tK, p, fe3 = false, meltFe)) * 1e-6)
       var integral = 0.0
-      var i = 1
+      i = 1
       while (i < grid.length) {
         integral += 0.5 * (dv(i) + dv(i - 1)) * (grid(i) - grid(i - 1)) * 1e5
         i += 1
@@ -184,17 +205,38 @@ object Deng2020 {
   private val margules = Map("Mg" -> 68629.0, "Si" -> 4601.0, "Al" -> 40923.0,
     "Ca" -> -58109.0, "Na" -> 0.0, "K" -> -59584.0, "P" -> 0.0, "Ti" -> 0.0)
   private val feMargules = -14210.0
+  // the Margules sum's terms as [[CatBase]] slots and coefficients, in
+  // `margules`' iteration order: summed in that order from 0.0, the sum
+  // keeps the bits of `margules.map(..).sum`
+  private val (margulesSlots, margulesCoefs) = margules.toArray.map {
+    case (n, m) => (Fe3Fe2Iterative.CationPlan.slotNames.indexOf(n), m)
+  }.unzip
 
-  /** Full deng2020: per-row fixed point on eq. 3
-    * (`Fe3Fe2_models.py:565-597`); dVdP/gibbs0 hoisted per (T,P) and the
+  private def margulesSum(b: Fe3Fe2Iterative.CatBase): Double = {
+    var sum = 0.0
+    var i = 0
+    while (i < margulesSlots.length) {
+      sum += b(margulesSlots(i)) * margulesCoefs(i)
+      i += 1
+    }
+    sum
+  }
+
+  /** Full deng2020 (`Fe3Fe2_models.py:565-597`) on a mol-fraction Map:
+    * an adapter over the [[Fe3Fe2Iterative.CatBase]] kernel. */
+  def fe3Fe2(mol: Map[String, Double], tK: Double, pBar: Double,
+             fO2: Double, meltFe: String = "12.5molpc"): Double =
+    fe3Fe2Base(Fe3Fe2Iterative.catBase(mol), tK, pBar, fO2, meltFe)
+
+  /** Per-row fixed point on eq. 3: dVdP/gibbs0 hoisted per (T,P) and the
     * non-Fe Margules sum per row (r-invariant — see
     * [[Fe3Fe2Iterative.CatBase]]); each trial is pure scalar math. */
-  def fe3Fe2(mol: Map[String, Double], tK: Double, pBar: Double,
-             fO2: Double, meltFe: String = "12.5molpc"): Double = {
+  private[graft] def fe3Fe2Base(b: Fe3Fe2Iterative.CatBase, tK: Double,
+                                pBar: Double, fO2: Double,
+                                meltFe: String): Double = {
     val g0 = gibbs0(tK)
     val vdp = dVdP(tK, pBar, meltFe)
-    val b = Fe3Fe2Iterative.catBase(mol)
-    val sumMargules = margules.map { case (n, m) => b(n) * m }.sum
+    val sumMargules = margulesSum(b)
     val gTerm = -(g0 + vdp) / (R * tK)
     val lnfO2Quarter = math.log(fO2) / 4.0
     def g(r: Double): Double = {

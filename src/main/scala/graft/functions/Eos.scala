@@ -2,7 +2,9 @@ package graft.functions
 
 /** Mineral equations of state for the QFM buffer's pressure term
   * (reference `EOSs/tait.py`, `EOSs/tools.py`, `EOSs/parameters.py` —
-  * data from Holland & Powell 2011). Scalar math executed inside UDFs. */
+  * data from Holland & Powell 2011). Scalar math executed inside UDFs.
+  * Temperature-only terms live in per-(phase, T) objects ([[Tait]],
+  * [[PhaseAtT]]) so a solver that fixes T computes them once. */
 object Eos {
 
   final case class Phase(
@@ -32,36 +34,45 @@ object Eos {
       a0 = 3.71e-5, K0 = 1857, dKdP = 4.05, dKdP2 = -2.2e-3,
       smax = 35.0, vmax = 0.0, tc0 = 848))
 
-  /** Tait EOS pressure contribution to Gibbs energy (kJ), Holland & Powell
-    * (2011) eqs. 3/11/13 (`EOSs/tait.py:6-59`). */
-  def taitVdP(phase: String, pkbar: Double, tK: Double,
-              tref: Double = 298.15): Double = {
-    val p = phases(phase)
-    val theta = 10636.0 / (p.s / p.n + 6.44)
-    val u0 = theta / tref
-    val u = theta / tK
-    val xi0 = u0 * u0 * math.exp(u0) / math.pow(math.exp(u0) - 1.0, 2.0)
-    val a = (1.0 + p.dKdP) / (1.0 + p.dKdP + p.K0 * p.dKdP2)
-    val b = p.dKdP / p.K0 - p.dKdP2 / (1.0 + p.dKdP)
-    val c = (1.0 + p.dKdP + p.K0 * p.dKdP2) /
+  private def signedPow(x: Double, e: Double): Double =
+    math.signum(x) * math.pow(math.abs(x), e)
+
+  /** Tait EOS pressure contribution to Gibbs energy (kJ) of one phase at
+    * one temperature, Holland & Powell (2011) eqs. 3/11/13
+    * (`EOSs/tait.py:6-59`). Every term that does not depend on pressure
+    * (θ, ξ0, the thermal pressure P_th and `part1`) is computed once here;
+    * [[vdp]] is the per-pressure rest. The one implementation of the Tait
+    * arithmetic: [[taitVdP]], [[PhaseAtT]] and the QFM per-T plan all
+    * evaluate through it. */
+  final class Tait(p: Phase, tK: Double, tref: Double = 298.15) {
+    private val theta = 10636.0 / (p.s / p.n + 6.44)
+    private val u0 = theta / tref
+    private val u = theta / tK
+    private val xi0 = u0 * u0 * math.exp(u0) / math.pow(math.exp(u0) - 1.0, 2.0)
+    private val a = (1.0 + p.dKdP) / (1.0 + p.dKdP + p.K0 * p.dKdP2)
+    private val b = p.dKdP / p.K0 - p.dKdP2 / (1.0 + p.dKdP)
+    private val c = (1.0 + p.dKdP + p.K0 * p.dKdP2) /
       (p.dKdP * p.dKdP + p.dKdP - p.K0 * p.dKdP2)
-    val pth = p.a0 * p.K0 * theta / xi0 *
+    private val pth = p.a0 * p.K0 * theta / xi0 *
       (1.0 / (math.exp(u) - 1.0) - 1.0 / (math.exp(u0) - 1.0))
-    val pv0 = pkbar * p.v0
-    def signedPow(x: Double, e: Double): Double =
-      math.signum(x) * math.pow(math.abs(x), e)
-    val part1 = signedPow(1.0 - b * pth, 1.0 - c)
-    val part2 = signedPow(1.0 + b * (pkbar - pth), 1.0 - c)
-    val part3 = b * (c - 1.0) * pkbar
-    pv0 * (1.0 - a + a * (part1 - part2) / part3)
+    private val part1 = signedPow(1.0 - b * pth, 1.0 - c)
+
+    def vdp(pkbar: Double): Double = {
+      val pv0 = pkbar * p.v0
+      val part2 = signedPow(1.0 + b * (pkbar - pth), 1.0 - c)
+      val part3 = b * (c - 1.0) * pkbar
+      pv0 * (1.0 - a + a * (part1 - part2) / part3)
+    }
   }
+
+  /** [[Tait]] of a phase by name, at one (P, T). */
+  def taitVdP(phase: String, pkbar: Double, tK: Double,
+              tref: Double = 298.15): Double =
+    new Tait(phases(phase), tK, tref).vdp(pkbar)
 
   /** Landau excess Gibbs energy, Anenberg formulation
     * (`EOSs/tools.py:7-66`). */
-  def landau(phase: String, pkbar: Double, tK: Double,
-             vmaxOverride: Option[Double] = None): Double = {
-    val p = phases(phase)
-    val vmax = vmaxOverride.getOrElse(p.vmax)
+  def landau(p: Phase, pkbar: Double, tK: Double, vmax: Double): Double = {
     val q20 = math.sqrt(1.0 - 298.15 / p.tc0)
     val tc = p.tc0 + pkbar * vmax / p.smax
     val q2 = if (tK > tc) 0.0 else math.sqrt((tc - tK) / p.tc0)
@@ -69,39 +80,49 @@ object Eos {
       tc * q2 - tK * (q20 - q2)) + pkbar * vmax * q20
   }
 
-  /** Pressure-dependent part of the Landau excess energy
-    * (`EOSs/tools.py:69-100`). */
-  def landauPDependent(phase: String, pkbar: Double, tK: Double): Double =
-    landau(phase, pkbar, tK) - landau(phase, 0.0, tK, vmaxOverride = Some(0.0))
-
   /** Enthalpy integral Cp dT from Tref to T (`EOSs/tools.py:215-242`). */
-  def enthalpy(phase: String, tK: Double, tref: Double = 298.15): Double = {
-    val p = phases(phase)
+  def enthalpy(p: Phase, tK: Double, tref: Double = 298.15): Double = {
     def integral(t: Double): Double =
       p.cpA * t + 0.5 * p.cpB * t * t - p.cpC / t + 2.0 * p.cpD * math.sqrt(t)
     integral(tK) - integral(tref)
   }
 
   /** Entropy integral (Cp/T) dT (`EOSs/tools.py:244-271`). */
-  def entropy(phase: String, tK: Double, tref: Double = 298.15): Double = {
-    val p = phases(phase)
+  def entropy(p: Phase, tK: Double, tref: Double = 298.15): Double = {
     def integral(t: Double): Double =
       p.cpA * math.log(t) + p.cpB * t - p.cpC / 2.0 / (t * t) -
         2.0 * p.cpD / math.sqrt(t)
     integral(tK) - integral(tref)
   }
 
+  /** One phase at one temperature: its Tait terms, its pressure-free Gibbs
+    * energy and, for quartz and magnetite, the Landau excess. */
+  final class PhaseAtT(name: String, tK: Double) {
+    private val p = phases(name)
+    val tait = new Tait(p, tK)
+    private val hasLandau = name == "quartz" || name == "magnetite"
+    private val g0 =
+      p.h + enthalpy(p, tK) - tK * (p.s / 1e3 + entropy(p, tK))
+    /** landau(p, 0, T, vmax = 0): the pressure-free Landau part. */
+    private val landau0 = landau(p, 0.0, tK, 0.0)
+
+    /** Pressure-dependent part of the Landau excess energy
+      * (`EOSs/tools.py:69-100`). */
+    def landauPDependent(pkbar: Double): Double =
+      landau(p, pkbar, tK, p.vmax) - landau0
+
+    /** Gibbs free energy at (P, T) (`EOSs/tools.py:167-209`). */
+    def gibbs(pkbar: Double): Double = {
+      var g = g0
+      g += tait.vdp(pkbar)
+      if (hasLandau) g += landau(p, pkbar, tK, p.vmax)
+      g
+    }
+  }
+
   /** Gibbs free energy of transition phase1 -> phase2 at (P,T)
     * (`EOSs/tools.py:167-209`). */
   def phaseTransition(pkbar: Double, tK: Double,
-                      phase1: String, phase2: String): Double = {
-    def gibbs(phase: String): Double = {
-      val p = phases(phase)
-      var g = p.h + enthalpy(phase, tK) - tK * (p.s / 1e3 + entropy(phase, tK))
-      g += taitVdP(phase, pkbar, tK)
-      if (phase == "quartz" || phase == "magnetite") g += landau(phase, pkbar, tK)
-      g
-    }
-    gibbs(phase1) - gibbs(phase2)
-  }
+                      phase1: String, phase2: String): Double =
+    new PhaseAtT(phase1, tK).gibbs(pkbar) - new PhaseAtT(phase2, tK).gibbs(pkbar)
 }

@@ -1,6 +1,8 @@
 package graft.functions
 
 import graft.chem.Elements
+import org.apache.spark.sql.expressions.UserDefinedFunction
+import org.apache.spark.sql.functions.{udf => sparkUdf}
 
 /** Iterative Fe3+/Fe2+ models (reference `Fe_redox/Fe3Fe2_models.py`):
   * activities depend on the Fe speciation itself, so each row solves a
@@ -12,56 +14,166 @@ object Fe3Fe2Iterative {
 
   val R = 8.31446261815324
 
-  /** Cation fractions after splitting total Fe (as FeO) into FeO + Fe2O3
-    * at ratio r (`melt.py:225-274` with wtpc=False, then `cations()`). */
-  private[functions] def cationsWithFeSplit(
-      mol: Map[String, Double], r: Double): Map[String, Double] = {
-    val ft = 1.0 / (1.0 + r)
-    val feo = mol.getOrElse("FeO", 0.0)
-    val updated = mol + ("FeO" -> feo * ft) + ("Fe2O3" -> feo * (1.0 - ft) / 2.0)
-    val terms = updated.toSeq.map { case (ox, x) =>
-      Elements.cationName(ox) -> x * Elements.cationAmount(ox)
-    }
-    val tot = terms.iterator.map(_._2).sum
-    terms.groupBy(_._1).map { case (c, vs) => c -> vs.iterator.map(_._2).sum / tot }
-  }
-
-  /** The r-invariant decomposition of [[cationsWithFeSplit]]: splitting
-    * FeO into FeO + Fe2O3 CONSERVES the cation count (each Fe is one
-    * cation on either side), so the denominator and every non-Fe cation
-    * fraction are constant across the fixed-point trials — only the
-    * Fe2+/Fe3+ pair redistributes `feTot` by 1/(1+r). Hoisting this out
-    * of the trial evaluations removes all per-trial Map building. */
-  private[functions] final case class CatBase(cat: Map[String, Double],
-                                              feTot: Double) {
+  /** Cation fractions of one composition at the cations the models read.
+    * From [[CationPlan.split]], `feTot` is FeO's share of the cations
+    * (`melt.py:225-274` with wtpc=False, then `cations()`, split at ratio
+    * r): splitting FeO into FeO + Fe2O3 CONSERVES the cation count (each
+    * Fe is one cation on either side), so the denominator and every non-Fe
+    * fraction are constant across the fixed-point trials and only the
+    * Fe2+/Fe3+ pair redistributes `feTot` by 1/(1+r). From
+    * [[CationPlan.plain]], `feTot` is the plain Fe fraction (all Fe as
+    * Fe2+, no split). */
+  private[graft] final class CatBase(val si: Double, val ti: Double,
+      val al: Double, val mg: Double, val ca: Double, val na: Double,
+      val k: Double, val p: Double, val feTot: Double) {
     @inline def fe(r: Double): Double = feTot / (1.0 + r)
     @inline def fe3(r: Double): Double = feTot - fe(r)
     /** cat("Fe") - cat("Fe3") at trial r. */
     @inline def feMinusFe3(r: Double): Double = fe(r) - fe3(r)
-    def apply(n: String): Double = cat.getOrElse(n, 0.0)
+    /** Fraction by slot, in [[CationPlan.slotNames]] order. */
+    def apply(slot: Int): Double = (slot: @annotation.switch) match {
+      case 0 => si; case 1 => ti; case 2 => al; case 3 => mg
+      case 4 => ca; case 5 => na; case 6 => k; case 7 => p
+    }
   }
 
-  private[functions] def catBase(mol: Map[String, Double]): CatBase = {
-    val feo = mol.getOrElse("FeO", 0.0)
-    val terms = (mol - "FeO" - "Fe2O3").toSeq.map { case (ox, x) =>
-      Elements.cationName(ox) -> x * Elements.cationAmount(ox)
+  /** Everything the cation arithmetic derives from the oxide NAMES alone,
+    * built once per schema: molar weights, the FeO index, cation amounts
+    * and names, and the summation order. A row is then a few loops of
+    * double arithmetic over its weight array, with no Map or tuple.
+    *
+    * Sums run in the iteration order of the composition's mol Map, each a
+    * left fold from 0.0 (as Scala's `toSeq`/`groupBy`/`sum` over that Map
+    * run), which keeps the models' results bit-identical to the Map-based
+    * arithmetic (`SolverKernelSpec`): `order` is an immutable Map with the
+    * same keys, built the same way as that mol Map, whose values index
+    * the weight array. Serializable so a UDF closure captures the plan
+    * itself: no executor-side cache keyed by a deserialised array. */
+  private[graft] final class CationPlan private (weights: Array[Double],
+      normalise: Boolean, order: Map[String, Int]) extends Serializable {
+    private val feo = order.getOrElse("FeO", -1)
+    private val split = new CationPlan.Terms(order - "FeO" - "Fe2O3", weights)
+    private val plain = new CationPlan.Terms(order, weights)
+
+    /** The mol sum in schema order, which normalises wt.% to mol
+      * fractions (1.0 for a plan over mol fractions). */
+    private def molSum(wt: Array[Double]): Double =
+      if (!normalise) 1.0
+      else {
+        var s = 0.0
+        var i = 0
+        while (i < weights.length) { s += wt(i) / weights(i); i += 1 }
+        s
+      }
+
+    private def base(t: CationPlan.Terms, wt: Array[Double], sum: Double,
+                     tot: Double, feTot: Double): CatBase = {
+      def c(slot: Int) = t.cat(wt, sum, tot, slot)
+      new CatBase(c(0), c(1), c(2), c(3), c(4), c(5), c(6), c(7), feTot)
     }
-    val tot = terms.iterator.map(_._2).sum + feo
-    CatBase(
-      terms.groupBy(_._1).map { case (c, vs) => c -> vs.iterator.map(_._2).sum / tot },
-      feo / tot)
+
+    /** [[CatBase]] with FeO/Fe2O3 taken out of the sums (the r-split). */
+    def split(wt: Array[Double]): CatBase = {
+      val sum = molSum(wt)
+      val feoX = if (feo < 0) 0.0 else wt(feo) / weights(feo) / sum
+      val tot = split.sum(wt, sum) + feoX
+      base(split, wt, sum, tot, feoX / tot)
+    }
+
+    /** [[CatBase]] of the plain cations (`moles.cations()`). */
+    def plain(wt: Array[Double]): CatBase = {
+      val sum = molSum(wt)
+      val tot = plain.sum(wt, sum)
+      base(plain, wt, sum, tot, plain.cat(wt, sum, tot, CationPlan.fe))
+    }
+
+    /** Every plain cation fraction by name. */
+    def plainMap(wt: Array[Double]): Map[String, Double] = {
+      val sum = molSum(wt)
+      val tot = plain.sum(wt, sum)
+      plain.groups.map { case (c, g) => c -> plain.groupSum(wt, sum, g) / tot }
+    }
+  }
+
+  private[graft] object CationPlan {
+    /** Cations with a [[CatBase]] slot, then Fe (a plain base's `feTot`). */
+    val slotNames: Array[String] =
+      Array("Si", "Ti", "Al", "Mg", "Ca", "Na", "K", "P", "Fe")
+    private val fe = 8
+
+    /** Plan of a wt.% schema (normalised mol fractions). The order Map is
+      * built the way the schema's mol Map was: `names.zip(..).toMap`. */
+    def of(names: Array[String]): CationPlan = new CationPlan(
+      IaconoMarziano.Comp.weightsFor(names), normalise = true,
+      names.zip(names.indices).toMap)
+
+    /** Plan and value array of a mol-fraction Map, in the Map's own order
+      * (used as is: unit weights, no renormalisation). */
+    def ofMol(mol: Map[String, Double]): (CationPlan, Array[Double]) = {
+      val names = mol.keys.toArray
+      val index = names.zipWithIndex.toMap
+      (new CationPlan(Array.fill(names.length)(1.0), normalise = false,
+        mol.transform((n, _) => index(n))), names.map(mol))
+    }
+
+    /** Cation terms x * cationAmount in `order`'s iteration order, grouped
+      * by cation name (group members keep that order); x is the mol
+      * fraction wt / weight / sum. */
+    private[CationPlan] final class Terms(order: Map[String, Int],
+        w: Array[Double]) extends Serializable {
+      private val (ix, amount, cation) = {
+        val t = order.toArray
+        (t.map(_._2), t.map(o => Elements.cationAmount(o._1)),
+          t.map(o => Elements.cationName(o._1)))
+      }
+      val groups: Map[String, Array[Int]] =
+        cation.indices.toArray.groupBy(cation(_))
+      private val slots: Array[Array[Int]] =
+        slotNames.map(groups.getOrElse(_, Array.emptyIntArray))
+
+      @inline private def term(wt: Array[Double], sum: Double, j: Int): Double =
+        wt(ix(j)) / w(ix(j)) / sum * amount(j)
+
+      def sum(wt: Array[Double], s: Double): Double = {
+        var acc = 0.0
+        var j = 0
+        while (j < ix.length) { acc += term(wt, s, j); j += 1 }
+        acc
+      }
+
+      def groupSum(wt: Array[Double], s: Double, g: Array[Int]): Double = {
+        var acc = 0.0
+        var j = 0
+        while (j < g.length) { acc += term(wt, s, g(j)); j += 1 }
+        acc
+      }
+
+      /** Fraction of slot's cation; 0.0 when the schema has none. */
+      def cat(wt: Array[Double], s: Double, tot: Double, slot: Int): Double = {
+        val g = slots(slot)
+        if (g.length == 0) 0.0 else groupSum(wt, s, g) / tot
+      }
+    }
+  }
+
+  /** The split cation base of a mol-fraction Map (adapter over
+    * [[CationPlan.split]]). */
+  private[graft] def catBase(mol: Map[String, Double]): CatBase = {
+    val (plan, x) = CationPlan.ofMol(mol)
+    plan.split(x)
   }
 
   /** O'Neill et al. (2006) eq. 10 (`Fe3Fe2_models.py:840-871`): the cation
     * polynomial and pressure term are per-row constants; only the
     * Fe2+-Fe3+ difference varies per trial. */
   def oneill2006(mol: Map[String, Double], tK: Double, pBar: Double,
-                 fO2: Double): Double = {
-    val b = catBase(mol)
+                 fO2: Double): Double = oneill2006Base(catBase(mol), tK, pBar, fO2)
+
+  private[graft] def oneill2006Base(b: CatBase, tK: Double, pBar: Double,
+                                fO2: Double): Double = {
     val pGPa = pBar / 1e4
-    val catPoly = -28144.0 + 3905.0 * b("Mg") - 13359.0 * b("Ca") -
-      14858.0 * b("Na") - 9805.0 * b("K") + 10906.0 * b("Al") +
-      110971.0 * b("P")
+    val catPoly = -28144.0 + 3905.0 * b.mg - 13359.0 * b.ca -
+      14858.0 * b.na - 9805.0 * b.k + 10906.0 * b.al + 110971.0 * b.p
     val part2 = 13.95 +
       (33122.0 / tK - 5.24) * (math.pow(1.0 + 0.241 * pGPa, 0.75) - 1.0) -
       (39156.0 / tK - 6.17) * (math.pow(1.0 + 0.132 * pGPa, 0.75) - 1.0)
@@ -77,8 +189,11 @@ object Fe3Fe2Iterative {
     * FeO1.5 partial molar volumes + Jayasuriya Margules activities.
     * Everything but the Fe2+-Fe3+ Margules term is per-row constant. */
   def armstrong2019(mol: Map[String, Double], tK: Double, pBar: Double,
-                    fO2: Double): Double = {
-    val b = catBase(mol)
+                    fO2: Double): Double =
+    armstrong2019Base(catBase(mol), tK, pBar, fO2)
+
+  private[graft] def armstrong2019Base(b: CatBase, tK: Double, pBar: Double,
+                                   fO2: Double): Double = {
     val gibbs0 = -(16201.0 / tK - 8.031) * (R * tK)
     def vdp(phase: String): Double = {
       val (k0, kp0) = phase match {
@@ -99,8 +214,8 @@ object Fe3Fe2Iterative {
       pGPa * v0 * (1.0 - a + part1 / part2)
     }
     val dVdP = vdp("Fe3") - vdp("Fe2")
-    val sumMargules = -2248.0 * b("Mg") + 7690.0 * b("Ca") + 8553.0 * b("Na") +
-      5644.0 * b("K") + -6278.0 * b("Al")
+    val sumMargules = -2248.0 * b.mg + 7690.0 * b.ca + 8553.0 * b.na +
+      5644.0 * b.k + -6278.0 * b.al
     val lnfO2Quarter = math.log(fO2) / 4.0
     val gTerm = (gibbs0 + dVdP) / (R * tK)
     fixedPoint { r =>
@@ -113,11 +228,13 @@ object Fe3Fe2Iterative {
     * reference's `moles.cations()` used by hirschmann2022
     * (`Fe3Fe2_models.py:1304-1307`). */
   private[graft] def plainCations(mol: Map[String, Double]): Map[String, Double] = {
-    val terms = mol.toSeq.map { case (ox, x) =>
-      Elements.cationName(ox) -> x * Elements.cationAmount(ox)
-    }
-    val tot = terms.iterator.map(_._2).sum
-    terms.groupBy(_._1).map { case (c, vs) => c -> vs.iterator.map(_._2).sum / tot }
+    val (plan, x) = CationPlan.ofMol(mol)
+    plan.plainMap(x)
+  }
+
+  private def plainBase(mol: Map[String, Double]): CatBase = {
+    val (plan, x) = CationPlan.ofMol(mol)
+    plan.plain(x)
   }
 
   /** Hirschmann (2022) eq. 21 with the deng2020 EOS-integral dVdP instead
@@ -128,13 +245,11 @@ object Fe3Fe2Iterative {
   def hirschmann2022DengVdP(mol: Map[String, Double], tK: Double,
                             pBar: Double, fO2: Double): Double = {
     val (a, b, c, dCp, t0) = (0.1917, -1.961, 4158.1, 33.25, 1673.15)
-    val cats = plainCations(mol)
-    def cat(n: String): Double = cats.getOrElse(n, 0.0)
-    val compositional =
-      Seq("Si" -> -520.46, "Ti" -> -185.37, "Mg" -> 494.39, "Ca" -> 1838.34,
-        "Na" -> 2888.48, "K" -> 3473.68, "P" -> -4473.6)
-        .map { case (n, y) => cat(n) * y }.sum +
-        -1245.09 * cat("Si") * cat("Al") + -1156.86 * cat("Si") * cat("Mg")
+    val x = plainBase(mol)
+    // a left fold from 0.0, as Scala's `sum` over a List
+    val compositional = 0.0 + x.si * -520.46 + x.ti * -185.37 +
+      x.mg * 494.39 + x.ca * 1838.34 + x.na * 2888.48 + x.k * 3473.68 +
+      x.p * -4473.6 + -1245.09 * x.si * x.al + -1156.86 * x.si * x.mg
     val dVdP = Deng2020.dVdP(tK, pBar)
     val part1 = a * math.log10(fO2) + b + c / tK
     val part2 = -dCp / (R * math.log(10.0)) *
@@ -152,22 +267,53 @@ object Fe3Fe2Iterative {
     * Fe3Fe2 at 1 GPa), which keeps the hot path codegen'd + oracle-able.
     * Closed-form in Fe3Fe2 (total-Fe cations, no split). */
   def sun2024DengVdP(mol: Map[String, Double], tK: Double, pBar: Double,
-                     fO2: Double): Double = {
+                     fO2: Double): Double =
+    sun2024DengVdPBase(plainBase(mol), tK, pBar, fO2)
+
+  private[graft] def sun2024DengVdPBase(b: CatBase, tK: Double, pBar: Double,
+                                    fO2: Double): Double = {
     val a0 = 2.1479; val a1 = -230.2593; val a2 = -1.8557e-4; val a3 = 34.3293
     val a4 = 1.4138; val a5 = -17.3040; val a6 = -10.1820; val a7 = -6.7463
     val a8 = -7.3886; val a9 = -14.5430; val a10 = -9.9776; val a11 = -16.1506
     val a12 = -37.5572; val h = 2.1410
-    val cats = plainCations(mol)
-    def cat(n: String): Double = cats.getOrElse(n, 0.0)
     val gamma = Deng2020.dVdP(tK, pBar) / (R * tK)
     val omega = a1 + a2 * math.pow(tK, 1.5) + a3 * math.log(tK)
-    val fe = cat("Fe")
+    val fe = b.feTot
     val phi = a4 * math.log(fe) + a5 * math.sqrt(fe) +
-      a6 * math.pow(cat("Si"), 3.0) + a7 * cat("Al") + a8 * cat("Ti") +
-      a9 * cat("Ca") + a10 * cat("Mg") +
-      (a11 + a12 * fe) * (cat("Na") + cat("K"))
+      a6 * math.pow(b.si, 3.0) + a7 * b.al + a8 * b.ti +
+      a9 * b.ca + a10 * b.mg + (a11 + a12 * fe) * (b.na + b.k)
     math.pow(10.0,
       (math.log10(fO2) - omega - phi - h * gamma) / (4.0 + a0 * math.sqrt(fe)))
+  }
+
+  /** The one Spark UDF over the iterative Fe3Fe2 models (`oneill2006`,
+    * `armstrong2019`, `deng2020`, `sun2024`):
+    * `(array(wt.% in els order), T_K, P_bar, fO2) => Fe3Fe2`. The closure
+    * captures the schema's [[CationPlan]], built here once, so a row does
+    * only its own arithmetic. The Deng-backed models also capture any
+    * attached Deng memo stats and republish them per task
+    * ([[Deng2020.ensureMetrics]]). */
+  def udf(els: Array[String], model: String): UserDefinedFunction = {
+    val plan = CationPlan.of(els)
+    val mm = Deng2020.currentMetrics.orNull
+    def publish(): Unit = if (mm != null) Deng2020.ensureMetrics(mm)
+    val f: (Seq[Double], Double, Double, Double) => Double = model match {
+      case "oneill2006" =>
+        (wt, t, p, fo2) => oneill2006Base(plan.split(wt.toArray), t, p, fo2)
+      case "armstrong2019" =>
+        (wt, t, p, fo2) => armstrong2019Base(plan.split(wt.toArray), t, p, fo2)
+      case "deng2020" => (wt, t, p, fo2) => {
+        publish()
+        Deng2020.fe3Fe2Base(plan.split(wt.toArray), t, p, fo2, "12.5molpc")
+      }
+      case "sun2024" => (wt, t, p, fo2) => {
+        publish()
+        sun2024DengVdPBase(plan.plain(wt.toArray), t, p, fo2)
+      }
+      case other =>
+        throw new IllegalArgumentException(s"iterative Fe3Fe2 model $other")
+    }
+    sparkUdf(f)
   }
 
   /** Solve r = f(r) by 60 fixed bisection steps on g(r) = f(r) - r over

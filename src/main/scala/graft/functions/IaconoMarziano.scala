@@ -26,7 +26,6 @@ object IaconoMarziano {
 
   /** Oxide wt.% composition keyed by element name; H2O replaceable. */
   final case class Comp(names: Array[String], wt: Array[Double]) {
-    private def weights = Comp.weightsFor(names)
     def updated(element: String, v: Double): Comp = {
       val i = names.indexOf(element)
       val w2 = wt.clone(); w2(i) = v
@@ -36,35 +35,32 @@ object IaconoMarziano {
       val i = names.indexOf(element)
       if (i < 0) 0.0 else wt(i)
     }
-    /** Normalised mol fractions. */
-    def molNorm: Map[String, Double] = {
-      val ws = weights
-      var sum = 0.0
-      val mol = new Array[Double](names.length)
-      var i = 0
-      while (i < names.length) { mol(i) = wt(i) / ws(i); sum += mol(i); i += 1 }
-      names.zip(mol.map(_ / sum)).toMap
-    }
   }
 
   object Comp {
-    /** Molar weights per schema, cached by the identity of the names array:
-      * every `updated`/per-row Comp shares one names reference, so the
-      * weight lookups happen once per schema instead of once per solver
-      * trial (this sat at the top of the sf0.1 bench profile). Plain
-      * get-then-put — CHM.get is lock-free, and racing puts compute the
-      * same value. */
+    /** Molar weights per schema, cached by the CONTENT of the names array,
+      * so the weight lookups happen once per schema instead of once per
+      * solver trial (this sat at the top of the sf0.1 bench profile). Not
+      * by its identity: a names array captured in a UDF closure is
+      * deserialised again for every task, and an identity key added one
+      * entry per task that was never removed. Plain get-then-put — CHM.get
+      * is lock-free, and racing puts compute the same value. */
     private val weightsCache = new java.util.concurrent.ConcurrentHashMap[
-      Array[String], Array[Double]]()
+      Seq[String], Array[Double]]()
+
     def weightsFor(names: Array[String]): Array[Double] = {
-      val hit = weightsCache.get(names)
+      val key = scala.collection.immutable.ArraySeq.unsafeWrapArray(names)
+      val hit = weightsCache.get(key)
       if (hit != null) hit
       else {
         val w = names.map(n => Elements.chemicalWeight(n).get)
-        weightsCache.putIfAbsent(names, w)
+        weightsCache.putIfAbsent(key, w)
         w
       }
     }
+
+    /** Spec hook: distinct schemas cached. */
+    private[graft] def weightsCacheSize: Int = weightsCache.size
   }
 
   /** Per-sample invariants of the IM solubility laws, precomputed so the

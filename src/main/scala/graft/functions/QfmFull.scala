@@ -13,9 +13,12 @@ import org.apache.spark.sql.functions.{col, lit, udf}
   * for the full decision rule):
   *
   *  - default: per-executor memo caches inside a per-row UDF
-  *    (transitionCache keyed by T — the only solver work — and fO2Cache
-  *    keyed by (T, P)), bounded with partial eviction and accumulator
-  *    observability ([[Memo]]) — ONE narrow stage, no shuffle at all.
+  *    (transitionCache keyed by T, holding the per-T plan [[AtT]]: the
+  *    transition solves — the only solver work — and every
+  *    temperature-only EOS term; fO2Cache keyed by (T, P)), bounded with
+  *    partial eviction and accumulator observability ([[Memo]]) — ONE
+  *    narrow stage, no shuffle at all. A row that misses fO2Cache does
+  *    only its pressure arithmetic on the per-T plan.
   *    Right when (T, P) are near-unique continuous doubles: at 100 TB the
   *    distinct set then approaches table cardinality, a broadcast OOMs
   *    the driver, and a shuffle join-back moves the full-width fact
@@ -32,25 +35,92 @@ object QfmFull {
     -587474.0 + 1584.427 * tK - 203.3164 * tK * math.log(tK) +
       0.092710 * tK * tK
 
-  /** VdP of the three phases WITHOUT transitions (used to subtract the
-    * 1-bar EOS contribution, `fO2/QFM.py:12-30`). */
-  private def vdpNoTransitions(tK: Double, pBar: Double): (Double, Double, Double) = {
-    val pkbar = pBar / 1e3
-    val qtz = Eos.taitVdP("quartz", pkbar, tK) +
-      Eos.landauPDependent("quartz", pkbar, tK)
-    val fay = Eos.taitVdP("fayalite", pkbar, tK)
-    val mt = Eos.taitVdP("magnetite", pkbar, tK)
-    (qtz, mt, fay)
+  /** Everything of the buffer that depends on T alone, built once per T:
+    * the three phase-transition pressures (kbar), each phase's
+    * temperature-only Tait terms, the 1-bar EOS contribution and
+    * `muO2OneBar`. A row then does only its pressure arithmetic
+    * ([[fO2Base]]). */
+  private final class AtT(tK: Double) {
+    private val qtz = new Eos.PhaseAtT("quartz", tK)
+    private val coe = new Eos.PhaseAtT("coesite", tK)
+    private val stish = new Eos.PhaseAtT("stishovite", tK)
+    private val fay = new Eos.PhaseAtT("fayalite", tK)
+    private val ring = new Eos.PhaseAtT("ringwoodite", tK)
+    private val mt = new Eos.PhaseAtT("magnetite", tK)
+
+    // 60 fixed bisection steps on [1e-3, 500] kbar (the reference uses
+    // fsolve from a guess of 8 kbar, `fO2/QFM.py:45-63`): the transition
+    // Gibbs difference is monotone in P (the downstream polymorph is
+    // denser), so the root is unique; deterministic straight-line
+    // arithmetic lets the DuckDB oracle ([[graft.QfmSql]]) replicate the
+    // solve bit-for-bit (the earlier bracket-expanding Brent had
+    // data-dependent branch paths no SQL rendering could follow).
+    private def solve(p1: Eos.PhaseAtT, p2: Eos.PhaseAtT): Double = {
+      var lo = 1e-3
+      var hi = 500.0
+      var it = 0
+      while (it < 60) {
+        val mid = (lo + hi) * 0.5
+        if (p1.gibbs(mid) - p2.gibbs(mid) < 0.0) lo = mid else hi = mid
+        it += 1
+      }
+      (lo + hi) * 0.5
+    }
+
+    val pQtzCoe: Double = solve(qtz, coe)
+    val pCoeStish: Double = solve(coe, stish)
+    val pFayRing: Double = solve(fay, ring)
+
+    // VdP at the transition pressures, subtracted past each transition
+    private val coeAtQtzCoe = coe.tait.vdp(pQtzCoe)
+    private val stishAtCoeStish = stish.tait.vdp(pCoeStish)
+    private val ringAtFayRing = ring.tait.vdp(pFayRing)
+
+    /** The 1-bar EOS contribution, phases WITHOUT transitions
+      * (`fO2/QFM.py:12-30`). */
+    private val mu1barEos = {
+      val pkbar = 1.0 / 1e3
+      val q1 = qtz.tait.vdp(pkbar) + qtz.landauPDependent(pkbar)
+      val f1 = fay.tait.vdp(pkbar)
+      val m1 = mt.tait.vdp(pkbar)
+      1e3 * (3.0 * q1 + 2.0 * m1 - 3.0 * f1)
+    }
+    private val muOneBar = muO2OneBar(tK)
+    private val rT = R * tK
+
+    /** Base fO2 at P: the buffer phases' VdP WITH polymorph transitions
+      * (`fO2/QFM.py:33-102`) on top of the 1-bar terms. */
+    def fO2(pBar: Double): Double = {
+      val pkbar = pBar / 1e3
+      val pSiO2 = math.min(pkbar, pQtzCoe)
+      var vdpSiO2 = qtz.tait.vdp(pSiO2) + qtz.landauPDependent(pSiO2)
+      if (pkbar > pQtzCoe) {
+        vdpSiO2 += coe.tait.vdp(math.min(pkbar, pCoeStish)) - coeAtQtzCoe
+        if (pkbar > pCoeStish)
+          vdpSiO2 += stish.tait.vdp(pkbar) - stishAtCoeStish
+      }
+      var vdpFe2SiO4 = fay.tait.vdp(math.min(pkbar, pFayRing))
+      if (pkbar > pFayRing)
+        vdpFe2SiO4 += ring.tait.vdp(pkbar) - ringAtFayRing
+      val vdpMt = mt.tait.vdp(pkbar)
+      val muP = 1e3 * (3.0 * vdpSiO2 + 2.0 * vdpMt - 3.0 * vdpFe2SiO4)
+      val mu = muOneBar + (muP - mu1barEos)
+      math.exp(mu / rT)
+    }
   }
 
-  /** Phase-transition pressures (kbar) at T — depend on temperature only,
-    * solved with bracketed Brent (reference uses fsolve from a guess of
-    * 8 kbar, `fO2/QFM.py:45-63`). Memoised per executor: distinct (T,P)
+  /** The per-T plan ([[AtT]]) memoised per executor: distinct (T,P)
     * cardinality can be row-scale, but distinct T rarely is. */
-  private val transitionCache = new Memo[Double, (Double, Double, Double)](100000)
+  private val transitionCache = new Memo[Double, AtT](100000)
 
-  def transitionPressures(tK: Double): (Double, Double, Double) =
-    transitionCache.getOrFill(tK)(transitionsAt.apply(tK))
+  private def atT(tK: Double): AtT = transitionCache.getOrFill(tK)(new AtT(tK))
+
+  /** Phase-transition pressures (kbar) at T: quartz→coesite,
+    * coesite→stishovite, fayalite→ringwoodite. */
+  def transitionPressures(tK: Double): (Double, Double, Double) = {
+    val a = atT(tK)
+    (a.pQtzCoe, a.pCoeStish, a.pFayRing)
+  }
 
   /** Export hit/miss/fill/eviction counters for both memo caches
     * (called by Verify/Bench after session build). */
@@ -62,56 +132,6 @@ object QfmFull {
     Seq(t, f)
   }
 
-  // computeIfAbsent, not get/put: plain get/put lets every task on a cold
-  // executor run the same three 60-step solves concurrently before the
-  // first put lands (O(distinct T x cores) duplicate work on every fresh
-  // executor); computeIfAbsent pays the cold cost once per executor.
-  private val transitionsAt: java.util.function.Function[
-    Double, (Double, Double, Double)] = { tK =>
-    // 60 fixed bisection steps on [1e-3, 500] kbar: the transition Gibbs
-    // difference is monotone in P (the downstream polymorph is denser), so
-    // the root is unique; deterministic straight-line arithmetic lets the
-    // DuckDB oracle ([[graft.QfmSql]]) replicate the solve bit-for-bit
-    // (the earlier bracket-expanding Brent had data-dependent branch
-    // paths no SQL rendering could follow).
-    def solve(p1: String, p2: String): Double = {
-      var lo = 1e-3
-      var hi = 500.0
-      var it = 0
-      while (it < 60) {
-        val mid = (lo + hi) * 0.5
-        if (Eos.phaseTransition(mid, tK, p1, p2) < 0.0) lo = mid else hi = mid
-        it += 1
-      }
-      (lo + hi) * 0.5
-    }
-    (solve("quartz", "coesite"), solve("coesite", "stishovite"),
-      solve("fayalite", "ringwoodite"))
-  }
-
-  /** VdP of the three buffer phases WITH polymorph transitions
-    * (`fO2/QFM.py:33-102`). */
-  def vdpWithTransitions(tK: Double, pBar: Double): (Double, Double, Double) = {
-    val pkbar = pBar / 1e3
-    val (pQtzCoe, pCoeStish, pFayRing) = transitionPressures(tK)
-
-    var vdpSiO2 = Eos.taitVdP("quartz", math.min(pkbar, pQtzCoe), tK) +
-      Eos.landauPDependent("quartz", math.min(pkbar, pQtzCoe), tK)
-    if (pkbar > pQtzCoe) {
-      vdpSiO2 += Eos.taitVdP("coesite", math.min(pkbar, pCoeStish), tK) -
-        Eos.taitVdP("coesite", pQtzCoe, tK)
-      if (pkbar > pCoeStish)
-        vdpSiO2 += Eos.taitVdP("stishovite", pkbar, tK) -
-          Eos.taitVdP("stishovite", pCoeStish, tK)
-    }
-    var vdpFe2SiO4 = Eos.taitVdP("fayalite", math.min(pkbar, pFayRing), tK)
-    if (pkbar > pFayRing)
-      vdpFe2SiO4 += Eos.taitVdP("ringwoodite", pkbar, tK) -
-        Eos.taitVdP("ringwoodite", pFayRing, tK)
-    val vdpMt = Eos.taitVdP("magnetite", pkbar, tK)
-    (vdpSiO2, vdpMt, vdpFe2SiO4)
-  }
-
   /** (T, P) -> base fO2 memo, bounded like [[transitionCache]]: repeated
     * conditions skip even the closed-form Tait arithmetic. */
   private val fO2Cache = new Memo[(Double, Double), java.lang.Double](100000)
@@ -119,14 +139,8 @@ object QfmFull {
   /** Spec hook: entries currently memoised (no-insertion law). */
   private[graft] def fO2CacheSize: Int = fO2Cache.size
 
-  private def fO2Base(tK: Double, pBar: Double): java.lang.Double = {
-    val (q, m, f) = vdpWithTransitions(tK, pBar)
-    val muP = 1e3 * (3.0 * q + 2.0 * m - 3.0 * f)
-    val (q1, m1, f1) = vdpNoTransitions(tK, 1.0)
-    val mu1barEos = 1e3 * (3.0 * q1 + 2.0 * m1 - 3.0 * f1)
-    val mu = muO2OneBar(tK) + (muP - mu1barEos)
-    math.exp(mu / (R * tK))
-  }
+  private[graft] def fO2Base(tK: Double, pBar: Double): java.lang.Double =
+    atT(tK).fO2(pBar)
 
   /** Absolute fO2 (bar) at QFM + logshift, T (K), P (bar)
     * (`fO2/QFM.py:187-239`). */
