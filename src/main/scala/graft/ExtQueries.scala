@@ -1055,25 +1055,14 @@ object ExtQueries {
     // dedup window on fp — hash-partitioned, carries (id, fp, 2 doubles),
     // never text.
     Q("q_pipeline_clean", (s, dir) => {
-      val base = Pipeline.applySpark(Tables.read(s, dir, "documents"), cleanStages)
-        // pushdown barrier: without it Catalyst substitutes the FULL
-        // quality/lang expression trees (hundreds of string primitives)
-        // into the filter condition, whose generated filter method then
-        // exceeds Janino's 64 KB limit and the whole stage silently
-        // falls back to interpreted eval. PushDownPredicates cannot
-        // cross a Project containing a nondeterministic expression, so
-        // the predicate stays a comparison over the already-projected
-        // columns and the stage keeps whole-stage codegen — but the
-        // barrier must be REFERENCED by the filter (third, always-true
-        // conjunct: the id is nonnegative by contract) or ColumnPruning
-        // deletes it first and pushdown proceeds anyway. (The predicate
-        // reads computed text features, so parquet pushdown was never on
-        // the table; rows and results are unchanged.)
-        .withColumn("_barrier", monotonically_increasing_id())
+      // Shared keeps the filter above the projection: pushed through it,
+      // Catalyst would substitute the full quality/lang expression trees
+      // into the filter condition, whose generated method exceeds
+      // Janino's 64 KB limit and drops the stage to interpreted eval
+      val base = Shared(
+        Pipeline.applySpark(Tables.read(s, dir, "documents"), cleanStages))
       val w = Window.partitionBy("fp").orderBy("doc_id")
-      base.filter(col("quality") >= 0.2 && col("lang_pred") === "en" &&
-          col("_barrier") >= 0L)
-        .drop("_barrier")
+      base.filter(col("quality") >= 0.2 && col("lang_pred") === "en")
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
         .select(col("doc_id"), col("n_tokens"),
@@ -2104,20 +2093,16 @@ object ExtQueries {
           org.apache.spark.sql.functions.broadcast
         else identity
       val ts = split(col("text"), " ")
-      // the isNotNull filter is a value no-op (both slices have length
-      // size-1, so arrays_zip never null-pads) applied to the SHARED bg
-      // relation: each model join would otherwise infer its own
-      // null-filter set on its build side (c2: w1&w2, c1: w1), making
-      // the branches' subtrees canonically unequal and defeating the
-      // runtime exchange reuse that lets c1/v ride c2's corpus explode
-      val bg = Tables.read(s, dir, "documents")
+      // bg, c2 and c1 each feed two consumers and are Shared, so the
+      // model joins' inferred null filters stay above them and c1/v ride
+      // c2's corpus explode
+      val bg = Shared(Tables.read(s, dir, "documents")
         .select(col("doc_id"),
           explode(arrays_zip(slice(ts, lit(1), size(ts) - 1),
             slice(ts, lit(2), size(ts) - 1))).as("bg"))
         .select(col("doc_id"), col("bg").getField("0").as("w1"),
-          col("bg").getField("1").as("w2"))
-        .where(col("w1").isNotNull && col("w2").isNotNull)
-      val c2 = bg.groupBy("w1", "w2").agg(count(lit(1)).as("c2"))
+          col("bg").getField("1").as("w2")))
+      val c2 = Shared(bg.groupBy("w1", "w2").agg(count(lit(1)).as("c2")))
       // c1 and v derive from c2 at VOCABULARY scale (guide §2.4): the
       // per-w1 occurrence count is the sum of its (w1, w2) counts, and
       // every distinct w1 owns at least one c2 row — identical values,
@@ -2126,12 +2111,8 @@ object ExtQueries {
       // independent corpus passes (groupBy(w1) and countDistinct(w1)
       // each re-ran the explode; their post-partial-agg shuffles were
       // already vocabulary-sized, the map-side work was not).
-      val c1 = c2.groupBy("w1").agg(sum(col("c2")).as("c1"))
-      // c1 >= 1 is a value no-op (a sum of positive counts) pruning pin:
-      // v needs no column of c1, and without the reference column
-      // pruning drops the sum from v's branch, breaking the canonical
-      // equality that lets v reuse c1's (and transitively c2's) exchange
-      val v = c1.where(col("c1") >= 1).agg(count(lit(1)).as("v"))
+      val c1 = Shared(c2.groupBy("w1").agg(sum(col("c2")).as("c1")))
+      val v = c1.agg(count(lit(1)).as("v"))
       bg.join(mb(c2), Seq("w1", "w2")).join(mb(c1), Seq("w1")).crossJoin(v)
         .select(col("doc_id"),
           log((col("c2") + lit(1L)).cast("double") /
@@ -2732,19 +2713,16 @@ object ExtQueries {
       // can never inflate totals or surface as a collocation member
       val ts = filter(split(col("text"), " "), x => x =!= "")
       val docs = Tables.read(s, dir, "documents")
-      // value no-op null guard (equal-length slices never null-pad), on
-      // the SHARED bg relation: the unigram joins otherwise infer their
-      // own isnotnull(w1)/isnotnull(w2) on the main branch only, which
-      // makes the totals branch (mm) canonically unequal and re-runs the
-      // corpus bigram explode instead of reusing bgc's exchange
-      val bg = docs.select(explode(arrays_zip(slice(ts, lit(1), size(ts) - 1),
+      // bg, uni and bgc each feed two consumers and are Shared, so the
+      // unigram joins' inferred null filters stay above them and the
+      // totals branches reuse the aggregates' exchanges
+      val bg = Shared(docs.select(explode(arrays_zip(slice(ts, lit(1), size(ts) - 1),
           slice(ts, lit(2), size(ts) - 1))).as("bg"))
         .select(col("bg").getField("0").as("w1"),
-          col("bg").getField("1").as("w2"))
-        .where(col("w1").isNotNull && col("w2").isNotNull)
+          col("bg").getField("1").as("w2")))
       val tk = docs.select(explode(ts).as("w"))
-      val uni = tk.groupBy("w").agg(count(lit(1)).as("c"))
-      val bgc = bg.groupBy("w1", "w2").agg(count(lit(1)).as("pair_count"))
+      val uni = Shared(tk.groupBy("w").agg(count(lit(1)).as("c")))
+      val bgc = Shared(bg.groupBy("w1", "w2").agg(count(lit(1)).as("pair_count")))
       // totals DERIVED from the aggregates (sum of partial counts ==
       // direct count), so the corpus-scale explodes run once each —
       // not re-run for a bare count(*)
@@ -2802,27 +2780,19 @@ object ExtQueries {
       // partition holds at most |sources| rows — scale-safe — and the
       // join's second corpus-derived subtree plus its own t exchange
       // disappear from the plan. __rn_t tags one row per distinct t so
-      // the (n, v) scalar derives from the same chain.
-      val wT = org.apache.spark.sql.expressions.Window.partitionBy("t")
-      val withCt = cst
-        .withColumn("c_t", sum(col("c_st")).over(wT))
-        .withColumn("__rn_t",
-          row_number().over(wT.orderBy("source")))
+      // the (n, v) scalar derives from the same chain. Both run over one
+      // window spec (the sum's frame is the whole partition), so they
+      // plan as one Window operator behind one sort.
+      val wT = Window.partitionBy("t").orderBy("source")
+      val withCt = Shared(cst
+        .withColumn("c_t", sum(col("c_st"))
+          .over(wT.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
+        .withColumn("__rn_t", row_number().over(wT)))
       // cs derives from withCt (not cst): summing c_st per source over
-      // the window output is value-identical, and it keeps the cs
-      // branch's subtree canonically equal to the main chain below the
-      // t-window exchange, so runtime exchange reuse computes the
-      // corpus explode + (source, t) aggregate ONCE for all consumers
-      // (deriving from cst let the broadcast join's inferred
-      // isnotnull(source) push to the cs branch's scan — a subtree
-      // difference that re-ran the whole corpus chain). The c_t >= c_st
-      // predicate is a value no-op (a sum of positive counts is >= any
-      // single member, which the optimizer cannot prove): it references
-      // the window column so column pruning cannot eliminate the Window
-      // from this branch, which would silently restore the private-scan
-      // shape; it also blocks the join's isnotnull(source) inference
-      // from pushing below the window (source is not its partition key).
-      val cs = withCt.where(col("c_t") >= col("c_st"))
+      // the window output is value-identical, and withCt is Shared by its
+      // three consumers, so the corpus explode + (source, t) aggregate
+      // run once for all of them
+      val cs = withCt
         .groupBy("source").agg(sum(col("c_st")).as("c_s"))
       val nv = withCt.where(col("__rn_t") === 1)
         .agg(sum(col("c_t")).as("n"), count(lit(1)).as("v"))

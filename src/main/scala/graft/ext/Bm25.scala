@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import graft.Shared
 
 /** BM25 lexical retrieval over a document corpus: score every document
   * against a set of term queries with the Okapi BM25 ranking function
@@ -63,23 +64,18 @@ object Bm25 {
 
     val toks = split(col(textCol), " ")
     // (doc, term) counts with the doc length carried through the explode —
-    // avoids a second corpus-scale join just to fetch doclen
-    val tfq = docs
+    // avoids a second corpus-scale join just to fetch doclen. Shared: the
+    // document frequencies and the scores both read it, and the corpus
+    // explode runs once.
+    val tfq = Shared(docs
       .select(col(idCol).as("doc_id"), size(toks).cast("double").as("dl"),
         explode(toks).as("term"))
       .where(col("term").isin(qtermList: _*))
       .groupBy("doc_id", "term")
-      .agg(count(lit(1)).cast("double").as("tf"), min(col("dl")).as("dl"))
+      .agg(count(lit(1)).cast("double").as("tf"), min(col("dl")).as("dl")))
     // document frequency per query term ((doc, term) is unique in tf, so
-    // count(*) = #docs containing the term); one row per query term.
-    // The filter is a value no-op (tf counts existing rows so tf >= 1;
-    // dl is a size() so dl >= 0 — neither provable by the optimizer):
-    // it references tf/dl so this branch prunes the tf aggregate exactly
-    // like the scoring branch does, the subtrees stay canonically equal
-    // below the (doc, term) exchange, and runtime exchange reuse runs
-    // the corpus explode ONCE — without it, column pruning rewrote this
-    // branch's aggregate to a distinct and re-ran the explode.
-    val dfreq = tfq.where(col("tf") >= 1 && col("dl") >= 0)
+    // count(*) = #docs containing the term); one row per query term
+    val dfreq = tfq
       .groupBy("term")
       .agg(count(lit(1)).cast("double").as("df"))
     val stats = docs

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Shared
 
 /** Corpus-level statistics operators for training-data curation:
   * per-group top-k selection, TF-IDF term weighting, and exact
@@ -44,19 +45,12 @@ object CorpusStats {
     * oracle's COUNT(*) subquery computes. */
   def tfidfTopTerms(docs: DataFrame, k: Int): DataFrame = {
     val n = docs.count()
-    val tf = docs
+    // Shared: the df aggregate and the scoring join both read the (doc,
+    // term) counts, and the tokenize + explode runs once
+    val tf = Shared(docs
       .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-    // tf >= 1 is a value no-op (tf counts existing rows) pruning pin, the
-    // same trick as Bm25.dfreq: it references the tf column so this branch
-    // prunes the (doc, term) aggregate exactly like the scoring branch
-    // does, both subtrees stay canonically equal below the (doc, term)
-    // exchange, and runtime exchange reuse runs the corpus explode ONCE —
-    // without it, column pruning specialised this branch's aggregate and
-    // re-ran the tokenize+explode per consumer (r16 runtime audit: 2
-    // Generates in the final plan).
-    val dfreq = tf.where(col("tf") >= 1)
-      .groupBy("term").agg(count(lit(1)).as("df"))
+      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf")))
+    val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val idf = log((lit(n.toDouble) + lit(1.0)) /
       (col("df").cast("double") + lit(1.0))) + lit(1.0)
     val w = Window.partitionBy("doc_id").orderBy(col("tfidf").desc, col("term"))

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Shared
 
 /** Exact set-similarity self-join: all document pairs whose token-set
   * Jaccard is >= a threshold, via prefix filtering (Bayardo et al.,
@@ -34,6 +35,50 @@ import org.apache.spark.sql.functions._
   */
 object SetSimJoin {
 
+  /** Each doc's distinct tokens ranked by the global rare-first order
+    * (`_id, _n, _tok, _df, _rk`), and each doc's sorted token set
+    * (`_id, _set, _n`) derived from that chain.
+    *
+    * The doc's distinct-token count `_n` rides the explode as a per-row
+    * column, so the chain needs ONE window pass (row_number), and the set
+    * table rides the window's _id partitioning (guide §2.4). The explicit
+    * doc-keyed exchange carries (_id, _n, _tok) longs only and already
+    * satisfies the window's required partitioning.
+    *
+    * Every relation here feeds two consumers and is [[graft.Shared]], so
+    * the token hashing + explode, the df join and the rank window each
+    * run once (AQE-final plan at sf0.001: one scan, gen=1). The hashed
+    * token arrays are Shared as well: it keeps the explode's inferred
+    * non-empty filter on the computed column instead of pushing the
+    * hashing below the caller's exchanges, where it ran a second time.
+    *
+    * Null ids need no guard: a null-id doc's tokens may count toward
+    * _df, which only changes the prefix order (recall is exact under any
+    * consistent order), and the callers' id comparison and id equi-joins
+    * drop the doc. */
+  private def rankedTokens(docs: DataFrame, idCol: String, toksCol: Column)
+      : (DataFrame, DataFrame) = {
+    val spark = docs.sparkSession
+    val nPart = math.max(spark.sparkContext.defaultParallelism,
+      spark.sessionState.conf.numShufflePartitions)
+    val hashed = Shared(
+      docs.select(col(idCol).as("_id"), array_distinct(toksCol).as("_ts")))
+    val toks = Shared(hashed
+      .select(col("_id"), size(col("_ts")).cast("long").as("_n"),
+        explode(col("_ts")).as("_tok"))
+      .repartition(nPart, col("_id")))
+    val df = toks.groupBy("_tok").agg(count(lit(1)).as("_df"))
+    val perDoc = Window.partitionBy("_id").orderBy(col("_df"), col("_tok"))
+    val ranked = Shared(toks.join(df, "_tok")
+      .withColumn("_rk", row_number().over(perDoc)))
+    // tokens are distinct per doc by construction, so collect_list +
+    // sort_array equals sort_array(collect_set(...)) exactly
+    val sets = Shared(ranked.groupBy(col("_id"))
+      .agg(sort_array(collect_list(col("_tok"))).as("_set"),
+        max(col("_n")).as("_n")))
+    (ranked, sets)
+  }
+
   /** All (a_id, b_id, inter, usz, jaccard) with a_id < b_id and
     * `jaccard = |A∩B| / |A∪B| >= threshold`, where A/B are the SETS of
     * `toksCol` elements (any orderable atomic element type — words,
@@ -43,45 +88,9 @@ object SetSimJoin {
                   threshold: Double): DataFrame = {
     require(threshold > 0 && threshold <= 1,
       s"threshold must be in (0, 1], got $threshold")
-    // The doc's distinct-token count rides the explode as a per-row
-    // column (size() of the distinct array — the same value the old
-    // unordered count-window computed, long-cast to keep the output
-    // types identical), so the ranked chain needs ONE window pass
-    // (row_number) instead of two, and the token-set table derives from
-    // that same chain (guide §2.4: the groupBy rides the window's _id
-    // partitioning) instead of re-running scan+explode+its own _id
-    // exchange as an independent corpus subtree.
-    //
-    // The explicit doc-keyed exchange carries (_id, _n, _tok) longs only
-    // and already satisfies the rank window's required partitioning, so
-    // it adds no exchange to the ranked chain; the prefix and set-table
-    // consumers reuse it at runtime. It does NOT anchor the token-df
-    // branch: that branch needs only (_id, _tok), column pruning drops
-    // _n from its copy of the exchange, and the two copies are no longer
-    // canonically equal. The AQE-final plan (DumpPlans runtime, sf0.001)
-    // shows one scan, shared through the reused scan-floor exchange, but
-    // gen=2: the shingle hashing + explode run once per branch, and the
-    // explode's inferred non-empty filter, pushed below the floor,
-    // hashes each doc a third time.
-    val spark = docs.sparkSession
-    val nPart = math.max(spark.sparkContext.defaultParallelism,
-      spark.sessionState.conf.numShufflePartitions)
-    // the isNotNull guard is a value no-op under the doc-id PK contract;
-    // it mirrors the isnotnull(doc_id) the downstream a_id/b_id equi-joins
-    // infer onto the ranked chain's scan, so the df branch's subtree stays
-    // canonically equal below the anchor instead of re-scanning
-    val toks = docs
-      .where(col(idCol).isNotNull)
-      .select(col(idCol).as("_id"), array_distinct(toksCol).as("_ts"))
-      .select(col("_id"), size(col("_ts")).cast("long").as("_n"),
-        explode(col("_ts")).as("_tok"))
-      .repartition(nPart, col("_id"))
-    val df = toks.groupBy("_tok").agg(count(lit(1)).as("_df"))
-    val perDoc = Window.partitionBy("_id")
-    val ranked = toks.join(df, "_tok")
-      .withColumn("_rk", row_number().over(perDoc.orderBy(col("_df"), col("_tok"))))
-    val prefix = ranked
-      .where(col("_rk") <= col("_n") - ceil(lit(threshold) * col("_n")) + 1)
+    val (ranked, sets) = rankedTokens(docs, idCol, toksCol)
+    val prefix = Shared(ranked
+      .where(col("_rk") <= col("_n") - ceil(lit(threshold) * col("_n")) + 1))
     val a = prefix.select(col("_tok"), col("_id").as("a_id"), col("_n").as("_na"))
     val b = prefix.select(col("_tok"), col("_id").as("b_id"), col("_n").as("_nb"))
     val cands = a.join(b, Seq("_tok"))
@@ -89,20 +98,6 @@ object SetSimJoin {
         least(col("_na"), col("_nb")) >=
           lit(threshold) * greatest(col("_na"), col("_nb")))
       .select("a_id", "b_id").distinct()
-    // tokens are distinct per doc by construction, so collect_list +
-    // sort_array equals the old sort_array(collect_set(...)) exactly.
-    // The _rk >= 1 filter is a no-op on values (row_number starts at 1,
-    // and the optimizer cannot fold it) whose only job is to reference
-    // the window column: it pins the set table's column set to exactly
-    // the prefix subtree's (_id, _tok, _n, _df, _rk), so the two
-    // branches prune identically, stay canonically equal below the _id
-    // exchange, and runtime exchange reuse computes the shingle hashing
-    // + df join + rank window ONCE for prefix and set table alike —
-    // without it, column pruning specialised the set subtree and
-    // re-ran the whole chain per consumer.
-    val sets = ranked.where(col("_rk") >= 1).groupBy(col("_id"))
-      .agg(sort_array(collect_list(col("_tok"))).as("_set"),
-        max(col("_n")).as("_n"))
     cands
       .join(sets.select(col("_id").as("a_id"), col("_set").as("_sa"),
         col("_n").as("_na")), "a_id")
@@ -140,53 +135,20 @@ object SetSimJoin {
                       threshold: Double): DataFrame = {
     require(threshold > 0 && threshold <= 1,
       s"threshold must be in (0, 1], got $threshold")
-    // Same single-window restructure as [[jaccardJoin]]: _n rides the
-    // explode, the set table derives from the ranked chain, and the same
-    // doc-keyed exchange — with the same runtime shape: one shared scan,
-    // but the token-df branch hashes and explodes its own copy (gen=2).
-    val spark = docs.sparkSession
-    val nPart = math.max(spark.sparkContext.defaultParallelism,
-      spark.sessionState.conf.numShufflePartitions)
-    // same no-op id null-guard as jaccardJoin: aligns the df branch's
-    // scan filters with the join-inferred ones on the ranked chain
-    val toks = docs
-      .where(col(idCol).isNotNull)
-      .select(col(idCol).as("_id"), array_distinct(toksCol).as("_ts"))
-      .select(col("_id"), size(col("_ts")).cast("long").as("_n"),
-        explode(col("_ts")).as("_tok"))
-      .repartition(nPart, col("_id"))
-    val df = toks.groupBy("_tok").agg(count(lit(1)).as("_df"))
-    val perDoc = Window.partitionBy("_id")
-    val ranked = toks.join(df, "_tok")
-      .withColumn("_rk", row_number().over(perDoc.orderBy(col("_df"), col("_tok"))))
+    val (ranked, sets) = rankedTokens(docs, idCol, toksCol)
     val aPrefix = ranked
       .where(col("_rk") <= col("_n") - ceil(lit(threshold) * col("_n")) + 1)
       .select(col("_tok"), col("_id").as("a_id"), col("_n").as("_na"))
-    // _rk >= 1 is the same pruning pin as the set table below: B's side
-    // doesn't need ranks, but referencing _rk keeps this subtree
-    // canonically equal to the A-prefix chain so the corpus explode +
-    // df join + window run once (reused) instead of per side
-    val bAll = ranked.where(col("_rk") >= 1)
+    val bAll = ranked
       .select(col("_tok"), col("_id").as("b_id"), col("_n").as("_nb"))
     val cands = aPrefix.join(bAll, Seq("_tok"))
       .where(col("a_id") =!= col("b_id") &&
         col("_nb") >= ceil(lit(threshold) * col("_na")))
       .select("a_id", "b_id").distinct()
-    // same no-op _rk filter as jaccardJoin: keeps the subtree
-    // reuse-identical to the ranked prefix chain
-    val sets = ranked.where(col("_rk") >= 1).groupBy(col("_id"))
-      .agg(sort_array(collect_list(col("_tok"))).as("_set"),
-        max(col("_n")).as("_n"))
     cands
       .join(sets.select(col("_id").as("a_id"), col("_set").as("_sa"),
         col("_n").as("_na")), "a_id")
-      // _n >= 1 is another value no-op pruning pin: the b side only
-      // consumes _set, and without a reference to _n column pruning
-      // specialises the b-side aggregate (dropping max(_n)), so it stops
-      // being canonically equal to the a side and rebuilds the whole set
-      // chain instead of reusing the a side's broadcast
-      .join(sets.where(col("_n") >= 1)
-        .select(col("_id").as("b_id"), col("_set").as("_sb")), "b_id")
+      .join(sets.select(col("_id").as("b_id"), col("_set").as("_sb")), "b_id")
       .withColumn("_inter",
         size(array_intersect(col("_sa"), col("_sb"))).cast("double"))
       .withColumn("containment", col("_inter") / col("_na"))

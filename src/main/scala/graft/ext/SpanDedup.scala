@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Shared
 
 /** Exact duplicated-substring span coverage — the position-aware sibling of
   * passage dedup ([[PipelineOps.segmentDedup]]). Training corpora repeat
@@ -63,25 +64,19 @@ object SpanDedup {
       spark.sessionState.conf.numShufflePartitions)
     // ONE materialized gram table (guide §8: move the light proxy, don't
     // recompute the heavy hash): the explicit doc-keyed exchange carries
-    // (doc_id, p, hash) longs only, doubles as the island window's
-    // required partitioning, and is the runtime reuse anchor for the
-    // duplicate-hash branch — without it the md5 gram hashing (this
-    // operator's dominant per-row cost) ran once per consumer. The
-    // isNotNull guard is a value no-op under the doc-id PK contract; it
-    // mirrors the null-filter the final LEFT join already infers on the
-    // coverage side, so both branches' subtrees stay canonically equal
-    // below the exchange.
-    val grams = docs
-      .where(col(idCol).isNotNull)
+    // (doc_id, p, hash) longs only and doubles as the island window's
+    // required partitioning. It is [[graft.Shared]] by the duplicate-hash
+    // count and the coverage join, so the md5 gram hashing (this
+    // operator's dominant per-row cost) runs once.
+    val grams = Shared(docs
       .select(col(idCol), posexplode(gramHashArr(textCol, k)).as(Seq("p", "h")))
-      .repartition(nPart, col(idCol))
+      .repartition(nPart, col(idCol)))
     // grams occurring > 1 time corpus-wide (partial agg, then longs-only
-    // join back on the hash). count(CASE WHEN p >= 0 THEN doc_id END) is
-    // count(*) in disguise (posexplode positions are >= 0, ids non-null):
-    // the references keep column pruning from specialising this branch
-    // below the shared exchange, which would break the reuse.
+    // join back on the hash). Null-id rule: a document without an id is
+    // not part of the corpus, so count(id) skips its grams, and the id
+    // join below gives it no coverage.
     val dupH = grams.groupBy("h")
-      .agg(count(when(col("p") >= 0, col(idCol))).as("c"))
+      .agg(count(col(idCol)).as("c"))
       .filter(col("c") > 1).select("h")
     val dup = grams.join(dupH, "h")
       .select(col(idCol), col("p").cast("long").as("p"),

@@ -202,6 +202,31 @@ class ExactJoinSpec extends SparkSpec {
     assert(got == Set((1L, 2L)))
   }
 
+  /** simDocs plus two docs without an id: one a copy of planted doc 100,
+    * one that shares the commonest fixture tokens (it shifts the token
+    * document frequencies, so the global prefix order changes). */
+  private def withNullIds = simDocs.select(col("doc_id").cast("long"), col("toks"))
+    .union(Seq[(Option[Long], Seq[String])](
+      (None, Seq("t1", "t2", "t3", "t4", "t5", "t6", "t7", "t8", "t9")),
+      (None, (0 until 30).map(j => s"t$j"))).toDF("doc_id", "toks"))
+
+  test("jaccardJoin and containmentJoin ignore docs with a null id") {
+    val rows = (df: org.apache.spark.sql.DataFrame) =>
+      df.collect().map(_.toSeq).toSet
+    for (t <- Seq(0.3, 0.8)) {
+      val want = rows(SetSimJoin.jaccardJoin(simDocs, "doc_id", col("toks"), t))
+      assert(rows(SetSimJoin.jaccardJoin(withNullIds, "doc_id", col("toks"), t)) ==
+        want, s"jaccard threshold $t")
+      assert(want.map(r => (r(0), r(1), r(2), r(3))) == bruteForcePairs(t))
+    }
+    for (t <- Seq(0.6, 1.0)) {
+      val want = rows(SetSimJoin.containmentJoin(simDocs, "doc_id", col("toks"), t))
+      assert(rows(SetSimJoin.containmentJoin(withNullIds, "doc_id", col("toks"),
+        t)) == want, s"containment threshold $t")
+      assert(want.nonEmpty)
+    }
+  }
+
   // ---- count-min sketch --------------------------------------------------
 
   private lazy val cmsToks = (0 until 2000).map { i =>

@@ -169,12 +169,10 @@ class PlanAuditSpec extends SparkSpec {
                            // per consumer in the INITIAL plan — r16 also
                            // derives the set table from it and adds the
                            // explicit anchor exchange (13 -> 17 -> 21) —
-                           // but every copy is pruning-pinned canonically
-                           // equal and collapses at runtime: the runtime
-                           // budget below pins 5 materialised / 6 reused;
-                           // one corpus scan (the df branch reuses the scan
-                           // floor) but two shingle-hashing passes (gen=2:
-                           // the df branch's pruned anchor is not reused)
+                           // but every copy is canonically equal (Shared)
+                           // and collapses at runtime: the runtime budget
+                           // below pins 4 materialised / 6 reused, one
+                           // corpus scan and one shingle-hashing pass
     "q_range_join" -> 4,  // scan floor x2 + band agg + orderBy (interval
                           // side broadcasts; final agg rides the map side)
     "q_cms_counts" -> 4,  // scan floor + token agg + topk + orderBy; the
@@ -272,7 +270,7 @@ class PlanAuditSpec extends SparkSpec {
                               // agg x2) in the INITIAL plan, like
                               // q_setsim_join (r16: 13 -> 17 -> 21 for
                               // the same reasons); the runtime budget
-                              // above pins 5 materialised / 7 reused
+                              // below pins 4 materialised / 7 reused
     "q_temperature_sample" -> 7, // scan floor + group-count agg pair + the
                               // per-group rate derivation + orderBy; the
                               // (group, rate) dim BROADCASTS onto the
@@ -398,11 +396,12 @@ class PlanAuditSpec extends SparkSpec {
       s"serving plan has ${aggs.size} aggregates, expected only the nid argmax")
   }
 
-  /** r16: the repeated-subplan families' INITIAL plans still carry each
+  /** The repeated-subplan families' INITIAL plans still carry each
     * corpus subtree once per consumer (Spark plans trees — any DataFrame
-    * fork duplicates), but every duplicate is now CANONICALLY EQUAL to
-    * its sibling (pruning pins added in r16), so runtime exchange reuse
-    * collapses them. This law pins the runtime truth the initial-plan
+    * fork duplicates), but every duplicate is CANONICALLY EQUAL to its
+    * sibling (each multi-consumer relation is [[Shared]], so no consumer
+    * prunes or filters its copy), and runtime exchange reuse collapses
+    * them. This law pins the runtime truth the initial-plan
     * budgets above cannot see: after executing the query, the AQE-final
     * plan must carry at most `realMax` materialised shuffle exchanges
     * and at least `reusedMin` ReusedExchange nodes (the proof the
@@ -410,20 +409,20 @@ class PlanAuditSpec extends SparkSpec {
     * 100 TB re-runs a corpus-scale aggregate). */
   private val runtimeExchangeBudgets: Map[String, (Int, Int)] = Map(
     // name -> (realMax, reusedMin), measured at sf0.001 local[4]
-    "q_setsim_join" -> ((5, 6)),        // RR floor + doc-keyed anchor +
-                                        // df(_tok) + rank window spared
-                                        // (anchor partitioning) + orderBy;
-                                        // prefix-b and the set table ride
-                                        // the anchor; the df branch reuses
-                                        // only the RR floor and hashes its
-                                        // own shingles (gen=2, one scan)
-    "q_containment_join" -> ((5, 7)),   // same shape, B side unranked but
-                                        // pin-aligned to the ranked chain
+    "q_setsim_join" -> ((4, 6)),        // RR floor + doc-keyed anchor +
+                                        // df(_tok) + orderBy (the rank
+                                        // window rides the anchor's
+                                        // partitioning); the df branch,
+                                        // prefix-b and the set table all
+                                        // ride the anchor: one scan, one
+                                        // shingle-hashing explode (gen=1,
+                                        // see singlePassQueries)
+    "q_containment_join" -> ((4, 7)),   // same shape, B side unranked
     "q_tfidf_topterms" -> ((5, 1)),     // (doc, term) tf agg pair + df
                                         // agg + top-k window + orderBy;
                                         // the df branch rides tf's
-                                        // exchange (tf >= 1 pruning pin —
-                                        // one tokenize explode total)
+                                        // exchange (tf is Shared — one
+                                        // tokenize explode total)
     "q_bm25_topk" -> ((9, 1)),          // pruned-tf agg + df + stats pair
                                         // + score agg + 2-phase rank pair
                                         // + orderBy; df-count rides tf's
@@ -436,20 +435,22 @@ class PlanAuditSpec extends SparkSpec {
                                         // agg pair + nv single-partition
                                         // + 2-phase rank + orderBy; cs/nv
                                         // both ride the t-window exchange
-    "q_bigram_logprob" -> ((7, 2)),     // bg floor x2 + c2 agg pair +
-                                        // c1(w1) + per-doc agg + orderBy;
-                                        // c1 rides c2's exchange, v rides
-                                        // c1's
+    "q_bigram_logprob" -> ((6, 3)),     // scan floor (one scan: the c2
+                                        // branch reuses it) + c2 agg +
+                                        // c1(w1) + v + per-doc agg +
+                                        // orderBy; c1 rides c2's
+                                        // exchange, v rides c1's
     "q_pagerank" -> ((4, 0)),           // checkpointed src-partitioned
                                         // edges: 3 contribution aggs +
                                         // orderBy, zero join exchanges
     "q_retention_cohorts" -> ((3, 0)),  // ONE user window exchange + the
                                         // distinct-count pair + orderBy
-    "q_dup_span_coverage" -> ((5, 1)),  // floor + doc-keyed gram
+    "q_dup_span_coverage" -> ((4, 2)),  // floor (the lens side reuses
+                                        // it: one scan) + doc-keyed gram
                                         // materialisation (the md5-hash
                                         // reuse anchor) + dup-gram agg +
-                                        // lens floor + orderBy
-    "q_pmi_collocations" -> ((5, 3)),   // token + bigram explodes once
+                                        // orderBy
+    "q_pmi_collocations" -> ((5, 4)),   // token + bigram explodes once
                                         // each; totals/unigram branches
                                         // ride the agg exchanges
     "q_dist_match" -> ((5, 0)),         // bucket-count agg pair + the
@@ -459,8 +460,16 @@ class PlanAuditSpec extends SparkSpec {
                                         // single-partition n_max window +
                                         // floor + orderBy
 
+  /** The set-similarity joins scan the corpus once and hash its tokens
+    * once: one scan, one explode, and no filter that recomputes the
+    * shingle hashes (the explode's inferred non-empty filter, pushed into
+    * the hashing projection, used to hash every doc a second time). */
+  private val singlePassQueries = Set("q_setsim_join", "q_containment_join")
+
   test("runtime (AQE-final) exchange budgets: duplicated corpus subplans " +
       "collapse via exchange reuse") {
+    import org.apache.spark.sql.execution.FilterExec
+    import graft.expressions.ShingleHashes
     val over = runtimeExchangeBudgets.toSeq.sortBy(_._1).flatMap {
       case (name, (realMax, reusedMin)) =>
         val df = Queries.queries(name)(spark, sfDir)
@@ -476,9 +485,59 @@ class PlanAuditSpec extends SparkSpec {
           (if (reused < reusedMin)
             Some(s"$name: only $reused ReusedExchange nodes, expected >= " +
               s"$reusedMin — a corpus subtree is being re-executed")
-          else None)
+          else None) ++
+          (if (singlePassQueries(name)) {
+            val hashing = PlanShape.collectWithSubqueries(
+                df.queryExecution.executedPlan) {
+              case f: FilterExec
+                if f.condition.exists(_.isInstanceOf[ShingleHashes]) => f
+            }.size
+            info(s"$name: gen=${shape.generates}, scan=${shape.scans}, " +
+              s"hashing filters=$hashing")
+            if (shape.generates == 1 && shape.scans == 1 && hashing == 0) None
+            else Some(s"$name: gen=${shape.generates}, scan=${shape.scans}, " +
+              s"$hashing filter(s) hashing shingles; expected one scan, one " +
+              "explode and none")
+          } else None)
     }
     assert(over.isEmpty, over.mkString("\n"))
+  }
+
+  /** q_pipeline_clean filters on the columns of a projection whose
+    * quality and language trees run to hundreds of string primitives
+    * (the projection is [[Shared]]). Pushed through it, the filter would
+    * carry those trees in its condition, the generated method would
+    * exceed the JVM's 64 KB method limit, and the stage would silently
+    * fall back to interpreted eval. */
+  test("q_pipeline_clean filters projected columns inside whole-stage codegen") {
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    import org.apache.spark.sql.execution.{FilterExec, InputAdapter, SparkPlan,
+      WholeStageCodegenExec}
+    val df = Queries.queries("q_pipeline_clean")(spark, sfDir)
+    df.queryExecution.toRdd.count()
+    val plan = df.queryExecution.executedPlan
+    val filters = PlanShape.collectWithSubqueries(plan) { case f: FilterExec => f }
+    assert(filters.exists(_.references.map(_.name).toSet ==
+      Set("quality", "lang_pred")), filters.map(_.condition.sql).mkString("\n"))
+    filters.foreach { f =>
+      val size = f.condition.collect { case e => e }.size
+      assert(size <= 16, s"filter condition of $size nodes: ${f.condition.sql.take(300)}")
+    }
+    def inStage(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case _: InputAdapter => Nil
+      case _ => p.children.flatMap(inStage)
+    })
+    val stages = PlanShape.collectWithSubqueries(plan) {
+      case w: WholeStageCodegenExec => w -> inStage(w.child)
+    }
+    filters.foreach { f =>
+      val stage = stages.collectFirst { case (w, ops) if ops.exists(_ eq f) => w }
+      assert(stage.nonEmpty, s"filter outside whole-stage codegen: ${f.condition.sql}")
+      val (_, stats) = CodeGenerator.compile(stage.get.doCodeGen()._2)
+      assert(stats.maxMethodCodeSize <= spark.sessionState.conf.hugeMethodLimit,
+        s"generated method of ${stats.maxMethodCodeSize} bytes falls back to " +
+          "interpreted eval")
+    }
   }
 
   test("shuffle-exchange budgets hold for the heaviest queries") {

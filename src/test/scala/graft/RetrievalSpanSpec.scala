@@ -33,6 +33,33 @@ class RetrievalSpanSpec extends SparkSpec {
     assert(out(3L) == ((7L, 0L, 0L, 0.0)))
   }
 
+  test("a document with a null id neither gets coverage nor makes another " +
+      "document's grams duplicates") {
+    val shared = "alpha beta gamma delta epsilon zeta"
+    val docs = Seq[(Option[Long], String)](
+      (Some(1L), s"one two $shared three four"),
+      (Some(2L), s"$shared five six seven eight nine"),
+      (Some(3L), "ten eleven twelve thirteen fourteen fifteen sixteen"),
+      // repeats doc 3's first 4-gram and doc 1's "three four", and its
+      // own first 4-gram twice
+      (None, "ten eleven twelve thirteen x three four y ten eleven twelve " +
+        "thirteen"),
+      (None, "ten eleven twelve thirteen")
+    ).toDF("doc_id", "text")
+    val out = SpanDedup.dupSpanCoverage(docs, k = 4).collect()
+    val byId = out.filterNot(_.isNullAt(0))
+      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3),
+        r.getDouble(4)))).toMap
+    assert(byId == Map(
+      1L -> ((10L, 1L, 6L, 0.6)),
+      2L -> ((11L, 1L, 6L, math.rint(6.0 / 11.0 * 1e6) / 1e6)),
+      3L -> ((7L, 0L, 0L, 0.0))))
+    // null-id documents are reported, uncovered
+    assert(out.filter(_.isNullAt(0)).map(r => (r.getLong(1), r.getLong(2),
+      r.getLong(3), r.getDouble(4))).toSet == Set((12L, 0L, 0L, 0.0),
+      (4L, 0L, 0L, 0.0)))
+  }
+
   test("overlapping duplicated grams merge into one maximal span") {
     // "x y z w v" repeated twice inside ONE document: grams at positions
     // 0..1 and 6..7 (within-doc repeats count — corpus-wide multiplicity)
