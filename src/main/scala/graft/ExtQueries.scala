@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquet
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.expr.{E, Pipeline, Stage, C, Lit, SLit, CastD, If, ILit}
@@ -1370,7 +1371,7 @@ object ExtQueries {
           Sketches.hllRegisters(col("l_orderkey"), ":rollup", p = 8)
             .as("hll_regs"))
         .write.mode("overwrite").parquet(path)
-      s.read.parquet(path)
+      GraftParquet.read(s, path)
         .agg(Sketches.kmvMergeState(col("kmv_state"), 256).as("mk"),
           Sketches.hllMergeRegisters(col("hll_regs"), p = 8).as("mh"))
         .select(
@@ -2265,7 +2266,7 @@ object ExtQueries {
           Seq(col("n_chars"), graft.ext.Dedup.base60Col(col("lang")) % lit(65536L)),
           bits = 16, numPartitions = Some(8))
         .write.mode("overwrite").parquet(path)
-      s.read.parquet(path)
+      GraftParquet.read(s, path)
         .filter(col("n_chars") >= 500 && col("n_chars") < 2000 &&
           col("lang").isin("en", "fr"))
         .groupBy("lang")

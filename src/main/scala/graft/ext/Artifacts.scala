@@ -1,5 +1,10 @@
 package graft.ext
 
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, xxhash64}
+
 /** Build-once/serve-many parquet artifact store shared by the persisted
   * indexes ([[Pq.persistedIndex]]) and the persisted dedup labels/pairs
   * ([[Dedup.persistedLabels]], [[Dedup.persistedPairs]]).
@@ -51,7 +56,7 @@ private[graft] object Artifacts {
             java.util.Comparator.reverseOrder[java.nio.file.Path])
             .iterator.asScala.foreach(java.nio.file.Files.deleteIfExists(_))
         }
-      } catch { case _: Throwable => () }))
+      } catch { case NonFatal(_) => () }))
   }
 
   def sha256Hex(s: String): String =
@@ -70,8 +75,35 @@ private[graft] object Artifacts {
       build(p)
       try java.nio.file.Files.writeString(
         java.nio.file.Paths.get(p, "_fingerprint"), fullKey)
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
       p
     })).path
+  }
+
+  /** Content fingerprint of a relation for an artifact key:
+    * `count:max(id):xor` in hex, where max ignores null ids (-1 when there
+    * is none) and xor folds xxhash64(id, payload) over every row. XOR
+    * makes it order- and partitioning-independent, so it runs on the
+    * plan with its repartitions stripped, and the per-partition partials
+    * are folded on the driver: one Spark job and no shuffle (a global
+    * aggregate would add an exchange, which AQE runs as a job of its
+    * own). This is what lets an artifact key notice an in-place rewrite
+    * of its input instead of serving a stale artifact. */
+  def fingerprint(df: DataFrame, id: String, payload: String): String = {
+    val flat = org.apache.spark.sql.GraftSqlBridge.ofRows(df.sparkSession,
+      graft.functions.Fo2Dedup.stripRepartitions(df.queryExecution.analyzed))
+    val parts = flat.select(col(id).cast("long"), xxhash64(col(id), col(payload)))
+      .queryExecution.toRdd.mapPartitions { rows =>
+        var n = 0L; var max = Long.MinValue; var seen = false; var x = 0L
+        rows.foreach { r =>
+          n += 1
+          if (!r.isNullAt(0)) { max = math.max(max, r.getLong(0)); seen = true }
+          x ^= r.getLong(1)
+        }
+        Iterator.single((n, if (seen) Some(max) else None, x))
+      }.collect()
+    val max = parts.flatMap(_._2).maxOption.getOrElse(-1L)
+    s"${parts.map(_._1).sum}:$max:" +
+      java.lang.Long.toHexString(parts.foldLeft(0L)(_ ^ _._3))
   }
 }

@@ -91,7 +91,10 @@ object CorpusIO {
       .parquet(path)
 
   /** Read a partitioned corpus back. Partition values come from directory
-    * names; filters on those columns prune before any file is opened. */
+    * names; filters on those columns prune before any file is opened.
+    * This is the one read that keeps Spark's own parquet inference (a
+    * schema job at read time): partition discovery needs the directory
+    * walk, which the flat-table reader `GraftParquet` leaves to Spark. */
   def readPartitioned(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
 

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquet
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -408,7 +409,7 @@ object Dedup {
     * bit-identical to the live index. */
   def persistedAssignIndex(existing: DataFrame, key: String, k: Int,
                            rowsPerBand: Int): (DataFrame, DataFrame) = {
-    val fp = corpusFingerprint(existing)
+    val fp = Artifacts.fingerprint(existing, "doc_id", "text")
     val full = s"$key|fp=$fp|k=$k|b=$rowsPerBand"
     val path = Artifacts.pathFor("assignidx", full) { p =>
       val (bands, sets) = assignIndex(existing, k, rowsPerBand)
@@ -416,7 +417,7 @@ object Dedup {
       sets.write.mode("overwrite").parquet(s"$p/sets")
     }
     val spark = existing.sparkSession
-    (spark.read.parquet(s"$path/bands"), spark.read.parquet(s"$path/sets"))
+    (GraftParquet.read(spark, s"$path/bands"), GraftParquet.read(spark, s"$path/sets"))
   }
 
   /** [[assignToClusters]] over an EXPLICIT probe index (live or
@@ -489,18 +490,6 @@ object Dedup {
       .join(labels.select(col("doc_id").as("eid"), col("cluster_id")), "eid")
   }
 
-  /** Content fingerprint of a label table — folded into the serve-index
-    * artifact key so a label rebuild (or a different threshold's labels)
-    * never serves a stale index. Same shape as [[corpusFingerprint]]. */
-  private[graft] def labelsFingerprint(labels: DataFrame): String = {
-    val r = labels.agg(
-      count(lit(1)),
-      coalesce(max(col("doc_id").cast("long")), lit(-1L)),
-      coalesce(bit_xor(xxhash64(col("doc_id"), col("cluster_id"))), lit(0L)))
-      .head
-    s"${r.getLong(0)}:${r.getLong(1)}:${java.lang.Long.toHexString(r.getLong(2))}"
-  }
-
   /** The persisted ENRICHED serve index ([[serveIndexFrom]]) — built ONCE
     * per (corpus fingerprint, labels fingerprint, params) and served as
     * parquet, so the assignment job ([[assignServe]], batch or streaming)
@@ -514,15 +503,15 @@ object Dedup {
                           key: String, k: Int, rowsPerBand: Int,
                           maxBucketSize: Int = ConfiguredBucketSize): DataFrame = {
     val cap = resolveCap(existing, maxBucketSize)
-    val fp = corpusFingerprint(existing)
-    val lfp = labelsFingerprint(labels)
+    val fp = Artifacts.fingerprint(existing, "doc_id", "text")
+    val lfp = Artifacts.fingerprint(labels, "doc_id", "cluster_id")
     val full = s"$key|fp=$fp|lfp=$lfp|k=$k|b=$rowsPerBand|cap=$cap"
     val path = Artifacts.pathFor("assignserve", full) { p =>
       val (bands, sets) = assignIndex(existing, k, rowsPerBand)
       serveIndexFrom(bands, sets, labels, cap)
         .write.mode("overwrite").parquet(s"$p/serve")
     }
-    existing.sparkSession.read.parquet(s"$path/serve")
+    GraftParquet.read(existing.sparkSession, s"$path/serve")
   }
 
   /** Join-only incremental assignment over the enriched serve relation
@@ -629,22 +618,6 @@ object Dedup {
         col("n_clusters_inc"), col("n_clusters_full"), col("n_merges"))
   }
 
-  /** Cheap content fingerprint of a document corpus: row count, max
-    * doc_id, and the XOR of per-row xxhash64(doc_id, text). One narrow
-    * scan (only the two columns the dedup chain consumes), no shuffle
-    * beyond the one-row aggregate; XOR makes it order- and
-    * partitioning-independent. Mirrors [[Pq.corpusFingerprint]]: this is
-    * what lets the artifact key notice an in-place corpus rewrite instead
-    * of serving stale labels. */
-  private[graft] def corpusFingerprint(docs: DataFrame): String = {
-    val r = docs.agg(
-      count(lit(1)),
-      coalesce(max(col("doc_id").cast("long")), lit(-1L)),
-      coalesce(bit_xor(xxhash64(col("doc_id"), col("text"))), lit(0L)))
-      .head
-    s"${r.getLong(0)}:${r.getLong(1)}:${java.lang.Long.toHexString(r.getLong(2))}"
-  }
-
   /** The persisted near-dup label table for (docs-at-`key`, params) —
     * built ONCE per (corpus fingerprint, params) per JVM by
     * [[nearDupClusters]] and written as parquet; every later call (and
@@ -661,12 +634,12 @@ object Dedup {
   def persistedLabels(docs: DataFrame, key: String, threshold: Double,
                       k: Int = 16, rowsPerBand: Int = 4,
                       maxIters: Int = 20): DataFrame = {
-    val fp = corpusFingerprint(docs)
+    val fp = Artifacts.fingerprint(docs, "doc_id", "text")
     val full = s"$key|fp=$fp|t=$threshold|k=$k|b=$rowsPerBand|it=$maxIters"
     val path = Artifacts.pathFor("deduplab", full)(p =>
       nearDupClusters(docs, threshold, k, rowsPerBand, maxIters)
         .write.mode("overwrite").parquet(s"$p/labels"))
-    docs.sparkSession.read.parquet(s"$path/labels")
+    GraftParquet.read(docs.sparkSession, s"$path/labels")
   }
 
   /** The persisted Jaccard-verified near-dup PAIR set — the edge-list
@@ -677,11 +650,11 @@ object Dedup {
     * [[ngramJaccardPairs]] chain. */
   def persistedPairs(docs: DataFrame, key: String, threshold: Double,
                      k: Int = 16, rowsPerBand: Int = 4): DataFrame = {
-    val fp = corpusFingerprint(docs)
+    val fp = Artifacts.fingerprint(docs, "doc_id", "text")
     val full = s"$key|fp=$fp|t=$threshold|k=$k|b=$rowsPerBand"
     val path = Artifacts.pathFor("deduppairs", full)(p =>
       ngramJaccardPairs(docs, threshold, k, rowsPerBand)
         .write.mode("overwrite").parquet(s"$p/pairs"))
-    docs.sparkSession.read.parquet(s"$path/pairs")
+    GraftParquet.read(docs.sparkSession, s"$path/pairs")
   }
 }

@@ -1,6 +1,7 @@
 package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquet
 import org.apache.spark.sql.functions._
 
 /** Product quantization (Jégou et al., "Product Quantization for Nearest
@@ -353,14 +354,14 @@ object Pq {
     * parquet relation for the search join. */
   def readIndex(spark: org.apache.spark.sql.SparkSession,
                 path: String): IvfPqIndex = {
-    val cents = spark.read.parquet(s"$path/centroids").collect()
+    val cents = GraftParquet.read(spark, s"$path/centroids").collect()
       .map(r => (r.getString(0), r.getInt(1), r.getInt(2),
         r.getSeq[Double](3).toArray))
     val cells = cents.filter(_._1 == "coarse").sortBy(_._3).map(_._4)
     val pq = cents.filter(_._1 == "pq")
     val codebooks = pq.map(_._2).distinct.sorted.map(s =>
       pq.filter(_._2 == s).sortBy(_._3).map(_._4))
-    IvfPqIndex(cells, codebooks, spark.read.parquet(s"$path/codes"))
+    IvfPqIndex(cells, codebooks, GraftParquet.read(spark, s"$path/codes"))
   }
 
   // one build per (corpus, params) per JVM: Verify/Bench re-invoke the
@@ -369,28 +370,10 @@ object Pq {
   // path / fingerprint / cleanup mechanics live in the shared
   // [[Artifacts]] store (also backing the persisted dedup labels).
 
-  /** Cheap content fingerprint of the corpus: row count, max vec_id, and
-    * the XOR of per-row xxhash64(vec_id, embedding). One narrow scan, no
-    * shuffle beyond the one-row aggregate; XOR makes it order- and
-    * partitioning-independent with no overflow under ANSI arithmetic.
-    * This is what lets the memo key notice an IN-PLACE corpus rewrite
-    * (same path, new rows or new vectors) instead of silently serving a
-    * stale index — the snapshot contract a production build-once/
-    * search-many artifact needs. */
-  private[graft] def corpusFingerprint(embeddings: DataFrame): String = {
-    import org.apache.spark.sql.functions.{bit_xor, xxhash64, count => cnt}
-    val r = embeddings.agg(
-      cnt(lit(1)),
-      coalesce(max(col("vec_id").cast("long")), lit(-1L)),
-      coalesce(bit_xor(xxhash64(col("vec_id"), col("embedding"))), lit(0L)))
-      .head
-    s"${r.getLong(0)}:${r.getLong(1)}:${java.lang.Long.toHexString(r.getLong(2))}"
-  }
-
   /** The persisted index for (embeddings-at-`key`, params) — building
     * and writing it on the first call in this JVM, loading it from the
     * parquet artifact on every call after. `key` names the corpus (e.g.
-    * its path) and a [[corpusFingerprint]] snapshot is folded into the
+    * its path) and an [[Artifacts.fingerprint]] snapshot is folded into the
     * memo key (and echoed into the artifact as `_fingerprint`), so a
     * corpus rewritten in place during the JVM's lifetime builds a fresh
     * index rather than silently serving the stale one. The memo key is
@@ -400,7 +383,7 @@ object Pq {
   def persistedIndex(embeddings: DataFrame, key: String, coarseK: Int,
                      coarseIters: Int, m: Int, pqK: Int, pqIters: Int,
                      dim: Int): IvfPqIndex = {
-    val fp = corpusFingerprint(embeddings)
+    val fp = Artifacts.fingerprint(embeddings, "vec_id", "embedding")
     val full = s"$key|fp=$fp|$coarseK|$coarseIters|$m|$pqK|$pqIters|$dim"
     val path = Artifacts.pathFor("ivfpq", full)(p =>
       writeIndex(embeddings, coarseK, coarseIters, m, pqK, pqIters, dim, p))

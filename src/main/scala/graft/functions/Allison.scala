@@ -184,8 +184,9 @@ object Allison {
           math.max(fCO2 * 0.9, 0.5))
         if (s.isFinite && s > 0 && math.abs(fn(s)) < 1e-7 * math.max(1.0, fCO2)) s
         else
+          // an unbracketed root fails Solver.brent's `require`: NaN row
           try Solver.brent(fn, 1e-50, 1.5e4)
-          catch { case _: Throwable => return Double.NaN }
+          catch { case _: IllegalArgumentException => return Double.NaN }
       } else pBar
     val k = math.exp(lk0) * math.exp(-dv * (pCO2 - p0) / (ra * tK))
     val kf = k * fCO2

@@ -133,7 +133,7 @@ object Fo2Dedup {
     * over a scan probes the SCAN — bounded by the LocalLimit — instead
     * of either paying the exchange's map side (pre-r12) or losing the
     * probe entirely. */
-  private def stripRepartitions(
+  private[graft] def stripRepartitions(
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
     import org.apache.spark.sql.catalyst.plans.logical._

@@ -51,7 +51,7 @@ class DedupArtifactSpec extends SparkSpec {
     val d = docs.filter(col("doc_id") < 100)
     Dedup.persistedLabels(d, key = "art-memo", threshold = 0.0,
       k = 16, rowsPerBand = 2)
-    val full = s"art-memo|fp=${Dedup.corpusFingerprint(d)}" +
+    val full = s"art-memo|fp=${Artifacts.fingerprint(d, "doc_id", "text")}" +
       "|t=0.0|k=16|b=2|it=20"
     val sha = Artifacts.sha256Hex(full)
     val dirs = java.nio.file.Files.list(
@@ -82,8 +82,8 @@ class DedupArtifactSpec extends SparkSpec {
       "stale labels served after the corpus changed under the same key")
     // a content-only rewrite (same ids, different text) also misses
     val edited = before.withColumn("text", concat(col("text"), lit(" x")))
-    assert(Dedup.corpusFingerprint(before) !=
-      Dedup.corpusFingerprint(edited),
+    assert(Artifacts.fingerprint(before, "doc_id", "text") !=
+      Artifacts.fingerprint(edited, "doc_id", "text"),
       "fingerprint blind to a text-only rewrite")
   }
 

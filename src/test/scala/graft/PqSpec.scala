@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ext.Pq
+import graft.ext.{Artifacts, Pq}
 
 /** The laws Pq's scaladoc promises:
   *
@@ -115,7 +115,8 @@ class PqSpec extends SparkSpec {
       m = 2, pqK = 4, pqIters = 1, dim = 64)
     // locate the artifact (same digest scheme as persistedIndex: the key
     // carries the corpus snapshot fingerprint)
-    val full = s"memo-probe|fp=${Pq.corpusFingerprint(e)}|4|1|2|4|1|64"
+    val fp = Artifacts.fingerprint(e, "vec_id", "embedding")
+    val full = s"memo-probe|fp=$fp|4|1|2|4|1|64"
     val sha = java.security.MessageDigest.getInstance("SHA-256")
       .digest(full.getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString
     val root = sys.env.getOrElse("GRAFT_INDEX_DIR", "target/graft-index")
@@ -154,7 +155,8 @@ class PqSpec extends SparkSpec {
     val rescaled = before.withColumn("embedding",
       org.apache.spark.sql.functions.transform(col("embedding"),
         v => v * lit(2.0f)))
-    assert(Pq.corpusFingerprint(before) != Pq.corpusFingerprint(rescaled),
+    assert(Artifacts.fingerprint(before, "vec_id", "embedding") !=
+      Artifacts.fingerprint(rescaled, "vec_id", "embedding"),
       "fingerprint blind to a content-only rewrite")
   }
 }

@@ -130,6 +130,19 @@ class SolverSpec extends AnyFunSuite {
     assert(f2k > 1000.0 && f2k < 4000.0, f2k.toString)
   }
 
+  test("Allison CO2 solubility: an unbracketed fugacity inversion is a " +
+      "NaN row, not an exception") {
+    // above 15 kbar the mixed-fluid fCO2 lies past Brent's bracket, and
+    // the secant seeded at fCO2 (in bar) overflows the EOS
+    val (t, p, x) = (1473.15, 1e5, 0.01)
+    val fCO2 = Allison.fugacity(t, p, co2Species = true) * (1.0 - x)
+    def fn(q: Double) = fCO2 - Allison.fugacity(t, q, co2Species = true)
+    assert(!Solver.secant(fn, math.max(fCO2, 1.0),
+      math.max(fCO2 * 0.9, 0.5)).isFinite)
+    intercept[IllegalArgumentException](Solver.brent(fn, 1e-50, 1.5e4))
+    assert(Allison.co2Solubility(basalt, t, p, x).isNaN)
+  }
+
   test("Allison saturation inverts solubility") {
     val t = 1473.15
     val pSat = Allison.h2oSaturation(basalt, t)
