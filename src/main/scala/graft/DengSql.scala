@@ -16,7 +16,7 @@ import graft.models.Fo2Buffers
   * trapezoid then folds per DISTINCT (T, P). deng2020's outer fixed point
   * runs the same secant + bisection-fallback per row; sun2024 (dV=deng)
   * is closed-form on top of the shared dVdP. Same dual-compilation
-  * discipline as [[Fe3Fe2IterSql]] / [[IwSql]].
+  * discipline as [[IwSql]].
   */
 object DengSql {
 
@@ -48,8 +48,10 @@ object DengSql {
     (defs, s"(($bm + ($th * (\"T_K\" - 3000.0e0))) - pg)")
   }
 
-  /** Cation-fraction helpers (catBase / plainCations are scale-invariant
-    * in the input moles — see [[Fe3Fe2IterSql]]). */
+  /** Cation-fraction helpers. Cation fractions are scale-invariant in the
+    * input moles, so these compute them from wt/W directly; against the
+    * engine's map-order sums that differs by <= 1 ulp, far below the
+    * round(6) output grid. */
   private def cmole(ox: String): String =
     s"((\"$ox\" / ${lit(Elements.chemicalWeight(ox).get)}) * ${lit(Elements.cationAmount(ox))})"
   private val tot: String = Tables.meltElements.map(cmole).reduce((l, r) => s"($l + $r)")

@@ -313,9 +313,10 @@ object ExtQueries {
       val docs = Tables.read(s, dir, "documents")
       val newDocs = docs.filter(col("doc_id") % 7 === 0)
       val existing = docs.filter(col("doc_id") % 7 =!= 0)
+      val fp = Some(Dedup.corpusFingerprint(existing))
       val labels = Dedup.persistedLabels(existing,
         key = s"$dir/documents#existing", threshold = 0.2, k = 16,
-        rowsPerBand = 2)
+        rowsPerBand = 2, fp = fp)
       // both daily-ingest artifacts persisted: the labels AND the
       // ENRICHED serve index (capped band rows + per-doc band state +
       // shingle sets + labels, co-located at build time) — the batch
@@ -323,7 +324,7 @@ object ExtQueries {
       // and a query-scale aggregation; no corpus-scale window/groupBy
       // per serving run (PlanAuditSpec pins the serving plan)
       val serve = Dedup.persistedServeIndex(existing, labels,
-        key = s"$dir/documents#existing", k = 16, rowsPerBand = 2)
+        key = s"$dir/documents#existing", k = 16, rowsPerBand = 2, fp = fp)
       Dedup.assignServe(newDocs, serve, threshold = 0.2,
         k = 16, rowsPerBand = 2).orderBy("doc_id")
     },
@@ -379,11 +380,12 @@ object ExtQueries {
       val docs = Tables.read(s, dir, "documents")
       val newDocs = docs.filter(col("doc_id") % 7 === 0)
       val existing = docs.filter(col("doc_id") % 7 =!= 0)
+      val fp = Some(Dedup.corpusFingerprint(existing))
       val labels = Dedup.persistedLabels(existing,
         key = s"$dir/documents#existing", threshold = 0.2, k = 16,
-        rowsPerBand = 2)
+        rowsPerBand = 2, fp = fp)
       val serve = Dedup.persistedServeIndex(existing, labels,
-        key = s"$dir/documents#existing", k = 16, rowsPerBand = 2)
+        key = s"$dir/documents#existing", k = 16, rowsPerBand = 2, fp = fp)
       val inc = labels.select(col("doc_id"), col("cluster_id"))
         .union(Dedup.assignServe(newDocs, serve, threshold = 0.2,
           k = 16, rowsPerBand = 2).select(col("doc_id"), col("cluster_id")))

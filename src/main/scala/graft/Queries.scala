@@ -46,7 +46,7 @@ object Queries {
     Q(name, build, Some(st.sql(table, orderBy)))
   }
 
-  private def meltQ(name: String)(f: Staged => Staged): Q =
+  private[graft] def meltQ(name: String)(f: Staged => Staged): Q =
     stagedQ(name, "lineitem", Tables.melts, f)
 
   private val mctx = CompCtx(Tables.meltElements)
@@ -476,44 +476,26 @@ object Queries {
       meltQ("q_kd_toplis2005_fixedfo")(_.derive("Kd",
         round(Kd.toplis2005Fixed(mctx, Lit(0.85), tK, pBar), 6))
         .select("sample_id", "Kd")),
+      // The Kd <-> Fo fixed points run as Loops; the oracle renders the
+      // same loop as a recursive CTE (Pipeline.toSql).
       // blundy2020: Fe3Fe2 forced to borisov2018, then the Fo iteration.
-      Q("q_kd_blundy2020", (s, dir) => {
-        import org.apache.spark.sql.functions.{col, round => sround}
-        val fO2 = Fo2Buffers.qfm1bar(C("T_K"))
-        val fe3fe2 = Fe3Fe2.borisov2018(mctx, C("T_K"), fO2)
-        Tables.meltsRangedDF(s, dir).select(col("sample_id"),
-          sround(Kd.blundy2020(E.toColumn(mctx.molNorm("FeO")),
-            E.toColumn(mctx.molNorm("MgO")), E.toColumn(fe3fe2), col("T_K")), 6)
-            .as("Kd"))
-          .orderBy("sample_id")
-      }, Some(KdIterSql.blundy2020)),
+      meltQ("q_kd_blundy2020")(_.derive("Kd", round(Kd.blundy2020Iterative(
+          mctx.molNorm("FeO"), mctx.molNorm("MgO"),
+          Fe3Fe2.borisov2018(mctx, tK, Fo2Buffers.qfm1bar(tK)), tK), 6))
+        .select("sample_id", "Kd")),
       // saper2022: cation-fraction interaction terms + Fo iteration.
-      Q("q_kd_saper2022", (s, dir) => {
-        import org.apache.spark.sql.functions.{col, round => sround}
-        Tables.meltsRangedDF(s, dir).select(col("sample_id"),
-          sround(Kd.saper2022(E.toColumn(mctx.molNorm("FeO")),
-            E.toColumn(mctx.molNorm("MgO")), E.toColumn(mctx.cat("Si")),
-            E.toColumn(mctx.cat("Ti")),
-            E.toColumn(mctx.cat("Na") + mctx.cat("K")),
-            org.apache.spark.sql.functions.lit(0.2), col("T_K")), 6).as("Kd"))
-          .orderBy("sample_id")
-      }, Some(KdIterSql.saper2022)),
+      meltQ("q_kd_saper2022")(_.derive("Kd", round(Kd.saper2022Iterative(
+          mctx.molNorm("FeO"), mctx.molNorm("MgO"), mctx.cat("Si"),
+          mctx.cat("Ti"), mctx.cat("Na") + mctx.cat("K"), Lit(0.2), tK), 6))
+        .select("sample_id", "Kd")),
       olMeltThermoQ) ++ errorModelQueries ++ Seq(
-      // Iterative toplis2005 (Kd<->Fo fixed point in a UDF). Full oracle:
-      // the fixed point is deterministic straight-line arithmetic, rendered
-      // as a recursive CTE by KdIterSql.
-      Q("q_kd_toplis2005_iterative", (s, dir) => {
-        import org.apache.spark.sql.functions.{col, round => sround}
-        val base = Tables.meltsRangedDF(s, dir)
-        def mp(ox: String) =
-          E.toColumn(mctx.molNorm(ox)) * 100.0
-        base.select(col("sample_id"),
-          sround(Kd.toplis2005(mp("SiO2"), mp("Na2O"), mp("K2O"), mp("H2O"),
-            E.toColumn(mctx.molNorm("FeO")), E.toColumn(mctx.molNorm("MgO")),
-            org.apache.spark.sql.functions.lit(0.2), col("T_K"), col("P_bar")), 6)
-            .as("Kd"))
-          .orderBy("sample_id")
-      }, Some(KdIterSql.toplis2005)),
+      meltQ("q_kd_toplis2005_iterative") { m =>
+        def mp(ox: String): E = mctx.molNorm(ox) * Lit(100.0)
+        m.derive("Kd", round(Kd.toplis2005Iterative(mp("SiO2"), mp("Na2O"),
+            mp("K2O"), mp("H2O"), mctx.molNorm("FeO"), mctx.molNorm("MgO"),
+            Lit(0.2), tK, pBar), 6))
+          .select("sample_id", "Kd")
+      },
       // J1 join: observed Kd from melt (lineitem) x olivine (orders) pair.
       observedKdJoinQ)
   }

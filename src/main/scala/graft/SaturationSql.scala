@@ -13,8 +13,7 @@ import graft.functions.{IaconoMarziano => IM}
   * species and a branch-free 60-round Picard fixed point P = u(P) + v(P)
   * for the mixed fluid. All three are deterministic straight-line IEEE
   * arithmetic, replicated here operation-for-operation as recursive CTEs —
-  * the same dual-compilation discipline as [[ShishkinaSql]] /
-  * [[SolubilitySql]].
+  * the same dual-compilation discipline as [[SolubilitySql]].
   */
 object SaturationSql {
 

@@ -1,13 +1,17 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.{Fe3Fe2Iterative, IaconoMarziano, QfmFull}
+import graft.expr.{C, E}
+import graft.functions.{Fe3Fe2Iterative, IaconoMarziano, QfmFull, Shishkina}
+import graft.models.{CompCtx, Fo2Buffers}
 import graft.Queries.Q
 
 /** Solver-backed operators. Every query carries a full DuckDB oracle: the
   * solver loops are deterministic fixed-step bisections / Picard
-  * iterations dual-compiled as recursive CTEs (`*Sql.scala`), including
-  * the driver-side not-a-knot spline assembly ([[IsobarCurveSql]]).
+  * iterations dual-compiled as recursive CTEs — written as
+  * [[graft.expr.Loop]]s and rendered by `Pipeline.toSql`, or still by hand
+  * (`*Sql.scala`), including the not-a-knot spline assembly
+  * ([[IsobarCurveSql]]).
   */
 object SolverQueries {
 
@@ -19,28 +23,24 @@ object SolverQueries {
 
   private val wtArray = array(Tables.meltElements.map(col): _*)
 
-  /** Spread CPU-bound per-row solves across the cluster: a small local scan
-    * yields 1-2 input partitions, which would serialize the solver UDF on
-    * one core (observed: the Shishkina solve pinned a single task for
-    * minutes at sf0.01). Only ever RAISES the partition count — at 100 TB
-    * the scan already has thousands of partitions and this is a no-op, so
-    * no gratuitous shuffle at scale. */
-  private def spread(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
-  }
-
   /** Fe3Fe2 of every melt by one iterative model, fO2 from QFM 1-bar. */
   private def fe3Fe2Iterative(model: String)(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
     val f = Fe3Fe2Iterative.udf(meltEls, model)
-    val fO2 = graft.expr.E.toColumn(
-      graft.models.Fo2Buffers.qfm1bar(graft.expr.C("T_K")))
+    val fO2 = E.toColumn(Fo2Buffers.qfm1bar(C("T_K")))
     Tables.meltsRangedDF(s, dir)
       .select(col("sample_id"),
         round(f(wtArray, col("T_K"), col("P_bar"), fO2), 6).as("Fe3Fe2"))
       .orderBy("sample_id")
   }
+
+  /** The same for a model written as a [[graft.expr.Loop]]: a staged
+    * query, whose oracle is the same loop rendered by `Pipeline.toSql`. */
+  private def fe3Fe2Loop(model: String): Q =
+    Queries.meltQ(s"q_fe3fe2_${model}_iterative")(_.derive("Fe3Fe2", E.round(
+        Fe3Fe2Iterative.loops(model)(Fe3Fe2Iterative.wtBase(meltEls),
+          C("T_K"), C("P_bar"), Fo2Buffers.qfm1bar(C("T_K"))), 6))
+      .select("sample_id", "Fe3Fe2"))
 
   def all: Seq[Q] = Seq(
     // EP2 flagship: volatile saturation pressure (mixed H2O-CO2 fluid).
@@ -108,22 +108,14 @@ object SolverQueries {
         .select(col("sample_id"), round(log10(col("fO2_iw")), 6).as("log10_fO2"))
         .orderBy("sample_id")
     }, Some(IwSql.sql)),
-    // Second solubility model family (config-dispatchable alternative).
-    // Full oracle: the decoupled partial-pressure solve is deterministic
-    // straight-line arithmetic (closed-form CO2 + fixed-step H2O bisection),
-    // replicated op-for-op by ShishkinaSql's recursive-CTE rendering.
-    Q("q_saturation_shishkina", (s, dir) => {
-      val sat = udf((wt: Seq[Double]) => {
-        val (p, x) = graft.functions.Shishkina
-          .mixedSaturation(IaconoMarziano.Comp(meltEls, wt.toArray))
-        (p, x)
-      })
-      Tables.meltsRangedDF(s, dir)
-        .withColumn("sat", sat(wtArray))
-        .select(col("sample_id"), round(col("sat._1"), 4).as("P_sat_bar"),
-          round(col("sat._2"), 6).as("X_fluid"))
-        .orderBy("sample_id")
-    }, Some(ShishkinaSql.sql)),
+    // Second solubility model family (config-dispatchable alternative):
+    // the decoupled partial-pressure solve, written once as expressions
+    // with the H2O bisection as a Loop (Shishkina.mixedSaturationE).
+    Queries.meltQ("q_saturation_shishkina") { m =>
+      val (p, x) = Shishkina.mixedSaturationE(CompCtx(Tables.meltElements))
+      m.withStage(Seq("sample_id" -> C("sample_id"),
+        "P_sat_bar" -> E.round(p, 4), "X_fluid" -> E.round(x, 6)))
+    },
     // Third solubility model family. Full oracle: the 2-D fsolve decouples
     // into three monotone 1-D bisections (see Allison.mixedSaturation);
     // AllisonSql renders them — including the MRK cubic-root branches and
@@ -141,13 +133,11 @@ object SolverQueries {
         .orderBy("sample_id")
     }, Some(AllisonSql.sql)),
     // Iterative Fe3Fe2 models: per-row fixed point (activities depend on
-    // speciation), fO2 from QFM 1-bar. oneill2006/armstrong2019 carry
-    // recursive-CTE oracles (Fe3Fe2IterSql); deng2020/sun2024-deng mirror
-    // their EOS-integral dVdP lattice + solvers through DengSql.
-    Q("q_fe3fe2_oneill2006_iterative", fe3Fe2Iterative("oneill2006"),
-      Some(Fe3Fe2IterSql.oneill2006)),
-    Q("q_fe3fe2_armstrong2019_iterative", fe3Fe2Iterative("armstrong2019"),
-      Some(Fe3Fe2IterSql.armstrong2019)),
+    // speciation), fO2 from QFM 1-bar. oneill2006/armstrong2019 are Loops;
+    // deng2020/sun2024-deng mirror their EOS-integral dVdP lattice +
+    // solvers through DengSql.
+    fe3Fe2Loop("oneill2006"),
+    fe3Fe2Loop("armstrong2019"),
     // Reference-default sun2024 (dV="deng": EOS-integral Gamma). The
     // oracle-checked q_fe3fe2_sun2024 is the dV="parameterised" variant.
     Q("q_fe3fe2_sun2024_deng", fe3Fe2Iterative("sun2024"),
@@ -315,8 +305,7 @@ object SolverQueries {
     // whole spline pipeline (knot filter, pivoted elimination, piecewise
     // evaluation) op-for-op over DuckDB LIST columns (IsobarCurveSql).
     Q("q_isobar_curves", (s, dir) => {
-      val comps = spread(Tables.meltsDF(s, dir)
-        .filter(col("sample_id") % 997 === 3))
+      val comps = Tables.meltsDF(s, dir).filter(col("sample_id") % 997 === 3)
       val grid = graft.functions.Isobars.isobarGrid(comps, meltEls,
         isobars = Seq(1000.0, 2000.0, 3000.0))
       graft.functions.Isobars.isobarCurves(s, grid)

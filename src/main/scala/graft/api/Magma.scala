@@ -135,14 +135,19 @@ final class Melt(val mdf: MagmaDF, config: MagmaConfig = MagmaConfig.get) {
 
   /** Melt Fe3+/Fe2+ via the configured model (`melt.py:162-223`,
     * `Fe_redox/Fe3Fe2_calculate.py:7-39`): closed-form models compile to a
-    * single codegen'd expression; iterative ones (oneill2006/armstrong2019/
-    * deng2020) to a narrow per-row solver UDF. */
+    * single codegen'd expression, oneill2006/armstrong2019 to one native
+    * loop expression, and the Deng-EOS models (deng2020/sun2024) to a
+    * narrow per-row solver UDF. */
   def fe3Fe2(tCol: String = "T_K", pCol: String = "P_bar",
              fO2Col: String = "fO2", as: String = "Fe3Fe2"): Melt =
     config.fe3fe2Model match {
       case "sun2024_parameterised" =>
         addCol(as, E.toColumn(
           Fe3Fe2.sun2024(ctx, C(tCol), C(fO2Col), C(pCol))))
+      case m if graft.functions.Fe3Fe2Iterative.loops.contains(m) =>
+        addCol(as, E.toColumn(graft.functions.Fe3Fe2Iterative.loops(m)(
+          graft.functions.Fe3Fe2Iterative.wtBase(mdf.staged.schema.elements),
+          C(tCol), C(pCol), C(fO2Col))))
       case m if MagmaConfig.iterativeFe3Fe2.contains(m) =>
         val els = mdf.staged.schema.elements.toArray
         val u = graft.functions.Fe3Fe2Iterative.udf(els, m)
@@ -163,7 +168,7 @@ final class Melt(val mdf: MagmaDF, config: MagmaConfig = MagmaConfig.get) {
     * (`melt.py:276-317` `Kd_olivine_FeMg_eq`; registry
     * `Kd/Ol_melt/FeMg/Kd_models.py`). Closed-form models compile to
     * expressions; toplis2005 (the reference default), blundy2020 and
-    * saper2022 run their Fo/Kd iteration in a narrow per-row UDF.
+    * saper2022 run their Fo/Kd iteration as one native loop expression.
     * blundy2020 forces borisov2018 Fe3Fe2 internally like the reference. */
   def kdOlivineFeMg(tCol: String = "T_K", pCol: String = "P_bar",
                     fO2Col: String = "fO2", fe3fe2Col: String = "Fe3Fe2",

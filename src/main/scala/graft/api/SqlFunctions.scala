@@ -36,7 +36,13 @@ object SqlFunctions {
         Allison.mixedSaturation(comp(wt), tK)._1)
     spark.udf.register("saturation_pressure_shishkina",
       (wt: Seq[Double]) => Shishkina.mixedSaturation(comp(wt))._1)
-    for (m <- Seq("deng2020", "oneill2006", "armstrong2019", "sun2024"))
+    for (m <- Seq("deng2020", "sun2024"))
       spark.udf.register(s"fe3fe2_$m", Fe3Fe2Iterative.udf(els, m))
+    for (m <- Fe3Fe2Iterative.loops.keys) {
+      val f = Fe3Fe2Iterative.evaluator(els, m)
+      spark.udf.register(s"fe3fe2_$m",
+        (wt: Seq[Double], tK: Double, pBar: Double, fO2: Double) =>
+          f((wt :+ tK :+ pBar :+ fO2).toArray))
+    }
   }
 }

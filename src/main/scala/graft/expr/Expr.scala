@@ -14,7 +14,11 @@ import org.apache.spark.sql.{functions => F}
   * IEEE 754 ops are then bit-identical across engines (transcendentals are
   * rounded at query edges).
   */
-sealed trait E {
+sealed trait Node {
+  def children: Seq[Node]
+}
+
+sealed trait E extends Node {
   def +(o: E): E = Bin("+", this, o)
   def -(o: E): E = Bin("-", this, o)
   def *(o: E): E = Bin("*", this, o)
@@ -26,6 +30,26 @@ sealed trait E {
   def >(o: E): Cond = Cmp(">", this, o)
   def >=(o: E): Cond = Cmp(">=", this, o)
   def ===(o: E): Cond = Cmp("=", this, o)
+
+  def children: Seq[Node] = this match {
+    case Bin(_, l, r) => Seq(l, r)
+    case Fn(_, args)  => args
+    case If(c, t, f)  => Seq(c, t, f)
+    case CastD(a)     => Seq(a)
+    case l: Loop      => l.parts
+    case _            => Nil
+  }
+
+  /** This node with `f` applied to each child expression and `g` to each
+    * child condition. */
+  def mapChildren(f: E => E, g: Cond => Cond): E = this match {
+    case Bin(op, l, r) => Bin(op, f(l), f(r))
+    case Fn(fn, args)  => Fn(fn, args.map(f))
+    case If(c, t, e)   => If(g(c), f(t), f(e))
+    case CastD(a)      => CastD(f(a))
+    case l: Loop       => l.map(f, g)
+    case leaf          => leaf
+  }
 }
 final case class C(name: String) extends E                       // column ref
 final case class Lit(v: Double) extends E                        // double literal
@@ -37,9 +61,64 @@ final case class If(cond: Cond, t: E, f: E) extends E            // CASE WHEN
 final case class CastD(a: E) extends E                           // cast to double
 final case class Raw(column: Column, sql: String) extends E      // escape hatch
 
-sealed trait Cond {
+/** Per-row loop, the solver node. `lets` are per-row constants, evaluated
+  * once and in order; `init` seeds the state, in order; while fewer than
+  * `maxIter` rounds ran and `cond` holds, `step` runs its assignments in
+  * order (a name not in `init` is a temporary of the round); `result`
+  * reads the lets and the final state. A bound name is visible only after
+  * its binding, and a loop holds no loop.
+  *
+  * Inside a loop both backends compute with Java's double semantics: a
+  * comparison with NaN is false, `ln`/`log10`/`sqrt` return Java's values
+  * outside their domain, transcendentals are `java.lang.Math`'s. Spark runs
+  * a loop as one native expression ([[graft.expressions.LoopExpression]]);
+  * [[Pipeline.toSql]] renders it as a keyed recursive CTE. */
+final case class Loop(lets: Seq[(String, E)], init: Seq[(String, E)],
+                      step: Seq[(String, E)], cond: Cond, maxIter: Int,
+                      result: E) extends E {
+  val state: Seq[String] = init.map(_._1)
+  val bound: Set[String] = (lets ++ init ++ step).map(_._1).toSet
+
+  def parts: Seq[Node] =
+    (lets ++ init ++ step).map(_._2) ++ Seq(cond, result)
+
+  def map(f: E => E, g: Cond => Cond): Loop = {
+    def each(xs: Seq[(String, E)]) = xs.map { case (n, e) => n -> f(e) }
+    Loop(each(lets), each(init), each(step), g(cond), maxIter, f(result))
+  }
+
+  locally { // lets and state are bound once; a bound name is read in scope
+    val defs = (lets ++ init).map(_._1)
+    require(defs.distinct == defs && !step.exists(s => lets.exists(_._1 == s._1)),
+      s"loop names bound twice: $defs, ${step.map(_._1)}")
+    def check(scope: Set[String])(n: Node): Unit = n match {
+      case C(x)    => require(!bound(x) || scope(x), s"loop name $x read before it is bound")
+      case _: Loop => throw new IllegalArgumentException("a loop holds no loop")
+      case _       => n.children.foreach(check(scope))
+    }
+    def seq(scope: Set[String], xs: Seq[(String, E)]): Set[String] =
+      xs.foldLeft(scope) { case (sc, (n, e)) => check(sc)(e); sc + n }
+    val after = seq(seq(Set.empty, lets), init)
+    seq(after, step)
+    Seq(cond, result).foreach(check(after))
+  }
+}
+
+sealed trait Cond extends Node {
   def &&(o: Cond): Cond = AndOr("AND", this, o)
   def ||(o: Cond): Cond = AndOr("OR", this, o)
+
+  def children: Seq[Node] = this match {
+    case Cmp(_, l, r)   => Seq(l, r)
+    case AndOr(_, l, r) => Seq(l, r)
+    case NotC(x)        => Seq(x)
+  }
+
+  def mapChildren(f: E => E, g: Cond => Cond): Cond = this match {
+    case Cmp(op, l, r)   => Cmp(op, f(l), f(r))
+    case AndOr(op, l, r) => AndOr(op, g(l), g(r))
+    case NotC(x)         => NotC(g(x))
+  }
 }
 final case class Cmp(op: String, l: E, r: E) extends Cond
 final case class AndOr(op: String, l: Cond, r: Cond) extends Cond
@@ -118,6 +197,7 @@ object E {
     case If(c, t, f) => F.when(toCond(c), toColumn(t)).otherwise(toColumn(f))
     case CastD(a)    => toColumn(a).cast("double")
     case Raw(c, _)   => c
+    case l: Loop     => graft.expressions.LoopExpression.column(l)
   }
 
   def toCond(c: Cond): Column = c match {
@@ -133,28 +213,82 @@ object E {
     case NotC(x) => !toCond(x)
   }
 
-  /** Render as DuckDB-compatible ANSI SQL (the oracle path). */
-  def toSql(e: E): String = e match {
-    case C(n)    => "\"" + n + "\""
-    case Lit(v)  => formatDouble(v)
-    case ILit(v) => v.toString
-    case SLit(v) => "'" + v.replace("'", "''") + "'"
-    case Bin(op, l, r) => s"(${toSql(l)} $op ${toSql(r)})"
-    case Fn("round", List(a, ILit(d))) => s"round(${toSql(a)}, $d)"
-    case Fn("md5_str", List(a)) => s"md5(${toSql(a)})"
-    case Fn("seed_cp", List(a, SLit(suffix))) =>
-      s"regexp_replace(${toSql(a)}, '(?s)(.)', " +
-        s"'\\1${suffix.replace("'", "''")}', 'g')"
-    case Fn(fn, xs) => s"$fn(${xs.map(toSql).mkString(", ")})"
-    case If(c, t, f) => s"(CASE WHEN ${condSql(c)} THEN ${toSql(t)} ELSE ${toSql(f)} END)"
-    case CastD(a)    => s"CAST(${toSql(a)} AS DOUBLE)"
-    case Raw(_, s)   => s
+  /** Render as DuckDB-compatible ANSI SQL (the oracle path). With `java`
+    * (the parts of a [[Loop]]) the rendering follows Java's double
+    * semantics where DuckDB's differ: a comparison with NaN is false
+    * (DuckDB orders NaN above every number), `ln`/`log10` give -Infinity at
+    * 0 and NaN below, `sqrt` NaN below 0 (DuckDB raises), and integer
+    * literals are doubles. */
+  def toSql(e: E): String = sql(e, java = false)
+
+  private[expr] def sql(e: E, java: Boolean): String = {
+    def r(x: E): String = sql(x, java)
+    e match {
+      case C(n)    => "\"" + n + "\""
+      case Lit(v) if v.isNaN      => "'NaN'::DOUBLE"
+      case Lit(v) if v.isInfinite => if (v > 0) "'Infinity'::DOUBLE" else "'-Infinity'::DOUBLE"
+      case Lit(v)  => formatDouble(v)
+      case ILit(v) => if (java) formatDouble(v.toDouble) else v.toString
+      case SLit(v) => "'" + v.replace("'", "''") + "'"
+      case Bin(op, l, rr) => s"(${r(l)} $op ${r(rr)})"
+      case Fn(f @ ("ln" | "log10"), List(a)) if java =>
+        val x = r(a)
+        s"(CASE WHEN $x > 0.0e0 THEN $f($x) WHEN $x = 0.0e0 THEN '-Infinity'::DOUBLE " +
+          "ELSE 'NaN'::DOUBLE END)"
+      case Fn("sqrt", List(a)) if java =>
+        val x = r(a)
+        s"(CASE WHEN $x >= 0.0e0 THEN sqrt($x) ELSE 'NaN'::DOUBLE END)"
+      case Fn("round", List(a, ILit(d))) => s"round(${r(a)}, $d)"
+      case Fn("md5_str", List(a)) => s"md5(${r(a)})"
+      case Fn("seed_cp", List(a, SLit(suffix))) =>
+        s"regexp_replace(${r(a)}, '(?s)(.)', " +
+          s"'\\1${suffix.replace("'", "''")}', 'g')"
+      case Fn(fn, xs) => s"$fn(${xs.map(r).mkString(", ")})"
+      case If(c, t, f) => s"(CASE WHEN ${condSql(c, java)} THEN ${r(t)} ELSE ${r(f)} END)"
+      case CastD(a)    => s"CAST(${r(a)} AS DOUBLE)"
+      case Raw(_, s)   => s
+      case _: Loop     =>
+        throw new IllegalArgumentException("a Loop renders only inside Pipeline.toSql")
+    }
   }
 
-  def condSql(c: Cond): String = c match {
-    case Cmp(op, l, r)  => s"(${toSql(l)} $op ${toSql(r)})"
-    case AndOr(op, l, r) => s"(${condSql(l)} $op ${condSql(r)})"
-    case NotC(x)         => s"(NOT ${condSql(x)})"
+  def condSql(c: Cond): String = condSql(c, java = false)
+
+  private[expr] def condSql(c: Cond, java: Boolean): String = c match {
+    case Cmp(op, l, r) if java =>
+      val (a, b) = (sql(l, java), sql(r, java))
+      val guards = Seq(l -> a, r -> b).collect {
+        case (x, s) if !x.isInstanceOf[Lit] && !x.isInstanceOf[ILit] => s"NOT isnan($s)"
+      }
+      (guards :+ s"($a $op $b)").mkString("(", " AND ", ")")
+    case Cmp(op, l, r)   => s"(${sql(l, java)} $op ${sql(r, java)})"
+    case AndOr(op, l, r) => s"(${condSql(l, java)} $op ${condSql(r, java)})"
+    case NotC(x)         => s"(NOT ${condSql(x, java)})"
+  }
+
+  /** Names a tree reads from its input: column refs, minus names bound by
+    * an enclosing [[Loop]]. In first-read order. */
+  def freeVars(e: Node): Seq[String] = {
+    val acc = scala.collection.mutable.LinkedHashSet.empty[String]
+    def go(n: Node, bound: Set[String]): Unit = n match {
+      case C(x)    => if (!bound(x)) acc += x
+      case l: Loop => l.parts.foreach(go(_, bound ++ l.bound))
+      case _       => n.children.foreach(go(_, bound))
+    }
+    go(e, Set.empty)
+    acc.toSeq
+  }
+
+  /** Root of `g` on [[lo, hi]] by 60 halvings: `g > 0` moves `lo` up. Rows
+    * where `valid` fails skip the loop and give `invalid`. `g` and `valid`
+    * may read the `lets`. */
+  def bisect(lets: Seq[(String, E)], lo: Double, hi: Double, g: E => E,
+             valid: Cond, invalid: E = Lit(Double.NaN)): Loop = {
+    val (l, h, m, gm) = (C("_lo"), C("_hi"), C("_mid"), C("_g"))
+    Loop(lets, Seq("_lo" -> Lit(lo), "_hi" -> Lit(hi)),
+      Seq("_mid" -> (l + h) * Lit(0.5), "_g" -> g(m),
+        "_lo" -> If(gm > Lit(0.0), m, l), "_hi" -> If(gm > Lit(0.0), h, m)),
+      valid, 60, If(valid, (l + h) * Lit(0.5), invalid))
   }
 
   /** Shortest decimal repr that round-trips (Java Double.toString) — DuckDB
@@ -193,83 +327,32 @@ final case class Stage(cols: Seq[(String, E)])
   * arithmetic in identical order.
   */
 object Cse {
-  private def sizeOf(e: E): Int = e match {
-    case Bin(_, l, r) => 1 + sizeOf(l) + sizeOf(r)
-    case Fn(_, args)  => 1 + args.map(sizeOf).sum
-    case If(c, t, f)  => 1 + sizeCond(c) + sizeOf(t) + sizeOf(f)
-    case CastD(a)     => 1 + sizeOf(a)
-    case _            => 1
-  }
-  private def sizeCond(c: Cond): Int = c match {
-    case Cmp(_, l, r)   => 1 + sizeOf(l) + sizeOf(r)
-    case AndOr(_, l, r) => 1 + sizeCond(l) + sizeCond(r)
-    case NotC(x)        => 1 + sizeCond(x)
-  }
+  private def sizeOf(n: Node): Int = 1 + n.children.map(sizeOf).sum
 
-  private def contains(hay: E, needle: E): Boolean =
-    hay == needle || (hay match {
-      case Bin(_, l, r) => contains(l, needle) || contains(r, needle)
-      case Fn(_, args)  => args.exists(contains(_, needle))
-      case If(c, t, f)  => condContains(c, needle) || contains(t, needle) ||
-        contains(f, needle)
-      case CastD(a)     => contains(a, needle)
-      case _            => false
-    })
-  private def condContains(c: Cond, needle: E): Boolean = c match {
-    case Cmp(_, l, r)   => contains(l, needle) || contains(r, needle)
-    case AndOr(_, l, r) => condContains(l, needle) || condContains(r, needle)
-    case NotC(x)        => condContains(x, needle)
-  }
+  private def contains(hay: Node, needle: E): Boolean =
+    hay == needle || hay.children.exists(contains(_, needle))
 
-  private def count(e: E, acc: scala.collection.mutable.Map[E, Int]): Unit = {
-    e match {
-      case Bin(_, l, r) => count(l, acc); count(r, acc)
-      case Fn(_, args)  => args.foreach(count(_, acc))
-      case If(c, t, f)  => countCond(c, acc); count(t, acc); count(f, acc)
-      case CastD(a)     => count(a, acc)
-      case _: Raw       => return // opaque: Column equality is unreliable
-      case _            => return
+  /** Counts every expression subtree of at least `minSize` nodes. A
+    * [[Loop]] is a scope: it is counted whole, and nothing inside it is,
+    * so a hoist never moves a bound name out of its loop or a loop's part
+    * out of Java semantics. */
+  private def count(n: Node, acc: scala.collection.mutable.Map[E, Int]): Unit = {
+    if (!n.isInstanceOf[Loop]) n.children.foreach(count(_, acc))
+    n match {
+      case e: E if sizeOf(e) >= minSize => acc.update(e, acc.getOrElse(e, 0) + 1)
+      case _ => ()
     }
-    if (sizeOf(e) >= minSize) acc.update(e, acc.getOrElse(e, 0) + 1)
   }
-  private def countCond(c: Cond, acc: scala.collection.mutable.Map[E, Int]): Unit =
-    c match {
-      case Cmp(_, l, r)   => count(l, acc); count(r, acc)
-      case AndOr(_, l, r) => countCond(l, acc); countCond(r, acc)
-      case NotC(x)        => countCond(x, acc)
-    }
 
   def rewrite(e: E, m: Map[E, String]): E = m.get(e) match {
-    case Some(n) => C(n)
-    case None => e match {
-      case Bin(op, l, r) => Bin(op, rewrite(l, m), rewrite(r, m))
-      case Fn(f, args)   => Fn(f, args.map(rewrite(_, m)))
-      case If(c, t, f)   => If(rewriteCond(c, m), rewrite(t, m), rewrite(f, m))
-      case CastD(a)      => CastD(rewrite(a, m))
-      case other         => other
+    case Some(n)  => C(n)
+    case None     => e match {
+      case _: Loop => e
+      case _       => e.mapChildren(rewrite(_, m), rewriteCond(_, m))
     }
   }
-  def rewriteCond(c: Cond, m: Map[E, String]): Cond = c match {
-    case Cmp(op, l, r)   => Cmp(op, rewrite(l, m), rewrite(r, m))
-    case AndOr(op, l, r) => AndOr(op, rewriteCond(l, m), rewriteCond(r, m))
-    case NotC(x)         => NotC(rewriteCond(x, m))
-  }
-
-  private def freeVars(e: E, acc: scala.collection.mutable.LinkedHashSet[String]): Unit =
-    e match {
-      case C(n)         => acc += n
-      case Bin(_, l, r) => freeVars(l, acc); freeVars(r, acc)
-      case Fn(_, args)  => args.foreach(freeVars(_, acc))
-      case If(c, t, f)  => freeVarsCond(c, acc); freeVars(t, acc); freeVars(f, acc)
-      case CastD(a)     => freeVars(a, acc)
-      case _            => ()
-    }
-  private def freeVarsCond(c: Cond, acc: scala.collection.mutable.LinkedHashSet[String]): Unit =
-    c match {
-      case Cmp(_, l, r)   => freeVars(l, acc); freeVars(r, acc)
-      case AndOr(_, l, r) => freeVarsCond(l, acc); freeVarsCond(r, acc)
-      case NotC(x)        => freeVarsCond(x, acc)
-    }
+  def rewriteCond(c: Cond, m: Map[E, String]): Cond =
+    c.mapChildren(rewrite(_, m), rewriteCond(_, m))
 
   private val minSize = 5
   private val maxPicks = 16
@@ -285,14 +368,15 @@ object Cse {
     // the non-overlap rule then excluded the denominator, leaving a dozen
     // inline copies whose generated code blew past the JIT method budget
     // (q_monte_carlo: 4s of JIT per WARM pass, warm == cold).
+    // ties break on the tree's structure, not on HashMap order
     val candidates = counts.toSeq.collect {
-      case (e, n) if n >= 2 => (e, (n - 1).toLong * sizeOf(e))
-    }.sortBy(-_._2)
+      case (e, n) if n >= 2 => ((n - 1).toLong * sizeOf(e), e.toString, e)
+    }.sortBy { case (saved, key, _) => (-saved, key) }
     if (candidates.isEmpty) return None
     // greedy non-overlapping pick, largest savings first
     val picked = scala.collection.mutable.ArrayBuffer.empty[E]
     candidates.iterator.takeWhile(_ => picked.size < maxPicks).foreach {
-      case (e, _) =>
+      case (_, _, e) =>
         if (!picked.exists(p => contains(p, e) || contains(e, p)))
           picked += e
     }
@@ -301,15 +385,14 @@ object Cse {
     // names must dodge the free vars — a re-split of a REWRITTEN stage
     // sees the previous level's _cseN as inputs, and a colliding fresh
     // name would shadow the column it still references
-    val fv = scala.collection.mutable.LinkedHashSet.empty[String]
-    stage.cols.foreach { case (_, e) => freeVars(e, fv) }
+    val fv = stage.cols.flatMap { case (_, e) => E.freeVars(e) }.distinct
     var idx = 0
     def fresh(): String = {
       while (fv.contains(s"_cse$idx")) idx += 1
       val n = s"_cse$idx"; idx += 1; n
     }
     val names = picked.map(e => e -> fresh()).toMap
-    val prelude = Stage(fv.toSeq.map(c => c -> (C(c): E)) ++
+    val prelude = Stage(fv.map(c => c -> (C(c): E)) ++
       picked.map(e => names(e) -> e))
     val rewritten = Stage(stage.cols.map { case (n, e) => n -> rewrite(e, names) })
     Some((prelude, rewritten))
@@ -348,55 +431,126 @@ object Pipeline {
     * `orderBy` needs no second exchange and — crucially — its range-bound
     * sampling pass runs over the cheap key projection instead of
     * re-executing the whole post-shuffle compute. Returns None when the
-    * column is opaque (contains [[Raw]]) — Column equality is unreliable
-    * there, so callers fall back to the plain two-exchange shape. */
+    * column is opaque (contains [[Raw]], whose Column equality is
+    * unreliable, or a [[Loop]]) — callers then fall back to the plain
+    * two-exchange shape. */
   def sourceExpr(stages: Seq[Stage], name: String): Option[E] = {
     val env = stages.foldLeft(Map.empty[String, E]) { (m, st) =>
       st.cols.map { case (n, e) => n -> substitute(e, m) }.toMap
     }
-    env.get(name).filter(noRaw)
+    env.get(name).filter(opaqueFree)
   }
 
-  private def noRaw(e: E): Boolean = e match {
-    case _: Raw        => false
-    case Bin(_, l, r)  => noRaw(l) && noRaw(r)
-    case Fn(_, args)   => args.forall(noRaw)
-    case If(c, t, f)   => noRawCond(c) && noRaw(t) && noRaw(f)
-    case CastD(a)      => noRaw(a)
-    case _             => true
-  }
-  private def noRawCond(c: Cond): Boolean = c match {
-    case Cmp(_, l, r)   => noRaw(l) && noRaw(r)
-    case AndOr(_, l, r) => noRawCond(l) && noRawCond(r)
-    case NotC(x)        => noRawCond(x)
+  private def opaqueFree(n: Node): Boolean = n match {
+    case _: Raw | _: Loop => false
+    case _                => n.children.forall(opaqueFree)
   }
 
+  /** `e` with each column ref replaced by its definition in `env`; a
+    * name bound by a [[Loop]] is never substituted inside that loop. */
   private def substitute(e: E, env: Map[String, E]): E = e match {
-    case C(n)          => env.getOrElse(n, C(n))
-    case Bin(op, l, r) => Bin(op, substitute(l, env), substitute(r, env))
-    case Fn(f, args)   => Fn(f, args.map(substitute(_, env)))
-    case If(c, t, f)   => If(substituteCond(c, env), substitute(t, env),
-      substitute(f, env))
-    case CastD(a)      => CastD(substitute(a, env))
-    case other         => other
+    case C(n)    => env.getOrElse(n, e)
+    case l: Loop => subst(l, env -- l.bound)
+    case _       => subst(e, env)
   }
-  private def substituteCond(c: Cond, env: Map[String, E]): Cond = c match {
-    case Cmp(op, l, r)   => Cmp(op, substitute(l, env), substitute(r, env))
-    case AndOr(op, l, r) => AndOr(op, substituteCond(l, env),
-      substituteCond(r, env))
-    case NotC(x)         => NotC(substituteCond(x, env))
-  }
+  private def subst(e: E, env: Map[String, E]): E =
+    e.mapChildren(substitute(_, env), substituteCond(_, env))
+  private def substituteCond(c: Cond, env: Map[String, E]): Cond =
+    c.mapChildren(substitute(_, env), substituteCond(_, env))
 
   /** Render stages as `WITH s0 AS (SELECT ... FROM <source>), s1 AS ...`
     * and a final SELECT with optional ORDER BY. `source` may itself be a
-    * subquery: `(SELECT ... FROM lineitem)`. */
+    * subquery: `(SELECT ... FROM lineitem)`.
+    *
+    * A stage holding [[Loop]]s first numbers its input rows in a
+    * MATERIALIZED CTE (`sI_k`, key `__rid`: a synthetic key, since source
+    * keys need not be unique), then renders each distinct loop as a
+    * recursive CTE over that key and LEFT JOINs its result back in. */
   def toSql(source: String, stages: Seq[Stage], orderBy: Seq[String]): String = {
-    val ctes = stages.zipWithIndex.map { case (st, i) =>
+    val ctes = scala.collection.mutable.ArrayBuffer.empty[String]
+    def select(cols: Seq[(String, E)]): String =
+      cols.map { case (n, e) => s"${E.toSql(e)} AS ${q(n)}" }.mkString(", ")
+    stages.zipWithIndex.foreach { case (st, i) =>
       val from = if (i == 0) source else s"s${i - 1}"
-      val sel = st.cols.map { case (n, e) => s"${E.toSql(e)} AS \"$n\"" }.mkString(", ")
-      s"s$i AS (SELECT $sel FROM $from)"
+      val loops = st.cols.flatMap { case (_, e) => loopsIn(e) }.distinct
+      if (loops.isEmpty) ctes += s"s$i AS (SELECT ${select(st.cols)} FROM $from)"
+      else {
+        val keyed = s"s${i}_k"
+        ctes += s"$keyed AS MATERIALIZED (SELECT row_number() OVER () AS " +
+          s"${q(rid)}, * FROM $from)"
+        val names: Map[E, String] =
+          loops.zipWithIndex.map { case (l, j) => (l: E) -> s"s${i}_l$j" }.toMap
+        loops.foreach(l => ctes ++= loopCtes(l, names(l), keyed))
+        val cols = st.cols.map { case (n, e) => n -> Cse.rewrite(e, names) }
+        val joins = loops.map(l => s" LEFT JOIN ${names(l)}_r USING (${q(rid)})")
+        ctes += s"s$i AS (SELECT ${select(cols)} FROM $keyed${joins.mkString})"
+      }
     }
-    val ob = if (orderBy.isEmpty) "" else orderBy.map(c => "\"" + c + "\"").mkString(" ORDER BY ", ", ", "")
-    s"WITH ${ctes.mkString(", ")} SELECT * FROM s${stages.size - 1}$ob"
+    val ob = if (orderBy.isEmpty) "" else orderBy.map(q).mkString(" ORDER BY ", ", ", "")
+    val recursive = if (stages.exists(_.cols.exists(c => loopsIn(c._2).nonEmpty))) " RECURSIVE" else ""
+    s"WITH$recursive ${ctes.mkString(", ")} SELECT * FROM s${stages.size - 1}$ob"
+  }
+
+  private val rid = "__rid"
+  private val round = "__n"
+  private def q(n: String): String = "\"" + n + "\""
+
+  private def loopsIn(n: Node): Seq[Loop] = n match {
+    case l: Loop => Seq(l)
+    case _       => n.children.flatMap(loopsIn)
+  }
+
+  /** The recursive CTE `name` (one row per input row and round: key,
+    * round, the names the step, condition and result read, the state)
+    * and `name_r` (key, result of the last round). The seed computes the
+    * lets and the initial state level by level over the keyed input; the
+    * recursive member runs one step on the rows whose loop goes on; a
+    * row's last round is the one that produced no successor. */
+  private def loopCtes(l: Loop, name: String, keyed: String): Seq[String] = {
+    def sql(e: E): String = E.sql(e, java = true)
+    // inside a loop every read is a plain column ref: no loop nests
+    val read = (Seq(l.cond, l.result) ++ l.step.map(_._2)).flatMap(E.freeVars)
+    val temps = l.step.map(_._1).toSet -- l.state
+    val kept = read.distinct.filterNot(n => temps(n) || l.state.contains(n)) ++ l.state
+    val keep = kept.map(q).mkString(", ")
+    val seed = levels(l.lets ++ l.init).foldLeft(
+      s"SELECT ${(rid +: E.freeVars(l)).map(q).mkString(", ")} FROM $keyed") {
+      (from, level) =>
+        s"SELECT *, ${level.map { case (n, e) => s"${sql(e)} AS ${q(n)}" }.mkString(", ")} FROM ($from)"
+    }
+    val go = s"(${q(round)} < ${l.maxIter} AND ${E.condSql(l.cond, java = true)})"
+    var cols = kept.toSet
+    val stepped = levels(l.step).foldLeft(s"SELECT * FROM $name WHERE $go") {
+      (from, level) =>
+        val (re, add) = level.partition { case (n, _) => cols(n) }
+        cols ++= add.map(_._1)
+        val replace = if (re.isEmpty) "" else
+          re.map { case (n, e) => s"${sql(e)} AS ${q(n)}" }.mkString(" REPLACE (", ", ", ")")
+        val more = add.map { case (n, e) => s", ${sql(e)} AS ${q(n)}" }.mkString
+        s"SELECT *$replace$more FROM ($from)"
+    }
+    Seq(
+      s"$name AS (SELECT ${q(rid)}, 0 AS ${q(round)}, $keep FROM ($seed) " +
+        s"UNION ALL SELECT ${q(rid)}, ${q(round)} + 1, $keep FROM ($stepped))",
+      s"${name}_r AS (SELECT ${q(rid)}, ${sql(l.result)} AS ${q(name)} FROM $name " +
+        s"WHERE NOT coalesce($go, false))")
+  }
+
+  /** Sequential assignments grouped into SELECT levels: an assignment sits
+    * one level above the last earlier one that wrote a name it reads or
+    * its own name, and no lower than an earlier one that reads its name
+    * (a SELECT reads its input's values). */
+  private def levels(as: Seq[(String, E)]): Seq[Seq[(String, E)]] = {
+    val reads = as.map { case (_, e) => E.freeVars(e).toSet }
+    val lv = new Array[Int](as.size)
+    as.indices.foreach { k =>
+      val n = as(k)._1
+      lv(k) = (0 until k).map { j =>
+        if (reads(k)(as(j)._1) || as(j)._1 == n) lv(j) + 1
+        else if (reads(j)(n)) lv(j)
+        else 0
+      }.foldLeft(0)(math.max)
+    }
+    as.indices.groupBy(lv(_)).toSeq.sortBy(_._1).map(_._2.sorted.map(as))
   }
 }

@@ -409,8 +409,7 @@ object Dedup {
     * bit-identical to the live index. */
   def persistedAssignIndex(existing: DataFrame, key: String, k: Int,
                            rowsPerBand: Int): (DataFrame, DataFrame) = {
-    val fp = Artifacts.fingerprint(existing, "doc_id", "text")
-    val full = s"$key|fp=$fp|k=$k|b=$rowsPerBand"
+    val full = s"$key|fp=${corpusFingerprint(existing)}|k=$k|b=$rowsPerBand"
     val path = Artifacts.pathFor("assignidx", full) { p =>
       val (bands, sets) = assignIndex(existing, k, rowsPerBand)
       bands.write.mode("overwrite").parquet(s"$p/bands")
@@ -498,14 +497,16 @@ object Dedup {
     * (folded into the key): bucket-cap discipline is a property of the
     * index, decided when it is built, not re-derived per query. Longs,
     * ints, and arrays thereof round-trip parquet exactly, so assignment
-    * output is bit-identical to the live chain. */
+    * output is bit-identical to the live chain. `fp` is the corpus
+    * fingerprint when the caller already has it (one job saved). */
   def persistedServeIndex(existing: DataFrame, labels: DataFrame,
                           key: String, k: Int, rowsPerBand: Int,
-                          maxBucketSize: Int = ConfiguredBucketSize): DataFrame = {
+                          maxBucketSize: Int = ConfiguredBucketSize,
+                          fp: Option[String] = None): DataFrame = {
     val cap = resolveCap(existing, maxBucketSize)
-    val fp = Artifacts.fingerprint(existing, "doc_id", "text")
+    val corpusFp = fp.getOrElse(corpusFingerprint(existing))
     val lfp = Artifacts.fingerprint(labels, "doc_id", "cluster_id")
-    val full = s"$key|fp=$fp|lfp=$lfp|k=$k|b=$rowsPerBand|cap=$cap"
+    val full = s"$key|fp=$corpusFp|lfp=$lfp|k=$k|b=$rowsPerBand|cap=$cap"
     val path = Artifacts.pathFor("assignserve", full) { p =>
       val (bands, sets) = assignIndex(existing, k, rowsPerBand)
       serveIndexFrom(bands, sets, labels, cap)
@@ -630,17 +631,22 @@ object Dedup {
     * Results are bit-identical to the live chain (ids and labels are
     * integers; parquet round-trips them exactly), so oracle SQL is
     * unchanged. Keying/cleanup semantics are [[Artifacts]]'s (corpus
-    * fingerprint folded in; per-JVM token; full-string memo). */
+    * fingerprint folded in; per-JVM token; full-string memo). `fp` as in
+    * [[persistedServeIndex]]. */
   def persistedLabels(docs: DataFrame, key: String, threshold: Double,
                       k: Int = 16, rowsPerBand: Int = 4,
-                      maxIters: Int = 20): DataFrame = {
-    val fp = Artifacts.fingerprint(docs, "doc_id", "text")
-    val full = s"$key|fp=$fp|t=$threshold|k=$k|b=$rowsPerBand|it=$maxIters"
+                      maxIters: Int = 20, fp: Option[String] = None): DataFrame = {
+    val corpusFp = fp.getOrElse(corpusFingerprint(docs))
+    val full = s"$key|fp=$corpusFp|t=$threshold|k=$k|b=$rowsPerBand|it=$maxIters"
     val path = Artifacts.pathFor("deduplab", full)(p =>
       nearDupClusters(docs, threshold, k, rowsPerBand, maxIters)
         .write.mode("overwrite").parquet(s"$p/labels"))
     GraftParquet.read(docs.sparkSession, s"$path/labels")
   }
+
+  /** The content fingerprint a corpus's artifacts are keyed by. */
+  def corpusFingerprint(docs: DataFrame): String =
+    Artifacts.fingerprint(docs, "doc_id", "text")
 
   /** The persisted Jaccard-verified near-dup PAIR set — the edge-list
     * sibling of [[persistedLabels]] for consumers that need the graph
@@ -650,8 +656,7 @@ object Dedup {
     * [[ngramJaccardPairs]] chain. */
   def persistedPairs(docs: DataFrame, key: String, threshold: Double,
                      k: Int = 16, rowsPerBand: Int = 4): DataFrame = {
-    val fp = Artifacts.fingerprint(docs, "doc_id", "text")
-    val full = s"$key|fp=$fp|t=$threshold|k=$k|b=$rowsPerBand"
+    val full = s"$key|fp=${corpusFingerprint(docs)}|t=$threshold|k=$k|b=$rowsPerBand"
     val path = Artifacts.pathFor("deduppairs", full)(p =>
       ngramJaccardPairs(docs, threshold, k, rowsPerBand)
         .write.mode("overwrite").parquet(s"$p/pairs"))

@@ -1,14 +1,17 @@
 package graft.functions
 
 import graft.chem.Elements
+import graft.expr._
+import graft.expr.E._
+import graft.expressions.LoopExpression
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions.{udf => sparkUdf}
 
 /** Iterative Fe3+/Fe2+ models (reference `Fe_redox/Fe3Fe2_models.py`):
   * activities depend on the Fe speciation itself, so each row solves a
   * fixed point Fe3Fe2 = f(Fe3Fe2) (the reference calls per-row
-  * `scipy.optimize.fsolve` from 0.3; here damped secant with a bracketed
-  * fallback). Row-local — no cross-row state, one narrow stage.
+  * `scipy.optimize.fsolve` from 0.3; here bisection on the reference's
+  * bracket). Row-local — no cross-row state, one narrow stage.
   */
 object Fe3Fe2Iterative {
 
@@ -163,66 +166,127 @@ object Fe3Fe2Iterative {
     plan.split(x)
   }
 
+  // ---- O'Neill 2006 and Armstrong 2019: fixed points written as Loops ---
+
+  /** The split cation base ([[CationPlan.split]]) as loop lets, with the
+    * same sums in the same order: `_tot` the cation total, `_<Cation>`
+    * the fraction of each [[CationPlan.slotNames]] cation (0.0 when the
+    * composition has none), `_fet` FeO's share. `order` is the summation
+    * order of the oxides other than FeO and Fe2O3, `x` an oxide's mol
+    * fraction. */
+  private def splitLets(order: Seq[String], x: String => E,
+                        hasFeO: Boolean): Seq[(String, E)] = {
+    val terms = order.map(ox =>
+      Elements.cationName(ox) -> x(ox) * Lit(Elements.cationAmount(ox)))
+    def sum0(xs: Seq[E]): E = E.sumAll(Lit(0.0) +: xs)
+    Seq("_feo" -> (if (hasFeO) x("FeO") else Lit(0.0)),
+      "_tot" -> (sum0(terms.map(_._2)) + C("_feo"))) ++
+      CationPlan.slotNames.take(8).map { c =>
+        s"_$c" -> (terms.filter(_._1 == c).map(_._2) match {
+          case Seq() => Lit(0.0)
+          case ts    => sum0(ts) / C("_tot")
+        })
+      } :+ ("_fet" -> C("_feo") / C("_tot"))
+  }
+
+  /** Split base of oxide wt.% columns `els` ([[CationPlan.of]]): mol
+    * fractions normalised by the mol sum in schema order. */
+  def wtBase(els: Seq[String]): Seq[(String, E)] = {
+    def mol(ox: String): E = C(ox) / Lit(Elements.chemicalWeight(ox).get)
+    ("_sum" -> E.sumAll(Lit(0.0) +: els.map(mol))) +:
+      splitLets((els.zip(els.indices).toMap - "FeO" - "Fe2O3").keys.toSeq,
+        ox => mol(ox) / C("_sum"), els.contains("FeO"))
+  }
+
+  /** Split base of a mol-fraction Map's keys, in the Map's own order
+    * ([[CationPlan.ofMol]]: the values are used as they are). */
+  private def molBase(mol: Map[String, Double]): Seq[(String, E)] =
+    splitLets((mol - "FeO" - "Fe2O3").keys.toSeq, C(_), mol.contains("FeO"))
+
+  /** Solve r = f(r) by [[E.bisect]] on g(r) = f(r) - r over the
+    * reference's fsolve-equivalent bracket [1e-8, 100]. Both models' f are
+    * strictly decreasing in r (the Fe2-Fe3 redistribution term enters with
+    * a negative derivative), so the root is unique; 60 halvings reach
+    * ~1e-15 relative. NaN when g does not change sign on the bracket. */
+  private def fixedPoint(lets: Seq[(String, E)], f: E => E): Loop = {
+    def g(r: E): E = f(r) - r
+    bisect(lets ++ Seq("_glo" -> g(Lit(1e-8)), "_ghi" -> g(Lit(100.0))),
+      1e-8, 100.0, g, C("_glo") > Lit(0.0) && C("_ghi") < Lit(0.0))
+  }
+
+  /** cat("Fe") - cat("Fe3") at trial r: fe(r) - (feTot - fe(r)),
+    * fe(r) = feTot / (1 + r). */
+  private def feMinusFe3(r: E): E = {
+    val fe = C("_fet") / (Lit(1.0) + r)
+    fe - (C("_fet") - fe)
+  }
+
   /** O'Neill et al. (2006) eq. 10 (`Fe3Fe2_models.py:840-871`): the cation
     * polynomial and pressure term are per-row constants; only the
-    * Fe2+-Fe3+ difference varies per trial. */
-  def oneill2006(mol: Map[String, Double], tK: Double, pBar: Double,
-                 fO2: Double): Double = oneill2006Base(catBase(mol), tK, pBar, fO2)
-
-  private[graft] def oneill2006Base(b: CatBase, tK: Double, pBar: Double,
-                                fO2: Double): Double = {
-    val pGPa = pBar / 1e4
-    val catPoly = -28144.0 + 3905.0 * b.mg - 13359.0 * b.ca -
-      14858.0 * b.na - 9805.0 * b.k + 10906.0 * b.al + 110971.0 * b.p
-    val part2 = 13.95 +
-      (33122.0 / tK - 5.24) * (math.pow(1.0 + 0.241 * pGPa, 0.75) - 1.0) -
-      (39156.0 / tK - 6.17) * (math.pow(1.0 + 0.132 * pGPa, 0.75) - 1.0)
-    val log10fO2 = math.log10(fO2)
-    fixedPoint { r =>
-      val part1 = (catPoly - 11952.0 * b.feMinusFe3(r)) / tK
-      math.pow(10.0, (log10fO2 - part1 - part2) / 4.0)
-    }
+    * Fe2+-Fe3+ difference varies per trial. `base` is [[wtBase]] or a
+    * Map's split base. */
+  def oneill2006Loop(base: Seq[(String, E)], tK: E, pBar: E, fO2: E): Loop = {
+    val (t, pg) = (C("_tk"), C("_pg"))
+    fixedPoint(base ++ Seq("_tk" -> tK, "_pg" -> pBar / Lit(1e4),
+        "_cp" -> (Lit(-28144.0) + Lit(3905.0) * C("_Mg") - Lit(13359.0) * C("_Ca") -
+          Lit(14858.0) * C("_Na") - Lit(9805.0) * C("_K") + Lit(10906.0) * C("_Al") +
+          Lit(110971.0) * C("_P")),
+        "_p2" -> (Lit(13.95) +
+          (Lit(33122.0) / t - Lit(5.24)) * (pow(Lit(1.0) + Lit(0.241) * pg, Lit(0.75)) - Lit(1.0)) -
+          (Lit(39156.0) / t - Lit(6.17)) * (pow(Lit(1.0) + Lit(0.132) * pg, Lit(0.75)) - Lit(1.0))),
+        "_lf" -> log10(fO2)),
+      r => pow(Lit(10.0),
+        (C("_lf") - (C("_cp") - Lit(11952.0) * feMinusFe3(r)) / t - C("_p2")) / Lit(4.0)))
   }
 
   /** Armstrong et al. (2019) Supplementary eq. S12
     * (`Fe3Fe2_models.py:1030-1155`): Gibbs0 + Tait-like VdP of the FeO/
     * FeO1.5 partial molar volumes + Jayasuriya Margules activities.
-    * Everything but the Fe2+-Fe3+ Margules term is per-row constant. */
-  def armstrong2019(mol: Map[String, Double], tK: Double, pBar: Double,
-                    fO2: Double): Double =
-    armstrong2019Base(catBase(mol), tK, pBar, fO2)
-
-  private[graft] def armstrong2019Base(b: CatBase, tK: Double, pBar: Double,
-                                   fO2: Double): Double = {
-    val gibbs0 = -(16201.0 / tK - 8.031) * (R * tK)
-    def vdp(phase: String): Double = {
-      val (k0, kp0) = phase match {
-        case "Fe2" => (37.0, 8.0)
-        case "Fe3" => (12.6, 1.3)
-      }
+    * Everything but the Fe2+-Fe3+ Margules term is per-row constant; the
+    * Tait shape constants (a, b, c per phase) are T/P-independent and
+    * computed here. */
+  def armstrong2019Loop(base: Seq[(String, E)], tK: E, pBar: E, fO2: E): Loop = {
+    val (t, pg) = (C("_tk"), C("_pg"))
+    def vdp(k0: Double, kp0: Double, v0: E): E = {
       val kpp0 = -kp0 / k0
-      val v0 = phase match {
-        case "Fe2" => 13650.0 + 2.92 * (tK - 1673.0)
-        case "Fe3" => 21070.0 + 4.54 * (tK - 1673.0)
-      }
-      val pGPa = pBar / 1e4
       val a = (1.0 + kp0) / (1.0 + kp0 + k0 * kpp0)
       val bb = kp0 / k0 - kpp0 / (1.0 + kp0)
       val cc = (1.0 + kp0 + k0 * kpp0) / (kp0 * kp0 + kp0 - k0 * kpp0)
-      val part1 = a * (1.0 - math.pow(1.0 + bb * pGPa, 1.0 - cc))
-      val part2 = bb * (cc - 1.0) * pGPa
-      pGPa * v0 * (1.0 - a + part1 / part2)
+      val part1 = Lit(a) * (Lit(1.0) - pow(Lit(1.0) + Lit(bb) * pg, Lit(1.0 - cc)))
+      pg * v0 * (Lit(1.0 - a) + part1 / (Lit(bb * (cc - 1.0)) * pg))
     }
-    val dVdP = vdp("Fe3") - vdp("Fe2")
-    val sumMargules = -2248.0 * b.mg + 7690.0 * b.ca + 8553.0 * b.na +
-      5644.0 * b.k + -6278.0 * b.al
-    val lnfO2Quarter = math.log(fO2) / 4.0
-    val gTerm = (gibbs0 + dVdP) / (R * tK)
-    fixedPoint { r =>
-      val lnAFe3AFe2 = sumMargules / tK + 6880.0 * (b.feMinusFe3(r) / tK)
-      math.exp(lnfO2Quarter - gTerm + lnAFe3AFe2)
-    }
+    val dVdP = vdp(12.6, 1.3, Lit(21070.0) + Lit(4.54) * (t - Lit(1673.0))) -
+      vdp(37.0, 8.0, Lit(13650.0) + Lit(2.92) * (t - Lit(1673.0)))
+    val gibbs0 = -(Lit(16201.0) / t - Lit(8.031)) * (Lit(R) * t)
+    fixedPoint(base ++ Seq("_tk" -> tK, "_pg" -> pBar / Lit(1e4),
+        "_sm" -> (Lit(-2248.0) * C("_Mg") + Lit(7690.0) * C("_Ca") +
+          Lit(8553.0) * C("_Na") + Lit(5644.0) * C("_K") + Lit(-6278.0) * C("_Al")),
+        "_lq" -> ln(fO2) / Lit(4.0),
+        "_gt" -> (gibbs0 + dVdP) / (Lit(R) * t)),
+      r => exp(C("_lq") - C("_gt") +
+        (C("_sm") / t + Lit(6880.0) * (feMinusFe3(r) / t))))
   }
+
+  /** The loop of an iterative model written as a tree, if it is one. */
+  val loops: Map[String, (Seq[(String, E)], E, E, E) => Loop] =
+    Map("oneill2006" -> oneill2006Loop, "armstrong2019" -> armstrong2019Loop)
+
+  private def mapModel(model: String, mol: Map[String, Double], tK: Double,
+                       pBar: Double, fO2: Double): Double =
+    LoopExpression.eval(loops(model)(molBase(mol), C("T_K"), C("P_bar"), C("fO2")),
+      mol.toSeq ++ Seq("T_K" -> tK, "P_bar" -> pBar, "fO2" -> fO2): _*)
+
+  def oneill2006(mol: Map[String, Double], tK: Double, pBar: Double,
+                 fO2: Double): Double = mapModel("oneill2006", mol, tK, pBar, fO2)
+
+  def armstrong2019(mol: Map[String, Double], tK: Double, pBar: Double,
+                    fO2: Double): Double = mapModel("armstrong2019", mol, tK, pBar, fO2)
+
+  /** `(wt.% in els order, T_K, P_bar, fO2) => Fe3Fe2` of a loop model,
+    * compiled once. */
+  def evaluator(els: Array[String], model: String): Array[Double] => Double =
+    LoopExpression.evaluator(loops(model)(wtBase(els), C("T_K"), C("P_bar"), C("fO2")),
+      els.toSeq ++ Seq("T_K", "P_bar", "fO2"))
 
   /** Plain cation fractions with Fe as total Fe2+ (no Fe3 split) — the
     * reference's `moles.cations()` used by hirschmann2022
@@ -286,8 +350,8 @@ object Fe3Fe2Iterative {
       (math.log10(fO2) - omega - phi - h * gamma) / (4.0 + a0 * math.sqrt(fe)))
   }
 
-  /** The one Spark UDF over the iterative Fe3Fe2 models (`oneill2006`,
-    * `armstrong2019`, `deng2020`, `sun2024`):
+  /** The one Spark UDF over the Deng-EOS Fe3Fe2 models (`deng2020`,
+    * `sun2024`; the others are [[loops]]):
     * `(array(wt.% in els order), T_K, P_bar, fO2) => Fe3Fe2`. The closure
     * captures the schema's [[CationPlan]], built here once, so a row does
     * only its own arithmetic. The Deng-backed models also capture any
@@ -298,10 +362,6 @@ object Fe3Fe2Iterative {
     val mm = Deng2020.currentMetrics.orNull
     def publish(): Unit = if (mm != null) Deng2020.ensureMetrics(mm)
     val f: (Seq[Double], Double, Double, Double) => Double = model match {
-      case "oneill2006" =>
-        (wt, t, p, fo2) => oneill2006Base(plan.split(wt.toArray), t, p, fo2)
-      case "armstrong2019" =>
-        (wt, t, p, fo2) => armstrong2019Base(plan.split(wt.toArray), t, p, fo2)
       case "deng2020" => (wt, t, p, fo2) => {
         publish()
         Deng2020.fe3Fe2Base(plan.split(wt.toArray), t, p, fo2, "12.5molpc")
@@ -314,31 +374,5 @@ object Fe3Fe2Iterative {
         throw new IllegalArgumentException(s"iterative Fe3Fe2 model $other")
     }
     sparkUdf(f)
-  }
-
-  /** Solve r = f(r) by 60 fixed bisection steps on g(r) = f(r) - r over
-    * the reference's fsolve-equivalent bracket. Both callers' f are
-    * strictly decreasing in r (the Fe2-Fe3 redistribution term enters with
-    * a negative derivative), so g is strictly decreasing and the root is
-    * unique; 60 steps reach ~1e-15 relative — far inside the golden parity
-    * tolerances. Deterministic straight-line IEEE arithmetic with no
-    * convergence branches, so the DuckDB oracle's recursive-CTE twin
-    * ([[graft.Fe3Fe2IterSql]]) computes bit-identical ratios (the earlier
-    * secant-then-brent hybrid had data-dependent branch paths no SQL
-    * rendering could follow). */
-  private def fixedPoint(f: Double => Double): Double = {
-    def g(r: Double): Double = f(r) - r
-    val lo0 = 1e-8
-    val hi0 = 100.0
-    if (!(g(lo0) > 0.0) || !(g(hi0) < 0.0)) return Double.NaN // unbracketed
-    var lo = lo0
-    var hi = hi0
-    var it = 0
-    while (it < 60) {
-      val mid = (lo + hi) * 0.5
-      if (g(mid) > 0.0) lo = mid else hi = mid
-      it += 1
-    }
-    (lo + hi) * 0.5
   }
 }

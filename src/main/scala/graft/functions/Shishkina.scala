@@ -1,119 +1,127 @@
 package graft.functions
 
 import graft.chem.Elements
+import graft.expr._
+import graft.expr.E._
+import graft.expressions.LoopExpression
+import graft.models.CompCtx
 
 /** H2O-CO2 solubility model of Shishkina et al. (2014) (reference
   * `volatile_solubility/volatile_solubility_models/shishkina2014.py`),
   * "pi_star" CO2 parameterisation. Simpler than Iacono-Marziano: H2O
   * solubility is closed-form in anhydrous cation fractions (no inner fixed
-  * point); saturation still needs the bracketed per-species solve and the
-  * mixed-fluid 2-D solve.
-  */
+  * point), and the mixed-fluid saturation decouples into per-species
+  * partial pressures. Every law is written once as an expression tree
+  * over the composition's oxide columns (the `*E` builders); the scalar
+  * functions evaluate the same trees. */
 object Shishkina {
 
   import IaconoMarziano.Comp
 
-  /** Cation mol fractions on an anhydrous (H2O/CO2-free) basis. */
-  private def anhydrousCations(c: Comp): Map[String, Double] = {
-    val keep = c.names.zip(c.wt).filter { case (n, _) => n != "H2O" && n != "CO2" }
-    val terms = keep.map { case (ox, w) =>
+  /** (cation, wt / W * nCations) of every anhydrous oxide, in input
+    * order. */
+  private def terms(m: CompCtx): Seq[(String, E)] =
+    m.elements.filter(ox => ox != "H2O" && ox != "CO2").map { ox =>
       Elements.cationName(ox) ->
-        w / Elements.chemicalWeight(ox).get * Elements.cationAmount(ox)
+        C(ox) / Lit(Elements.chemicalWeight(ox).get) * Lit(Elements.cationAmount(ox))
     }
-    // left-to-right input-order sum: the DuckDB oracle rendering of these
-    // scalars (ShishkinaSql) replicates this exact fold order bit-for-bit
-    val tot = terms.foldLeft(0.0)(_ + _._2)
-    terms.groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).sum / tot }
+
+  private def total(m: CompCtx): E = sumAll(terms(m).map(_._2))
+
+  /** Anhydrous cation fraction of `cation` over the cation total `tot`. */
+  private def frac(m: CompCtx, tot: E)(cation: String): E =
+    terms(m).filter(_._1 == cation).map(_._2) match {
+      case Seq() => Lit(0.0)
+      case ts    => sumAll(ts) / tot
+    }
+
+  /** The two compositional scalars the laws depend on. */
+  private def alkali(m: CompCtx, tot: E): E = frac(m, tot)("Na") + frac(m, tot)("K")
+
+  private def piStar(m: CompCtx, tot: E): E = {
+    val x = frac(m, tot) _
+    (x("Ca") + Lit(0.8) * x("K") + Lit(0.7) * x("Na") + Lit(0.4) * x("Mg") +
+      Lit(0.4) * x("Fe")) / (x("Si") + x("Al"))
   }
 
-  /** The two compositional scalars the solubility laws depend on — constant
-    * per sample, so hoisted OUT of every solver loop (before this, the Brent
-    * objectives rebuilt the cation map, with formula parsing, per trial —
-    * the single hottest path in the whole engine at sf0.01). */
-  private def alkali(cat: Map[String, Double]): Double =
-    cat.getOrElse("Na", 0.0) + cat.getOrElse("K", 0.0)
-
-  private def piStarOf(cat: Map[String, Double]): Double = {
-    def x(n: String): Double = cat.getOrElse(n, 0.0)
-    (x("Ca") + 0.8 * x("K") + 0.7 * x("Na") +
-      0.4 * x("Mg") + 0.4 * x("Fe")) / (x("Si") + x("Al"))
-  }
-
-  private def h2oSolubilityB(b: Double, xFluid: Double, pBar: Double): Double = {
-    val fH2O = xFluid * pBar / 10.0 // MPa partial pressure
-    // f*f*f (not pow): pure IEEE multiplies render identically in SQL
-    val a = 3.36e-7 * (fH2O * fH2O * fH2O) - 2.33e-4 * fH2O * fH2O +
-      0.0711 * fH2O - 1.1309
-    val cc = -1.2e-5 * fH2O * fH2O + 0.0196 * fH2O + 1.1297
+  /** Eq. 9 at alkali sum `b` and H2O fugacity `f` (MPa); f*f*f, not pow. */
+  private def solB(b: E, f: E): E = {
+    val a = Lit(3.36e-7) * (f * f * f) - Lit(2.33e-4) * f * f + Lit(0.0711) * f -
+      Lit(1.1309)
+    val cc = Lit(-1.2e-5) * f * f + Lit(0.0196) * f + Lit(1.1297)
     a * b + cc
   }
 
-  private def co2SolubilityPi(piStar: Double, xFluid: Double, pBar: Double): Double = {
-    if (xFluid == 1.0) return 0.0
-    val fCO2 = (1.0 - xFluid) * pBar / 10.0
-    math.exp(1.150 * math.log(fCO2) + 6.71 * piStar + (-1.345)) / 1e4
-  }
-
   /** H2O solubility (wt.%), eq. 9 (`shishkina2014.py:117-166`). */
-  def h2oSolubility(c: Comp, xFluid: Double, pBar: Double): Double =
-    h2oSolubilityB(alkali(anhydrousCations(c)), xFluid, pBar)
+  def h2oSolubilityE(m: CompCtx, xFluid: E, pBar: E): E =
+    solB(alkali(m, total(m)), xFluid * pBar / Lit(10.0))
 
   /** CO2 solubility (wt.%), eq. 13 with the pi* compositional parameter
     * (`shishkina2014.py:221-292`). */
-  def co2Solubility(c: Comp, xFluid: Double, pBar: Double): Double =
-    co2SolubilityPi(piStarOf(anhydrousCations(c)), xFluid, pBar)
+  def co2SolubilityE(m: CompCtx, xFluid: E, pBar: E): E =
+    If(xFluid === Lit(1.0), Lit(0.0),
+      exp(Lit(1.150) * ln((Lit(1.0) - xFluid) * pBar / Lit(10.0)) +
+        Lit(6.71) * piStar(m, total(m)) + Lit(-1.345)) / Lit(1e4))
 
-  /** H2O saturation pressure (bar). The solubility law is a cubic in the
-    * H2O partial pressure; the root is found by 60 fixed bisection steps on
-    * the reference's brentq bracket — deterministic straight-line IEEE
-    * arithmetic (no convergence branches), so the DuckDB oracle's
-    * recursive-CTE twin ([[graft.ShishkinaSql]]) computes bit-identical
-    * pressures and `q_saturation_shishkina` hash-matches. 1.5e4/2^60 bar
-    * resolution is far below machine epsilon of any root in range. */
-  def h2oSaturation(c: Comp, xFluid: Double = 1.0): Double = {
-    val h2o = c("H2O")
-    if (h2o == 0.0) return 0.0
-    val b = alkali(anhydrousCations(c))
-    if (h2o < h2oSolubilityB(b, xFluid, 0.0)) return Double.NaN
-    if (h2o - h2oSolubilityB(b, xFluid, 1.5e4) > 0.0) return Double.NaN // unbracketed
-    var lo = 1e-15
-    var hi = 1.5e4
-    var it = 0
-    while (it < 60) {
-      val mid = (lo + hi) * 0.5
-      val g = h2o - h2oSolubilityB(b, xFluid, mid)
-      if (g > 0.0) lo = mid else hi = mid
-      it += 1
-    }
-    (lo + hi) * 0.5
+  /** H2O saturation pressure (bar): the solubility law is a cubic in the
+    * H2O partial pressure, and its root is found by [[E.bisect]] on the
+    * reference's brentq bracket. 1.5e4/2^60 bar is far below machine
+    * epsilon of any root in range. 0 without H2O; NaN below the 0-bar
+    * solubility or when the bracket holds no root. */
+  def h2oSaturationE(m: CompCtx, xFluid: E = Lit(1.0)): E = {
+    val (h2o, b) = (m.wt("H2O"), C("_b"))
+    def g(p: E): E = h2o - solB(b, xFluid * p / Lit(10.0))
+    bisect(Seq("_tot" -> total(m), "_b" -> alkali(m, C("_tot")),
+        "_sol0" -> solB(b, xFluid * Lit(0.0) / Lit(10.0)), "_ghi" -> g(Lit(1.5e4))),
+      1e-15, 1.5e4, g,
+      NotC(h2o === Lit(0.0)) && NotC(h2o < C("_sol0")) && NotC(C("_ghi") > Lit(0.0)),
+      If(h2o === Lit(0.0), Lit(0.0), Lit(Double.NaN)))
   }
 
-  /** Partial CO2 pressure (bar) holding `co2` wt.% — eq. 13 inverts in
-    * closed form (pure power law in fCO2). */
-  private def co2PartialPressure(piStar: Double, co2: Double): Double =
-    math.exp((math.log(co2 * 1e4) + 1.345 - 6.71 * piStar) / 1.150) * 10.0
-
-  def co2Saturation(c: Comp, xFluid: Double = 0.0): Double = {
-    val co2 = c("CO2")
-    if (co2 == 0.0) return 0.0
-    co2PartialPressure(piStarOf(anhydrousCations(c)), co2) / (1.0 - xFluid)
+  /** Partial CO2 pressure (bar) holding the CO2 wt.% — eq. 13 inverts in
+    * closed form (pure power law in fCO2). The ln argument is guarded
+    * too, not only the branch: `Cse` may hoist a branch's subtree out of
+    * its If, and DuckDB's ln raises at 0. */
+  def co2SaturationE(m: CompCtx): E = {
+    val co2 = m.wt("CO2")
+    val nonZero = If(co2 === Lit(0.0), Lit(1.0), co2)
+    If(co2 === Lit(0.0), Lit(0.0),
+      exp((ln(nonZero * Lit(1e4)) + Lit(1.345) - Lit(6.71) * piStar(m, total(m))) /
+        Lit(1.150)) * Lit(10.0))
   }
 
   /** Mixed-fluid saturation (P_sat, x_fluid) (`shishkina2014.py:300-420`).
-    * Unlike IaconoMarziano/Allison, BOTH Shishkina laws depend on their
-    * species' PARTIAL pressure only, so the reference's 2-D root solve
-    * decouples exactly: invert each law for its partial pressure (CO2 in
-    * closed form, H2O a bracketed 1-D solve), then P = pH2O + pCO2 and
-    * x_fluid = pH2O / P. Identical solution, ~10x fewer model evaluations
-    * per row — this was the most expensive solver in the whole registry. */
-  def mixedSaturation(c: Comp): (Double, Double) = {
-    val pH2O = h2oSaturation(c)
-    val pCO2 = co2Saturation(c)
-    if (c("H2O") <= 0.0) return (pCO2, 0.0)
-    if (c("CO2") <= 0.0) return (pH2O, 1.0)
-    if (!pH2O.isFinite || !pCO2.isFinite) return (Double.NaN, Double.NaN)
-    // at x_fluid = 1 / 0 the pure saturations ARE the partial pressures
-    val p = pH2O + pCO2
-    (p, pH2O / p)
+    * Both Shishkina laws depend on their species' PARTIAL pressure only, so
+    * the reference's 2-D root solve decouples exactly: invert each law for
+    * its partial pressure, then P = pH2O + pCO2 and x_fluid = pH2O / P.
+    * Both outputs read the one H2O loop (`Cse` hoists it, so it runs once
+    * per row). */
+  def mixedSaturationE(m: CompCtx): (E, E) = {
+    val (ph, pc) = (h2oSaturationE(m), co2SaturationE(m))
+    val (h2o, co2) = (m.wt("H2O"), m.wt("CO2"))
+    def finite(x: E): Cond = abs(x) < Lit(Double.PositiveInfinity)
+    def mixed(x: E): E = If(NotC(finite(ph) && finite(pc)), Lit(Double.NaN), x)
+    (If(h2o <= Lit(0.0), pc, If(co2 <= Lit(0.0), ph, mixed(ph + pc))),
+      If(h2o <= Lit(0.0), Lit(0.0), If(co2 <= Lit(0.0), Lit(1.0), mixed(ph / (ph + pc)))))
   }
+
+  // ---- scalar entry points: the trees above, evaluated ------------------
+
+  private def eval(c: Comp, e: CompCtx => E): Double =
+    LoopExpression.eval(e(CompCtx(c.names.toVector)), c.names.toSeq.zip(c.wt): _*)
+
+  def h2oSolubility(c: Comp, xFluid: Double, pBar: Double): Double =
+    eval(c, h2oSolubilityE(_, Lit(xFluid), Lit(pBar)))
+
+  def co2Solubility(c: Comp, xFluid: Double, pBar: Double): Double =
+    eval(c, co2SolubilityE(_, Lit(xFluid), Lit(pBar)))
+
+  def h2oSaturation(c: Comp, xFluid: Double = 1.0): Double =
+    eval(c, h2oSaturationE(_, Lit(xFluid)))
+
+  def co2Saturation(c: Comp, xFluid: Double = 0.0): Double =
+    eval(c, co2SaturationE) / (1.0 - xFluid)
+
+  def mixedSaturation(c: Comp): (Double, Double) =
+    (eval(c, mixedSaturationE(_)._1), eval(c, mixedSaturationE(_)._2))
 }

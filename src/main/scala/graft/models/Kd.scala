@@ -1,17 +1,17 @@
 package graft.models
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.udf
 import graft.expr._
 import graft.expr.E._
+import graft.expressions.LoopExpression
 
 /** Olivine-melt Fe-Mg exchange coefficient (Kd) models
   * (reference `Kd/Ol_melt/FeMg/Kd_models.py`).
   *
-  * Closed-form models are expressions; toplis2005's signature Kd<->Fo
-  * fixed-point iteration (`Kd_iterate.py:31-100`) is row-local with no
-  * cross-row state, so it runs as a typed Scala UDF with the loop inside —
-  * one narrow stage, no shuffle, iterations (~3-10) per row.
+  * Closed-form models are expressions; the Kd<->Fo fixed-point iteration
+  * (`Kd_iterate.py:31-100`) of toplis2005, blundy2020 and saper2022 is a
+  * row-local [[Loop]] in the same AST — one narrow stage, no shuffle,
+  * ~3-10 rounds per row.
   */
 object Kd {
 
@@ -82,106 +82,116 @@ object Kd {
       (Lit(0.035) * (pBar - Lit(1.0)) / (Lit(R) * tK)))
   }
 
-  // ---- toplis2005 with Kd<->equilibrium-Fo fixed point (UDF) -----------
+  // ---- the Kd <-> equilibrium-Fo fixed point, written once as a Loop -----
 
-  /** Scala port of the per-row iteration (`Kd_iterate.py:31-100`):
-    * Kd from Fo, equilibrium Fo from Kd (1/(1+Kd*Fe2Mg_liq)), repeat until
-    * rel. dFo < 0.001. */
-  private[graft] def toplisIterate(
-      siO2mp: Double, na2Omp: Double, k2Omp: Double, h2Omp: Double,
-      feOmol: Double, mgOmol: Double,
-      fe3fe2: Double, tK: Double, pBar: Double): Double = {
-    def kdAt(fo: Double): Double = {
-      val phi =
-        if (siO2mp > 60.0)
-          (11.0 - 5.5 * (100.0 / (100.0 - siO2mp))) * math.exp(-0.31 * (na2Omp + k2Omp))
-        else
-          (0.46 * (100.0 / (100.0 - siO2mp)) - 0.93) * (na2Omp + k2Omp) +
-            (-5.33 * (100.0 / (100.0 - siO2mp)) + 9.69)
-      val sio2A = siO2mp + phi * (na2Omp + k2Omp) + 0.8 * h2Omp
-      math.exp(-6766.0 / (R * tK) - 7.34 / R +
-        math.log(0.036 * sio2A - 0.22) +
-        3000.0 * (1.0 - 2.0 * fo) / (R * tK) +
-        0.035 * (pBar - 1.0) / (R * tK))
-    }
-    val fe2FeTotal = 1.0 / (1.0 + fe3fe2)
-    val fe2MgLiquid = feOmol * fe2FeTotal / mgOmol
-    def eqFo(kd: Double): Double = 1.0 / (1.0 + kd * fe2MgLiquid)
-
-    var foInit = 0.85
-    var kd = kdAt(foInit)
-    var foEq = eqFo(kd)
-    var delta = math.abs(foInit - foEq) / foInit
-    var n = 0
-    while (delta > 0.001 && n < 100) {
-      kd = kdAt(foInit)
-      foInit = foEq
-      foEq = eqFo(kd)
-      delta = math.abs(foInit - foEq) / foInit
-      n += 1
-    }
-    kd
+  /** The per-row iteration shared by toplis2005 / blundy2020 / saper2022
+    * (`Kd_iterate.py:31-100`): Kd from Fo, equilibrium Fo from Kd
+    * (1/(1+Kd*Fe2Mg_liq)), repeat while the relative Fo step exceeds 1e-3,
+    * at most 100 rounds. Only the model's Kd(Fo) kernel `kdAt` and its
+    * per-row constants `lets` differ. */
+  private def iterateKdFo(lets: Seq[(String, E)], kdAt: E => E, feOmol: E,
+                          mgOmol: E, fe3fe2: E): Loop = {
+    val (foi, foe, kd, f2m) = (C("_foi"), C("_foe"), C("_kd"), C("_f2m"))
+    def eqFo(k: E): E = Lit(1.0) / (Lit(1.0) + k * f2m)
+    val delta = abs(foi - foe) / foi
+    Loop(lets :+ ("_f2m" -> feOmol * (Lit(1.0) / (Lit(1.0) + fe3fe2)) / mgOmol),
+      Seq("_foi" -> Lit(0.85), "_kd" -> kdAt(foi), "_foe" -> eqFo(kd),
+        "_delta" -> delta),
+      Seq("_kd" -> kdAt(foi), "_foi" -> foe, "_foe" -> eqFo(kd),
+        "_delta" -> delta),
+      C("_delta") > Lit(0.001), 100, kd)
   }
 
-  /** Generic Kd <-> equilibrium-Fo fixed point (`Kd_iterate.py:31-100`)
-    * shared by toplis2005 / blundy2020 / saper2022: only the inner
-    * Kd(Fo) kernel differs. */
-  private[graft] def iterateKdFo(kdAt: Double => Double, feOmol: Double,
-                                 mgOmol: Double, fe3fe2: Double): Double = {
-    val fe2FeTotal = 1.0 / (1.0 + fe3fe2)
-    val fe2MgLiquid = feOmol * fe2FeTotal / mgOmol
-    def eqFo(kd: Double): Double = 1.0 / (1.0 + kd * fe2MgLiquid)
-    var foInit = 0.85
-    var kd = kdAt(foInit)
-    var foEq = eqFo(kd)
-    var delta = math.abs(foInit - foEq) / foInit
-    var n = 0
-    while (delta > 0.001 && n < 100) {
-      kd = kdAt(foInit)
-      foInit = foEq
-      foEq = eqFo(kd)
-      delta = math.abs(foInit - foEq) / foInit
-      n += 1
-    }
-    kd
+  /** Toplis (2005) with the Fo iteration (`Kd_models.py:185-215`); inputs
+    * in mole PERCENT (oxides) and mol fractions (FeO, MgO). phi and
+    * SiO2_A do not depend on Fo, so the ln and pressure terms are per-row
+    * constants and only 3000(1-2Fo)/RT iterates. */
+  def toplis2005Iterative(siO2mp: E, na2Omp: E, k2Omp: E, h2Omp: E,
+                          feOmol: E, mgOmol: E, fe3fe2: E, tK: E, pBar: E): Loop = {
+    val (si, nk, rt) = (C("_si"), C("_na") + C("_k2"), C("_rt"))
+    val phi = If(si > Lit(60.0),
+      (Lit(11.0) - Lit(5.5) * (Lit(100.0) / (Lit(100.0) - si))) * exp(Lit(-0.31) * nk),
+      (Lit(0.46) * (Lit(100.0) / (Lit(100.0) - si)) - Lit(0.93)) * nk +
+        (Lit(-5.33) * (Lit(100.0) / (Lit(100.0) - si)) + Lit(9.69)))
+    val sio2A = si + phi * nk + Lit(0.8) * C("_h2")
+    iterateKdFo(Seq("_si" -> siO2mp, "_na" -> na2Omp, "_k2" -> k2Omp,
+        "_h2" -> h2Omp, "_rt" -> Lit(R) * tK,
+        "_bs" -> (Lit(-6766.0) / rt - Lit(7.34) / Lit(R) +
+          ln(Lit(0.036) * sio2A - Lit(0.22))),
+        "_pt" -> Lit(0.035) * (pBar - Lit(1.0)) / rt),
+      fo => exp(C("_bs") + Lit(3000.0) * (Lit(1.0) - Lit(2.0) * fo) / rt + C("_pt")),
+      feOmol, mgOmol, fe3fe2)
   }
 
-  /** Blundy (2020) eq. 8 with Fo iteration (`Kd_models.py:271-419`):
+  /** Blundy (2020) eq. 8 with the Fo iteration (`Kd_models.py:271-419`):
     * Kd_Fe2 = 0.3642 exp(312.7 (1-2Fo)/T) — the Fe3/FeTotal factor cancels
     * between Kd_Fe_total and the Fe2 correction; Fe3Fe2 (forced to
     * borisov2018 by the reference, `:352-362`) enters via equilibrium Fo. */
-  private[graft] def blundy2020Iterate(feOmol: Double, mgOmol: Double,
-                                       fe3fe2Borisov: Double, tK: Double): Double =
-    iterateKdFo(fo => 0.3642 * math.exp(312.7 * (1.0 - 2.0 * fo) / tK),
+  def blundy2020Iterative(feOmol: E, mgOmol: E, fe3fe2Borisov: E, tK: E): Loop =
+    iterateKdFo(Seq("_tk" -> tK),
+      fo => Lit(0.3642) * exp(Lit(312.7) * (Lit(1.0) - Lit(2.0) * fo) / C("_tk")),
       feOmol, mgOmol, fe3fe2Borisov)
 
-  /** Saper & Stolper (2022) eq. 10 with Fo iteration (`Kd_models.py:
-    * 655-752`): Gibbs + melt cation interaction terms. */
+  /** Saper & Stolper (2022) eq. 10 with the Fo iteration (`Kd_models.py:
+    * 655-752`): the Gibbs and melt cation interaction terms are a per-row
+    * constant. */
+  def saper2022Iterative(feOmol: E, mgOmol: E, catSi: E, catTi: E, catNaK: E,
+                         fe3fe2: E, tK: E): Loop = {
+    val (si, rt) = (C("_si"), C("_rt"))
+    iterateKdFo(Seq("_si" -> catSi, "_ti" -> catTi, "_nak" -> catNaK,
+        "_tk" -> tK, "_rt" -> Lit(R) * C("_tk"),
+        "_bs" -> ((Lit(-6766.0) - Lit(7.34) * C("_tk")) / rt + Lit(1.0445) * si -
+          Lit(1.3125) * C("_ti") - Lit(3.0550) * si * C("_nak"))),
+      fo => exp(C("_bs") + Lit(3040.0) * (Lit(1.0) - Lit(2.0) * fo) / rt),
+      feOmol, mgOmol, fe3fe2)
+  }
+
+  // The scalar and Column entry points run the same loops over arguments
+  // named x0, x1, ...
+  private def args(n: Int): IndexedSeq[E] = (0 until n).map(i => C(s"x$i"))
+  private def scalar(l: Loop, xs: Double*): Double =
+    LoopExpression.eval(l, xs.indices.map(i => s"x$i" -> xs(i)): _*)
+  private def column(l: Loop, xs: Column*): Column =
+    LoopExpression.column(l, xs.indices.map(i => s"x$i" -> xs(i)).toMap)
+
+  private lazy val toplis = {
+    val a = args(9)
+    toplis2005Iterative(a(0), a(1), a(2), a(3), a(4), a(5), a(6), a(7), a(8))
+  }
+  private lazy val blundy = { val a = args(4); blundy2020Iterative(a(0), a(1), a(2), a(3)) }
+  private lazy val saper = {
+    val a = args(7); saper2022Iterative(a(0), a(1), a(2), a(3), a(4), a(5), a(6))
+  }
+
+  private[graft] def toplisIterate(
+      siO2mp: Double, na2Omp: Double, k2Omp: Double, h2Omp: Double,
+      feOmol: Double, mgOmol: Double,
+      fe3fe2: Double, tK: Double, pBar: Double): Double =
+    scalar(toplis, siO2mp, na2Omp, k2Omp, h2Omp, feOmol, mgOmol, fe3fe2, tK, pBar)
+
+  private[graft] def blundy2020Iterate(feOmol: Double, mgOmol: Double,
+                                       fe3fe2Borisov: Double, tK: Double): Double =
+    scalar(blundy, feOmol, mgOmol, fe3fe2Borisov, tK)
+
   private[graft] def saper2022Iterate(feOmol: Double, mgOmol: Double,
                                       catSi: Double, catTi: Double, catNaK: Double,
                                       fe3fe2: Double, tK: Double): Double =
-    iterateKdFo(fo => math.exp(
-      (-6766.0 - 7.34 * tK) / (R * tK) +
-        1.0445 * catSi - 1.3125 * catTi - 3.0550 * catSi * catNaK +
-        3040.0 * (1.0 - 2.0 * fo) / (R * tK)),
-      feOmol, mgOmol, fe3fe2)
+    scalar(saper, feOmol, mgOmol, catSi, catTi, catNaK, fe3fe2, tK)
 
   def blundy2020(feOmol: Column, mgOmol: Column, fe3fe2Borisov: Column,
                  tK: Column): Column =
-    udf(blundy2020Iterate _).apply(feOmol, mgOmol, fe3fe2Borisov, tK)
+    column(blundy, feOmol, mgOmol, fe3fe2Borisov, tK)
 
   def saper2022(feOmol: Column, mgOmol: Column, catSi: Column, catTi: Column,
                 catNaK: Column, fe3fe2: Column, tK: Column): Column =
-    udf(saper2022Iterate _).apply(feOmol, mgOmol, catSi, catTi, catNaK,
-      fe3fe2, tK)
+    column(saper, feOmol, mgOmol, catSi, catTi, catNaK, fe3fe2, tK)
 
-  /** Column-level toplis2005 iterative Kd. Feed mole-percent/mol-fraction
-    * scalar columns (cheap expressions) so the UDF stays narrow. */
+  /** Column-level toplis2005 iterative Kd over mole-percent/mol-fraction
+    * columns. */
   def toplis2005(siO2mp: Column, na2Omp: Column, k2Omp: Column, h2Omp: Column,
                  feOmol: Column, mgOmol: Column,
                  fe3fe2: Column, tK: Column, pBar: Column): Column =
-    udf(toplisIterate _).apply(siO2mp, na2Omp, k2Omp, h2Omp, feOmol, mgOmol,
-      fe3fe2, tK, pBar)
+    column(toplis, siO2mp, na2Omp, k2Omp, h2Omp, feOmol, mgOmol, fe3fe2, tK, pBar)
 
   /** Observed Kd from measured olivine+melt pair (J1 join query;
     * `core/MagmaFrames/olivine.py:60-95`): melt and olivine mol fractions

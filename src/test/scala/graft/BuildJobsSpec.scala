@@ -18,10 +18,11 @@ class BuildJobsSpec extends SparkSpec {
     // artifact serves: one fingerprint job per persisted artifact
     "q_dedup_clusters" -> 1, "q_dedup_report" -> 1, "q_split_leakage" -> 1,
     "q_dedup_survivors" -> 1,
-    // labels + serve index (corpus and labels fingerprints)
-    "q_dedup_assign" -> 3,
-    // assign's three plus the full re-cluster's labels
-    "q_dedup_rebuild_drift" -> 4,
+    // labels + serve index (one corpus fingerprint, shared, and the
+    // labels fingerprint)
+    "q_dedup_assign" -> 2,
+    // assign's two plus the full re-cluster's labels
+    "q_dedup_rebuild_drift" -> 3,
     // fingerprint + the bounded centroid collect of the persisted index
     "q_knn_ivfpq" -> 2,
     // pairs fingerprint + the rank iteration's eager edge checkpoint
@@ -39,10 +40,7 @@ class BuildJobsSpec extends SparkSpec {
     "q_token_budget" -> 3, "q_bpe_token_budget" -> 3, "q_seq_pack" -> 3,
     "q_bpe_seq_pack" -> 3, "q_pack_efficiency" -> 3, "q_psi_drift" -> 3,
     "q_segment_dedup" -> 4, "q_bloom_decontaminate" -> 5,
-    "q_compaction_global" -> 9, "q_scd2_merge" -> 6,
-    // `spread` asks `rdd.getNumPartitions` of a repartitioned frame,
-    // which runs the repartition's map stage
-    "q_isobar_curves" -> 1)
+    "q_compaction_global" -> 9, "q_scd2_merge" -> 6)
 
   /** Build-time jobs whose count varies between runs. MMR's greedy steps
     * each run an adaptive plan eagerly; AQE submits sibling query stages

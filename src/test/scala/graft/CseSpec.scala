@@ -45,4 +45,45 @@ class CseSpec extends SparkSpec {
     val sql = Queries.oracleSql("q_moles")
     assert(sql.contains("WITH") && sql.toLowerCase.contains("_cse"))
   }
+
+  // a bisection whose step repeats a subtree over bound names (_mid) and
+  // whose lets repeat one over free columns (a / 60)
+  private val root: Loop = bisect(Seq("_s" -> (C("a") / Lit(60.0) + C("b"))),
+    0.0, 100.0, m => (m * m + C("_s")) - (C("a") / Lit(60.0) + C("c")) * (m * m + C("_s")),
+    C("a") > Lit(0.0))
+
+  private def mentions(n: Node, names: Set[String]): Boolean = n match {
+    case C(x) => names(x)
+    case _    => n.children.exists(mentions(_, names))
+  }
+
+  test("a loop is hoisted whole; no subtree that reads a bound name is") {
+    val loopStage = Stage(Seq(
+      "x" -> (root + Lit(1.0)) * (C("a") / Lit(60.0) + C("b")),
+      "y" -> root / (C("a") / Lit(60.0) + C("b"))))
+    val stages = Cse.expand(loopStage)
+    val hoisted = stages.flatMap(_.cols).filter(_._1.startsWith("_cse")).map(_._2)
+    assert(hoisted.count(_ == root) == 1, hoisted)
+    assert(!hoisted.exists(e => !e.isInstanceOf[Loop] && mentions(e, root.bound)),
+      hoisted)
+    // nothing inside the loop moved: it is hoisted as written
+    assert(stages.flatMap(_.cols).map(_._2).collect { case l: Loop => l } == Seq(root))
+    import spark.implicits._
+    val df = Seq((48.2, 9.1, 7.7), (51.0, 11.2, 4.4), (-1.0, 0.0, 16.0)).toDF("a", "b", "c")
+    def run(st: Seq[Stage]): Seq[Row] = Pipeline.applySpark(df, st).collect().toSeq
+    assert(run(Seq(loopStage)) == run(stages))
+  }
+
+  test("a loop's bound names are checked in scope order") {
+    intercept[IllegalArgumentException] { // read before bound
+      Loop(Seq("_a" -> C("_b"), "_b" -> Lit(1.0)), Nil, Nil, C("_a") > Lit(0.0), 1, C("_a"))
+    }
+    intercept[IllegalArgumentException] { // a step temporary read by the result
+      Loop(Nil, Seq("_x" -> Lit(0.0)), Seq("_t" -> C("_x"), "_x" -> C("_t")),
+        C("_x") > Lit(0.0), 3, C("_t"))
+    }
+    intercept[IllegalArgumentException] { // a loop holds no loop
+      Loop(Seq("_r" -> root), Nil, Nil, C("_r") > Lit(0.0), 1, C("_r"))
+    }
+  }
 }

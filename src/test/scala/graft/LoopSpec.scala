@@ -1,0 +1,129 @@
+package graft
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+import org.apache.spark.sql.functions.{col, lit}
+import graft.expr._
+import graft.expressions.LoopExpression
+import graft.models.Kd
+
+/** The loop node ([[Loop]]) in Spark: generated code and interpreted
+  * evaluation agree bit for bit, a null input gives a null result, and the
+  * queries written with loops plan no UDF. */
+class LoopSpec extends SparkSpec {
+
+  // the seed-42 sf0.001 tables (TESTDATA.md), as committed for the benchmark
+  private val sf = "perfbench/data/sf0.001"
+
+  /** Every registry query with a loop: its oracle renders one keyed by
+    * `__rid`. */
+  private lazy val loopQueries = {
+    val qs = Queries.oracleSql.collect { case (n, sql) if sql.contains("\"__rid\"") => n }
+    assert(Set("q_saturation_shishkina", "q_kd_toplis2005_iterative",
+      "q_kd_blundy2020", "q_kd_saper2022", "q_fe3fe2_oneill2006_iterative",
+      "q_fe3fe2_armstrong2019_iterative").subsetOf(qs.toSet), qs)
+    qs.toSeq.sorted
+  }
+
+  /** `f` with generated code forced on or off (whole-stage codegen and
+    * the expression factories alike). */
+  private def codegen[T](on: Boolean)(f: => T): T = {
+    val conf = Map(
+      "spark.sql.codegen.factoryMode" -> (if (on) "CODEGEN_ONLY" else "NO_CODEGEN"),
+      "spark.sql.codegen.wholeStage" -> on.toString)
+    val before = conf.keys.map(k => k -> spark.conf.getOption(k)).toMap
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f
+    finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
+
+  private def bits(rows: Seq[Row]): Seq[Seq[Any]] =
+    rows.map(_.toSeq.map {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case other     => other
+    })
+
+  /** Physical operators (subqueries and adaptive plans included) with an
+    * expression of class `T`. */
+  private def planning[T: scala.reflect.ClassTag](df: DataFrame) =
+    PlanShape.collectWithSubqueries(df.queryExecution.executedPlan) {
+      case p if p.expressions.exists(_.exists {
+        case _: T => true
+        case _    => false
+      }) => p
+    }
+
+  test("every loop query gives the same raw bits with generated code and " +
+      "with interpreted evaluation") {
+    for (q <- loopQueries) {
+      def run(on: Boolean): Seq[Row] = codegen(on) {
+        val df = Queries.queries(q)(spark, sf)
+        assert(planning[LoopExpression](df).nonEmpty, s"$q plans no loop expression")
+        df.collect().toSeq
+      }
+      val (generated, interpreted) = (run(on = true), run(on = false))
+      assert(generated.size > 1000, s"$q: ${generated.size} rows")
+      assert(bits(generated) == bits(interpreted), s"$q differs")
+    }
+  }
+
+  test("the unrounded loop values agree bit for bit in both modes") {
+    val mctx = models.CompCtx(Tables.meltElements)
+    val loops = Seq(
+      "shishkina" -> functions.Shishkina.h2oSaturationE(mctx),
+      "toplis" -> Kd.toplis2005Iterative(mctx.molNorm("SiO2") * Lit(100.0),
+        mctx.molNorm("Na2O") * Lit(100.0), mctx.molNorm("K2O") * Lit(100.0),
+        mctx.molNorm("H2O") * Lit(100.0), mctx.molNorm("FeO"),
+        mctx.molNorm("MgO"), Lit(0.2), C("T_K"), C("P_bar")),
+      "oneill" -> functions.Fe3Fe2Iterative.oneill2006Loop(
+        functions.Fe3Fe2Iterative.wtBase(Tables.meltElements), C("T_K"),
+        C("P_bar"), models.Fo2Buffers.qfm1bar(C("T_K"))))
+    def run(on: Boolean): Seq[Row] = codegen(on) {
+      Tables.meltsDF(spark, sf).select(col("sample_id") +:
+        loops.map { case (n, l) => E.toColumn(l).as(n) }: _*)
+        .orderBy("sample_id").collect().toSeq
+    }
+    val generated = run(on = true)
+    assert(generated.nonEmpty)
+    assert(bits(generated) == bits(run(on = false)))
+  }
+
+  test("a null input gives a null result in both modes; a NaN does not") {
+    import spark.implicits._
+    val df = Seq[(java.lang.Double, java.lang.Double)]((0.1, 1450.0),
+      (null, 1450.0), (0.1, null), (Double.NaN, 1450.0)).toDF("fe", "t")
+    for (on <- Seq(true, false)) {
+      val got = codegen(on) {
+        df.select(Kd.blundy2020(col("fe"), lit(0.12), lit(0.2), col("t")))
+          .collect().map(r => if (r.isNullAt(0)) None else Some(r.getDouble(0)))
+      }
+      assert(got(0).exists(k => k > 0.2 && k < 0.5), got.toSeq)
+      assert(got(1).isEmpty && got(2).isEmpty, got.toSeq)
+      assert(got(3).isDefined, got.toSeq)
+    }
+  }
+
+  test("the loop queries plan no Scala UDF") {
+    // the check sees a UDF where there is one
+    assert(planning[ScalaUDF](Queries.queries("q_fe3fe2_deng2020")(spark, sf)).nonEmpty)
+    for (q <- loopQueries) {
+      val df = Queries.queries(q)(spark, sf)
+      assert(planning[ScalaUDF](df).isEmpty,
+        s"$q plans a UDF:\n${df.queryExecution.executedPlan}")
+    }
+  }
+
+  test("scalar entry points evaluate the same tree as the column") {
+    val mctx = models.CompCtx(Tables.meltElements)
+    val row = Tables.meltsDF(spark, sf).limit(1)
+    val r = row.select(E.toColumn(functions.Shishkina.h2oSaturationE(mctx)) +:
+      Tables.meltElements.map(col): _*).head()
+    val comp = functions.IaconoMarziano.Comp(Tables.meltElements.toArray,
+      Tables.meltElements.indices.map(i => r.getDouble(i + 1)).toArray)
+    assert(java.lang.Double.doubleToRawLongBits(functions.Shishkina.h2oSaturation(comp)) ==
+      java.lang.Double.doubleToRawLongBits(r.getDouble(0)))
+  }
+}

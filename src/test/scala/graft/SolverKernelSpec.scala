@@ -47,9 +47,9 @@ class SolverKernelSpec extends SparkSpec {
         F.deng2020(mol, t, p, f)),
       ("deng2020.25molpc", Deng2020.fe3Fe2Base(b, t, p, f, "25molpc"),
         F.deng2020(mol, t, p, f, "25molpc")),
-      ("oneill2006", Fe3Fe2Iterative.oneill2006Base(b, t, p, f),
+      ("oneill2006", loopScalar(names, "oneill2006", wt, t, p, f),
         F.oneill2006(mol, t, p, f)),
-      ("armstrong2019", Fe3Fe2Iterative.armstrong2019Base(b, t, p, f),
+      ("armstrong2019", loopScalar(names, "armstrong2019", wt, t, p, f),
         F.armstrong2019(mol, t, p, f)),
       ("sun2024", Fe3Fe2Iterative.sun2024DengVdPBase(pl, t, p, f),
         F.sun2024DengVdP(mol, t, p, f)),
@@ -66,6 +66,20 @@ class SolverKernelSpec extends SparkSpec {
         F.hirschmann2022DengVdP(mol, t, p, f)))
   }
 
+  /** A loop model through the scalar path: its tree over the schema's wt.%
+    * columns, evaluated. */
+  private def loopScalar(names: Array[String], model: String, wt: Array[Double],
+                         t: Double, p: Double, f: Double): Double =
+    Fe3Fe2Iterative.evaluator(names, model)(wt ++ Array(t, p, f))
+
+  /** The same tree as a column: the native loop expression. */
+  private def loopColumn(names: Seq[String], model: String) =
+    graft.expr.E.toColumn(Fe3Fe2Iterative.loops(model)(
+      Fe3Fe2Iterative.wtBase(names), graft.expr.C("T_K"), graft.expr.C("P_bar"),
+      graft.expr.C("fO2")))
+
+  private val loopModels = Seq("oneill2006", "armstrong2019")
+
   private def mismatches(label: String,
                          ps: Seq[(String, Double, Double)]): Seq[String] =
     ps.collect { case (what, a, b) if !same(a, b) => s"$label $what: $a vs $b" }
@@ -80,16 +94,17 @@ class SolverKernelSpec extends SparkSpec {
     val fO2 = graft.expr.E.toColumn(
       graft.models.Fo2Buffers.qfm1bar(graft.expr.C("T_K")))
     Tables.meltsDF(spark, sf)
-      .select(array(els.map(col): _*).as("wt"), col("T_K"), col("P_bar"),
-        fO2.as("fO2"))
+      .select(Seq(array(els.map(col): _*).as("wt"), col("T_K"), col("P_bar"),
+        fO2.as("fO2")) ++ els.map(col): _*)
   }
 
   test("every sf0.001 melts row: cation plan, Fe3Fe2 kernels, UDFs and QFM " +
     "are bit-identical to the Map-based arithmetic") {
-    val models = Seq("deng2020", "oneill2006", "armstrong2019", "sun2024")
-    val rows = melts.select(col("*") +: models.map(m =>
+    val models = Seq("deng2020", "sun2024")
+    val rows = melts.select(col("*") +: (models.map(m =>
         Fe3Fe2Iterative.udf(els, m)(col("wt"), col("T_K"), col("P_bar"),
-          col("fO2")).as(m)): _*).collect()
+          col("fO2")).as(m)) ++
+        loopModels.map(m => loopColumn(els.toSeq, m).as(m))): _*).collect()
     assert(rows.length > 1000, rows.length)
     var checked = 0
     val bad = rows.toSeq.zipWithIndex.flatMap { case (r, i) =>
@@ -97,10 +112,12 @@ class SolverKernelSpec extends SparkSpec {
       val (t, p, f) = (r.getDouble(1), r.getDouble(2), r.getDouble(3))
       val mol = F.molNorm(els, wt)
       val ps = pairs(els, wt, t, p, f) ++ Seq(
-        ("udf.deng2020", r.getDouble(4), F.deng2020(mol, t, p, f)),
-        ("udf.oneill2006", r.getDouble(5), F.oneill2006(mol, t, p, f)),
-        ("udf.armstrong2019", r.getDouble(6), F.armstrong2019(mol, t, p, f)),
-        ("udf.sun2024", r.getDouble(7), F.sun2024DengVdP(mol, t, p, f)),
+        ("udf.deng2020", r.getAs[Double]("deng2020"), F.deng2020(mol, t, p, f)),
+        ("column.oneill2006", r.getAs[Double]("oneill2006"),
+          F.oneill2006(mol, t, p, f)),
+        ("column.armstrong2019", r.getAs[Double]("armstrong2019"),
+          F.armstrong2019(mol, t, p, f)),
+        ("udf.sun2024", r.getAs[Double]("sun2024"), F.sun2024DengVdP(mol, t, p, f)),
         ("qfm.fO2Base", QfmFull.fO2Base(t, p).doubleValue, F.fO2Base(t, p)))
       checked += ps.size
       mismatches(s"row $i", ps)
@@ -144,7 +161,34 @@ class SolverKernelSpec extends SparkSpec {
       b <- { val ps = pairs(names, wt, t, p, f); checked += ps.size
              mismatches(s"$label @ ($t, $p)", ps) }
     } yield b
-    assertNone(bad, checked)
+    // the loop models as columns: one frame per schema, every composition
+    // of that schema at every condition
+    val badColumns = comps.groupBy(_._2.toSeq).toSeq.flatMap { case (names, cs) =>
+      val rows = for ((label, _, wt) <- cs; (t, p, f) <- conditions)
+        yield org.apache.spark.sql.Row.fromSeq(
+          Seq(s"$label @ ($t, $p)") ++ wt.toSeq ++ Seq(t, p, f))
+      val schema = org.apache.spark.sql.types.StructType(
+        org.apache.spark.sql.types.StructField("label",
+          org.apache.spark.sql.types.StringType) +:
+        (names ++ Seq("T_K", "P_bar", "fO2")).map(n =>
+          org.apache.spark.sql.types.StructField(n,
+            org.apache.spark.sql.types.DoubleType)))
+      spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+        .select(col("*") +: loopModels.map(m => loopColumn(names, m).as(m)): _*)
+        .collect().toSeq.flatMap { r =>
+          val wt = names.indices.map(i => r.getDouble(i + 1)).toArray
+          val (t, p, f) = (r.getAs[Double]("T_K"), r.getAs[Double]("P_bar"),
+            r.getAs[Double]("fO2"))
+          val mol = F.molNorm(names.toArray, wt)
+          val ps = Seq(
+            ("column.oneill2006", r.getAs[Double]("oneill2006"), F.oneill2006(mol, t, p, f)),
+            ("column.armstrong2019", r.getAs[Double]("armstrong2019"),
+              F.armstrong2019(mol, t, p, f)))
+          checked += ps.size
+          mismatches(r.getString(0), ps)
+        }
+    }
+    assertNone(bad ++ badColumns, checked)
   }
 
   test("QFM fO2 and Deng2020 on a (T, P) grid up to 150 kbar cross every " +
