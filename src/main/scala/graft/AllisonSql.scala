@@ -56,9 +56,6 @@ object AllisonSql {
 
   private val TH = lit(1.0 / 3.0)
 
-  private val meltCols = Tables.meltSource.cols
-    .map { case (n, e) => s"${E.toSql(e)} AS \"$n\"" }.mkString(", ")
-
   /** sqrt mirroring java.lang.Math: negative argument -> NaN (DuckDB
     * raises). `a` must be a simple alias reference. */
   private def sqrtSafe(a: String): String =
@@ -319,7 +316,7 @@ object AllisonSql {
          | WHEN NOT $oB THEN 'NaN'::DOUBLE
          | ELSE mx.xv END""".stripMargin.replace("\n", " ")
     s"""WITH RECURSIVE
-       | m AS (SELECT row_number() OVER () AS rid_, $meltCols FROM lineitem),
+       | m AS (SELECT row_number() OVER () AS rid_, ${Tables.meltCols} FROM lineitem),
        | $inp,
        | $g0,
        | $hbCte,

@@ -63,8 +63,6 @@ object DengSql {
 
   /** Shared prefix: melts, lattice-volume solves, per-(T,P) dVdP. */
   private val prefix: String = {
-    val meltCols = Tables.meltSource.cols
-      .map { case (n, e) => s"${E.toSql(e)} AS \"$n\"" }.mkString(", ")
     def row(fe3: Boolean): String = {
       val e = if (fe3) eosFe3 else eosFe2
       val t = if (fe3) thermFe3 else thermFe2
@@ -79,7 +77,7 @@ object DengSql {
     val (dLo, fLo) = fDef("(ev0 * 0.3e0)", "lo")
     val (dHi, fHi) = fDef("(ev0 * 2.0e0)", "hi")
     val (dM, fM) = fDef("vmid", "m1")
-    s"""m AS (SELECT $meltCols FROM lineitem),
+    s"""m AS (SELECT ${Tables.meltCols} FROM lineitem),
        | lat AS (SELECT (1.0e0 + (500.0e0 * k)) AS pk FROM range(0, 22) t(k)),
        | vg0 AS (SELECT ts."T_K", l.pk, pr.fe3, pr.ev0, pr.ek0, pr.ekp,
        |     pr.p3, pr.ta, pr.tb, pr.tc2, (l.pk / 1.0e4) AS pg,

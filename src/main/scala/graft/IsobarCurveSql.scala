@@ -13,8 +13,8 @@ package graft
   * deterministic straight-line arithmetic over a FIXED maximum size, so it
   * renders op-for-op in SQL:
   *
-  *  - the grid reuses [[IsobarSql.cellCtes]] (same solubility fixed point
-  *    the q_isobars oracle already hash-matches);
+  *  - the grid is the query's staged solubility trees, rendered by
+  *    `Pipeline.toSql` and nested as the `pts` CTE;
   *  - the knot lists ride DuckDB LIST columns (`list(x ORDER BY xf)`), so
   *    per-curve state is data, not column fan-out — none of the
   *    projection-blowup hazards [[AllisonSql]] documents apply;
@@ -150,9 +150,10 @@ object IsobarCurveSql {
        |   (round((aa + (t * (bb + (t * (cc + (t * dd)))))), 6) + 0.0e0) AS "CO2"
        | FROM evv ORDER BY "sample_id", "P_bar", "H2O"""".stripMargin
 
-  val sql: String =
-    (s"""WITH RECURSIVE
-        |${IsobarSql.cellCtes(Seq(1000.0, 2000.0, 3000.0),
-           (0 to 10).map(_.toDouble / 10))}
+  /** The curves over `grid`, a query giving (sample_id, P_bar, xfl, H2O,
+    * CO2) per grid cell, values unrounded. */
+  def sql(grid: String): String =
+    (s"""WITH RECURSIVE pts AS (SELECT "sample_id", "P_bar" AS pg, "xfl" AS xf,
+        |  "H2O" AS h2o, "CO2" AS co2 FROM ($grid))
         |$splineCtes""").stripMargin.replace("\n", " ")
 }

@@ -121,8 +121,6 @@ object IwSql {
   }
 
   val sql: String = {
-    val meltCols = Tables.meltSource.cols
-      .map { case (n, e) => s"${E.toSql(e)} AS \"$n\"" }.mkString(", ")
     val phRows = eos.map { case (n, (v0, k0, kp0, a0, d0, kp)) =>
       s"('$n', ${lit(v0)}, ${lit(k0)}, ${lit(kp0)}, ${lit(a0)}, ${lit(d0)}, ${lit(kp)})"
     }.mkString(", ")
@@ -169,7 +167,7 @@ object IwSql {
          |   ((wlo + whi) * 0.5e0) AS wmid$k, ${eqFn(s"wmid$k")} AS wf$k
          |   FROM w${k - 1}) u$k)""".stripMargin.replace("\n", " ")
     }.mkString(",\n ")
-    s"""WITH m AS (SELECT $meltCols FROM lineitem),
+    s"""WITH m AS (SELECT ${Tables.meltCols} FROM lineitem),
        | ps AS (SELECT DISTINCT "P_bar" FROM m),
        | ph AS (SELECT * FROM (VALUES $phRows) t(phn, v0, k0, kp0, a0, d0, kp)),
        | b0 AS (SELECT p."P_bar", ph.*, r.i,

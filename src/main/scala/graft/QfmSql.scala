@@ -112,8 +112,6 @@ object QfmSql {
   private def lpdQ(pe: String): String = s"(${landauQ(pe)} - lnd0_q)"
 
   val sql: String = {
-    val meltCols = Tables.meltSource.cols
-      .map { case (n, e) => s"${E.toSql(e)} AS \"$n\"" }.mkString(", ")
     val R = lit(QfmFull.R)
     val tCols = allPh.map(ph => s"${ph.pthSql} AS pth_${ph.tag}").mkString(", ") +
       ", " + allPh.map(ph => s"${ph.sp1Sql} AS sp1_${ph.tag}").mkString(", ") +
@@ -158,7 +156,7 @@ object QfmSql {
          | ((203.3164e0 * "T_K") * ln("T_K"))) +
          | ((0.09271e0 * "T_K") * "T_K"))""".stripMargin.replace("\n", " ")
     s"""WITH RECURSIVE
-       | m AS (SELECT $meltCols FROM lineitem),
+       | m AS (SELECT ${Tables.meltCols} FROM lineitem),
        | ts AS (SELECT DISTINCT "T_K" FROM m),
        | tprep AS (SELECT "T_K", $tCols FROM ts),
        | tr AS (

@@ -1,8 +1,9 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.expr.{C, E}
-import graft.functions.{Fe3Fe2Iterative, IaconoMarziano, QfmFull, Shishkina}
+import graft.expr.{C, E, Lit}
+import graft.functions.{Fe3Fe2Iterative, IaconoMarziano, Isobars, QfmFull, Shishkina}
 import graft.models.{CompCtx, Fo2Buffers}
 import graft.Queries.Q
 
@@ -17,11 +18,9 @@ object SolverQueries {
 
   private val meltEls = Tables.meltElements.toArray
 
-  private def compUdf(f: (IaconoMarziano.Comp, Double) => Double) =
-    udf((wt: Seq[Double], tK: Double) =>
-      f(IaconoMarziano.Comp(meltEls, wt.toArray), tK))
-
   private val wtArray = array(Tables.meltElements.map(col): _*)
+
+  private val mctx = CompCtx(Tables.meltElements)
 
   /** Fe3Fe2 of every melt by one iterative model, fO2 from QFM 1-bar. */
   private def fe3Fe2Iterative(model: String)(s: org.apache.spark.sql.SparkSession,
@@ -42,52 +41,35 @@ object SolverQueries {
           C("T_K"), C("P_bar"), Fo2Buffers.qfm1bar(C("T_K"))), 6))
       .select("sample_id", "Fe3Fe2"))
 
+  /** Iacono-Marziano saturation pressure by one tree. */
+  private def imSaturation(name: String, p: E): Q = Queries.meltQ(name)(
+    _.derive("P_sat_bar", E.round(p, 4)).select("sample_id", "P_sat_bar"))
+
+  /** The sampled melts (one in 997) an isobar grid is built on, and their
+    * SQL. */
+  private def sampled(melts: DataFrame): DataFrame = melts.filter(col("sample_id") % 997 === 3)
+  private val sampledSql =
+    s"""(SELECT * FROM (SELECT ${Tables.meltCols} FROM lineitem) WHERE ("sample_id" % 997) = 3)"""
+
   def all: Seq[Q] = Seq(
     // EP2 flagship: volatile saturation pressure (mixed H2O-CO2 fluid).
-    // Full oracle: closed inner fixed point -> pure-species bisections +
-    // branch-free Picard, rendered as recursive CTEs (SaturationSql).
-    Q("q_saturation_mixed", (s, dir) => {
-      val sat = udf((wt: Seq[Double], tK: Double) => {
-        val (p, x) = IaconoMarziano
-          .mixedSaturation(IaconoMarziano.Comp(meltEls, wt.toArray), tK)
-        (p, x)
-      })
-      Tables.meltsRangedDF(s, dir)
-        .withColumn("sat", sat(wtArray, col("T_K")))
-        .select(col("sample_id"), round(col("sat._1"), 4).as("P_sat_bar"),
-          round(col("sat._2"), 6).as("X_fluid"))
-        .orderBy("sample_id")
-    }, Some(SaturationSql.mixed)),
-    Q("q_saturation_h2o", (s, dir) => {
-      val sat = compUdf((c, t) => IaconoMarziano.h2oSaturation(c, t))
-      Tables.meltsRangedDF(s, dir)
-        .select(col("sample_id"),
-          round(sat(wtArray, col("T_K")), 4).as("P_sat_bar"))
-        .orderBy("sample_id")
-    }, Some(SaturationSql.h2o)),
-    Q("q_saturation_co2", (s, dir) => {
-      val sat = compUdf((c, t) => IaconoMarziano.co2Saturation(c, t))
-      Tables.meltsRangedDF(s, dir)
-        .select(col("sample_id"),
-          round(sat(wtArray, col("T_K")), 4).as("P_sat_bar"))
-        .orderBy("sample_id")
-    }, Some(SaturationSql.co2)),
-    // Dissolved volatiles at in-table (P, T), x_fluid = 0.5. Full oracle:
-    // secant + bisection-fallback fixed point rendered as recursive CTEs
-    // (SolubilitySql), CO2 closed-form from the solved H2O.
-    Q("q_solubility_mixed", (s, dir) => {
-      val sol = udf((wt: Seq[Double], p: Double, tK: Double) => {
-        val c = IaconoMarziano.Comp(meltEls, wt.toArray)
-        val h = IaconoMarziano.h2oSolubility(c, 0.5, p, tK)
-        val co = IaconoMarziano.co2Solubility(c, 0.5, p, tK)
-        (h, co)
-      })
-      Tables.meltsRangedDF(s, dir)
-        .withColumn("sol", sol(wtArray, col("P_bar"), col("T_K")))
-        .select(col("sample_id"), round(col("sol._1"), 6).as("H2O_dissolved"),
-          round(col("sol._2"), 6).as("CO2_dissolved"))
-        .orderBy("sample_id")
-    }, Some(SolubilitySql.sql)),
+    // Closed inner fixed point -> pure-species bisections + branch-free
+    // Picard, written once as Loops (IaconoMarziano.*E).
+    Queries.meltQ("q_saturation_mixed") { m =>
+      val (p, x) = IaconoMarziano.mixedSaturationE(mctx, C("T_K"))
+      m.withStage(Seq("sample_id" -> C("sample_id"),
+        "P_sat_bar" -> E.round(p, 4), "X_fluid" -> E.round(x, 6)))
+    },
+    imSaturation("q_saturation_h2o", IaconoMarziano.h2oSaturationE(mctx, C("T_K"))),
+    imSaturation("q_saturation_co2", IaconoMarziano.co2SaturationE(mctx, C("T_K"))),
+    // Dissolved volatiles at in-table (P, T), x_fluid = 0.5: the secant +
+    // bisection-fallback fixed point and the closed-form CO2, in stages
+    // (IaconoMarziano.solubility).
+    Queries.meltQ("q_solubility_mixed") { m =>
+      val d = IaconoMarziano.solubility(mctx, Lit(0.5), C("P_bar"), C("T_K"))
+      d.stages.foldLeft(m)(_ derive _).withStage(Seq("sample_id" -> C("sample_id"),
+        "H2O_dissolved" -> E.round(d.h2o, 6), "CO2_dissolved" -> E.round(d.co2, 6)))
+    },
     // Full QFM with EOS pressure terms: one narrow per-row UDF stage with
     // per-executor (T,P) memo caches — no shuffle, no unbounded broadcast
     // (see the scale note on QfmFull). Full oracle: bisection transition
@@ -300,37 +282,32 @@ object SolverQueries {
               | AS "frame_idx" FROM documents ORDER BY 1, 2""".stripMargin
       .replace("\n", " "))),
     // Smooth isobar curve assembly (reference isobars.py:107-141):
-    // distributed grid -> per-group distributed spline fit. Full
-    // oracle: grid cells via the shared solubility fixed point, then the
-    // whole spline pipeline (knot filter, pivoted elimination, piecewise
-    // evaluation) op-for-op over DuckDB LIST columns (IsobarCurveSql).
-    Q("q_isobar_curves", (s, dir) => {
-      val comps = Tables.meltsDF(s, dir).filter(col("sample_id") % 997 === 3)
-      val grid = graft.functions.Isobars.isobarGrid(comps, meltEls,
-        isobars = Seq(1000.0, 2000.0, 3000.0))
-      graft.functions.Isobars.isobarCurves(s, grid)
-        .select(col("sample_id"), col("P_bar"),
-          round(col("H2O"), 6).as("H2O"), round(col("CO2"), 6).as("CO2"))
-        .orderBy("sample_id", "P_bar", "H2O")
-    }, Some(IsobarCurveSql.sql)),
+    // distributed grid -> per-group distributed spline fit. Full oracle:
+    // the grid as staged trees (Pipeline.toSql), then the whole spline
+    // pipeline (knot filter, pivoted elimination, piecewise evaluation)
+    // op-for-op over DuckDB LIST columns (IsobarCurveSql).
+    {
+      val grid = Isobars.Grid(Seq(1000.0, 2000.0, 3000.0), (0 to 10).map(_.toDouble / 10))
+      val st = Isobars.solubility(Tables.meltElements, "iaconomarziano2012")
+      Q("q_isobar_curves", (s, dir) =>
+        Isobars.isobarCurves(s, st.spark(grid.spark(sampled(Tables.meltsDF(s, dir)),
+            Tables.meltElements)))
+          .select(col("sample_id"), col("P_bar"),
+            round(col("H2O"), 6).as("H2O"), round(col("CO2"), 6).as("CO2"))
+          .orderBy("sample_id", "P_bar", "H2O"),
+        Some(IsobarCurveSql.sql(st.sql(grid.sql(sampledSql, Tables.meltElements), Nil))))
+    },
     // Isobar grid (J2 cross-join pattern): a few compositions x P x x_fluid.
-    // Full oracle: the same solubility fixed point keyed per grid cell
-    // (IsobarSql).
-    Q("q_isobars", (s, dir) => {
-      val comps = Tables.meltsRangedDF(s, dir).filter(col("sample_id") % 997 === 3)
-      val pGrid = explode(array((1 to 5).map(i => lit(i * 1000.0)): _*)).as("P_grid")
-      val xGrid = explode(array((0 to 4).map(i => lit(i * 0.25)): _*)).as("x_fluid")
-      val sol = udf((wt: Seq[Double], p: Double, tK: Double, xfl: Double) => {
-        val c = IaconoMarziano.Comp(meltEls, wt.toArray)
-        (IaconoMarziano.h2oSolubility(c, xfl, p, tK),
-          IaconoMarziano.co2Solubility(c, xfl, p, tK))
-      })
-      comps.select(col("sample_id"), wtArray.as("wt"), col("T_K"), pGrid)
-        .select(col("sample_id"), col("wt"), col("T_K"), col("P_grid"), xGrid)
-        .withColumn("sol", sol(col("wt"), col("P_grid"), col("T_K"), col("x_fluid")))
-        .select(col("sample_id"), col("P_grid"), col("x_fluid"),
-          round(col("sol._1"), 6).as("H2O"), round(col("sol._2"), 6).as("CO2"))
-        .orderBy("sample_id", "P_grid", "x_fluid")
-    }, Some(IsobarSql.sql))
+    {
+      val grid = Isobars.Grid((1 to 5).map(_ * 1000.0), (0 to 4).map(_ * 0.25))
+      val out = Seq("sample_id", "P_grid", "x_fluid")
+      val st = Isobars.solubility(Tables.meltElements, "iaconomarziano2012", (h2o, co2) =>
+        Seq("sample_id" -> C("sample_id"), "P_grid" -> C("P_bar"), "x_fluid" -> C("xfl"),
+          "H2O" -> E.round(h2o, 6), "CO2" -> E.round(co2, 6)))
+      Q("q_isobars", (s, dir) =>
+        st.spark(grid.spark(sampled(Tables.meltsRangedDF(s, dir)), Tables.meltElements))
+          .orderBy(out.map(col): _*),
+        Some(st.sql(grid.sql(sampledSql, Tables.meltElements), out)))
+    }
   )
 }

@@ -155,6 +155,10 @@ object Tables {
     "CO2" -> ((C("l_suppkey") % ILit(100)) * Lit(0.001))
   ))
 
+  /** `meltSource` as a SQL select list over lineitem, for the oracles. */
+  val meltCols: String = meltSource.cols
+    .map { case (n, e) => s"""${E.toSql(e)} AS "$n"""" }.mkString(", ")
+
   /** Staged pipeline rooted at the melts table. */
   def melts: Staged =
     Staged(MagmaSchema(meltElements, meltPass, CUnit.WtPc, CType.Oxide),

@@ -6,7 +6,7 @@ import graft.core._
 import graft.expr._
 import graft.expr.E._
 import graft.models._
-import graft.functions.{IaconoMarziano, QfmFull}
+import graft.functions.QfmFull
 
 /** Global model configuration (reference `configuration.py:88-239`).
   * Immutable snapshot semantics: `MagmaConfig.get` is captured into the
@@ -212,28 +212,31 @@ final class Melt(val mdf: MagmaDF, config: MagmaConfig = MagmaConfig.get) {
 
   /** EP2 flagship: volatile saturation pressure (mixed H2O-CO2), dispatched
     * on `config.volatileSolubility` (reference `volatile_solubility/
-    * calculate_volatiles.py:8-20` `get_solubility_model`). */
-  def volatileSaturationPressure(tCol: String = "T_K"): DataFrame = {
-    val els = mdf.staged.schema.elements.toArray
-    val solve: (IaconoMarziano.Comp, Double) => (Double, Double) =
-      config.volatileSolubility match {
-        case "iaconomarziano2012" =>
-          (c, t) => IaconoMarziano.mixedSaturation(c, t)
-        case "allison2022" =>
-          (c, t) => graft.functions.Allison.mixedSaturation(c, t)
-        case "shishkina2014" =>
-          (c, _) => graft.functions.Shishkina.mixedSaturation(c)
-        case other =>
-          throw new IllegalArgumentException(s"solubility model $other")
-      }
-    val sat = org.apache.spark.sql.functions.udf(
-      (wt: Seq[Double], tK: Double) =>
-        solve(IaconoMarziano.Comp(els, wt.toArray), tK))
-    df.withColumn("sat",
-        sat(org.apache.spark.sql.functions.array(els.map(col): _*), col(tCol)))
-      .withColumn("P_sat_bar", col("sat._1"))
-      .withColumn("X_fluid", col("sat._2")).drop("sat")
-  }
+    * calculate_volatiles.py:8-20` `get_solubility_model`). Iacono-Marziano
+    * and Shishkina run as native columns (a loop both outputs read runs
+    * once per row); allison2022 as a per-row UDF. */
+  def volatileSaturationPressure(tCol: String = "T_K"): DataFrame =
+    config.volatileSolubility match {
+      case "allison2022" =>
+        val els = mdf.staged.schema.elements.toArray
+        val sat = org.apache.spark.sql.functions.udf((wt: Seq[Double], tK: Double) =>
+          graft.functions.Allison.mixedSaturation(
+            graft.functions.IaconoMarziano.Comp(els, wt.toArray), tK))
+        df.withColumn("sat",
+            sat(org.apache.spark.sql.functions.array(els.map(col): _*), col(tCol)))
+          .withColumn("P_sat_bar", col("sat._1"))
+          .withColumn("X_fluid", col("sat._2")).drop("sat")
+      case model =>
+        val (p, x) = model match {
+          case "iaconomarziano2012" =>
+            graft.functions.IaconoMarziano.mixedSaturationE(ctx, C(tCol))
+          case "shishkina2014" => graft.functions.Shishkina.mixedSaturationE(ctx)
+          case other => throw new IllegalArgumentException(s"solubility model $other")
+        }
+        val kept = df.columns.filterNot(Set("P_sat_bar", "X_fluid")).map(c => c -> (C(c): E))
+        Pipeline.applySpark(df,
+          Cse.expand(Stage(kept.toSeq ++ Seq("P_sat_bar" -> p, "X_fluid" -> x))))
+    }
 
   /** Tetrahedral cations / NBO / NBO_T columns (`melt.py:113-161`). */
   def polymerisation: DataFrame = {

@@ -28,9 +28,11 @@ object SqlFunctions {
       (tK: Double, pBar: Double) => math.log10(QfmFull.fO2(tK, pBar)))
     spark.udf.register("iw_log10_fo2",
       (tK: Double, pBar: Double) => math.log10(IwFull.fO2(tK, pBar)))
+    val im = graft.expressions.LoopExpression.evaluator(
+      IaconoMarziano.mixedSaturationE(graft.models.CompCtx(els.toVector),
+        graft.expr.C("T_K"))._1, els.toSeq :+ "T_K")
     spark.udf.register("saturation_pressure_im",
-      (wt: Seq[Double], tK: Double) =>
-        IaconoMarziano.mixedSaturation(comp(wt), tK)._1)
+      (wt: Seq[Double], tK: Double) => im((wt :+ tK).toArray))
     spark.udf.register("saturation_pressure_allison",
       (wt: Seq[Double], tK: Double) =>
         Allison.mixedSaturation(comp(wt), tK)._1)

@@ -308,9 +308,12 @@ final case class Staged(schema: MagmaSchema, stages: Vector[Stage]) {
 
   /** Add a derived column from an expression over the current stage; the new
     * column becomes passthrough for later stages (so derives chain). */
-  def derive(name: String, e: E): Staged = {
-    val st = withStage(pass ++ ids :+ (name -> e))
-    st.copy(schema = st.schema.copy(passthrough = st.schema.passthrough :+ name))
+  def derive(name: String, e: E): Staged = derive(Seq(name -> e))
+
+  /** The same for several columns, added in one stage. */
+  def derive(cols: Seq[(String, E)]): Staged = {
+    val st = withStage(pass ++ ids ++ cols)
+    st.copy(schema = st.schema.copy(passthrough = st.schema.passthrough ++ cols.map(_._1)))
   }
 
   /** Compile to a Spark DataFrame. */

@@ -70,14 +70,27 @@ final case class Raw(column: Column, sql: String) extends E      // escape hatch
   *
   * Inside a loop both backends compute with Java's double semantics: a
   * comparison with NaN is false, `ln`/`log10`/`sqrt` return Java's values
-  * outside their domain, transcendentals are `java.lang.Math`'s. Spark runs
-  * a loop as one native expression ([[graft.expressions.LoopExpression]]);
-  * [[Pipeline.toSql]] renders it as a keyed recursive CTE. */
+  * outside their domain, a division by zero gives Java's ±Infinity or NaN,
+  * transcendentals are `java.lang.Math`'s. Spark runs a loop as one native
+  * expression ([[graft.expressions.LoopExpression]]); [[Pipeline.toSql]]
+  * renders it as a keyed recursive CTE. */
 final case class Loop(lets: Seq[(String, E)], init: Seq[(String, E)],
                       step: Seq[(String, E)], cond: Cond, maxIter: Int,
                       result: E) extends E {
   val state: Seq[String] = init.map(_._1)
   val bound: Set[String] = (lets ++ init ++ step).map(_._1).toSet
+
+  // computed once: Catalyst hashes a LoopExpression, this loop included,
+  // each time a plan rule copies it
+  override val hashCode: Int = scala.util.hashing.MurmurHash3.productHash(this)
+
+  // A loop travels as the serialised bytes of its parts and comes back
+  // from a per-JVM memo, so a JVM builds each loop once. Every task
+  // deserialises the plan it runs: a non-codegen operator (an
+  // ObjectHashAggregate) captures its child plan, loops included, and
+  // building a loop of a few thousand nodes per task cost more than the
+  // rows it solved.
+  private def writeReplace(): AnyRef = new Loop.Wire(Loop.bytes(this))
 
   def parts: Seq[Node] =
     (lets ++ init ++ step).map(_._2) ++ Seq(cond, result)
@@ -101,6 +114,34 @@ final case class Loop(lets: Seq[(String, E)], init: Seq[(String, E)],
     val after = seq(seq(Set.empty, lets), init)
     seq(after, step)
     Seq(cond, result).foreach(check(after))
+  }
+}
+
+object Loop {
+  private val built = new graft.functions.Memo[java.nio.ByteBuffer, Loop](256)
+
+  private def bytes(l: Loop): Array[Byte] = {
+    val b = new java.io.ByteArrayOutputStream
+    val o = new java.io.ObjectOutputStream(b)
+    o.writeObject((l.lets, l.init, l.step, l.cond, l.maxIter, l.result))
+    o.close()
+    b.toByteArray
+  }
+
+  /** A loop's serialised form: the bytes of its parts, read back once per
+    * JVM (classes through the task's context loader, as Spark's own
+    * deserialiser resolves them). */
+  private final class Wire(bytes: Array[Byte]) extends Serializable {
+    private def readResolve(): AnyRef = built.getOrFill(java.nio.ByteBuffer.wrap(bytes)) {
+      val in = new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(bytes)) {
+        override def resolveClass(d: java.io.ObjectStreamClass): Class[_] =
+          try Class.forName(d.getName, false, Thread.currentThread.getContextClassLoader)
+          catch { case _: ClassNotFoundException => super.resolveClass(d) }
+      }
+      val (lets, init, step, cond, maxIter, result) = in.readObject()
+        .asInstanceOf[(Seq[(String, E)], Seq[(String, E)], Seq[(String, E)], Cond, Int, E)]
+      Loop(lets, init, step, cond, maxIter, result)
+    }
   }
 }
 
@@ -213,12 +254,17 @@ object E {
     case NotC(x) => !toCond(x)
   }
 
-  /** Render as DuckDB-compatible ANSI SQL (the oracle path). With `java`
-    * (the parts of a [[Loop]]) the rendering follows Java's double
-    * semantics where DuckDB's differ: a comparison with NaN is false
+  /** Render as DuckDB-compatible ANSI SQL (the oracle path). Where DuckDB
+    * raises, the rendering follows the engine: outside a loop `ln`/`log10`
+    * are NULL at and below 0 (Spark's `Log` is), and `sqrt` is NaN below 0
+    * everywhere. With `java` (the parts of a [[Loop]]) it follows Java's
+    * double semantics where DuckDB's differ: a comparison with NaN is false
     * (DuckDB orders NaN above every number), `ln`/`log10` give -Infinity at
-    * 0 and NaN below, `sqrt` NaN below 0 (DuckDB raises), and integer
-    * literals are doubles. */
+    * 0 and NaN below, a division by zero gives ±Infinity, or NaN for 0 or
+    * NaN over 0 (DuckDB gives NULL; the dividend times the infinity of the
+    * zero's sign is Java's quotient), and integer literals are doubles. So a
+    * subtree `Cse` hoists out of its If branch is safe to evaluate on every
+    * row. */
   def toSql(e: E): String = sql(e, java = false)
 
   private[expr] def sql(e: E, java: Boolean): String = {
@@ -230,12 +276,18 @@ object E {
       case Lit(v)  => formatDouble(v)
       case ILit(v) => if (java) formatDouble(v.toDouble) else v.toString
       case SLit(v) => "'" + v.replace("'", "''") + "'"
+      case Bin("/", l, Lit(d)) if java && d != 0.0 => s"(${r(l)} / ${r(Lit(d))})"
+      case Bin("/", l, d) if java => // DuckDB's x / 0 is NULL; x * ±Infinity is Java's x / ±0
+        val (x, y) = (r(l), r(d))
+        s"coalesce(($x / $y), ($x * (CASE signbit($y) WHEN true THEN '-Infinity'::DOUBLE " +
+          "WHEN false THEN 'Infinity'::DOUBLE END)))"
       case Bin(op, l, rr) => s"(${r(l)} $op ${r(rr)})"
-      case Fn(f @ ("ln" | "log10"), List(a)) if java =>
+      case Fn(f @ ("ln" | "log10"), List(a)) =>
         val x = r(a)
-        s"(CASE WHEN $x > 0.0e0 THEN $f($x) WHEN $x = 0.0e0 THEN '-Infinity'::DOUBLE " +
+        if (java) s"(CASE WHEN $x > 0.0e0 THEN $f($x) WHEN $x = 0.0e0 THEN '-Infinity'::DOUBLE " +
           "ELSE 'NaN'::DOUBLE END)"
-      case Fn("sqrt", List(a)) if java =>
+        else s"(CASE WHEN $x > 0.0e0 THEN $f($x) END)"
+      case Fn("sqrt", List(a)) =>
         val x = r(a)
         s"(CASE WHEN $x >= 0.0e0 THEN sqrt($x) ELSE 'NaN'::DOUBLE END)"
       case Fn("round", List(a, ILit(d))) => s"round(${r(a)}, $d)"
@@ -290,6 +342,26 @@ object E {
         "_lo" -> If(gm > Lit(0.0), m, l), "_hi" -> If(gm > Lit(0.0), h, m)),
       valid, 60, If(valid, (l + h) * Lit(0.5), invalid))
   }
+
+  /** Secant iteration from (x0, x1) with `Solver.secant`'s exits: while
+    * |f(b)| > `tol` and f(b) differs from f(a), at most `maxIter` rounds;
+    * gives the last iterate b. A NaN f(b) ends it. `f` may read the
+    * `lets`. */
+  def secant(lets: Seq[(String, E)], x0: Double, x1: Double, f: E => E,
+             tol: Double = 1e-10, maxIter: Int = 100): Loop = {
+    val (a, fa, b, fb) = (C("_a"), C("_fa"), C("_b"), C("_fb"))
+    Loop(lets, Seq("_a" -> Lit(x0), "_fa" -> f(Lit(x0)), "_b" -> Lit(x1), "_fb" -> f(Lit(x1))),
+      Seq("_c" -> (b - fb * (b - a) / (fb - fa)), "_a" -> b, "_fa" -> fb,
+        "_b" -> C("_c"), "_fb" -> f(C("_c"))),
+      abs(fb) > Lit(tol) && NotC(fb - fa === Lit(0.0)), maxIter, b)
+  }
+
+  /** `result` over the `lets` as a loop of no rounds: a closed form that
+    * Spark computes with Java's semantics too, for values that must equal
+    * a scalar kernel's bit for bit (Catalyst's `Exp` and `Log` are
+    * `StrictMath`'s, and its division by zero is null). */
+  def closed(lets: Seq[(String, E)], result: E): Loop =
+    Loop(lets, Nil, Nil, Lit(0.0) < Lit(0.0), 0, result)
 
   /** Shortest decimal repr that round-trips (Java Double.toString) — DuckDB
     * parses it back to the identical IEEE double. Always rendered in
@@ -446,15 +518,14 @@ object Pipeline {
     case _                => n.children.forall(opaqueFree)
   }
 
-  /** `e` with each column ref replaced by its definition in `env`; a
-    * name bound by a [[Loop]] is never substituted inside that loop. */
+  /** `e` with each column ref replaced by its definition in `env`. A
+    * [[Loop]] is kept as it is: it is opaque here, and a loop it reads
+    * (an earlier stage's) could not be put inside it. */
   private def substitute(e: E, env: Map[String, E]): E = e match {
     case C(n)    => env.getOrElse(n, e)
-    case l: Loop => subst(l, env -- l.bound)
-    case _       => subst(e, env)
+    case _: Loop => e
+    case _       => e.mapChildren(substitute(_, env), substituteCond(_, env))
   }
-  private def subst(e: E, env: Map[String, E]): E =
-    e.mapChildren(substitute(_, env), substituteCond(_, env))
   private def substituteCond(c: Cond, env: Map[String, E]): Cond =
     c.mapChildren(substitute(_, env), substituteCond(_, env))
 

@@ -1,19 +1,27 @@
 package graft.functions
 
 import graft.chem.Elements
+import graft.expr._
+import graft.expr.E._
+import graft.expressions.LoopExpression
+import graft.models.CompCtx
 
 /** H2O-CO2 solubility and saturation-pressure model of Iacono-Marziano et
   * al. (2012) (reference `volatile_solubility/volatile_solubility_models/
   * iaconomarziano2012.py`), "hydrous_webapp" parameterisation, ideal
   * fugacity/activity.
   *
-  * All solves are row-local: H2O solubility needs an inner fixed point
-  * (H2O appears on both sides via NBO/O, `:196-205`), saturation bracketed
-  * root finds per species (`:239-246, 411-418`), mixed saturation a 2-D
-  * solve on (P, x_fluid) (`:477-481` — reference uses MINPACK hybr; here a
-  * damped 2-D Newton with the same fixed point, difference documented).
-  * Failures return NaN, mirroring the reference's per-sample NaN fallback
-  * (`core/MagmaFrames/melt.py:410-413`).
+  * Every law is written once, as an expression tree over the
+  * composition's oxide columns; queries run the trees as columns and the
+  * scalar functions evaluate the same trees. All solves are row-local
+  * [[Loop]]s: dissolved H2O is an inner fixed point (H2O appears on both
+  * sides via NBO/O, `:196-205`), saturation a bisection per species
+  * (`:239-246, 411-418`), mixed saturation a Picard fixed point on P (the
+  * reference's 2-D MINPACK solve on (P, x_fluid), `:477-481`, hunts the
+  * same root). Failures give NaN, mirroring the reference's per-sample
+  * NaN fallback (`core/MagmaFrames/melt.py:410-413`). Every transcendental
+  * runs inside a loop, with `java.lang.Math`, so the columns and the
+  * scalar functions give the same bits.
   */
 object IaconoMarziano {
 
@@ -63,165 +71,111 @@ object IaconoMarziano {
     private[graft] def weightsCacheSize: Int = weightsCache.size
   }
 
-  /** Per-sample invariants of the IM solubility laws, precomputed so the
-    * nested solves (H2O fixed point x saturation bracket x mixed 2-D
-    * Newton) run on pure double arithmetic with zero allocation. Exploits
-    * NBO/O's scale invariance (a mole-weighted ratio, so normalisation
-    * cancels): the dissolved-H2O trial value only shifts the accumulators
-    * by its own mole count.
-    *
-    * Mirrors `iaconomarziano2012.py:565-606` (NBO/O) and `:297-375` (CO2
-    * compositional terms) computed per trial in the reference. */
-  final case class Prep(nbo0: Double, o0: Double, tot0: Double,
-                        molAl: Double, molCaNaK: Double, molFM0: Double,
-                        molNK: Double, wH2O: Double) {
-    @inline def nboO(hMol: Double): Double = (nbo0 + 2.0 * hMol) / (o0 + hMol)
+  private val wH2O = Lit(Elements.chemicalWeight("H2O").get)
+
+  // ---- the laws as expression trees ---------------------------------------
+
+  /** The per-row constants of NBO/O after Marrochi & Toplis, all Fe as FeO
+    * (`iaconomarziano2012.py:565-606`): `_tot0` the anhydrous mole total,
+    * `_nbo0`/`_o0` the anhydrous NBO and O. NBO/O is a mole ratio, so a
+    * dissolved-H2O trial only adds its own mole count (`nboO`). */
+  def consts(m: CompCtx): Seq[(String, E)] = {
+    val x = m.mol _
+    val fe3 = Lit(2.0) * x("Fe2O3")
+    Seq("_tot0" -> sumAll(Lit(0.0) +: m.elements.filter(_ != "H2O").map(x)),
+      "_nbo0" -> Lit(2.0) * (x("K2O") + x("Na2O") + x("CaO") + x("MgO") +
+        x("FeO") + fe3 - x("Al2O3")),
+      "_o0" -> (Lit(2.0) * x("SiO2") + Lit(2.0) * x("TiO2") + Lit(3.0) * x("Al2O3") +
+        x("MgO") + x("FeO") + fe3 + x("CaO") + x("Na2O") + x("K2O")))
   }
 
-  def prepare(c: Comp): Prep = {
-    val ws = Comp.weightsFor(c.names)
-    def mol(name: String): Double = {
-      val i = c.names.indexOf(name)
-      if (i < 0) 0.0 else c.wt(i) / ws(i)
-    }
-    var tot0 = 0.0
-    var i = 0
-    while (i < c.names.length) {
-      if (c.names(i) != "H2O") tot0 += c.wt(i) / ws(i)
-      i += 1
-    }
-    val fe2O3 = mol("Fe2O3")
-    val nbo0 = 2.0 * (mol("K2O") + mol("Na2O") + mol("CaO") + mol("MgO") +
-      mol("FeO") + 2.0 * fe2O3 - mol("Al2O3"))
-    val o0 = 2.0 * mol("SiO2") + 2.0 * mol("TiO2") + 3.0 * mol("Al2O3") +
-      mol("MgO") + mol("FeO") + 2.0 * fe2O3 + mol("CaO") + mol("Na2O") +
-      mol("K2O")
-    Prep(nbo0, o0, tot0,
-      molAl = mol("Al2O3"),
-      molCaNaK = mol("CaO") + mol("Na2O") + mol("K2O"),
-      molFM0 = mol("FeO") + mol("MgO") + 2.0 * fe2O3,
-      molNK = mol("Na2O") + mol("K2O"),
-      wH2O = Elements.chemicalWeight("H2O").get)
+  /** NBO/O with `hm` moles of dissolved H2O. */
+  private def nboO(hm: E): E = (C("_nbo0") + Lit(2.0) * hm) / (C("_o0") + hm)
+
+  /** Eq. 13 (`:231-247`): dissolved H2O at ln(pH2O) `lnp`, NBO/O `nbo` and
+    * the pressure term `ct` = C P / T. */
+  private def h2oLaw(lnp: E, nbo: E, ct: E): E =
+    exp(Lit(h2oA) * lnp + Lit(h2oB) * nbo + Lit(h2oBB) + ct)
+
+  /** The compositional terms of eq. 12 at `h` wt.% dissolved H2O, as
+    * mole fractions of the hydrous total (the fraction ratio xAI is a
+    * mole ratio); reads [[consts]]. */
+  private def co2Terms(m: CompCtx, h: E): Seq[(String, E)] = {
+    val x = m.mol _
+    Seq("_hm" -> h / wH2O, "_tot" -> (C("_tot0") + C("_hm")),
+      "_xai" -> x("Al2O3") / (x("CaO") + x("Na2O") + x("K2O")),
+      "_xfm" -> (x("FeO") + x("MgO") + Lit(2.0) * x("Fe2O3")) / C("_tot"),
+      "_xnk" -> (x("Na2O") + x("K2O")) / C("_tot"),
+      "_xh" -> C("_hm") / C("_tot"), "_nbo" -> nboO(C("_hm")))
   }
 
-  /** NBO/O after Marrochi & Toplis: all Fe as FeO, hydrous terms included
-    * (`iaconomarziano2012.py:565-606`). */
-  def nboO(mol: Map[String, Double]): Double = {
-    def x(e: String): Double = mol.getOrElse(e, 0.0)
-    val fe2O3 = x("Fe2O3")
-    var nbo = 2.0 * (x("K2O") + x("Na2O") + x("CaO") + x("MgO") + x("FeO") +
-      2.0 * fe2O3 - x("Al2O3"))
-    var o = 2.0 * x("SiO2") + 2.0 * x("TiO2") + 3.0 * x("Al2O3") + x("MgO") +
-      x("FeO") + 2.0 * fe2O3 + x("CaO") + x("Na2O") + x("K2O")
-    nbo += 2.0 * x("H2O")
-    o += x("H2O")
-    nbo / o
+  /** Eq. 12 (`:297-375`): dissolved CO2 (wt.%) at CO2 partial pressure
+    * `pco2`, total pressure `p` and temperature `t`; reads [[co2Terms]]. */
+  private def co2Law(pco2: E, p: E, t: E): E =
+    exp(C("_xh") * Lit(co2DH2O) + C("_xai") * Lit(co2DAI) + C("_xfm") * Lit(co2DFM) +
+      C("_xnk") * Lit(co2DNK) + Lit(co2A) * ln(pco2) + Lit(co2B) * C("_nbo") +
+      Lit(co2BB) + Lit(co2C) * p / t) / Lit(1e4)
+
+  /** Dissolved H2O and CO2 (wt.%): the `stages` that solve them, each a
+    * list of named definitions that reads the composition, x_fluid,
+    * pressure, temperature and the stages before it, then the two values,
+    * which read the stages. */
+  final case class Dissolved(stages: Seq[Seq[(String, E)]], h2o: E, co2: E)
+
+  /** Dissolved H2O and CO2 at fluid fraction `x`, pressure `p` (bar) and
+    * temperature `t` (K). Dissolved H2O is the inner fixed point: a
+    * secant from (1, 2) (`_imHsec`, `:196-205`), accepted when finite,
+    * non-negative and within 1e-6; otherwise 60 halvings of [1e-12, 1e4]
+    * where that brackets the root, else NaN (the secant can diverge at
+    * bracket-endpoint pressures). A loop holds no loop, so the secant and
+    * the bisection that reads it are stages of their own, after the
+    * per-row constants. 0 when `p` or `x` is not positive. Dissolved CO2
+    * is closed form over the solved H2O; 0 when `p` or 1 - `x` is not
+    * positive. */
+  def solubility(m: CompCtx, x: E, p: E, t: E): Dissolved = {
+    val pt = Seq("_lnp" -> ln(x * p), "_ct" -> Lit(h2oC) * p / t)
+    def f(h: E): E = h - h2oLaw(C("_lnp"), nboO(h / wH2O), C("_ct"))
+    val hs = C("_imHsec")
+    val accepted = abs(hs) < Lit(Double.PositiveInfinity) && hs >= Lit(0.0) &&
+      abs(C("_fs")) < Lit(1e-6)
+    val zero = p <= Lit(0.0) || x <= Lit(0.0)
+    Dissolved(Seq(consts(m), Seq("_imHsec" -> secant(pt, 1.0, 2.0, f)),
+        Seq("_imH2O" -> bisect(pt ++ Seq("_fs" -> f(hs), "_flo" -> f(Lit(1e-12)),
+            "_fhi" -> f(Lit(1e4))), 1e-12, 1e4, h => -f(h),
+          NotC(zero) && NotC(accepted) && C("_flo") < Lit(0.0) && C("_fhi") > Lit(0.0),
+          If(zero, Lit(0.0), If(accepted, hs, Lit(Double.NaN)))))),
+      C("_imH2O"),
+      closed(co2Terms(m, C("_imH2O")), If(p <= Lit(0.0) || Lit(1.0) - x <= Lit(0.0),
+        Lit(0.0), co2Law((Lit(1.0) - x) * p, p, t))))
   }
 
-  /** Eq. 13 closed form at a FIXED dissolved-H2O mole count (`:231-247`). */
-  @inline private def h2oSolubilityAt(prep: Prep, hMol: Double, xFluid: Double,
-                                      pBar: Double, tK: Double): Double = {
-    val pH2O = xFluid * pBar
-    math.exp(h2oA * math.log(pH2O) + h2oB * prep.nboO(hMol) + h2oBB +
-      h2oC * pBar / tK)
+  /** H2O saturation pressure (bar) at fluid fraction `x` (`:205-246`). At
+    * saturation the dissolved H2O equals the observed H2O, so the inner
+    * NBO/O fixed point closes: NBO/O is a per-row constant and the
+    * pressure the root of a monotone 1-D equation — the root the
+    * reference's nested brentq-over-secant formulation finds, without the
+    * inner solve — found by 60 halvings of the reference bracket. 0
+    * without H2O; NaN when the bracket holds no root. */
+  def h2oSaturationE(m: CompCtx, t: E, x: E = Lit(1.0)): E = {
+    val h2o = m.wt("H2O")
+    def q(p: E): E = h2o - h2oLaw(ln(x * p), C("_nbo"), Lit(h2oC) * p / t)
+    bisect(consts(m) ++ Seq("_nbo" -> nboO(h2o / wH2O),
+        "_qlo" -> q(Lit(1e-15)), "_qhi" -> q(Lit(1.5e4))), 1e-15, 1.5e4, q,
+      NotC(h2o === Lit(0.0)) && C("_qlo") > Lit(0.0) && C("_qhi") < Lit(0.0),
+      If(h2o === Lit(0.0), Lit(0.0), Lit(Double.NaN)))
   }
 
-  /** Dissolved H2O: inner fixed point because the hydrous parameterisation
-    * feeds H2O back into NBO/O — secant from x0=1, x1=2 (`:196-205`).
-    * The divergence fallback is 60 fixed bisection steps on the same
-    * bracket (f(0+) < 0 < f(high)): deterministic straight-line IEEE
-    * arithmetic with no convergence branches, so both the secant path and
-    * the fallback render op-for-op in the DuckDB oracle
-    * ([[graft.SolubilitySql]]) — the earlier Brent fallback's
-    * data-dependent branch paths could not. */
-  def h2oSolubility(prep: Prep, xFluid: Double, pBar: Double, tK: Double): Double = {
-    if (pBar <= 0 || xFluid <= 0) return 0.0
-    def f(h: Double): Double =
-      h - h2oSolubilityAt(prep, h / prep.wH2O, xFluid, pBar, tK)
-    val s = Solver.secant(f, 1.0, 2.0)
-    // secant can diverge far from the root at bracket-endpoint pressures
-    if (s.isFinite && s >= 0.0 && math.abs(f(s)) < 1e-6) return s
-    if (!(f(1e-12) < 0.0) || !(f(1e4) > 0.0)) return Double.NaN // unbracketed
-    var lo = 1e-12
-    var hi = 1e4
-    var it = 0
-    while (it < 60) {
-      val mid = (lo + hi) * 0.5
-      if (f(mid) < 0.0) lo = mid else hi = mid
-      it += 1
-    }
-    (lo + hi) * 0.5
-  }
-
-  def h2oSolubility(c: Comp, xFluid: Double, pBar: Double, tK: Double): Double =
-    h2oSolubility(prepare(c), xFluid, pBar, tK)
-
-  /** Dissolved CO2 (wt.%), eq. 12 (`:297-375`): dissolved H2O first, then
-    * the carbonate term. All compositional terms are mole fractions of the
-    * hydrous total, reconstructed from the anhydrous accumulators. */
-  def co2Solubility(prep: Prep, xFluid: Double, pBar: Double, tK: Double): Double = {
-    if (pBar <= 0 || 1.0 - xFluid <= 0) return 0.0
-    val hMol = h2oSolubility(prep, xFluid, pBar, tK) / prep.wH2O
-    val tot = prep.tot0 + hMol
-    val pCO2 = (1.0 - xFluid) * pBar
-    val xAI = prep.molAl / prep.molCaNaK // fraction ratio = mole ratio
-    val xFM = prep.molFM0 / tot
-    val xNK = prep.molNK / tot
-    val xH2O = hMol / tot
-    val co3ppm = math.exp(xH2O * co2DH2O + xAI * co2DAI + xFM * co2DFM +
-      xNK * co2DNK + co2A * math.log(pCO2) + co2B * prep.nboO(hMol) + co2BB +
-      co2C * pBar / tK)
-    co3ppm / 1e4
-  }
-
-  def co2Solubility(c: Comp, xFluid: Double, pBar: Double, tK: Double): Double =
-    co2Solubility(prepare(c), xFluid, pBar, tK)
-
-  /** H2O saturation pressure (`:205-246`). At saturation the dissolved
-    * H2O equals the observed H2O, so the inner NBO/O fixed point closes:
-    * NBO/O is a per-row constant and the pressure is the unique root of a
-    * monotone 1-D equation — the same root the reference's nested
-    * brentq-over-secant formulation finds, but without the inner solve.
-    * 60 fixed bisection steps on the reference bracket: deterministic
-    * straight-line IEEE arithmetic, rendered op-for-op by the DuckDB
-    * oracle ([[graft.SaturationSql]]). */
-  def h2oSaturation(c: Comp, tK: Double, xFluid: Double = 1.0): Double = {
-    val h2o = c("H2O")
-    if (h2o == 0.0) return 0.0
-    val prep = prepare(c)
-    val hMol = h2o / prep.wH2O
-    def q(p: Double): Double = h2o - h2oSolubilityAt(prep, hMol, xFluid, p, tK)
-    if (!(q(1e-15) > 0.0) || !(q(1.5e4) < 0.0)) return Double.NaN // unbracketed
-    var lo = 1e-15
-    var hi = 1.5e4
-    var it = 0
-    while (it < 60) {
-      val mid = (lo + hi) * 0.5
-      if (q(mid) > 0.0) lo = mid else hi = mid
-      it += 1
-    }
-    (lo + hi) * 0.5
-  }
-
-  /** CO2 saturation pressure (`:377-430`). At xFluid = 0 the dissolved H2O
-    * is exactly 0, so the carbonate law closes over per-row constants and
-    * the pressure is again a monotone 1-D root — 60 fixed bisection steps
-    * on the reference bracket (see [[h2oSaturation]]). */
-  def co2Saturation(c: Comp, tK: Double, xFluid: Double = 0.0): Double = {
-    val co2 = c("CO2")
-    if (co2 == 0.0) return 0.0
-    val prep = prepare(c)
-    def q(p: Double): Double = co2 - co2Solubility(prep, xFluid, p, tK)
-    if (!(q(1e-10) > 0.0) || !(q(1e5) < 0.0)) return Double.NaN // unbracketed
-    var lo = 1e-10
-    var hi = 1e5
-    var it = 0
-    while (it < 60) {
-      val mid = (lo + hi) * 0.5
-      if (q(mid) > 0.0) lo = mid else hi = mid
-      it += 1
-    }
-    (lo + hi) * 0.5
+  /** CO2 saturation pressure (bar) (`:377-430`). In a pure CO2 fluid the
+    * dissolved H2O is exactly 0, so the carbonate law closes over per-row
+    * constants and the pressure is again a monotone 1-D root, found as in
+    * [[h2oSaturationE]]. */
+  def co2SaturationE(m: CompCtx, t: E): E = {
+    val co2 = m.wt("CO2")
+    def q(p: E): E = co2 - co2Law((Lit(1.0) - Lit(0.0)) * p, p, t)
+    bisect(consts(m) ++ co2Terms(m, Lit(0.0)) ++
+        Seq("_qlo" -> q(Lit(1e-10)), "_qhi" -> q(Lit(1e5))), 1e-10, 1e5, q,
+      NotC(co2 === Lit(0.0)) && C("_qlo") > Lit(0.0) && C("_qhi") < Lit(0.0),
+      If(co2 === Lit(0.0), Lit(0.0), Lit(Double.NaN)))
   }
 
   /** Mixed-fluid saturation (P_sat, x_fluid) (`:434-562`). At the mixed
@@ -229,39 +183,60 @@ object IaconoMarziano {
     * close over per-row constants and each inverts for its species'
     * partial pressure in closed form given the total pressure:
     * u(P) = exp((ln h2o - B nbo - BB - C P/T)/A) and
-    * v(P) = exp(ln(co2e4) - terms - C2 P/T). P is then the fixed point
+    * v(P) = exp(ln(co2e4) - terms - C2 P/T). P is the fixed point
     * P = u(P) + v(P) — a contraction at magmatic conditions
-    * (|d(u+v)/dP| << 1) — run for 60 fixed Picard rounds with NO branches,
-    * so the DuckDB twin computes bit-identical values even on non-physical
-    * rows where the iteration diverges to inf/NaN. Same solution as the
-    * reference's 2-D MINPACK solve (which hunts the identical root). */
+    * (|d(u+v)/dP| << 1) — run for 60 Picard rounds from 0 with no
+    * convergence exit. Without H2O it is the CO2 saturation at
+    * x_fluid = 0, without CO2 the H2O saturation at 1. The two outputs
+    * are two loops with one step: each runs only where its value is
+    * used. */
+  def mixedSaturationE(m: CompCtx, t: E): (E, E) = {
+    val (h2o, co2) = (m.wt("H2O"), m.wt("CO2"))
+    val (u, p) = (C("_u"), C("_p"))
+    def picard(result: E): Loop = Loop(consts(m) ++ co2Terms(m, h2o) ++ Seq(
+        "_k1" -> (ln(h2o) - Lit(h2oB) * C("_nbo") - Lit(h2oBB)),
+        "_k2" -> (ln(co2 * Lit(1e4)) - C("_xh") * Lit(co2DH2O) - C("_xai") * Lit(co2DAI) -
+          C("_xfm") * Lit(co2DFM) - C("_xnk") * Lit(co2DNK) - Lit(co2B) * C("_nbo") -
+          Lit(co2BB))),
+      Seq("_u" -> Lit(0.0), "_v" -> Lit(0.0), "_p" -> Lit(0.0)),
+      Seq("_u" -> exp((C("_k1") - Lit(h2oC) * p / t) / Lit(h2oA)),
+        "_v" -> exp(C("_k2") - Lit(co2C) * p / t), "_p" -> (u + C("_v"))),
+      NotC(h2o <= Lit(0.0)) && NotC(co2 <= Lit(0.0)), 60, result)
+    (If(h2o <= Lit(0.0), co2SaturationE(m, t),
+        If(co2 <= Lit(0.0), h2oSaturationE(m, t), picard(p))),
+      If(h2o <= Lit(0.0), Lit(0.0), If(co2 <= Lit(0.0), Lit(1.0), picard(u / p))))
+  }
+
+  // ---- scalar entry points: the trees above, evaluated --------------------
+
+  private def ctx(c: Comp): CompCtx = CompCtx(c.names.toVector)
+  private def env(c: Comp): Seq[(String, Double)] = c.names.toSeq.zip(c.wt)
+
+  private def eval(c: Comp, e: E): Double = LoopExpression.eval(e, env(c): _*)
+
+  /** The [[solubility]] stages evaluated in order, then `value` of them. */
+  private def solved(c: Comp, xFluid: Double, pBar: Double, tK: Double,
+                     value: Dissolved => E): Double = {
+    val d = solubility(ctx(c), Lit(xFluid), Lit(pBar), Lit(tK))
+    val vs = d.stages.flatten.foldLeft(env(c)) { case (vs, (n, e)) =>
+      vs :+ (n -> LoopExpression.eval(e, vs: _*)) }
+    LoopExpression.eval(value(d), vs: _*)
+  }
+
+  def h2oSolubility(c: Comp, xFluid: Double, pBar: Double, tK: Double): Double =
+    solved(c, xFluid, pBar, tK, _.h2o)
+
+  def co2Solubility(c: Comp, xFluid: Double, pBar: Double, tK: Double): Double =
+    solved(c, xFluid, pBar, tK, _.co2)
+
+  def h2oSaturation(c: Comp, tK: Double, xFluid: Double = 1.0): Double =
+    eval(c, h2oSaturationE(ctx(c), Lit(tK), Lit(xFluid)))
+
+  def co2Saturation(c: Comp, tK: Double): Double =
+    eval(c, co2SaturationE(ctx(c), Lit(tK)))
+
   def mixedSaturation(c: Comp, tK: Double): (Double, Double) = {
-    val pH2O = h2oSaturation(c, tK)
-    val pCO2 = co2Saturation(c, tK)
-    if (c("H2O") <= 0.0) return (pCO2, 0.0)
-    if (c("CO2") <= 0.0) return (pH2O, 1.0)
-    val prep = prepare(c)
-    val h2oObs = c("H2O"); val co2Obs = c("CO2")
-    val hMol = h2oObs / prep.wH2O
-    val nbo = prep.nboO(hMol)
-    val tot = prep.tot0 + hMol
-    val xAI = prep.molAl / prep.molCaNaK
-    val xFM = prep.molFM0 / tot
-    val xNK = prep.molNK / tot
-    val xH2O = hMol / tot
-    // ln(u) = (ln h2o - B nbo - BB - C P/T)/A  (eq. 13 inverted for pH2O)
-    val k1 = math.log(h2oObs) - h2oB * nbo - h2oBB
-    // ln(v) = ln(co2 ppm) - comp terms - B2 nbo - BB2 - C2 P/T (eq. 12)
-    val k2 = math.log(co2Obs * 1e4) - xH2O * co2DH2O - xAI * co2DAI -
-      xFM * co2DFM - xNK * co2DNK - co2B * nbo - co2BB
-    var u = 0.0; var v = 0.0; var p = 0.0
-    var it = 0
-    while (it < 60) {
-      u = math.exp((k1 - h2oC * p / tK) / h2oA)
-      v = math.exp(k2 - co2C * p / tK)
-      p = u + v
-      it += 1
-    }
-    (p, u / p)
+    val (p, x) = mixedSaturationE(ctx(c), Lit(tK))
+    (eval(c, p), eval(c, x))
   }
 }

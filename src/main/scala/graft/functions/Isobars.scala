@@ -2,6 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Staged
+import graft.expr.{C, E}
+import graft.models.CompCtx
 
 /** CO2-H2O isobar / isopleth curve assembly (reference
   * `volatile_solubility/isobars.py:13-141`): evaluate the mixed-fluid
@@ -89,37 +92,66 @@ object Isobars {
     }
   }
 
+  /** The (sample x isobar x x_fluid) grid: every sample row with each
+    * `isobars` pressure as `P_bar` and each `xfls` fraction as `xfl`. The
+    * one list of grid values gives the Spark rows (one `inline` of the
+    * cells) and the SQL source (`unnest`) alike. */
+  final case class Grid(isobars: Seq[Double], xfls: Seq[Double]) {
+    private def inputs(elements: Seq[String]) = "sample_id" +: "T_K" +: elements
+
+    /** Grid rows of `samples`, which carry sample_id, T_K and `elements`. */
+    def spark(samples: DataFrame, elements: Seq[String]): DataFrame =
+      samples.select(inputs(elements).map(col) :+ inline(array(
+        (for (p <- isobars; x <- xfls) yield struct(lit(p).as("P_bar"), lit(x).as("xfl"))): _*)): _*)
+
+    /** The same rows over the SQL subquery `samples`. */
+    def sql(samples: String, elements: Seq[String]): String = {
+      def unnest(vs: Seq[Double], as: String) =
+        s"(SELECT unnest([${vs.map(E.formatDouble).mkString(", ")}]) AS \"$as\")"
+      s"(SELECT ${inputs(elements).map(c => s"s.\"$c\"").mkString(", ")}, " +
+        s"""g."P_bar", x."xfl" FROM $samples s CROSS JOIN ${unnest(isobars, "P_bar")} g """ +
+        s"CROSS JOIN ${unnest(xfls, "xfl")} x)"
+    }
+  }
+
+  /** Dissolved H2O and CO2 of every [[Grid]] row by `model`, its trees
+    * as columns staged over the grid rows; the last stage is `out` of
+    * them (by default sample_id, P_bar, xfl, H2O, CO2). */
+  def solubility(elements: Seq[String], model: String,
+                 out: (E, E) => Seq[(String, E)] = (h2o, co2) =>
+                   Seq("sample_id", "P_bar", "xfl").map(c => c -> (C(c): E)) ++
+                     Seq("H2O" -> h2o, "CO2" -> co2)): Staged = {
+    val base = Staged(elements, Seq("sample_id", "T_K", "P_bar", "xfl"))
+    val m = CompCtx(elements.toVector)
+    val (x, p, t) = (C("xfl"), C("P_bar"), C("T_K"))
+    val d = model match {
+      case "iaconomarziano2012" => IaconoMarziano.solubility(m, x, p, t)
+      case "shishkina2014" => IaconoMarziano.Dissolved(Nil,
+        Shishkina.h2oSolubilityE(m, x, p), Shishkina.co2SolubilityE(m, x, p))
+      case other => throw new IllegalArgumentException(s"model $other")
+    }
+    d.stages.foldLeft(base)(_ derive _).withStage(out(d.h2o, d.co2))
+  }
+
   /** Distributed (sample x P x x_fluid) grid of dissolved (H2O, CO2) for
     * the configured model. `samples` must carry (sample_id, element wt.%
-    * columns, T_K). One narrow UDF stage. */
+    * columns, T_K). Iacono-Marziano and Shishkina run as native columns;
+    * allison2022 as one narrow UDF stage. */
   def isobarGrid(samples: DataFrame, elements: Array[String],
                  isobars: Seq[Double], nPoints: Int = 10,
                  model: String = "iaconomarziano2012"): DataFrame = {
-    val xfls = (0 to nPoints).map(_.toDouble / nPoints)
-    val sol = solubilityUdf(elements, model)
-    samples
-      .withColumn("P_bar_iso", explode(array(isobars.map(lit): _*)))
-      .withColumn("xfl", explode(array(xfls.map(lit): _*)))
-      .withColumn("sol", sol(array(elements.map(col).toIndexedSeq: _*),
-        col("P_bar_iso"), col("T_K"), col("xfl")))
-      .select(col("sample_id"), col("P_bar_iso").as("P_bar"), col("xfl"),
-        col("sol._1").as("H2O"), col("sol._2").as("CO2"))
-  }
-
-  private def solubilityUdf(elements: Array[String], model: String) = {
-    val solve: (IaconoMarziano.Comp, Double, Double, Double) => (Double, Double) =
-      model match {
-        case "iaconomarziano2012" => (c, p, t, x) =>
-          (IaconoMarziano.h2oSolubility(c, x, p, t),
-            IaconoMarziano.co2Solubility(c, x, p, t))
-        case "allison2022" => (c, p, t, x) =>
-          (Allison.h2oSolubility(t, p, x), Allison.co2Solubility(c, t, p, x))
-        case "shishkina2014" => (c, p, _, x) =>
-          (Shishkina.h2oSolubility(c, x, p), Shishkina.co2Solubility(c, x, p))
-        case other => throw new IllegalArgumentException(s"model $other")
-      }
-    udf((wt: Seq[Double], p: Double, t: Double, x: Double) =>
-      solve(IaconoMarziano.Comp(elements, wt.toArray), p, t, x))
+    val grid = Grid(isobars, (0 to nPoints).map(_.toDouble / nPoints))
+      .spark(samples, elements.toIndexedSeq)
+    if (model != "allison2022") solubility(elements.toIndexedSeq, model).spark(grid)
+    else {
+      val sol = udf((wt: Seq[Double], p: Double, t: Double, x: Double) =>
+        (Allison.h2oSolubility(t, p, x),
+          Allison.co2Solubility(IaconoMarziano.Comp(elements, wt.toArray), t, p, x)))
+      grid.withColumn("sol", sol(array(elements.map(col).toIndexedSeq: _*),
+          col("P_bar"), col("T_K"), col("xfl")))
+        .select(col("sample_id"), col("P_bar"), col("xfl"),
+          col("sol._1").as("H2O"), col("sol._2").as("CO2"))
+    }
   }
 
   /** Smooth isobar curves (`_isobar_interpolate`, `isobars.py:107-120`):
@@ -150,7 +182,7 @@ object Isobars {
           (h2o, f(h2o))
         }
       }
-    })
+    }).withName("isobar_spline_fit")
     grid
       .select(col("sample_id"), col("P_bar"),
         struct(col("xfl"), col("H2O"), col("CO2")).as("pt"))

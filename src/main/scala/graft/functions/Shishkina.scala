@@ -79,14 +79,11 @@ object Shishkina {
   }
 
   /** Partial CO2 pressure (bar) holding the CO2 wt.% — eq. 13 inverts in
-    * closed form (pure power law in fCO2). The ln argument is guarded
-    * too, not only the branch: `Cse` may hoist a branch's subtree out of
-    * its If, and DuckDB's ln raises at 0. */
+    * closed form (pure power law in fCO2). */
   def co2SaturationE(m: CompCtx): E = {
     val co2 = m.wt("CO2")
-    val nonZero = If(co2 === Lit(0.0), Lit(1.0), co2)
     If(co2 === Lit(0.0), Lit(0.0),
-      exp((ln(nonZero * Lit(1e4)) + Lit(1.345) - Lit(6.71) * piStar(m, total(m))) /
+      exp((ln(co2 * Lit(1e4)) + Lit(1.345) - Lit(6.71) * piStar(m, total(m))) /
         Lit(1.150)) * Lit(10.0))
   }
 

@@ -2,7 +2,7 @@ package graft.functions
 
 /** Root-finding primitives used inside row-local UDFs — ports of the
   * scipy.optimize calls the reference makes (`brentq`, secant
-  * `root_scalar(x0,x1)`, 2-D `root`). Deterministic, allocation-free.
+  * `root_scalar(x0,x1)`). Deterministic, allocation-free.
   */
 object Solver {
 
@@ -66,37 +66,5 @@ object Solver {
       i += 1
     }
     b
-  }
-
-  /** Damped 2-D Newton with forward-difference Jacobian (stand-in for
-    * scipy.optimize.root(hybr); same fixed points, documented algorithmic
-    * difference). Returns the solution vector. */
-  def newton2d(f: (Double, Double) => (Double, Double),
-               x0: Double, y0: Double,
-               clampX: Double => Double = identity,
-               clampY: Double => Double = identity,
-               tol: Double = 1e-9, maxIter: Int = 100): (Double, Double) = {
-    var x = x0; var y = y0
-    var i = 0
-    while (i < maxIter) {
-      val (f1, f2) = f(x, y)
-      if (math.abs(f1) < tol && math.abs(f2) < tol) return (x, y)
-      val hx = math.max(1e-8, math.abs(x) * 1e-7)
-      val hy = math.max(1e-8, math.abs(y) * 1e-7)
-      val (f1x, f2x) = f(clampX(x + hx), y)
-      val (f1y, f2y) = f(x, clampY(y + hy))
-      val j11 = (f1x - f1) / hx; val j12 = (f1y - f1) / hy
-      val j21 = (f2x - f2) / hx; val j22 = (f2y - f2) / hy
-      val det = j11 * j22 - j12 * j21
-      if (det == 0.0 || det.isNaN) return (x, y)
-      var dx = -(f1 * j22 - f2 * j12) / det
-      var dy = -(j11 * f2 - j21 * f1) / det
-      // dampen large steps
-      val scale = math.min(1.0, 0.5 * math.abs(x) / (math.abs(dx) + 1e-30))
-      if (scale < 1.0) { dx *= scale; dy *= scale }
-      x = clampX(x + dx); y = clampY(y + dy)
-      i += 1
-    }
-    (x, y)
   }
 }

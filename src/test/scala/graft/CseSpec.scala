@@ -86,4 +86,47 @@ class CseSpec extends SparkSpec {
       Loop(Seq("_r" -> root), Nil, Nil, C("_r") > Lit(0.0), 1, C("_r"))
     }
   }
+
+  test("a serialised loop comes back equal, and is built once per JVM") {
+    def roundTrip(x: AnyRef): AnyRef = {
+      val b = new java.io.ByteArrayOutputStream
+      val o = new java.io.ObjectOutputStream(b)
+      o.writeObject(x)
+      o.close()
+      new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(b.toByteArray)).readObject()
+    }
+    val (a, b) = (roundTrip(root), roundTrip(Stage(Seq("y" -> (root + Lit(1.0))))))
+    // Lit(NaN) equals no Lit, so the trees compare as text
+    assert(a.toString == root.toString && (a ne root))
+    assert(a eq b.asInstanceOf[Stage].cols.head._2.children.head)
+  }
+
+  test("a division inside a loop renders Java's value at a zero divisor") {
+    val l = Loop(Seq("_q" -> C("a") / C("b"), "_h" -> C("a") / Lit(2.0)), Nil, Nil,
+      Lit(0.0) < Lit(0.0), 0, C("_q") + C("_h"))
+    val sql = Pipeline.toSql("t", Seq(Stage(Seq("y" -> l))), Nil)
+    // where DuckDB's quotient is NULL (a zero divisor), the dividend times
+    // the infinity of the zero's sign: Java's ±Infinity, NaN for 0 or NaN
+    assert(sql.contains("""coalesce(("a" / "b"), ("a" * (CASE signbit("b") WHEN true """ +
+      """THEN '-Infinity'::DOUBLE WHEN false THEN 'Infinity'::DOUBLE END)))"""), sql)
+    // a non-zero literal divisor stays a plain division
+    assert(sql.contains("""("a" / 2.0e0)"""), sql)
+    // outside a loop a division is DuckDB's, NULL at 0 like Spark's
+    assert(E.toSql(C("a") / C("b")) == """("a" / "b")""")
+  }
+
+  test("ln, log10 and sqrt render safe to evaluate on every row") {
+    // outside a loop: NULL at and below 0 like Spark's Log; sqrt NaN below 0
+    assert(E.toSql(ln(C("a"))) == """(CASE WHEN "a" > 0.0e0 THEN ln("a") END)""")
+    assert(E.toSql(log10(C("a"))) == """(CASE WHEN "a" > 0.0e0 THEN log10("a") END)""")
+    assert(E.toSql(sqrt(C("a"))) ==
+      """(CASE WHEN "a" >= 0.0e0 THEN sqrt("a") ELSE 'NaN'::DOUBLE END)""")
+    // and Spark agrees: null for ln at 0 and -1, NaN for sqrt(-1)
+    import spark.implicits._
+    val r = Seq(0.0, -1.0).toDF("a")
+      .select(E.toColumn(ln(C("a"))), E.toColumn(log10(C("a"))), E.toColumn(sqrt(C("a"))))
+      .collect()
+    assert(r.forall(row => row.isNullAt(0) && row.isNullAt(1)), r.toSeq)
+    assert(r(0).getDouble(2) == 0.0 && r(1).getDouble(2).isNaN, r.toSeq)
+  }
 }

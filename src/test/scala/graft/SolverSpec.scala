@@ -16,12 +16,6 @@ class SolverSpec extends AnyFunSuite {
     assert(math.abs(Solver.secant(x => x * x * x - 8.0, 1.0, 2.5) - 2.0) < 1e-8)
   }
 
-  test("newton2d solves a coupled system") {
-    // x + y = 3, x * y = 2 -> (2, 1) from a start biased toward x
-    val (x, y) = Solver.newton2d((a, b) => (a + b - 3.0, a * b - 2.0), 2.5, 0.5)
-    assert(math.abs(x + y - 3.0) < 1e-7 && math.abs(x * y - 2.0) < 1e-7)
-  }
-
   test("QFM full equals the O'Neill 1-bar polynomial at P = 1 bar") {
     for (t <- Seq(1200.0, 1400.0, 1600.0)) {
       val full = QfmFull.fO2(t, 1.0)
