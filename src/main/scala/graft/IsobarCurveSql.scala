@@ -17,7 +17,7 @@ package graft
   *    `Pipeline.toSql` and nested as the `pts` CTE;
   *  - the knot lists ride DuckDB LIST columns (`list(x ORDER BY xf)`), so
   *    per-curve state is data, not column fan-out — none of the
-  *    projection-blowup hazards [[AllisonSql]] documents apply;
+  *    projection-blowup hazards ARCHITECTURE's loop node lists apply;
   *  - elimination is a recursive CTE over the pivot column k carrying the
   *    matrix as LIST<LIST<DOUBLE>> padded to 11 x 11: pivot selection
   *    (first index attaining the max |a[r][k]|, exactly Scala's strict->

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.expr.{C, E, Lit}
-import graft.functions.{Fe3Fe2Iterative, IaconoMarziano, Isobars, QfmFull, Shishkina}
+import graft.functions.{Allison, Fe3Fe2Iterative, IaconoMarziano, Isobars, QfmFull, Shishkina}
 import graft.models.{CompCtx, Fo2Buffers}
 import graft.Queries.Q
 
@@ -98,22 +98,14 @@ object SolverQueries {
       m.withStage(Seq("sample_id" -> C("sample_id"),
         "P_sat_bar" -> E.round(p, 4), "X_fluid" -> E.round(x, 6)))
     },
-    // Third solubility model family. Full oracle: the 2-D fsolve decouples
-    // into three monotone 1-D bisections (see Allison.mixedSaturation);
-    // AllisonSql renders them — including the MRK cubic-root branches and
-    // the >4 kbar Saxena correction — as recursive CTEs.
-    Q("q_saturation_allison", (s, dir) => {
-      val sat = udf((wt: Seq[Double], tK: Double) => {
-        val (p, x) = graft.functions.Allison
-          .mixedSaturation(IaconoMarziano.Comp(meltEls, wt.toArray), tK)
-        (p, x)
-      })
-      Tables.meltsRangedDF(s, dir)
-        .withColumn("sat", sat(wtArray, col("T_K")))
-        .select(col("sample_id"), round(col("sat._1"), 4).as("P_sat_bar"),
-          round(col("sat._2"), 6).as("X_fluid"))
-        .orderBy("sample_id")
-    }, Some(AllisonSql.sql)),
+    // Third solubility model family: the 2-D fsolve decouples into
+    // monotone 1-D bisections over the MRK fugacity chain, in stages
+    // (Allison.mixedSaturationE).
+    Queries.meltQ("q_saturation_allison") { m =>
+      val s = Allison.mixedSaturationE(mctx, C("T_K"))
+      s.stages.foldLeft(m)(_ derive _).withStage(Seq("sample_id" -> C("sample_id"),
+        "P_sat_bar" -> E.round(s.p, 4), "X_fluid" -> E.round(s.x, 6)))
+    },
     // Iterative Fe3Fe2 models: per-row fixed point (activities depend on
     // speciation), fO2 from QFM 1-bar. oneill2006/armstrong2019 are Loops;
     // deng2020/sun2024-deng mirror their EOS-integral dVdP lattice +

@@ -212,31 +212,27 @@ final class Melt(val mdf: MagmaDF, config: MagmaConfig = MagmaConfig.get) {
 
   /** EP2 flagship: volatile saturation pressure (mixed H2O-CO2), dispatched
     * on `config.volatileSolubility` (reference `volatile_solubility/
-    * calculate_volatiles.py:8-20` `get_solubility_model`). Iacono-Marziano
-    * and Shishkina run as native columns (a loop both outputs read runs
-    * once per row); allison2022 as a per-row UDF. */
-  def volatileSaturationPressure(tCol: String = "T_K"): DataFrame =
-    config.volatileSolubility match {
+    * calculate_volatiles.py:8-20` `get_solubility_model`). Every model
+    * runs as native columns, its solver stages first (a loop both outputs
+    * read runs once per row). */
+  def volatileSaturationPressure(tCol: String = "T_K"): DataFrame = {
+    val (stages, p, x) = config.volatileSolubility match {
+      case "iaconomarziano2012" =>
+        val (p, x) = graft.functions.IaconoMarziano.mixedSaturationE(ctx, C(tCol))
+        (Nil, p, x)
+      case "shishkina2014" =>
+        val (p, x) = graft.functions.Shishkina.mixedSaturationE(ctx)
+        (Nil, p, x)
       case "allison2022" =>
-        val els = mdf.staged.schema.elements.toArray
-        val sat = org.apache.spark.sql.functions.udf((wt: Seq[Double], tK: Double) =>
-          graft.functions.Allison.mixedSaturation(
-            graft.functions.IaconoMarziano.Comp(els, wt.toArray), tK))
-        df.withColumn("sat",
-            sat(org.apache.spark.sql.functions.array(els.map(col): _*), col(tCol)))
-          .withColumn("P_sat_bar", col("sat._1"))
-          .withColumn("X_fluid", col("sat._2")).drop("sat")
-      case model =>
-        val (p, x) = model match {
-          case "iaconomarziano2012" =>
-            graft.functions.IaconoMarziano.mixedSaturationE(ctx, C(tCol))
-          case "shishkina2014" => graft.functions.Shishkina.mixedSaturationE(ctx)
-          case other => throw new IllegalArgumentException(s"solubility model $other")
-        }
-        val kept = df.columns.filterNot(Set("P_sat_bar", "X_fluid")).map(c => c -> (C(c): E))
-        Pipeline.applySpark(df,
-          Cse.expand(Stage(kept.toSeq ++ Seq("P_sat_bar" -> p, "X_fluid" -> x))))
+        val s = graft.functions.Allison.mixedSaturationE(ctx, C(tCol))
+        (s.stages, s.p, s.x)
+      case other => throw new IllegalArgumentException(s"solubility model $other")
     }
+    val kept = df.columns.filterNot(Set("P_sat_bar", "X_fluid")).map(c => c -> (C(c): E)).toSeq
+    val solved = stages.foldLeft(df)((d, st) =>
+      d.select(col("*") +: st.map { case (n, e) => E.toColumn(e).as(n) }: _*))
+    Pipeline.applySpark(solved, Cse.expand(Stage(kept ++ Seq("P_sat_bar" -> p, "X_fluid" -> x))))
+  }
 
   /** Tetrahedral cations / NBO / NBO_T columns (`melt.py:113-161`). */
   def polymerisation: DataFrame = {

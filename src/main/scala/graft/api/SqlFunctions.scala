@@ -21,23 +21,27 @@ object SqlFunctions {
 
   def register(spark: SparkSession): Unit = {
     val els = elements
-    def comp(wt: Seq[Double]): IaconoMarziano.Comp =
-      IaconoMarziano.Comp(els, wt.toArray)
+    val ctx = graft.models.CompCtx(els.toVector)
+    val t = graft.expr.C("T_K")
+    /** P_sat after a mixed-saturation model's solver `stages`, over the
+      * composition array and T_K; its evaluators are built once. */
+    def saturation(stages: Seq[Seq[(String, graft.expr.E)]],
+                   p: graft.expr.E): (Seq[Double], Double) => Double = {
+      val f = graft.expressions.LoopExpression.staged(stages, p, els.toSeq :+ "T_K")
+      (wt, tK) => f((wt :+ tK).toArray)
+    }
 
     spark.udf.register("qfm_log10_fo2",
       (tK: Double, pBar: Double) => math.log10(QfmFull.fO2(tK, pBar)))
     spark.udf.register("iw_log10_fo2",
       (tK: Double, pBar: Double) => math.log10(IwFull.fO2(tK, pBar)))
-    val im = graft.expressions.LoopExpression.evaluator(
-      IaconoMarziano.mixedSaturationE(graft.models.CompCtx(els.toVector),
-        graft.expr.C("T_K"))._1, els.toSeq :+ "T_K")
     spark.udf.register("saturation_pressure_im",
-      (wt: Seq[Double], tK: Double) => im((wt :+ tK).toArray))
-    spark.udf.register("saturation_pressure_allison",
-      (wt: Seq[Double], tK: Double) =>
-        Allison.mixedSaturation(comp(wt), tK)._1)
-    spark.udf.register("saturation_pressure_shishkina",
-      (wt: Seq[Double]) => Shishkina.mixedSaturation(comp(wt))._1)
+      saturation(Nil, IaconoMarziano.mixedSaturationE(ctx, t)._1))
+    val al = Allison.mixedSaturationE(ctx, t)
+    spark.udf.register("saturation_pressure_allison", saturation(al.stages, al.p))
+    // Shishkina's laws read no temperature
+    val sh = saturation(Nil, Shishkina.mixedSaturationE(ctx)._1)
+    spark.udf.register("saturation_pressure_shishkina", (wt: Seq[Double]) => sh(wt, Double.NaN))
     for (m <- Seq("deng2020", "sun2024"))
       spark.udf.register(s"fe3fe2_$m", Fe3Fe2Iterative.udf(els, m))
     for (m <- Fe3Fe2Iterative.loops.keys) {

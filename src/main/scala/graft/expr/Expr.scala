@@ -52,7 +52,14 @@ sealed trait E extends Node {
   }
 }
 final case class C(name: String) extends E                       // column ref
-final case class Lit(v: Double) extends E                        // double literal
+final case class Lit(v: Double) extends E {                      // double literal
+  // equal by bits, as a double literal renders: NaN is itself, 0.0 is not -0.0
+  override def equals(o: Any): Boolean = o match {
+    case Lit(w) => java.lang.Double.doubleToLongBits(v) == java.lang.Double.doubleToLongBits(w)
+    case _      => false
+  }
+  override def hashCode: Int = java.lang.Double.hashCode(v)
+}
 final case class ILit(v: Long) extends E                         // integer literal
 final case class SLit(v: String) extends E                       // string literal
 final case class Bin(op: String, l: E, r: E) extends E           // + - * / %
@@ -66,7 +73,9 @@ final case class Raw(column: Column, sql: String) extends E      // escape hatch
   * `maxIter` rounds ran and `cond` holds, `step` runs its assignments in
   * order (a name not in `init` is a temporary of the round); `result`
   * reads the lets and the final state. A bound name is visible only after
-  * its binding, and a loop holds no loop.
+  * its binding, and a loop holds no loop. No two of its names, bound or
+  * read from the input, differ only in case: DuckDB resolves quoted names
+  * without regard to case.
   *
   * Inside a loop both backends compute with Java's double semantics: a
   * comparison with NaN is false, `ln`/`log10`/`sqrt` return Java's values
@@ -114,6 +123,8 @@ final case class Loop(lets: Seq[(String, E)], init: Seq[(String, E)],
     val after = seq(seq(Set.empty, lets), init)
     seq(after, step)
     Seq(cond, result).foreach(check(after))
+    val alike = (bound.toSeq ++ E.freeVars(this)).groupBy(_.toLowerCase).values.filter(_.size > 1)
+    require(alike.isEmpty, s"loop names differ only in case: ${alike.map(_.sorted).mkString(", ")}")
   }
 }
 
@@ -174,6 +185,12 @@ object E {
   def log10(a: E): E = Fn("log10", List(a))
   def sqrt(a: E): E = Fn("sqrt", List(a))
   def cos(a: E): E = Fn("cos", List(a))
+  def atan(a: E): E = Fn("atan", List(a))
+  /** Nearest integer, ties to even (Java's `Math.rint`). */
+  def rint(a: E): E = Fn("rint", List(a))
+  /** Java's `Math.ulp`, for finite values below `Double.MaxValue`; only a
+    * [[Loop]] computes it. */
+  def ulp(a: E): E = Fn("ulp", List(a))
   def abs(a: E): E = Fn("abs", List(a))
   def pow(a: E, b: E): E = Fn("pow", List(a, b))
   def least(xs: E*): E = Fn("least", xs.toList)
@@ -221,6 +238,8 @@ object E {
     case Fn("log10", List(a))    => F.log10(toColumn(a))
     case Fn("sqrt", List(a))     => F.sqrt(toColumn(a))
     case Fn("cos", List(a))      => F.cos(toColumn(a))
+    case Fn("atan", List(a))     => F.atan(toColumn(a))
+    case Fn("rint", List(a))     => F.rint(toColumn(a))
     case Fn("abs", List(a))      => F.abs(toColumn(a))
     case Fn("pow", List(a, b))   => F.pow(toColumn(a), toColumn(b))
     case Fn("least", xs)         => F.least(xs.map(toColumn): _*)
@@ -291,6 +310,11 @@ object E {
         val x = r(a)
         s"(CASE WHEN $x >= 0.0e0 THEN sqrt($x) ELSE 'NaN'::DOUBLE END)"
       case Fn("round", List(a, ILit(d))) => s"round(${r(a)}, $d)"
+      case Fn("rint", List(a)) => s"round_even(${r(a)}, 0)"
+      case Fn("ulp", List(a)) if java => // the gap above |x|
+        val x = s"abs(${r(a)})"
+        s"(nextafter($x, 'Infinity'::DOUBLE) - $x)"
+      case Fn("ulp", _) => throw new IllegalArgumentException("ulp renders only inside a Loop")
       case Fn("md5_str", List(a)) => s"md5(${r(a)})"
       case Fn("seed_cp", List(a, SLit(suffix))) =>
         s"regexp_replace(${r(a)}, '(?s)(.)', " +
@@ -308,11 +332,16 @@ object E {
 
   private[expr] def condSql(c: Cond, java: Boolean): String = c match {
     case Cmp(op, l, r) if java =>
+      // DuckDB orders NaN above every number and equal to itself, so a
+      // NaN falsifies the comparison as in Java except on one side: the
+      // right of < and <=, the left of >, >= and =
       val (a, b) = (sql(l, java), sql(r, java))
-      val guards = Seq(l -> a, r -> b).collect {
-        case (x, s) if !x.isInstanceOf[Lit] && !x.isInstanceOf[ILit] => s"NOT isnan($s)"
+      val (x, s) = if (op == "<" || op == "<=") (r, b) else (l, a)
+      x match {
+        case Lit(v) if !v.isNaN => s"($a $op $b)"
+        case _: ILit            => s"($a $op $b)"
+        case _                  => s"(NOT isnan($s) AND ($a $op $b))"
       }
-      (guards :+ s"($a $op $b)").mkString("(", " AND ", ")")
     case Cmp(op, l, r)   => s"(${sql(l, java)} $op ${sql(r, java)})"
     case AndOr(op, l, r) => s"(${condSql(l, java)} $op ${condSql(r, java)})"
     case NotC(x)         => s"(NOT ${condSql(x, java)})"
@@ -333,27 +362,86 @@ object E {
 
   /** Root of `g` on [[lo, hi]] by 60 halvings: `g > 0` moves `lo` up. Rows
     * where `valid` fails skip the loop and give `invalid`. `g` and `valid`
-    * may read the `lets`. */
+    * may read the `lets`; `g(x)` may read the names `temps(x)` binds, which
+    * each round computes after `_mid`. */
   def bisect(lets: Seq[(String, E)], lo: Double, hi: Double, g: E => E,
-             valid: Cond, invalid: E = Lit(Double.NaN)): Loop = {
+             valid: Cond, invalid: E = Lit(Double.NaN),
+             temps: E => Seq[(String, E)] = _ => Nil): Loop = {
     val (l, h, m, gm) = (C("_lo"), C("_hi"), C("_mid"), C("_g"))
     Loop(lets, Seq("_lo" -> Lit(lo), "_hi" -> Lit(hi)),
-      Seq("_mid" -> (l + h) * Lit(0.5), "_g" -> g(m),
+      Seq("_mid" -> (l + h) * Lit(0.5)) ++ temps(m) ++ Seq("_g" -> g(m),
         "_lo" -> If(gm > Lit(0.0), m, l), "_hi" -> If(gm > Lit(0.0), h, m)),
       valid, 60, If(valid, (l + h) * Lit(0.5), invalid))
   }
 
-  /** Secant iteration from (x0, x1) with `Solver.secant`'s exits: while
-    * |f(b)| > `tol` and f(b) differs from f(a), at most `maxIter` rounds;
-    * gives the last iterate b. A NaN f(b) ends it. `f` may read the
-    * `lets`. */
-  def secant(lets: Seq[(String, E)], x0: Double, x1: Double, f: E => E,
-             tol: Double = 1e-10, maxIter: Int = 100): Loop = {
-    val (a, fa, b, fb) = (C("_a"), C("_fa"), C("_b"), C("_fb"))
-    Loop(lets, Seq("_a" -> Lit(x0), "_fa" -> f(Lit(x0)), "_b" -> Lit(x1), "_fb" -> f(Lit(x1))),
-      Seq("_c" -> (b - fb * (b - a) / (fb - fa)), "_a" -> b, "_fa" -> fb,
-        "_b" -> C("_c"), "_fb" -> f(C("_c"))),
+  /** Secant iteration from the points `x0` and `x1`, each (x, f(x)), with
+    * `Solver.secant`'s exits: while |f(b)| > `tol` and f(b) differs from
+    * f(a), at most `maxIter` rounds; gives the last iterate b. A NaN f(b)
+    * ends it. `f` may read the `lets`, and `f(x)` the names `temps(x)`
+    * binds. */
+  def secant(lets: Seq[(String, E)], x0: (E, E), x1: (E, E), f: E => E,
+             tol: Double = 1e-10, maxIter: Int = 100,
+             temps: E => Seq[(String, E)] = _ => Nil): Loop = {
+    val (a, fa, b, fb, c) = (C("_a"), C("_fa"), C("_b"), C("_fb"), C("_c"))
+    Loop(lets, Seq("_a" -> x0._1, "_fa" -> x0._2, "_b" -> x1._1, "_fb" -> x1._2),
+      Seq("_c" -> (b - fb * (b - a) / (fb - fa))) ++ temps(c) ++
+        Seq("_a" -> b, "_fa" -> fb, "_b" -> c, "_fb" -> f(c)),
       abs(fb) > Lit(tol) && NotC(fb - fa === Lit(0.0)), maxIter, b)
+  }
+
+  /** Brent's method on the bracket `a`, `b`, each (x, f(x)), performing
+    * `Solver.brent`'s operations in its order: an endpoint where f is 0 is
+    * the root, and a bracket whose f values do not differ in sign gives
+    * NaN. Rows where `valid` fails skip the loop and give `invalid`. `f`
+    * may read the `lets`, and `f(x)` the names `temps(x)` binds.
+    *
+    * The state is the kernel's at the top of its round; the swap that
+    * opens a round is recomputed where the condition and the result need
+    * it, since the kernel returns the swapped iterate when it converges
+    * and the unswapped one after `maxIter` rounds. */
+  def brent(lets: Seq[(String, E)], a: (E, E), b: (E, E), f: E => E, valid: Cond,
+            invalid: E = Lit(Double.NaN), temps: E => Seq[(String, E)] = _ => Nil,
+            tol: Double = 1e-12, maxIter: Int = 200): Loop = {
+    def v(n: String): E = C(s"_$n")
+    def neg(x: E): E = x * Lit(-1.0) // -x but for NaN
+    val sw = abs(v("fc")) < abs(v("fb"))
+    val swap = Seq("a1" -> If(sw, v("b"), v("a")), "b1" -> If(sw, v("c"), v("b")),
+      "c1" -> If(sw, v("b"), v("c")), "fa1" -> If(sw, v("fb"), v("fa")),
+      "fb1" -> If(sw, v("fc"), v("fb")), "fc1" -> If(sw, v("fb"), v("fc")))
+    val open = swap.toMap
+    def tol1(b1: E): E = Lit(2.0) * ulp(abs(b1)) + Lit(0.5 * tol)
+    val converged = abs(Lit(0.5) * (open("c1") - open("b1"))) <= tol1(open("b1")) ||
+      open("fb1") === Lit(0.0)
+    val bracketed = NotC(a._2 === Lit(0.0)) && NotC(b._2 === Lit(0.0)) &&
+      a._2 * b._2 < Lit(0.0)
+    val (xm, t1, p, q) = (v("xm"), v("t1"), v("p"), v("q2"))
+    val interpolate = abs(v("e")) >= t1 && abs(v("fa1")) > abs(v("fb1"))
+    val take = Lit(2.0) * p < Lit(3.0) * xm * q - abs(t1 * q) && Lit(2.0) * p < abs(v("e") * q)
+    val same = v("fb") > Lit(0.0) && v("fc1") > Lit(0.0) ||
+      NotC(v("fb") > Lit(0.0)) && NotC(v("fc1") > Lit(0.0))
+    val inverse = v("a1") === v("c1")
+    def named(as: Seq[(String, E)]) = as.map { case (n, e) => s"_$n" -> e }
+    val step = named(swap ++ Seq(
+      "t1" -> tol1(v("b1")), "xm" -> Lit(0.5) * (v("c1") - v("b1")),
+      "s" -> v("fb1") / v("fa1"), "q0" -> v("fa1") / v("fc1"), "r" -> v("fb1") / v("fc1"),
+      "p0" -> If(inverse, Lit(2.0) * xm * v("s"), v("s") * (Lit(2.0) * xm * v("q0") *
+        (v("q0") - v("r")) - (v("b1") - v("a1")) * (v("r") - Lit(1.0)))),
+      "q1" -> If(inverse, Lit(1.0) - v("s"),
+        (v("q0") - Lit(1.0)) * (v("r") - Lit(1.0)) * (v("s") - Lit(1.0))),
+      "q2" -> If(v("p0") > Lit(0.0), neg(v("q1")), v("q1")), "p" -> abs(v("p0")),
+      "d1" -> If(interpolate && take, p / q, xm), "e1" -> If(interpolate && take, v("d"), xm),
+      "a" -> v("b1"), "fa" -> v("fb1"),
+      "b" -> (v("b1") + If(abs(v("d1")) > t1, v("d1"), If(xm > Lit(0.0), t1, neg(t1)))))) ++
+      temps(v("b")) ++ named(Seq("fb" -> f(v("b")),
+        "c" -> If(same, v("a"), v("c1")), "fc" -> If(same, v("fa"), v("fc1")),
+        "d" -> If(same, v("b") - v("a"), v("d1")), "e" -> If(same, v("b") - v("a"), v("e1")),
+        "i" -> (v("i") + Lit(1.0))))
+    Loop(lets, named(Seq("a" -> a._1, "b" -> b._1, "c" -> a._1, "fa" -> a._2, "fb" -> b._2,
+        "fc" -> a._2, "d" -> (b._1 - a._1), "e" -> (b._1 - a._1), "i" -> Lit(0.0))),
+      step, valid && bracketed && NotC(converged), maxIter,
+      If(valid, If(a._2 === Lit(0.0), a._1, If(b._2 === Lit(0.0), b._1,
+        If(bracketed, If(v("i") < Lit(maxIter.toDouble), open("b1"), v("b")), Lit(Double.NaN)))),
+        invalid))
   }
 
   /** `result` over the `lets` as a loop of no rounds: a closed form that

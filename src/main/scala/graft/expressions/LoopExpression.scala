@@ -78,6 +78,17 @@ object LoopExpression {
     }
   }
 
+  /** `value` after the solver `stages` (named definitions, each reading
+    * the inputs and the definitions before it), as a function of the
+    * inputs `names`: one evaluator per definition, built once. */
+  def staged(stages: Seq[Seq[(String, E)]], value: E,
+             names: Seq[String]): Array[Double] => Double = {
+    val defs = stages.flatten
+    val each = defs.indices.map(i => evaluator(defs(i)._2, names ++ defs.take(i).map(_._1)))
+    val last = evaluator(value, names ++ defs.map(_._1))
+    xs => last(each.foldLeft(xs)((vs, f) => vs :+ f(vs)))
+  }
+
   private def bound(n: Node): Seq[String] = n match {
     case l: Loop => (l.lets ++ l.init ++ l.step).map(_._1)
     case _       => n.children.flatMap(bound)
@@ -121,7 +132,8 @@ object LoopExpression {
   /** The one-argument `java.lang.Math` functions, by E name. */
   private val math1: Map[String, Double => Double] = Map("exp" -> (Math.exp _),
     "ln" -> (Math.log _), "log10" -> (Math.log10 _), "sqrt" -> (Math.sqrt _),
-    "abs" -> ((x: Double) => Math.abs(x)), "cos" -> (Math.cos _))
+    "abs" -> ((x: Double) => Math.abs(x)), "cos" -> (Math.cos _), "atan" -> (Math.atan _),
+    "rint" -> (Math.rint _), "ulp" -> ((x: Double) => Math.ulp(x)))
   private val javaName = Map("ln" -> "log").withDefault(identity)
 
   private def unsupported(e: E): Nothing =

@@ -139,7 +139,8 @@ object IaconoMarziano {
     val accepted = abs(hs) < Lit(Double.PositiveInfinity) && hs >= Lit(0.0) &&
       abs(C("_fs")) < Lit(1e-6)
     val zero = p <= Lit(0.0) || x <= Lit(0.0)
-    Dissolved(Seq(consts(m), Seq("_imHsec" -> secant(pt, 1.0, 2.0, f)),
+    Dissolved(Seq(consts(m),
+        Seq("_imHsec" -> secant(pt, (Lit(1.0), f(Lit(1.0))), (Lit(2.0), f(Lit(2.0))), f)),
         Seq("_imH2O" -> bisect(pt ++ Seq("_fs" -> f(hs), "_flo" -> f(Lit(1e-12)),
             "_fhi" -> f(Lit(1e4))), 1e-12, 1e4, h => -f(h),
           NotC(zero) && NotC(accepted) && C("_flo") < Lit(0.0) && C("_fhi") > Lit(0.0),
@@ -218,9 +219,7 @@ object IaconoMarziano {
   private def solved(c: Comp, xFluid: Double, pBar: Double, tK: Double,
                      value: Dissolved => E): Double = {
     val d = solubility(ctx(c), Lit(xFluid), Lit(pBar), Lit(tK))
-    val vs = d.stages.flatten.foldLeft(env(c)) { case (vs, (n, e)) =>
-      vs :+ (n -> LoopExpression.eval(e, vs: _*)) }
-    LoopExpression.eval(value(d), vs: _*)
+    LoopExpression.staged(d.stages, value(d), c.names.toSeq)(c.wt)
   }
 
   def h2oSolubility(c: Comp, xFluid: Double, pBar: Double, tK: Double): Double =

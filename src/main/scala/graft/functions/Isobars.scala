@@ -128,31 +128,20 @@ object Isobars {
       case "iaconomarziano2012" => IaconoMarziano.solubility(m, x, p, t)
       case "shishkina2014" => IaconoMarziano.Dissolved(Nil,
         Shishkina.h2oSolubilityE(m, x, p), Shishkina.co2SolubilityE(m, x, p))
+      case "allison2022" => Allison.solubility(m, x, p, t)
       case other => throw new IllegalArgumentException(s"model $other")
     }
     d.stages.foldLeft(base)(_ derive _).withStage(out(d.h2o, d.co2))
   }
 
   /** Distributed (sample x P x x_fluid) grid of dissolved (H2O, CO2) for
-    * the configured model. `samples` must carry (sample_id, element wt.%
-    * columns, T_K). Iacono-Marziano and Shishkina run as native columns;
-    * allison2022 as one narrow UDF stage. */
+    * the configured model, its trees run as native columns. `samples`
+    * must carry (sample_id, element wt.% columns, T_K). */
   def isobarGrid(samples: DataFrame, elements: Array[String],
                  isobars: Seq[Double], nPoints: Int = 10,
-                 model: String = "iaconomarziano2012"): DataFrame = {
-    val grid = Grid(isobars, (0 to nPoints).map(_.toDouble / nPoints))
-      .spark(samples, elements.toIndexedSeq)
-    if (model != "allison2022") solubility(elements.toIndexedSeq, model).spark(grid)
-    else {
-      val sol = udf((wt: Seq[Double], p: Double, t: Double, x: Double) =>
-        (Allison.h2oSolubility(t, p, x),
-          Allison.co2Solubility(IaconoMarziano.Comp(elements, wt.toArray), t, p, x)))
-      grid.withColumn("sol", sol(array(elements.map(col).toIndexedSeq: _*),
-          col("P_bar"), col("T_K"), col("xfl")))
-        .select(col("sample_id"), col("P_bar"), col("xfl"),
-          col("sol._1").as("H2O"), col("sol._2").as("CO2"))
-    }
-  }
+                 model: String = "iaconomarziano2012"): DataFrame =
+    solubility(elements.toIndexedSeq, model).spark(Grid(isobars,
+      (0 to nPoints).map(_.toDouble / nPoints)).spark(samples, elements.toIndexedSeq))
 
   /** Smooth isobar curves (`_isobar_interpolate`, `isobars.py:107-120`):
     * per (sample, P) spline of CO2 over H2O sampled at 10x knot density,

@@ -235,18 +235,31 @@ class ApiSpec extends SparkSpec {
     melt.df.createOrReplaceTempView("melts_sql_test")
     val arr = SqlFunctions.elements.map(e => s"`$e`").mkString("array(", ", ", ")")
     val rows = spark.sql(
-      s"""SELECT sample_id,
+      s"""SELECT sample_id, T_K_calc, $arr AS wt,
          |  qfm_log10_fo2(T_K_calc, P_bar) AS logf,
          |  saturation_pressure_im($arr, T_K_calc) AS psat,
+         |  saturation_pressure_allison($arr, T_K_calc) AS psat_al,
+         |  saturation_pressure_shishkina($arr) AS psat_sh,
          |  fe3fe2_sun2024($arr, T_K_calc, P_bar,
          |    power(10.0, qfm_log10_fo2(T_K_calc, P_bar))) AS fe3fe2
          |FROM melts_sql_test""".stripMargin).collect()
     assert(rows.length == 3)
+    def bits(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
     for (r <- rows) {
       assert(r.getAs[Double]("logf") < 0 && r.getAs[Double]("logf") > -15)
       assert(r.getAs[Double]("psat") > 0)
       val f = r.getAs[Double]("fe3fe2")
       assert(f > 0 && f < 10, s"fe3fe2=$f")
+      // the three saturation functions give their scalar entry points' bits
+      val c = graft.functions.IaconoMarziano.Comp(SqlFunctions.elements,
+        r.getAs[Seq[Double]]("wt").toArray)
+      val t = r.getAs[Double]("T_K_calc")
+      assert(bits(r.getAs[Double]("psat")) ==
+        bits(graft.functions.IaconoMarziano.mixedSaturation(c, t)._1))
+      assert(bits(r.getAs[Double]("psat_al")) ==
+        bits(graft.functions.Allison.mixedSaturation(c, t)._1))
+      assert(bits(r.getAs[Double]("psat_sh")) ==
+        bits(graft.functions.Shishkina.mixedSaturation(c)._1))
     }
   }
 

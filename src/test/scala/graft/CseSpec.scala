@@ -96,9 +96,26 @@ class CseSpec extends SparkSpec {
       new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(b.toByteArray)).readObject()
     }
     val (a, b) = (roundTrip(root), roundTrip(Stage(Seq("y" -> (root + Lit(1.0))))))
-    // Lit(NaN) equals no Lit, so the trees compare as text
-    assert(a.toString == root.toString && (a ne root))
+    assert(a == root && (a ne root))
     assert(a eq b.asInstanceOf[Stage].cols.head._2.children.head)
+  }
+
+  test("literals are equal by bits, so two loops built apart are one loop") {
+    assert(Lit(Double.NaN) == Lit(Double.NaN) && Lit(0.0) != Lit(-0.0))
+    def built(): Loop = bisect(Seq("_s" -> (C("a") / Lit(60.0) + C("b"))), 0.0, 100.0,
+      m => m * m - C("_s"), C("a") > Lit(0.0))
+    val (l1, l2) = (built(), built())
+    assert((l1 ne l2) && l1 == l2 && l1.hashCode == l2.hashCode)
+    val stages = Cse.expand(Stage(Seq("x" -> l1 * Lit(2.0), "y" -> (l2 + Lit(1.0)))))
+    import spark.implicits._
+    val plan = Pipeline.applySpark(spark.sparkContext.parallelize(Seq((48.2, 9.1)))
+        .toDF("a", "b"), stages)
+      .queryExecution.executedPlan
+    val planned = plan.collect { case p => p.expressions.flatMap(_.collect {
+      case l: graft.expressions.LoopExpression => l }) }.flatten
+    assert(planned.size == 1, plan)
+    val sql = Pipeline.toSql("t", stages, Nil)
+    assert("""s\d+_l\d+ AS \(""".r.findAllIn(sql).size == 1, sql)
   }
 
   test("a division inside a loop renders Java's value at a zero divisor") {

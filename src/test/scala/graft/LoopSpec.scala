@@ -27,7 +27,7 @@ class LoopSpec extends SparkSpec {
       "q_kd_blundy2020", "q_kd_saper2022", "q_fe3fe2_oneill2006_iterative",
       "q_fe3fe2_armstrong2019_iterative", "q_saturation_h2o", "q_saturation_co2",
       "q_saturation_mixed", "q_solubility_mixed", "q_isobars",
-      "q_isobar_curves").subsetOf(qs.toSet), qs)
+      "q_isobar_curves", "q_saturation_allison").subsetOf(qs.toSet), qs)
     qs.toSeq.sorted
   }
 
@@ -115,6 +115,33 @@ class LoopSpec extends SparkSpec {
       assert(udfs(df).distinct == allowed,
         s"$q plans a UDF:\n${df.queryExecution.executedPlan}")
     }
+  }
+
+  test("every loop query's generated loop methods stay under HotSpot's " +
+      "8000-byte JIT limit") {
+    import org.apache.spark.sql.catalyst.expressions.codegen.{CodeAndComment, CodeGenerator}
+    for (q <- loopQueries; l <- planning[LoopExpression](Queries.queries(q)(spark, sf))
+        .flatMap(_.expressions.flatMap(_.collect { case e: LoopExpression => e.loop })).distinct) {
+      val names = E.freeVars(l)
+      val body = s"""public Object generate(Object[] references) { return null; }
+         |private double loop(${names.indices.map(i => s"double a$i").mkString(", ")}) {
+         |${LoopExpression.javaBody(l, names)}
+         |}""".stripMargin
+      val size = CodeGenerator.compile(new CodeAndComment(body, Map.empty))._2.maxMethodCodeSize
+      assert(size < 8000, s"$q: a loop method of $size bytes")
+    }
+  }
+
+  test("loop names that differ only in case are rejected") {
+    intercept[IllegalArgumentException] { // two bound names
+      Loop(Seq("_k" -> C("a"), "_K" -> Lit(1.0)), Nil, Nil, Lit(0.0) < Lit(0.0), 0, C("_k"))
+    }
+    intercept[IllegalArgumentException] { // a bound name and a column it reads
+      Loop(Seq("t_k" -> C("T_K")), Nil, Nil, Lit(0.0) < Lit(0.0), 0, C("t_k"))
+    }
+    // a state name assigned again by the step is one name
+    assert(E.bisect(Nil, 0.0, 1.0, m => m - C("T_K"), C("T_K") > Lit(0.0)).state ==
+      Seq("_lo", "_hi"))
   }
 
   test("scalar entry points evaluate the same tree as the column") {
