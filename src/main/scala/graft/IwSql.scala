@@ -18,8 +18,9 @@ import graft.functions.IwFull
   * DISTINCT (T, P) via an ordered list fold. The only deliberate
   * non-bit-mirror is the trapezoid term summation (list_sum vs the Scala
   * running sum — reassociation error ~1e-14 relative against a round(6)
-  * output grid on log10 fO2). Everything else follows the dual-compilation
-  * discipline of [[QfmSql]].
+  * output grid on log10 fO2). Everything else computes the engine's
+  * operations in the engine's order: every T-independent constant comes
+  * from the same Scala arithmetic, baked as an e-notation literal.
   */
 object IwSql {
 

@@ -8,29 +8,24 @@ import graft.models.{CompCtx, Fo2Buffers}
 import graft.Queries.Q
 
 /** Solver-backed operators. Every query carries a full DuckDB oracle: the
-  * solver loops are deterministic fixed-step bisections / Picard
-  * iterations dual-compiled as recursive CTEs — written as
-  * [[graft.expr.Loop]]s and rendered by `Pipeline.toSql`, or still by hand
-  * (`*Sql.scala`), including the not-a-knot spline assembly
-  * ([[IsobarCurveSql]]).
+  * solvers are deterministic bisections, secants and Picard iterations
+  * written as [[graft.expr.Loop]]s and rendered by `Pipeline.toSql` as
+  * recursive CTEs, or still by hand: the IW buffer ([[IwSql]]) and the
+  * not-a-knot spline assembly ([[IsobarCurveSql]]).
   */
 object SolverQueries {
 
   private val meltEls = Tables.meltElements.toArray
 
-  private val wtArray = array(Tables.meltElements.map(col): _*)
-
   private val mctx = CompCtx(Tables.meltElements)
 
-  /** Fe3Fe2 of every melt by one iterative model, fO2 from QFM 1-bar. */
-  private def fe3Fe2Iterative(model: String)(s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = {
-    val f = Fe3Fe2Iterative.udf(meltEls, model)
-    val fO2 = E.toColumn(Fo2Buffers.qfm1bar(C("T_K")))
-    Tables.meltsRangedDF(s, dir)
-      .select(col("sample_id"),
-        round(f(wtArray, col("T_K"), col("P_bar"), fO2), 6).as("Fe3Fe2"))
-      .orderBy("sample_id")
+  /** Fe3Fe2 of every melt by one Deng-EOS model, fO2 from QFM 1-bar (a
+    * column of its own): its solver stages, then the rounded value. */
+  private def fe3Fe2Deng(name: String, model: String): Q = Queries.meltQ(name) { m =>
+    val (stages, value) = Fe3Fe2Iterative.dengModels(model)(Tables.meltElements, C("T_K"),
+      C("P_bar"), C("_fO2"))
+    stages.foldLeft(m.derive("_fO2", Fo2Buffers.qfm1bar(C("T_K"))))(_ derive _)
+      .withStage(Seq("sample_id" -> C("sample_id"), "Fe3Fe2" -> E.round(value, 6)))
   }
 
   /** The same for a model written as a [[graft.expr.Loop]]: a staged
@@ -70,18 +65,19 @@ object SolverQueries {
       d.stages.foldLeft(m)(_ derive _).withStage(Seq("sample_id" -> C("sample_id"),
         "H2O_dissolved" -> E.round(d.h2o, 6), "CO2_dissolved" -> E.round(d.co2, 6)))
     },
-    // Full QFM with EOS pressure terms: one narrow per-row UDF stage with
-    // per-executor (T,P) memo caches — no shuffle, no unbounded broadcast
-    // (see the scale note on QfmFull). Full oracle: bisection transition
-    // solve + Tait/Landau VdP replicated op-for-op by QfmSql.
-    Q("q_fo2_qfm_full", (s, dir) => {
-      QfmFull.withQfm(Tables.meltsRangedDF(s, dir), "T_K", "P_bar",
-          logshift = 0.0)
+    // Full QFM with EOS pressure terms: the transition bisections (memoised
+    // per T) and the closed-form buffer, through QfmFull.withQfm (which
+    // keeps Fo2Dedup's choice between dedup-in-plan and the plain column);
+    // the oracle renders the same trees as stages.
+    Queries.meltQ("q_fo2_qfm_full") { m =>
+      QfmFull.fO2Stages.foldLeft(m)(_ derive _).withStage(Seq("sample_id" -> C("sample_id"),
+        "log10_fO2" -> E.round(E.log10(C("_qfm")), 6)))
+    }.copy(build = (s, dir) =>
+      QfmFull.withQfm(Tables.meltsRangedDF(s, dir), "T_K", "P_bar", logshift = 0.0)
         .select(col("sample_id"), round(log10(col("fO2")), 6).as("log10_fO2"))
-        .orderBy("sample_id")
-    }, Some(QfmSql.sql)),
+        .orderBy("sample_id")),
     // Full IW buffer (Hirschmann 2021): Vinet EOS + wustite equilibrium;
-    // same per-row memoised-UDF shape (IwFull caches per (T,P) internally).
+    // a per-row memoised UDF (IwFull caches per (T,P) internally).
     // Full oracle: bisection volume/wustite solves + trapezoid VdP
     // replicated by IwSql (grids on DISTINCT P, mirroring the cache).
     Q("q_fo2_iw_full", (s, dir) => {
@@ -107,17 +103,16 @@ object SolverQueries {
         "P_sat_bar" -> E.round(s.p, 4), "X_fluid" -> E.round(s.x, 6)))
     },
     // Iterative Fe3Fe2 models: per-row fixed point (activities depend on
-    // speciation), fO2 from QFM 1-bar. oneill2006/armstrong2019 are Loops;
-    // deng2020/sun2024-deng mirror their EOS-integral dVdP lattice +
-    // solvers through DengSql.
+    // speciation), fO2 from QFM 1-bar. oneill2006/armstrong2019 are one
+    // loop each; deng2020 and sun2024-deng are stages: the lattice length,
+    // the dVdP lattice integral (memoised per (T, length)), then deng2020's
+    // secant and bisection fallback, or sun2024's closed form.
     fe3Fe2Loop("oneill2006"),
     fe3Fe2Loop("armstrong2019"),
     // Reference-default sun2024 (dV="deng": EOS-integral Gamma). The
     // oracle-checked q_fe3fe2_sun2024 is the dV="parameterised" variant.
-    Q("q_fe3fe2_sun2024_deng", fe3Fe2Iterative("sun2024"),
-      Some(DengSql.sun2024)),
-    Q("q_fe3fe2_deng2020", fe3Fe2Iterative("deng2020"),
-      Some(DengSql.deng2020)),
+    fe3Fe2Deng("q_fe3fe2_sun2024_deng", "sun2024"),
+    fe3Fe2Deng("q_fe3fe2_deng2020", "deng2020"),
     // Multimodal decode: each doc gets a REAL minimal container (PNG with
     // CRC'd IHDR / JPEG with a marker scan past APP0+COM to SOF0 / GIF
     // logical screen) synthesized from its key, and the real header

@@ -21,7 +21,7 @@ final case class MagmaConfig(
     volatileSolubility: String = "iaconomarziano2012")
 
 object MagmaConfig {
-  /** Solver-backed Fe3Fe2 models, dispatched as scalar UDFs rather than
+  /** Solver-backed Fe3Fe2 models, dispatched as loop columns rather than
     * closed-form expressions (`Fe_redox/Fe3Fe2_calculate.py`). "sun2024"
     * is here because the reference's DEFAULT is `dV="deng"` (EOS-integral
     * Gamma, `Fe3Fe2_models.py:1495`); the codegen'd expression variant is
@@ -99,11 +99,14 @@ final class Melt(val mdf: MagmaDF, config: MagmaConfig = MagmaConfig.get) {
 
   /** withColumn + register the new column as passthrough so later
     * conversions carry it. */
-  private def addCol(as: String, c: Column): Melt = {
+  private def addCol(as: String, c: Column): Melt = withAdded(df.withColumn(as, c), as)
+
+  /** `out`, this melt with column `as` added, with `as` registered. */
+  private def withAdded(out: DataFrame, as: String): Melt = {
     val sch = mdf.staged.schema
     val st = mdf.staged.copy(schema =
       sch.copy(passthrough = sch.passthrough :+ as))
-    new Melt(MagmaDF(df.withColumn(as, c), st), config)
+    new Melt(MagmaDF(out, st), config)
   }
 
   /** Liquidus temperature via the configured thermometer; `offset` shifts
@@ -116,8 +119,9 @@ final class Melt(val mdf: MagmaDF, config: MagmaConfig = MagmaConfig.get) {
   /** fO2 at the configured buffer + dfO2 shift. Every buffer in
     * [[Fo2Buffers.allBuffers]] dispatches by name, mirroring the
     * reference's `calculate_fO2` (`fO2/fO2_calculate.py:11-25`): the
-    * full-EOS "qfm"/"iw" run as per-row memoised UDFs; the closed-form
-    * buffers compile to a single codegen'd expression. */
+    * full-EOS "qfm" runs its transition and buffer loops, "iw" a per-row
+    * memoised UDF; the closed-form buffers compile to a single codegen'd
+    * expression. */
   def withFO2(tCol: String = "T_K", pCol: String = "P_bar",
               as: String = "fO2"): Melt = {
     val out = config.fO2Buffer match {
@@ -127,17 +131,14 @@ final class Melt(val mdf: MagmaDF, config: MagmaConfig = MagmaConfig.get) {
       case other => df.withColumn(as,
         E.toColumn(Fo2Buffers.dispatch(other, C(tCol), C(pCol), config.dfO2)))
     }
-    val sch = mdf.staged.schema
-    val st = mdf.staged.copy(schema =
-      sch.copy(passthrough = sch.passthrough :+ as))
-    new Melt(MagmaDF(out, st), config)
+    withAdded(out, as)
   }
 
   /** Melt Fe3+/Fe2+ via the configured model (`melt.py:162-223`,
     * `Fe_redox/Fe3Fe2_calculate.py:7-39`): closed-form models compile to a
     * single codegen'd expression, oneill2006/armstrong2019 to one native
-    * loop expression, and the Deng-EOS models (deng2020/sun2024) to a
-    * narrow per-row solver UDF. */
+    * loop expression, and the Deng-EOS models (deng2020/sun2024) to their
+    * solver stages' loop columns. */
   def fe3Fe2(tCol: String = "T_K", pCol: String = "P_bar",
              fO2Col: String = "fO2", as: String = "Fe3Fe2"): Melt =
     config.fe3fe2Model match {
@@ -148,11 +149,10 @@ final class Melt(val mdf: MagmaDF, config: MagmaConfig = MagmaConfig.get) {
         addCol(as, E.toColumn(graft.functions.Fe3Fe2Iterative.loops(m)(
           graft.functions.Fe3Fe2Iterative.wtBase(mdf.staged.schema.elements),
           C(tCol), C(pCol), C(fO2Col))))
-      case m if MagmaConfig.iterativeFe3Fe2.contains(m) =>
-        val els = mdf.staged.schema.elements.toArray
-        val u = graft.functions.Fe3Fe2Iterative.udf(els, m)
-        addCol(as, u(org.apache.spark.sql.functions.array(els.map(col): _*),
-          col(tCol), col(pCol), col(fO2Col)))
+      case m if graft.functions.Fe3Fe2Iterative.dengModels.contains(m) =>
+        val (stages, value) = graft.functions.Fe3Fe2Iterative.dengModels(m)(
+          mdf.staged.schema.elements, C(tCol), C(pCol), C(fO2Col))
+        withAdded(Pipeline.derive(df, stages, as, value), as)
       case m if Fe3Fe2.closedForm.contains(m) =>
         addCol(as, E.toColumn(
           Fe3Fe2.closedForm(m)(ctx, C(tCol), C(fO2Col), C(pCol))))

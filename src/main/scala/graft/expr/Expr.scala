@@ -82,10 +82,17 @@ final case class Raw(column: Column, sql: String) extends E      // escape hatch
   * outside their domain, a division by zero gives Java's ±Infinity or NaN,
   * transcendentals are `java.lang.Math`'s. Spark runs a loop as one native
   * expression ([[graft.expressions.LoopExpression]]); [[Pipeline.toSql]]
-  * renders it as a keyed recursive CTE. */
+  * renders it as a recursive CTE over the distinct values of its free
+  * columns.
+  *
+  * A loop's result depends on its free columns alone. With `memo` set,
+  * Spark and the scalar evaluators keep each result in a bounded per-JVM
+  * memo keyed by the inputs' raw bits ([[graft.expressions.LoopExpression]]):
+  * the model code sets it on a solve whose inputs repeat across rows (one
+  * keyed by temperature), never on a per-row one. */
 final case class Loop(lets: Seq[(String, E)], init: Seq[(String, E)],
                       step: Seq[(String, E)], cond: Cond, maxIter: Int,
-                      result: E) extends E {
+                      result: E, memo: Boolean = false) extends E {
   val state: Seq[String] = init.map(_._1)
   val bound: Set[String] = (lets ++ init ++ step).map(_._1).toSet
 
@@ -106,7 +113,21 @@ final case class Loop(lets: Seq[(String, E)], init: Seq[(String, E)],
 
   def map(f: E => E, g: Cond => Cond): Loop = {
     def each(xs: Seq[(String, E)]) = xs.map { case (n, e) => n -> f(e) }
-    Loop(each(lets), each(init), each(step), g(cond), maxIter, f(result))
+    Loop(each(lets), each(init), each(step), g(cond), maxIter, f(result), memo)
+  }
+
+  /** This loop with its results memoised per JVM. */
+  def memoised: Loop = copy(memo = true)
+
+  /** This loop with each bound name `n` renamed `f(n)`. */
+  def renamed(f: String => String): Loop = {
+    def r(e: E): E = e match {
+      case C(n) if bound(n) => C(f(n))
+      case _                => e.mapChildren(r, rc)
+    }
+    def rc(c: Cond): Cond = c.mapChildren(r, rc)
+    def each(xs: Seq[(String, E)]) = xs.map { case (n, e) => f(n) -> r(e) }
+    Loop(each(lets), each(init), each(step), rc(cond), maxIter, r(result), memo)
   }
 
   locally { // lets and state are bound once; a bound name is read in scope
@@ -134,7 +155,7 @@ object Loop {
   private def bytes(l: Loop): Array[Byte] = {
     val b = new java.io.ByteArrayOutputStream
     val o = new java.io.ObjectOutputStream(b)
-    o.writeObject((l.lets, l.init, l.step, l.cond, l.maxIter, l.result))
+    o.writeObject((l.lets, l.init, l.step, l.cond, l.maxIter, l.result, l.memo))
     o.close()
     b.toByteArray
   }
@@ -149,9 +170,9 @@ object Loop {
           try Class.forName(d.getName, false, Thread.currentThread.getContextClassLoader)
           catch { case _: ClassNotFoundException => super.resolveClass(d) }
       }
-      val (lets, init, step, cond, maxIter, result) = in.readObject()
-        .asInstanceOf[(Seq[(String, E)], Seq[(String, E)], Seq[(String, E)], Cond, Int, E)]
-      Loop(lets, init, step, cond, maxIter, result)
+      val (lets, init, step, cond, maxIter, result, memo) = in.readObject().asInstanceOf[
+        (Seq[(String, E)], Seq[(String, E)], Seq[(String, E)], Cond, Int, E, Boolean)]
+      Loop(lets, init, step, cond, maxIter, result, memo)
     }
   }
 }
@@ -281,7 +302,8 @@ object E {
     * (DuckDB orders NaN above every number), `ln`/`log10` give -Infinity at
     * 0 and NaN below, a division by zero gives ±Infinity, or NaN for 0 or
     * NaN over 0 (DuckDB gives NULL; the dividend times the infinity of the
-    * zero's sign is Java's quotient), and integer literals are doubles. So a
+    * zero's sign is Java's quotient), `cos` of ±Infinity is NaN (DuckDB
+    * raises), and integer literals are doubles. So a
     * subtree `Cse` hoists out of its If branch is safe to evaluate on every
     * row. */
   def toSql(e: E): String = sql(e, java = false)
@@ -309,6 +331,9 @@ object E {
       case Fn("sqrt", List(a)) =>
         val x = r(a)
         s"(CASE WHEN $x >= 0.0e0 THEN sqrt($x) ELSE 'NaN'::DOUBLE END)"
+      case Fn("cos", List(a)) if java => // DuckDB raises on cos(±Infinity), Java gives NaN
+        val x = r(a)
+        s"cos((CASE WHEN isinf($x) THEN 'NaN'::DOUBLE ELSE $x END))"
       case Fn("round", List(a, ILit(d))) => s"round(${r(a)}, $d)"
       case Fn("rint", List(a)) => s"round_even(${r(a)}, 0)"
       case Fn("ulp", List(a)) if java => // the gap above |x|
@@ -353,7 +378,7 @@ object E {
     val acc = scala.collection.mutable.LinkedHashSet.empty[String]
     def go(n: Node, bound: Set[String]): Unit = n match {
       case C(x)    => if (!bound(x)) acc += x
-      case l: Loop => l.parts.foreach(go(_, bound ++ l.bound))
+      case l: Loop => val inner = bound ++ l.bound; l.parts.foreach(go(_, inner))
       case _       => n.children.foreach(go(_, bound))
     }
     go(e, Set.empty)
@@ -450,6 +475,56 @@ object E {
     * `StrictMath`'s, and its division by zero is null). */
   def closed(lets: Seq[(String, E)], result: E): Loop =
     Loop(lets, Nil, Nil, Lit(0.0) < Lit(0.0), 0, result)
+
+  /** Trapezoid sum, each panel times `scale`, of `value(x, r)` over the
+    * `n` lattice points x0, x0 + dx, ... (a float walk), where `r` are the
+    * results of the inner solves `solves` run at `x` in order: solve k is a
+    * loop built at point `x` from the results of the solves before it. One
+    * flattened loop: its state holds the point index `_gi`, the point
+    * `_gx`, which solve runs (`_gph`) and its rounds (`_git`), every solve's
+    * own state (names prefixed `_g<k>`), the results `_gr<k>`, the previous
+    * point and value and the sum. A round runs one step of the running
+    * solve; the round after its last step keeps its result, starts the next
+    * solve and, after the last solve, folds the point into the sum. Up to
+    * `maxPoints` points the round cap never cuts the lattice short; a loop
+    * that ends on its cap gives NaN, and so does a NaN `n`. The `lets` are
+    * per-row constants every solve may read. */
+  def grid(lets: Seq[(String, E)], n: E, x0: Double, dx: Double, maxPoints: Int,
+           scale: Double, solves: Seq[(E, Seq[E]) => Loop], value: (E, Seq[E]) => E): Loop = {
+    def v(s: String): E = C(s"_g$s")
+    val (i, x, ph, it, run) = (v("i"), v("x"), v("ph"), v("it"), v("run"))
+    val rs = solves.indices.map(k => v(s"r$k"))
+    val ls = solves.indices.map(k => solves(k)(x, rs.take(k)).renamed(m => s"_g$k$m"))
+    val last = ls.size - 1
+    def in(k: Int): Cond = ph === Lit(k.toDouble)
+    val running = run === Lit(1.0)
+    val finishing = run === Lit(0.0)
+    val state = ls.flatMap(l => l.lets ++ l.init).map(_._1).toSet
+    val done = finishing && in(last)
+    // every solve's state starts at 0, the first one's as it starts
+    val init = Seq("_gi" -> Lit(0.0), "_gx" -> Lit(x0), "_gph" -> Lit(0.0), "_git" -> Lit(0.0),
+      "_gsum" -> Lit(0.0), "_gxp" -> Lit(0.0), "_gvp" -> Lit(0.0)) ++
+      solves.indices.map(k => s"_gr$k" -> Lit(0.0)) ++ ls.head.lets ++ ls.head.init ++
+      ls.tail.flatMap(l => l.lets ++ l.init).map(_._1 -> Lit(0.0))
+    val go = ls.indices.foldRight(Lit(0.0): E) { (k, rest) =>
+      If(in(k), If(it < Lit(ls(k).maxIter.toDouble) && ls(k).cond, Lit(1.0), Lit(0.0)), rest)
+    }
+    val step = Seq("_grun" -> go) ++
+      ls.indices.flatMap(k => ls(k).step.map { case (m, e) =>
+        m -> If(running && in(k), e, if (state(m)) C(m) else Lit(0.0)) }) ++
+      Seq("_git" -> If(running, it + Lit(1.0), Lit(0.0))) ++
+      ls.indices.map(k => s"_gr$k" -> If(finishing && in(k), ls(k).result, rs(k))) ++
+      Seq("_gv" -> If(done, value(x, rs), Lit(0.0)),
+        "_gsum" -> If(done && i > Lit(0.0),
+          v("sum") + Lit(0.5) * (v("v") + v("vp")) * (x - v("xp")) * Lit(scale), v("sum")),
+        "_gxp" -> If(done, x, v("xp")), "_gvp" -> If(done, v("v"), v("vp")),
+        "_gi" -> If(done, i + Lit(1.0), i), "_gx" -> If(done, x + Lit(dx), x),
+        "_gph" -> If(finishing, If(in(last), Lit(0.0), ph + Lit(1.0)), ph)) ++
+      ls.indices.flatMap(k => (ls(k).lets ++ ls(k).init).map { case (m, e) =>
+        m -> If(finishing && in(k), e, C(m)) })
+    Loop(lets, init, step, i < n, maxPoints * ls.map(_.maxIter + 1).sum,
+      If(i >= n, v("sum"), Lit(Double.NaN)))
+  }
 
   /** Shortest decimal repr that round-trips (Java Double.toString) — DuckDB
     * parses it back to the identical IEEE double. Always rendered in
@@ -582,6 +657,13 @@ object Pipeline {
       d.select(st.cols.map { case (n, e) => toColumn(e).as(n) }: _*)
     }
 
+  /** `df` with column `name` = `value` after the solver `stages` (named
+    * definitions, each over `df`'s columns and the stages before it); the
+    * stage columns are dropped. */
+  def derive(df: DataFrame, stages: Seq[Seq[(String, E)]], name: String, value: E): DataFrame =
+    stages.foldLeft(df)((d, st) => d.withColumns(st.map { case (n, e) => n -> toColumn(e) }.toMap))
+      .withColumn(name, toColumn(value)).drop(stages.flatten.map(_._1): _*)
+
   /** The expression that produces output column `name` of the LAST stage,
     * composed back over the SOURCE table's columns by inlining each
     * stage's definitions front to back. Lets a caller key a pre-compute
@@ -621,10 +703,14 @@ object Pipeline {
     * and a final SELECT with optional ORDER BY. `source` may itself be a
     * subquery: `(SELECT ... FROM lineitem)`.
     *
-    * A stage holding [[Loop]]s first numbers its input rows in a
-    * MATERIALIZED CTE (`sI_k`, key `__rid`: a synthetic key, since source
-    * keys need not be unique), then renders each distinct loop as a
-    * recursive CTE over that key and LEFT JOINs its result back in. */
+    * A stage holding [[Loop]]s first keeps its input in a MATERIALIZED CTE
+    * (`sI_in`), then solves each distinct loop once per distinct value of
+    * its free columns: a recursive CTE over `SELECT DISTINCT` of them, LEFT
+    * JOINed back on them. DuckDB's `=` holds between 0.0 and -0.0 and
+    * between NaNs, so the key also holds each column's `signbit`: a -0.0
+    * row and a NaN row each get their own loop row. Rows with a null free
+    * column are left out of the solve and get a null result, as null in
+    * gives null out. */
   def toSql(source: String, stages: Seq[Stage], orderBy: Seq[String]): String = {
     val ctes = scala.collection.mutable.ArrayBuffer.empty[String]
     def select(cols: Seq[(String, E)]): String =
@@ -634,15 +720,20 @@ object Pipeline {
       val loops = st.cols.flatMap { case (_, e) => loopsIn(e) }.distinct
       if (loops.isEmpty) ctes += s"s$i AS (SELECT ${select(st.cols)} FROM $from)"
       else {
-        val keyed = s"s${i}_k"
-        ctes += s"$keyed AS MATERIALIZED (SELECT row_number() OVER () AS " +
-          s"${q(rid)}, * FROM $from)"
+        val in = s"s${i}_in"
+        ctes += s"$in AS MATERIALIZED (SELECT * FROM $from)"
         val names: Map[E, String] =
           loops.zipWithIndex.map { case (l, j) => (l: E) -> s"s${i}_l$j" }.toMap
-        loops.foreach(l => ctes ++= loopCtes(l, names(l), keyed))
+        loops.foreach(l => ctes ++= loopCtes(l, names(l), in))
         val cols = st.cols.map { case (n, e) => n -> Cse.rewrite(e, names) }
-        val joins = loops.map(l => s" LEFT JOIN ${names(l)}_r USING (${q(rid)})")
-        ctes += s"s$i AS (SELECT ${select(cols)} FROM $keyed${joins.mkString})"
+        val joins = loops.map { l =>
+          val r = s"${names(l)}_r"
+          val on = E.freeVars(l).zipWithIndex.map { case (c, k) =>
+            s"$in.${q(c)} = $r.${q(s"${r}_k$k")} AND signbit($in.${q(c)}) = $r.${q(s"${r}_s$k")}"
+          }
+          s" LEFT JOIN $r ON ${on.mkString(" AND ")}"
+        }
+        ctes += s"s$i AS (SELECT ${select(cols)} FROM $in${joins.mkString})"
       }
     }
     val ob = if (orderBy.isEmpty) "" else orderBy.map(q).mkString(" ORDER BY ", ", ", "")
@@ -650,7 +741,6 @@ object Pipeline {
     s"WITH$recursive ${ctes.mkString(", ")} SELECT * FROM s${stages.size - 1}$ob"
   }
 
-  private val rid = "__rid"
   private val round = "__n"
   private def q(n: String): String = "\"" + n + "\""
 
@@ -659,23 +749,30 @@ object Pipeline {
     case _       => n.children.flatMap(loopsIn)
   }
 
-  /** The recursive CTE `name` (one row per input row and round: key,
-    * round, the names the step, condition and result read, the state)
-    * and `name_r` (key, result of the last round). The seed computes the
-    * lets and the initial state level by level over the keyed input; the
-    * recursive member runs one step on the rows whose loop goes on; a
-    * row's last round is the one that produced no successor. */
-  private def loopCtes(l: Loop, name: String, keyed: String): Seq[String] = {
+  /** The recursive CTE `name` (one row per distinct input and round: the
+    * free columns with their sign bits as the key, round, the names the
+    * step, condition and result read, the state) and `name_r` (the key as
+    * `name_r_k<i>`/`name_r_s<i>`, and the result of the last round). The
+    * seed computes the lets and the initial state level by level over the
+    * distinct non-null inputs of `input`; the recursive member runs one step
+    * on the rows whose loop goes on; a row's last round is the one that
+    * produced no successor. */
+  private def loopCtes(l: Loop, name: String, input: String): Seq[String] = {
     def sql(e: E): String = E.sql(e, java = true)
+    val free = E.freeVars(l)
+    require(free.nonEmpty, s"a loop rendered as SQL reads a column: $name")
+    val signs = free.indices.map(k => s"__s$k")
     // inside a loop every read is a plain column ref: no loop nests
     val read = (Seq(l.cond, l.result) ++ l.step.map(_._2)).flatMap(E.freeVars)
     val temps = l.step.map(_._1).toSet -- l.state
-    val kept = read.distinct.filterNot(n => temps(n) || l.state.contains(n)) ++ l.state
+    val kept = free ++ signs ++ (read.distinct.filterNot(n => temps(n) || l.state.contains(n) ||
+      free.contains(n)) ++ l.state)
     val keep = kept.map(q).mkString(", ")
-    val seed = levels(l.lets ++ l.init).foldLeft(
-      s"SELECT ${(rid +: E.freeVars(l)).map(q).mkString(", ")} FROM $keyed") {
-      (from, level) =>
-        s"SELECT *, ${level.map { case (n, e) => s"${sql(e)} AS ${q(n)}" }.mkString(", ")} FROM ($from)"
+    val distinct = s"SELECT DISTINCT ${free.map(q).mkString(", ")}, " +
+      free.zip(signs).map { case (c, s) => s"signbit(${q(c)}) AS ${q(s)}" }.mkString(", ") +
+      s" FROM $input WHERE ${free.map(c => s"${q(c)} IS NOT NULL").mkString(" AND ")}"
+    val seed = levels(l.lets ++ l.init).foldLeft(distinct) { (from, level) =>
+      s"SELECT *, ${level.map { case (n, e) => s"${sql(e)} AS ${q(n)}" }.mkString(", ")} FROM ($from)"
     }
     val go = s"(${q(round)} < ${l.maxIter} AND ${E.condSql(l.cond, java = true)})"
     var cols = kept.toSet
@@ -688,10 +785,12 @@ object Pipeline {
         val more = add.map { case (n, e) => s", ${sql(e)} AS ${q(n)}" }.mkString
         s"SELECT *$replace$more FROM ($from)"
     }
+    val key = free.indices.map(k => s"${q(free(k))} AS ${q(s"${name}_r_k$k")}, " +
+      s"${q(signs(k))} AS ${q(s"${name}_r_s$k")}").mkString(", ")
     Seq(
-      s"$name AS (SELECT ${q(rid)}, 0 AS ${q(round)}, $keep FROM ($seed) " +
-        s"UNION ALL SELECT ${q(rid)}, ${q(round)} + 1, $keep FROM ($stepped))",
-      s"${name}_r AS (SELECT ${q(rid)}, ${sql(l.result)} AS ${q(name)} FROM $name " +
+      s"$name AS (SELECT 0 AS ${q(round)}, $keep FROM ($seed) " +
+        s"UNION ALL SELECT ${q(round)} + 1, $keep FROM ($stepped))",
+      s"${name}_r AS (SELECT $key, ${sql(l.result)} AS ${q(name)} FROM $name " +
         s"WHERE NOT coalesce($go, false))")
   }
 

@@ -286,19 +286,16 @@ object Allison {
   // ---- scalar entry points: the trees above, evaluated --------------------
 
   private val (tIn, pIn, xIn) = (C("T_K"), C("P_bar"), C("xfl"))
-  private val built = new Memo[(String, Seq[String]), Array[Double] => Double](256)
 
   private val none = Comp(Array.empty, Array.empty)
 
   /** `value` after the solver `stages` that `trees` builds over `c`'s
     * elements and the inputs T_K, P_bar and xfl, evaluated at `c` and
-    * `in` (those three inputs); built once per tree and element list. */
+    * `in` (those three inputs); `tree` names the tree. */
   private def run(tree: String, c: Comp, in: Double*)(
       trees: CompCtx => (Seq[Seq[(String, E)]], E)): Double =
-    built.getOrFill((tree, c.names.toSeq)) {
-      val (stages, value) = trees(CompCtx(c.names.toVector))
-      LoopExpression.staged(stages, value, c.names.toSeq ++ Seq("T_K", "P_bar", "xfl"))
-    }(c.wt ++ in)
+    LoopExpression.scalar(s"Allison.$tree", c.names.toSeq ++ Seq("T_K", "P_bar", "xfl"))(
+      trees(CompCtx(c.names.toVector)))(c.wt ++ in)
 
   /** CO2/H2O fugacity (bar) (`EOSs/CO2_H2O.py:17-37`). */
   def fugacity(tK: Double, pBar: Double, co2Species: Boolean): Double =

@@ -4,8 +4,6 @@ import graft.chem.Elements
 import graft.expr._
 import graft.expr.E._
 import graft.expressions.LoopExpression
-import org.apache.spark.sql.expressions.UserDefinedFunction
-import org.apache.spark.sql.functions.{udf => sparkUdf}
 
 /** Iterative Fe3+/Fe2+ models (reference `Fe_redox/Fe3Fe2_models.py`):
   * activities depend on the Fe speciation itself, so each row solves a
@@ -17,191 +15,74 @@ object Fe3Fe2Iterative {
 
   val R = 8.31446261815324
 
-  /** Cation fractions of one composition at the cations the models read.
-    * From [[CationPlan.split]], `feTot` is FeO's share of the cations
-    * (`melt.py:225-274` with wtpc=False, then `cations()`, split at ratio
-    * r): splitting FeO into FeO + Fe2O3 CONSERVES the cation count (each
-    * Fe is one cation on either side), so the denominator and every non-Fe
-    * fraction are constant across the fixed-point trials and only the
-    * Fe2+/Fe3+ pair redistributes `feTot` by 1/(1+r). From
-    * [[CationPlan.plain]], `feTot` is the plain Fe fraction (all Fe as
-    * Fe2+, no split). */
-  private[graft] final class CatBase(val si: Double, val ti: Double,
-      val al: Double, val mg: Double, val ca: Double, val na: Double,
-      val k: Double, val p: Double, val feTot: Double) {
-    @inline def fe(r: Double): Double = feTot / (1.0 + r)
-    @inline def fe3(r: Double): Double = feTot - fe(r)
-    /** cat("Fe") - cat("Fe3") at trial r. */
-    @inline def feMinusFe3(r: Double): Double = fe(r) - fe3(r)
-    /** Fraction by slot, in [[CationPlan.slotNames]] order. */
-    def apply(slot: Int): Double = (slot: @annotation.switch) match {
-      case 0 => si; case 1 => ti; case 2 => al; case 3 => mg
-      case 4 => ca; case 5 => na; case 6 => k; case 7 => p
-    }
-  }
+  // ---- cation bases: per-row lets every model tree reads --------------
 
-  /** Everything the cation arithmetic derives from the oxide NAMES alone,
-    * built once per schema: molar weights, the FeO index, cation amounts
-    * and names, and the summation order. A row is then a few loops of
-    * double arithmetic over its weight array, with no Map or tuple.
-    *
-    * Sums run in the iteration order of the composition's mol Map, each a
-    * left fold from 0.0 (as Scala's `toSeq`/`groupBy`/`sum` over that Map
-    * run), which keeps the models' results bit-identical to the Map-based
-    * arithmetic (`SolverKernelSpec`): `order` is an immutable Map with the
-    * same keys, built the same way as that mol Map, whose values index
-    * the weight array. Serializable so a UDF closure captures the plan
-    * itself: no executor-side cache keyed by a deserialised array. */
-  private[graft] final class CationPlan private (weights: Array[Double],
-      normalise: Boolean, order: Map[String, Int]) extends Serializable {
-    private val feo = order.getOrElse("FeO", -1)
-    private val split = new CationPlan.Terms(order - "FeO" - "Fe2O3", weights)
-    private val plain = new CationPlan.Terms(order, weights)
+  /** The cations with a base fraction. */
+  private val slots = Seq("Si", "Ti", "Al", "Mg", "Ca", "Na", "K", "P")
 
-    /** The mol sum in schema order, which normalises wt.% to mol
-      * fractions (1.0 for a plan over mol fractions). */
-    private def molSum(wt: Array[Double]): Double =
-      if (!normalise) 1.0
-      else {
-        var s = 0.0
-        var i = 0
-        while (i < weights.length) { s += wt(i) / weights(i); i += 1 }
-        s
-      }
+  private def sum0(xs: Seq[E]): E = E.sumAll(Lit(0.0) +: xs)
 
-    private def base(t: CationPlan.Terms, wt: Array[Double], sum: Double,
-                     tot: Double, feTot: Double): CatBase = {
-      def c(slot: Int) = t.cat(wt, sum, tot, slot)
-      new CatBase(c(0), c(1), c(2), c(3), c(4), c(5), c(6), c(7), feTot)
+  /** Cation terms x * cationAmount of the oxides in `order`, by cation. */
+  private def terms(order: Seq[String], x: String => E): Seq[(String, E)] =
+    order.map(ox => Elements.cationName(ox) -> x(ox) * Lit(Elements.cationAmount(ox)))
+
+  /** The fraction `_<prefix><Cation>` of each cation of `cats` over the
+    * total `tot`, 0.0 when the composition has none; each sum a left fold
+    * from 0.0 in `order`. */
+  private def fractions(ts: Seq[(String, E)], cats: Seq[String], prefix: String,
+                        tot: E): Seq[(String, E)] =
+    cats.map { c =>
+      s"_$prefix$c" -> (ts.filter(_._1 == c).map(_._2) match {
+        case Seq() => Lit(0.0)
+        case xs    => sum0(xs) / tot
+      })
     }
 
-    /** [[CatBase]] with FeO/Fe2O3 taken out of the sums (the r-split). */
-    def split(wt: Array[Double]): CatBase = {
-      val sum = molSum(wt)
-      val feoX = if (feo < 0) 0.0 else wt(feo) / weights(feo) / sum
-      val tot = split.sum(wt, sum) + feoX
-      base(split, wt, sum, tot, feoX / tot)
-    }
-
-    /** [[CatBase]] of the plain cations (`moles.cations()`). */
-    def plain(wt: Array[Double]): CatBase = {
-      val sum = molSum(wt)
-      val tot = plain.sum(wt, sum)
-      base(plain, wt, sum, tot, plain.cat(wt, sum, tot, CationPlan.fe))
-    }
-
-    /** Every plain cation fraction by name. */
-    def plainMap(wt: Array[Double]): Map[String, Double] = {
-      val sum = molSum(wt)
-      val tot = plain.sum(wt, sum)
-      plain.groups.map { case (c, g) => c -> plain.groupSum(wt, sum, g) / tot }
-    }
-  }
-
-  private[graft] object CationPlan {
-    /** Cations with a [[CatBase]] slot, then Fe (a plain base's `feTot`). */
-    val slotNames: Array[String] =
-      Array("Si", "Ti", "Al", "Mg", "Ca", "Na", "K", "P", "Fe")
-    private val fe = 8
-
-    /** Plan of a wt.% schema (normalised mol fractions). The order Map is
-      * built the way the schema's mol Map was: `names.zip(..).toMap`. */
-    def of(names: Array[String]): CationPlan = new CationPlan(
-      IaconoMarziano.Comp.weightsFor(names), normalise = true,
-      names.zip(names.indices).toMap)
-
-    /** Plan and value array of a mol-fraction Map, in the Map's own order
-      * (used as is: unit weights, no renormalisation). */
-    def ofMol(mol: Map[String, Double]): (CationPlan, Array[Double]) = {
-      val names = mol.keys.toArray
-      val index = names.zipWithIndex.toMap
-      (new CationPlan(Array.fill(names.length)(1.0), normalise = false,
-        mol.transform((n, _) => index(n))), names.map(mol))
-    }
-
-    /** Cation terms x * cationAmount in `order`'s iteration order, grouped
-      * by cation name (group members keep that order); x is the mol
-      * fraction wt / weight / sum. */
-    private[CationPlan] final class Terms(order: Map[String, Int],
-        w: Array[Double]) extends Serializable {
-      private val (ix, amount, cation) = {
-        val t = order.toArray
-        (t.map(_._2), t.map(o => Elements.cationAmount(o._1)),
-          t.map(o => Elements.cationName(o._1)))
-      }
-      val groups: Map[String, Array[Int]] =
-        cation.indices.toArray.groupBy(cation(_))
-      private val slots: Array[Array[Int]] =
-        slotNames.map(groups.getOrElse(_, Array.emptyIntArray))
-
-      @inline private def term(wt: Array[Double], sum: Double, j: Int): Double =
-        wt(ix(j)) / w(ix(j)) / sum * amount(j)
-
-      def sum(wt: Array[Double], s: Double): Double = {
-        var acc = 0.0
-        var j = 0
-        while (j < ix.length) { acc += term(wt, s, j); j += 1 }
-        acc
-      }
-
-      def groupSum(wt: Array[Double], s: Double, g: Array[Int]): Double = {
-        var acc = 0.0
-        var j = 0
-        while (j < g.length) { acc += term(wt, s, g(j)); j += 1 }
-        acc
-      }
-
-      /** Fraction of slot's cation; 0.0 when the schema has none. */
-      def cat(wt: Array[Double], s: Double, tot: Double, slot: Int): Double = {
-        val g = slots(slot)
-        if (g.length == 0) 0.0 else groupSum(wt, s, g) / tot
-      }
-    }
-  }
-
-  /** The split cation base of a mol-fraction Map (adapter over
-    * [[CationPlan.split]]). */
-  private[graft] def catBase(mol: Map[String, Double]): CatBase = {
-    val (plan, x) = CationPlan.ofMol(mol)
-    plan.split(x)
-  }
-
-  // ---- O'Neill 2006 and Armstrong 2019: fixed points written as Loops ---
-
-  /** The split cation base ([[CationPlan.split]]) as loop lets, with the
-    * same sums in the same order: `_tot` the cation total, `_<Cation>`
-    * the fraction of each [[CationPlan.slotNames]] cation (0.0 when the
-    * composition has none), `_fet` FeO's share. `order` is the summation
-    * order of the oxides other than FeO and Fe2O3, `x` an oxide's mol
-    * fraction. */
+  /** The split cation base as loop lets: the composition with FeO and
+    * Fe2O3 taken out of the sums, where splitting FeO at a ratio r into
+    * FeO + Fe2O3 conserves the cation count (`melt.py:225-274` with
+    * wtpc=False, then `cations()`), so only the Fe2+/Fe3+ pair depends on r.
+    * `_tot` the cation total, `_<Cation>` each cation's fraction, `_fet`
+    * FeO's share. `order` is the summation order of the oxides other than
+    * FeO and Fe2O3 (the iteration order of the composition's Map), `x` an
+    * oxide's mol fraction. */
   private def splitLets(order: Seq[String], x: String => E,
                         hasFeO: Boolean): Seq[(String, E)] = {
-    val terms = order.map(ox =>
-      Elements.cationName(ox) -> x(ox) * Lit(Elements.cationAmount(ox)))
-    def sum0(xs: Seq[E]): E = E.sumAll(Lit(0.0) +: xs)
+    val ts = terms(order, x)
     Seq("_feo" -> (if (hasFeO) x("FeO") else Lit(0.0)),
-      "_tot" -> (sum0(terms.map(_._2)) + C("_feo"))) ++
-      CationPlan.slotNames.take(8).map { c =>
-        s"_$c" -> (terms.filter(_._1 == c).map(_._2) match {
-          case Seq() => Lit(0.0)
-          case ts    => sum0(ts) / C("_tot")
-        })
-      } :+ ("_fet" -> C("_feo") / C("_tot"))
+      "_tot" -> (sum0(ts.map(_._2)) + C("_feo"))) ++
+      fractions(ts, slots, "", C("_tot")) :+ ("_fet" -> C("_feo") / C("_tot"))
   }
 
-  /** Split base of oxide wt.% columns `els` ([[CationPlan.of]]): mol
-    * fractions normalised by the mol sum in schema order. */
-  def wtBase(els: Seq[String]): Seq[(String, E)] = {
-    def mol(ox: String): E = C(ox) / Lit(Elements.chemicalWeight(ox).get)
-    ("_sum" -> E.sumAll(Lit(0.0) +: els.map(mol))) +:
-      splitLets((els.zip(els.indices).toMap - "FeO" - "Fe2O3").keys.toSeq,
-        ox => mol(ox) / C("_sum"), els.contains("FeO"))
+  /** The plain cation base as loop lets (`moles.cations()`, all Fe as
+    * Fe2+): `_ptot` the cation total and `_p<Cation>` each cation's
+    * fraction, Fe included; sums in `order`, as in [[splitLets]]. */
+  private def plainLets(order: Seq[String], x: String => E): Seq[(String, E)] = {
+    val ts = terms(order, x)
+    ("_ptot" -> sum0(ts.map(_._2))) +: fractions(ts, slots :+ "Fe", "p", C("_ptot"))
   }
 
-  /** Split base of a mol-fraction Map's keys, in the Map's own order
-    * ([[CationPlan.ofMol]]: the values are used as they are). */
-  private def molBase(mol: Map[String, Double]): Seq[(String, E)] =
+  private def molOf(ox: String): E = C(ox) / Lit(Elements.chemicalWeight(ox).get)
+
+  /** The mol sum of oxide wt.% columns `els`, in schema order. */
+  private def molSum(els: Seq[String]): (String, E) = "_sum" -> sum0(els.map(molOf))
+
+  /** Split base of oxide wt.% columns `els`: mol fractions normalised by
+    * the mol sum in schema order. */
+  def wtBase(els: Seq[String]): Seq[(String, E)] =
+    molSum(els) +: splitLets((els.zip(els.indices).toMap - "FeO" - "Fe2O3").keys.toSeq,
+      ox => molOf(ox) / C("_sum"), els.contains("FeO"))
+
+  /** Plain base of oxide wt.% columns `els`. */
+  def wtPlainBase(els: Seq[String]): Seq[(String, E)] =
+    molSum(els) +: plainLets(els.zip(els.indices).toMap.keys.toSeq, ox => molOf(ox) / C("_sum"))
+
+  /** Split base of a mol-fraction Map's keys, in the Map's own order (the
+    * values are used as they are). */
+  private[graft] def molBase(mol: Map[String, Double]): Seq[(String, E)] =
     splitLets((mol - "FeO" - "Fe2O3").keys.toSeq, C(_), mol.contains("FeO"))
+
+  // ---- O'Neill 2006 and Armstrong 2019: fixed points written as Loops ---
 
   /** Solve r = f(r) by [[E.bisect]] on g(r) = f(r) - r over the
     * reference's fsolve-equivalent bracket [1e-8, 100]. Both models' f are
@@ -216,7 +97,7 @@ object Fe3Fe2Iterative {
 
   /** cat("Fe") - cat("Fe3") at trial r: fe(r) - (feTot - fe(r)),
     * fe(r) = feTot / (1 + r). */
-  private def feMinusFe3(r: E): E = {
+  private[graft] def feMinusFe3(r: E): E = {
     val fe = C("_fet") / (Lit(1.0) + r)
     fe - (C("_fet") - fe)
   }
@@ -273,8 +154,9 @@ object Fe3Fe2Iterative {
 
   private def mapModel(model: String, mol: Map[String, Double], tK: Double,
                        pBar: Double, fO2: Double): Double =
-    LoopExpression.eval(loops(model)(molBase(mol), C("T_K"), C("P_bar"), C("fO2")),
-      mol.toSeq ++ Seq("T_K" -> tK, "P_bar" -> pBar, "fO2" -> fO2): _*)
+    LoopExpression.scalar(s"Fe3Fe2Iterative.$model", mol.keys.toSeq ++ Seq("T_K", "P_bar", "fO2"))(
+      (Nil, loops(model)(molBase(mol), C("T_K"), C("P_bar"), C("fO2"))))(
+      (mol.values ++ Seq(tK, pBar, fO2)).toArray)
 
   def oneill2006(mol: Map[String, Double], tK: Double, pBar: Double,
                  fO2: Double): Double = mapModel("oneill2006", mol, tK, pBar, fO2)
@@ -282,38 +164,31 @@ object Fe3Fe2Iterative {
   def armstrong2019(mol: Map[String, Double], tK: Double, pBar: Double,
                     fO2: Double): Double = mapModel("armstrong2019", mol, tK, pBar, fO2)
 
-  /** `(wt.% in els order, T_K, P_bar, fO2) => Fe3Fe2` of a loop model,
-    * compiled once. */
-  def evaluator(els: Array[String], model: String): Array[Double] => Double =
-    LoopExpression.evaluator(loops(model)(wtBase(els), C("T_K"), C("P_bar"), C("fO2")),
-      els.toSeq ++ Seq("T_K", "P_bar", "fO2"))
-
   /** Plain cation fractions with Fe as total Fe2+ (no Fe3 split) — the
     * reference's `moles.cations()` used by hirschmann2022
     * (`Fe3Fe2_models.py:1304-1307`). */
   private[graft] def plainCations(mol: Map[String, Double]): Map[String, Double] = {
-    val (plan, x) = CationPlan.ofMol(mol)
-    plan.plainMap(x)
-  }
-
-  private def plainBase(mol: Map[String, Double]): CatBase = {
-    val (plan, x) = CationPlan.ofMol(mol)
-    plan.plain(x)
+    val terms = mol.toSeq.map { case (ox, x) =>
+      Elements.cationName(ox) -> x * Elements.cationAmount(ox)
+    }
+    val tot = terms.iterator.map(_._2).sum
+    terms.groupBy(_._1).map { case (c, vs) => c -> vs.iterator.map(_._2).sum / tot }
   }
 
   /** Hirschmann (2022) eq. 21 with the deng2020 EOS-integral dVdP instead
     * of the armstrong2019 analytic volumes (the reference's
     * `dVdP_method="deng2020"` variant, `Fe3Fe2_models.py:1325-1330`).
-    * Closed-form in Fe3Fe2 — no fixed point — but needs the numeric Deng
-    * volume integral, so it lives here rather than in the expression AST. */
+    * Closed-form in Fe3Fe2 — no fixed point — over the dVdP tree
+    * ([[Deng2020.dVdP]]). */
   def hirschmann2022DengVdP(mol: Map[String, Double], tK: Double,
                             pBar: Double, fO2: Double): Double = {
     val (a, b, c, dCp, t0) = (0.1917, -1.961, 4158.1, 33.25, 1673.15)
-    val x = plainBase(mol)
+    val cats = plainCations(mol)
+    def x(n: String): Double = cats.getOrElse(n, 0.0)
     // a left fold from 0.0, as Scala's `sum` over a List
-    val compositional = 0.0 + x.si * -520.46 + x.ti * -185.37 +
-      x.mg * 494.39 + x.ca * 1838.34 + x.na * 2888.48 + x.k * 3473.68 +
-      x.p * -4473.6 + -1245.09 * x.si * x.al + -1156.86 * x.si * x.mg
+    val compositional = 0.0 + x("Si") * -520.46 + x("Ti") * -185.37 +
+      x("Mg") * 494.39 + x("Ca") * 1838.34 + x("Na") * 2888.48 + x("K") * 3473.68 +
+      x("P") * -4473.6 + -1245.09 * x("Si") * x("Al") + -1156.86 * x("Si") * x("Mg")
     val dVdP = Deng2020.dVdP(tK, pBar)
     val part1 = a * math.log10(fO2) + b + c / tK
     val part2 = -dCp / (R * math.log(10.0)) *
@@ -325,54 +200,38 @@ object Fe3Fe2Iterative {
 
   /** Sun (2024) eq. 9 with the deng2020 EOS-integral Gamma — the
     * reference's DEFAULT `dV="deng"` variant
-    * (`Fe_redox/Fe3Fe2_models.py:1494-1534`). The expression-AST
-    * [[graft.models.Fe3Fe2.sun2024]] uses Sun's closed-form parameterised
-    * Gamma instead (the published approximation; deviates by up to ~8% in
-    * Fe3Fe2 at 1 GPa), which keeps the hot path codegen'd + oracle-able.
-    * Closed-form in Fe3Fe2 (total-Fe cations, no split). */
+    * (`Fe_redox/Fe3Fe2_models.py:1494-1534`) — over the plain cation base
+    * `plain` ([[wtPlainBase]]): the [[Deng2020.dVdPStages]], then the
+    * value, closed form in Fe3Fe2 (total-Fe cations, no split). The
+    * expression-AST [[graft.models.Fe3Fe2.sun2024]] uses Sun's closed-form
+    * parameterised Gamma instead (the published approximation; deviates by
+    * up to ~8% in Fe3Fe2 at 1 GPa). */
+  def sun2024DengStages(plain: Seq[(String, E)], t: E, p: E,
+                        fO2: E): (Seq[Seq[(String, E)]], E) = {
+    val (a0, a1, a2, a3) = (2.1479, -230.2593, -1.8557e-4, 34.3293)
+    val (a4, a5, a6, a7, a8) = (1.4138, -17.3040, -10.1820, -6.7463, -7.3886)
+    val (a9, a10, a11, a12, h) = (-14.5430, -9.9776, -16.1506, -37.5572, 2.1410)
+    def x(c: String): E = C(s"_p$c")
+    val fe = x("Fe")
+    val gamma = C("_dgV") / (Lit(R) * t)
+    val omega = Lit(a1) + Lit(a2) * pow(t, Lit(1.5)) + Lit(a3) * ln(t)
+    val phi = Lit(a4) * ln(fe) + Lit(a5) * sqrt(fe) + Lit(a6) * pow(x("Si"), Lit(3.0)) +
+      Lit(a7) * x("Al") + Lit(a8) * x("Ti") + Lit(a9) * x("Ca") + Lit(a10) * x("Mg") +
+      (Lit(a11) + Lit(a12) * fe) * (x("Na") + x("K"))
+    (Deng2020.dVdPStages(t, p), closed(plain, pow(Lit(10.0),
+      (log10(fO2) - omega - phi - Lit(h) * gamma) / (Lit(4.0) + Lit(a0) * sqrt(fe)))))
+  }
+
   def sun2024DengVdP(mol: Map[String, Double], tK: Double, pBar: Double,
-                     fO2: Double): Double =
-    sun2024DengVdPBase(plainBase(mol), tK, pBar, fO2)
-
-  private[graft] def sun2024DengVdPBase(b: CatBase, tK: Double, pBar: Double,
-                                    fO2: Double): Double = {
-    val a0 = 2.1479; val a1 = -230.2593; val a2 = -1.8557e-4; val a3 = 34.3293
-    val a4 = 1.4138; val a5 = -17.3040; val a6 = -10.1820; val a7 = -6.7463
-    val a8 = -7.3886; val a9 = -14.5430; val a10 = -9.9776; val a11 = -16.1506
-    val a12 = -37.5572; val h = 2.1410
-    val gamma = Deng2020.dVdP(tK, pBar) / (R * tK)
-    val omega = a1 + a2 * math.pow(tK, 1.5) + a3 * math.log(tK)
-    val fe = b.feTot
-    val phi = a4 * math.log(fe) + a5 * math.sqrt(fe) +
-      a6 * math.pow(b.si, 3.0) + a7 * b.al + a8 * b.ti +
-      a9 * b.ca + a10 * b.mg + (a11 + a12 * fe) * (b.na + b.k)
-    math.pow(10.0,
-      (math.log10(fO2) - omega - phi - h * gamma) / (4.0 + a0 * math.sqrt(fe)))
+                     fO2: Double): Double = {
+    LoopExpression.scalar("Fe3Fe2Iterative.sun2024", mol.keys.toSeq ++ Seq("T_K", "P_bar", "fO2"))(
+      sun2024DengStages(plainLets(mol.keys.toSeq, C(_)), C("T_K"), C("P_bar"), C("fO2")))(
+      (mol.values ++ Seq(tK, pBar, fO2)).toArray)
   }
 
-  /** The one Spark UDF over the Deng-EOS Fe3Fe2 models (`deng2020`,
-    * `sun2024`; the others are [[loops]]):
-    * `(array(wt.% in els order), T_K, P_bar, fO2) => Fe3Fe2`. The closure
-    * captures the schema's [[CationPlan]], built here once, so a row does
-    * only its own arithmetic. The Deng-backed models also capture any
-    * attached Deng memo stats and republish them per task
-    * ([[Deng2020.ensureMetrics]]). */
-  def udf(els: Array[String], model: String): UserDefinedFunction = {
-    val plan = CationPlan.of(els)
-    val mm = Deng2020.currentMetrics.orNull
-    def publish(): Unit = if (mm != null) Deng2020.ensureMetrics(mm)
-    val f: (Seq[Double], Double, Double, Double) => Double = model match {
-      case "deng2020" => (wt, t, p, fo2) => {
-        publish()
-        Deng2020.fe3Fe2Base(plan.split(wt.toArray), t, p, fo2, "12.5molpc")
-      }
-      case "sun2024" => (wt, t, p, fo2) => {
-        publish()
-        sun2024DengVdPBase(plan.plain(wt.toArray), t, p, fo2)
-      }
-      case other =>
-        throw new IllegalArgumentException(s"iterative Fe3Fe2 model $other")
-    }
-    sparkUdf(f)
-  }
+  /** The stages and value of a Deng-EOS model (`deng2020`, `sun2024`; the
+    * others are [[loops]]) over oxide wt.% columns `els`. */
+  val dengModels: Map[String, (Seq[String], E, E, E) => (Seq[Seq[(String, E)]], E)] = Map(
+    "deng2020" -> ((els, t, p, fO2) => Deng2020.fe3Fe2Stages(wtBase(els), t, p, fO2)),
+    "sun2024" -> ((els, t, p, fO2) => sun2024DengStages(wtPlainBase(els), t, p, fO2)))
 }

@@ -12,14 +12,15 @@ import org.apache.spark.sql.functions.{approx_count_distinct, broadcast, col, co
   *
   * The two formulations and when each wins at 100 TB:
   *
-  *  - **per-row memoised UDF**: ONE narrow stage, zero shuffle; solver
-  *    cost is paid per distinct condition per executor, bounded by the
-  *    memo cap with partial eviction ([[Memo]]). Right when conditions
+  *  - **per-row column**: ONE narrow stage, zero shuffle; solver cost is
+  *    paid per distinct condition per executor, bounded by the memo cap
+  *    with partial eviction ([[Memo]]): QFM's loops memoise their
+  *    transitions per T, IW's UDF memoises per (T, P). Right when conditions
   *    are near-unique (continuous instrument readings: distinct ≈ rows,
   *    so no dedup can win and a join-back would shuffle the full-width
   *    fact table) or when the fact side dominates cost.
   *  - **dedup-in-plan**: project (T, P), `distinct` (a narrow two-column
-  *    shuffle), run the solver UDF once per condition CLUSTER-WIDE,
+  *    shuffle), run the solver once per condition CLUSTER-WIDE,
   *    broadcast the solved dimension back onto the fact table — no
   *    fact-table shuffle, no per-executor recompute, no cache to thrash.
   *    Right when (T, P) is grid-like (the common physics case:
@@ -45,7 +46,7 @@ import org.apache.spark.sql.functions.{approx_count_distinct, broadcast, col, co
   * either plan is sub-millisecond and the probe job would cost more than
   * it saves.
   *
-  * Correctness is formulation-invariant: the SAME udf runs either way,
+  * Correctness is formulation-invariant: the SAME solver runs either way,
   * the join keys are null-safe (`<=>`), and every fact row matches
   * exactly one distinct condition — verified by `Fo2DedupSpec` (including
   * the no-flag auto laws: grid-like input plans the broadcast shape,
@@ -140,16 +141,18 @@ object Fo2Dedup {
     plan.transformUp { case r: RepartitionOperation => r.child }
   }
 
-  /** The three formulations [[formulation]] picks between. [[Memo]] is
-    * the write-through memoised UDF (grid-like or UNKNOWN regimes:
+  /** The three formulations [[formulation]] picks between. [[MemoUdf]]
+    * is the per-row column — for IW the write-through memoised UDF
+    * (grid-like or UNKNOWN regimes:
     * forced `false`, streaming, non-scan-shaped plans, tiny inputs —
     * everywhere the probe could not measure, insertion is the safe
-    * default because repeated conditions may well arrive). [[NoInsert]]
-    * is the read-only memo for the regime the probe MEASURED as
+    * default because repeated conditions may well arrive). [[NoInsertUdf]]
+    * is IW's read-only memo for the regime the probe MEASURED as
     * near-unique: insertion there buys almost no hits and the
     * write+evict churn is pure overhead (r14 bench: iw.fO2Cache 2.98M
-    * evictions against 0.52M hits). [[DedupPlan]] is distinct +
-    * solve-once + broadcast-back. */
+    * evictions against 0.52M hits); QFM, whose per-row buffer is closed
+    * form over T-keyed transitions, runs its plain column for both.
+    * [[DedupPlan]] is distinct + solve-once + broadcast-back. */
   sealed trait Formulation
   case object DedupPlan extends Formulation
   case object MemoUdf extends Formulation

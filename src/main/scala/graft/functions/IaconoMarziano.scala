@@ -45,32 +45,6 @@ object IaconoMarziano {
     }
   }
 
-  object Comp {
-    /** Molar weights per schema, cached by the CONTENT of the names array,
-      * so the weight lookups happen once per schema instead of once per
-      * solver trial (this sat at the top of the sf0.1 bench profile). Not
-      * by its identity: a names array captured in a UDF closure is
-      * deserialised again for every task, and an identity key added one
-      * entry per task that was never removed. Plain get-then-put — CHM.get
-      * is lock-free, and racing puts compute the same value. */
-    private val weightsCache = new java.util.concurrent.ConcurrentHashMap[
-      Seq[String], Array[Double]]()
-
-    def weightsFor(names: Array[String]): Array[Double] = {
-      val key = scala.collection.immutable.ArraySeq.unsafeWrapArray(names)
-      val hit = weightsCache.get(key)
-      if (hit != null) hit
-      else {
-        val w = names.map(n => Elements.chemicalWeight(n).get)
-        weightsCache.putIfAbsent(key, w)
-        w
-      }
-    }
-
-    /** Spec hook: distinct schemas cached. */
-    private[graft] def weightsCacheSize: Int = weightsCache.size
-  }
-
   private val wH2O = Lit(Elements.chemicalWeight("H2O").get)
 
   // ---- the laws as expression trees ---------------------------------------
@@ -210,32 +184,37 @@ object IaconoMarziano {
 
   // ---- scalar entry points: the trees above, evaluated --------------------
 
-  private def ctx(c: Comp): CompCtx = CompCtx(c.names.toVector)
-  private def env(c: Comp): Seq[(String, Double)] = c.names.toSeq.zip(c.wt)
+  private val (tIn, pIn, xIn) = (C("T_K"), C("P_bar"), C("xfl"))
 
-  private def eval(c: Comp, e: E): Double = LoopExpression.eval(e, env(c): _*)
+  /** `value` after the solver `stages` that `trees` builds over `c`'s
+    * elements and the inputs T_K, P_bar and xfl, evaluated at `c` and
+    * those three inputs; `tree` names the tree. */
+  private def run(tree: String, c: Comp, tK: Double, pBar: Double, xFluid: Double)(
+      trees: CompCtx => (Seq[Seq[(String, E)]], E)): Double =
+    LoopExpression.scalar(s"IaconoMarziano.$tree", c.names.toSeq ++ Seq("T_K", "P_bar", "xfl"))(
+      trees(CompCtx(c.names.toVector)))(c.wt ++ Array(tK, pBar, xFluid))
 
-  /** The [[solubility]] stages evaluated in order, then `value` of them. */
-  private def solved(c: Comp, xFluid: Double, pBar: Double, tK: Double,
-                     value: Dissolved => E): Double = {
-    val d = solubility(ctx(c), Lit(xFluid), Lit(pBar), Lit(tK))
-    LoopExpression.staged(d.stages, value(d), c.names.toSeq)(c.wt)
+  private def solved(tree: String, c: Comp, xFluid: Double, pBar: Double, tK: Double,
+                     value: Dissolved => E): Double = run(tree, c, tK, pBar, xFluid) { m =>
+    val d = solubility(m, xIn, pIn, tIn)
+    (d.stages, value(d))
   }
 
   def h2oSolubility(c: Comp, xFluid: Double, pBar: Double, tK: Double): Double =
-    solved(c, xFluid, pBar, tK, _.h2o)
+    solved("h2oSolubility", c, xFluid, pBar, tK, _.h2o)
 
   def co2Solubility(c: Comp, xFluid: Double, pBar: Double, tK: Double): Double =
-    solved(c, xFluid, pBar, tK, _.co2)
+    solved("co2Solubility", c, xFluid, pBar, tK, _.co2)
 
   def h2oSaturation(c: Comp, tK: Double, xFluid: Double = 1.0): Double =
-    eval(c, h2oSaturationE(ctx(c), Lit(tK), Lit(xFluid)))
+    run("h2oSaturation", c, tK, 0.0, xFluid)(m => (Nil, h2oSaturationE(m, tIn, xIn)))
 
   def co2Saturation(c: Comp, tK: Double): Double =
-    eval(c, co2SaturationE(ctx(c), Lit(tK)))
+    run("co2Saturation", c, tK, 0.0, 0.0)(m => (Nil, co2SaturationE(m, tIn)))
 
   def mixedSaturation(c: Comp, tK: Double): (Double, Double) = {
-    val (p, x) = mixedSaturationE(ctx(c), Lit(tK))
-    (eval(c, p), eval(c, x))
+    def at(out: String, value: ((E, E)) => E) = run(s"mixedSaturation $out", c, tK, 0.0, 0.0)(
+      m => (Nil, value(mixedSaturationE(m, tIn))))
+    (at("p", _._1), at("x", _._2))
   }
 }

@@ -28,8 +28,9 @@ final class Counter extends AccumulatorV2[Long, Long] {
   * Counting rule, one for every solver memo:
   *  - local mode: exact. Task threads run in the driver JVM and add to
   *    the driver's [[Counter]]s, which do not lose concurrent adds;
-  *  - remote executors: present only where a closure captured the stats
-  *    and republishes them per task ([[Memo.publish]]); increments
+  *  - remote executors: present only where a closure or a loop column
+  *    captured the stats and republishes them per task ([[Memo.publish]]);
+  *    increments
   *    racing a task's completion can drop, so counts are approximate at
   *    task boundaries (observability, not accounting). Memos without a
   *    capturing closure report nothing remotely. */
@@ -56,12 +57,10 @@ object MemoStats {
       counter("evicted"))
   }
 
-  /** Fresh stats on every solver memo, in Bench artifact order. */
-  def attachSolvers(spark: SparkSession): Seq[MemoStats] = {
-    val deng = Deng2020.attachMetrics(spark)
-    Seq(deng.vol, deng.dvdp) ++ IwFull.attachMetrics(spark) ++
-      QfmFull.attachMetrics(spark)
-  }
+  /** Fresh stats on every solver memo, in Bench artifact order: the loop
+    * memo (QFM's transitions, Deng's dVdP), then IW's two. */
+  def attachSolvers(spark: SparkSession): Seq[MemoStats] =
+    graft.expressions.LoopExpression.attachMetrics(spark) +: IwFull.attachMetrics(spark)
 }
 
 /** Bounded per-executor memo with PARTIAL eviction — the scale-safe
@@ -110,16 +109,19 @@ final class Memo[K, V](cap: Int) {
   /** Read-only membership probe (spec hook — no fill, no eviction). */
   private[graft] def contains(k: K): Boolean = m.containsKey(k)
 
-  def getOrFill(k: K)(fill: => V): V = {
-    // Single-evictor guard: in the thrashing regime (near-unique keys,
-    // every lookup a miss) ALL reader threads observe size > cap at once;
-    // without the CAS each would run its own evictSome pass — n_threads x
-    // cap/8 entries dropped per breach (the r9 sf0.1 bench artifact showed
-    // iw.fO2Cache evicted=8.5M against only 2.2M inserts: concurrent
-    // iterators double-counting each other's removals). One thread evicts,
-    // the rest proceed; size overshoots by at most the in-flight fills.
+  // Single-evictor guard: in the thrashing regime (near-unique keys,
+  // every lookup a miss) ALL reader threads observe size > cap at once;
+  // without the CAS each would run its own evictSome pass — n_threads x
+  // cap/8 entries dropped per breach (the r9 sf0.1 bench artifact showed
+  // iw.fO2Cache evicted=8.5M against only 2.2M inserts: concurrent
+  // iterators double-counting each other's removals). One thread evicts,
+  // the rest proceed; size overshoots by at most the in-flight fills.
+  private def evictIfFull(): Unit =
     if (m.size() > cap && evicting.compareAndSet(false, true))
       try evictSome() finally evicting.set(false)
+
+  def getOrFill(k: K)(fill: => V): V = {
+    evictIfFull()
     val st = stats
     if (st == null) m.computeIfAbsent(k, _ => fill)
     else {
@@ -132,6 +134,27 @@ final class Memo[K, V](cap: Int) {
       v
     }
   }
+
+  /** The value of `k`, counted as a hit, or null: a caller that computes
+    * the value itself on a miss stores it with [[fill]]. */
+  def lookup(k: K): V = {
+    val v = m.get(k)
+    val st = stats
+    if (v != null && st != null) st.hits.add(1)
+    v
+  }
+
+  /** Store `v`, computed in `nanos` after a [[lookup]] missed, counted as a
+    * miss. */
+  def fill(k: K, v: V, nanos: Long): Unit = {
+    evictIfFull()
+    m.put(k, v)
+    val st = stats
+    if (st != null) { st.misses.add(1); st.fillNanos.add(nanos) }
+  }
+
+  /** Drop every entry (spec hook: a path that must compute, not read). */
+  private[graft] def clear(): Unit = m.clear()
 
   /** Read-only lookup: a hit is served from the map, a miss computes
     * WITHOUT inserting — the formulation for near-unique key streams

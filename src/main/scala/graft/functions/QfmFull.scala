@@ -1,184 +1,202 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions.{col, lit, udf}
+import org.apache.spark.sql.functions.{col, lit}
+import graft.expr._
+import graft.expr.E._
+import graft.expressions.LoopExpression
 
 /** Full QFM oxygen-fugacity buffer with EOS pressure terms
   * (reference `fO2/QFM.py:187-239`): O'Neill (1987) 1-bar polynomial +
   * Tait-EOS VdP of quartz/magnetite/fayalite with Landau excess energy and
-  * phase transitions (qtz->coe->stish, fay->ring) solved per temperature.
+  * phase transitions (qtz->coe->stish, fay->ring), written once as trees
+  * (Holland & Powell 2011 data, `EOSs/tait.py`, `EOSs/tools.py`,
+  * `EOSs/parameters.py`).
   *
-  * Scale design: fO2 depends only on (T, P), so the cost model is
-  * per-DISTINCT-condition. Two formulations, both real (see [[Fo2Dedup]]
-  * for the full decision rule):
-  *
-  *  - default: per-executor memo caches inside a per-row UDF
-  *    (transitionCache keyed by T, holding the per-T plan [[AtT]]: the
-  *    transition solves — the only solver work — and every
-  *    temperature-only EOS term; fO2Cache keyed by (T, P)), bounded with
-  *    partial eviction and accumulator observability ([[Memo]]) — ONE
-  *    narrow stage, no shuffle at all. A row that misses fO2Cache does
-  *    only its pressure arithmetic on the per-T plan.
-  *    Right when (T, P) are near-unique continuous doubles: at 100 TB the
-  *    distinct set then approaches table cardinality, a broadcast OOMs
-  *    the driver, and a shuffle join-back moves the full-width fact
-  *    table.
-  *  - `spark.graft.fo2.dedupConditions=true`: distinct (T, P) → solve
-  *    once cluster-wide → broadcast-join back. Right when conditions are
-  *    grid-like (distinct ≪ rows), where it removes even the
-  *    once-per-executor recompute. */
+  * The three transition pressures depend on T alone: each is a bisection
+  * over T ([[transitions]]), memoised per JVM ([[Loop.memo]]), so a JVM
+  * solves each once per distinct temperature. The buffer at P is closed
+  * form over (T, P, the three transitions) ([[buffer]]). Queries, the
+  * [[withQfm]] column and the scalar functions all compute these trees. */
 object QfmFull {
 
   val R = 8.31446261815324
 
-  private def muO2OneBar(tK: Double): Double =
-    -587474.0 + 1584.427 * tK - 203.3164 * tK * math.log(tK) +
-      0.092710 * tK * tK
+  private final case class Phase(
+      h: Double, s: Double, v0: Double, n: Double, a0: Double, K0: Double,
+      dKdP: Double, dKdP2: Double,
+      cpA: Double = 0, cpB: Double = 0, cpC: Double = 0, cpD: Double = 0,
+      smax: Double = 0, vmax: Double = 0, tc0: Double = 0) {
+    // the T-independent Tait constants (`EOSs/tait.py:6-59`)
+    private val theta = 10636.0 / (s / n + 6.44)
+    private val u0 = theta / 298.15
+    private val xi0 = u0 * u0 * math.exp(u0) / math.pow(math.exp(u0) - 1.0, 2.0)
+    private val a = (1.0 + dKdP) / (1.0 + dKdP + K0 * dKdP2)
+    private val b = dKdP / K0 - dKdP2 / (1.0 + dKdP)
+    private val c = (1.0 + dKdP + K0 * dKdP2) / (dKdP * dKdP + dKdP - K0 * dKdP2)
 
-  /** Everything of the buffer that depends on T alone, built once per T:
-    * the three phase-transition pressures (kbar), each phase's
-    * temperature-only Tait terms, the 1-bar EOS contribution and
-    * `muO2OneBar`. A row then does only its pressure arithmetic
-    * ([[fO2Base]]). */
-  private final class AtT(tK: Double) {
-    private val qtz = new Eos.PhaseAtT("quartz", tK)
-    private val coe = new Eos.PhaseAtT("coesite", tK)
-    private val stish = new Eos.PhaseAtT("stishovite", tK)
-    private val fay = new Eos.PhaseAtT("fayalite", tK)
-    private val ring = new Eos.PhaseAtT("ringwoodite", tK)
-    private val mt = new Eos.PhaseAtT("magnetite", tK)
+    /** The thermal pressure P_th at `t`. */
+    def pth(t: E): E = Lit(a0 * K0 * theta / xi0) *
+      (Lit(1.0) / (exp(Lit(theta) / t) - Lit(1.0)) - Lit(1.0 / (math.exp(u0) - 1.0)))
 
-    // 60 fixed bisection steps on [1e-3, 500] kbar (the reference uses
-    // fsolve from a guess of 8 kbar, `fO2/QFM.py:45-63`): the transition
-    // Gibbs difference is monotone in P (the downstream polymorph is
-    // denser), so the root is unique; deterministic straight-line
-    // arithmetic lets the DuckDB oracle ([[graft.QfmSql]]) replicate the
-    // solve bit-for-bit (the earlier bracket-expanding Brent had
-    // data-dependent branch paths no SQL rendering could follow).
-    private def solve(p1: Eos.PhaseAtT, p2: Eos.PhaseAtT): Double = {
-      var lo = 1e-3
-      var hi = 500.0
-      var it = 0
-      while (it < 60) {
-        val mid = (lo + hi) * 0.5
-        if (p1.gibbs(mid) - p2.gibbs(mid) < 0.0) lo = mid else hi = mid
-        it += 1
-      }
-      (lo + hi) * 0.5
+    /** sign(x) |x|^e, with `Math.signum`'s zero and NaN. */
+    private def signedPow(x: E): E =
+      If(x > Lit(0.0), Lit(1.0), If(x < Lit(0.0), Lit(-1.0), x)) * pow(abs(x), Lit(1.0 - c))
+
+    /** The pressure-free part of the Tait VdP, given P_th. */
+    def part1(pth: E): E = signedPow(Lit(1.0) - Lit(b) * pth)
+
+    /** Tait VdP (kJ) at `pk` kbar (Holland & Powell 2011 eqs. 3/11/13),
+      * given P_th and [[part1]]. */
+    def vdp(pk: E, pth: E, part1: E): E =
+      pk * Lit(v0) * (Lit(1.0 - a) + Lit(a) * (part1 - signedPow(Lit(1.0) + Lit(b) * (pk - pth))) /
+        (Lit(b * (c - 1.0)) * pk))
+
+    /** [[vdp]] with its temperature terms computed in place. */
+    def vdpAt(pk: E, t: E): E = { val p = pth(t); vdp(pk, p, part1(p)) }
+
+    /** Enthalpy and entropy integrals of Cp from 298.15 K to `t`
+      * (`EOSs/tools.py:215-271`) in the pressure-free Gibbs energy. */
+    def g0(t: E): E = {
+      def ih(x: E): E = Lit(cpA) * x + Lit(0.5 * cpB) * x * x - Lit(cpC) / x + Lit(2.0 * cpD) * sqrt(x)
+      def is(x: E): E = Lit(cpA) * ln(x) + Lit(cpB) * x - Lit(cpC / 2.0) / (x * x) -
+        Lit(2.0 * cpD) / sqrt(x)
+      val ref = Lit(298.15)
+      Lit(h) + (ih(t) - ih(ref)) - t * (Lit(s / 1e3) + (is(t) - is(ref)))
     }
 
-    val pQtzCoe: Double = solve(qtz, coe)
-    val pCoeStish: Double = solve(coe, stish)
-    val pFayRing: Double = solve(fay, ring)
-
-    // VdP at the transition pressures, subtracted past each transition
-    private val coeAtQtzCoe = coe.tait.vdp(pQtzCoe)
-    private val stishAtCoeStish = stish.tait.vdp(pCoeStish)
-    private val ringAtFayRing = ring.tait.vdp(pFayRing)
-
-    /** The 1-bar EOS contribution, phases WITHOUT transitions
-      * (`fO2/QFM.py:12-30`). */
-    private val mu1barEos = {
-      val pkbar = 1.0 / 1e3
-      val q1 = qtz.tait.vdp(pkbar) + qtz.landauPDependent(pkbar)
-      val f1 = fay.tait.vdp(pkbar)
-      val m1 = mt.tait.vdp(pkbar)
-      1e3 * (3.0 * q1 + 2.0 * m1 - 3.0 * f1)
-    }
-    private val muOneBar = muO2OneBar(tK)
-    private val rT = R * tK
-
-    /** Base fO2 at P: the buffer phases' VdP WITH polymorph transitions
-      * (`fO2/QFM.py:33-102`) on top of the 1-bar terms. */
-    def fO2(pBar: Double): Double = {
-      val pkbar = pBar / 1e3
-      val pSiO2 = math.min(pkbar, pQtzCoe)
-      var vdpSiO2 = qtz.tait.vdp(pSiO2) + qtz.landauPDependent(pSiO2)
-      if (pkbar > pQtzCoe) {
-        vdpSiO2 += coe.tait.vdp(math.min(pkbar, pCoeStish)) - coeAtQtzCoe
-        if (pkbar > pCoeStish)
-          vdpSiO2 += stish.tait.vdp(pkbar) - stishAtCoeStish
-      }
-      var vdpFe2SiO4 = fay.tait.vdp(math.min(pkbar, pFayRing))
-      if (pkbar > pFayRing)
-        vdpFe2SiO4 += ring.tait.vdp(pkbar) - ringAtFayRing
-      val vdpMt = mt.tait.vdp(pkbar)
-      val muP = 1e3 * (3.0 * vdpSiO2 + 2.0 * vdpMt - 3.0 * vdpFe2SiO4)
-      val mu = muOneBar + (muP - mu1barEos)
-      math.exp(mu / rT)
+    /** Landau excess Gibbs energy, Anenberg formulation
+      * (`EOSs/tools.py:7-66`), at `pk` kbar with volume term `vm`. */
+    def landau(pk: E, t: E, vm: Double = vmax): E = {
+      val q20 = math.sqrt(1.0 - 298.15 / tc0)
+      val tc = Lit(tc0) + pk * Lit(vm) / Lit(smax)
+      val q2 = If(t > tc, Lit(0.0), sqrt((tc - t) / Lit(tc0)))
+      Lit(smax) * (Lit(tc0) * (Lit(q20) + (q2 * q2 * q2 - Lit(q20 * q20 * q20)) / Lit(3.0)) -
+        tc * q2 - t * (Lit(q20) - q2)) + pk * Lit(vm) * Lit(q20)
     }
   }
 
-  /** The per-T plan ([[AtT]]) memoised per executor: distinct (T,P)
-    * cardinality can be row-scale, but distinct T rarely is. */
-  private val transitionCache = new Memo[Double, AtT](100000)
+  private val quartz = Phase(h = -910.710, s = 41.43, v0 = 2.269, n = 3,
+    a0 = 0, K0 = 730, dKdP = 6, dKdP2 = -8.2e-3,
+    cpA = 9.29e-2, cpB = -6.42e-7, cpC = -714.9, cpD = -0.7161,
+    smax = 4.95 / 1e3, vmax = 1.188e-1, tc0 = 847)
+  private val coesite = Phase(h = -906.990, s = 39.60, v0 = 2.064, n = 3,
+    a0 = 1.23e-5, K0 = 979, dKdP = 4.19, dKdP2 = -4.3e-3,
+    cpA = 1.078e-1, cpB = -3.279e-6, cpC = -190.3, cpD = -1.0416)
+  private val stishovite = Phase(h = -876.720, s = 24.0, v0 = 1.401, n = 3,
+    a0 = 1.58e-5, K0 = 3090, dKdP = 4.6, dKdP2 = -1.50e-3,
+    cpA = 6.81e-2, cpB = 6.010e-6, cpC = -1978.2, cpD = -8.21e-2)
+  private val fayalite = Phase(h = -1477.510, s = 151.0, v0 = 4.631, n = 7,
+    a0 = 2.82e-5, K0 = 1256, dKdP = 4.68, dKdP2 = -3.7e-3,
+    cpA = 2.011e-1, cpB = 1.733e-5, cpC = -1960.6, cpD = -9.009e-1)
+  private val ringwoodite = Phase(h = -1477.510, s = 140.0, v0 = 4.203, n = 7,
+    a0 = 2.22e-5, K0 = 1977, dKdP = 4.92, dKdP2 = -2.5e-3,
+    cpA = 1.668e-1, cpB = 4.2610e-5, cpC = -1705.4, cpD = -5.414e-1)
+  private val magnetite = Phase(h = -1114.510, s = 146.9, v0 = 4.452, n = 7,
+    a0 = 3.71e-5, K0 = 1857, dKdP = 4.05, dKdP2 = -2.2e-3,
+    smax = 35.0, vmax = 0.0, tc0 = 848)
 
-  private def atT(tK: Double): AtT = transitionCache.getOrFill(tK)(new AtT(tK))
+  /** The pressure (kbar) where `p2` takes over from `p1` at `t`: 60
+    * halvings of [1e-3, 500] kbar on their Gibbs difference, which is
+    * monotone in P (the downstream polymorph is denser), so the root is
+    * unique (the reference runs fsolve from 8 kbar, `fO2/QFM.py:45-63`).
+    * Memoised: it reads T alone. */
+  private def transition(p1: Phase, p2: Phase, t: E): Loop = {
+    def gibbs(ph: Phase, tag: String, pk: E): E = {
+      val g = C(s"_g0$tag") + ph.vdp(pk, C(s"_pth$tag"), C(s"_p1$tag"))
+      if (ph == quartz) g + ph.landau(pk, t) else g
+    }
+    def lets(ph: Phase, tag: String): Seq[(String, E)] = Seq(s"_pth$tag" -> ph.pth(t),
+      s"_p1$tag" -> ph.part1(C(s"_pth$tag")), s"_g0$tag" -> ph.g0(t))
+    // g > 0 moves lo up: the difference is negative below the root
+    bisect(lets(p1, "a") ++ lets(p2, "b"), 1e-3, 500.0,
+      pk => Lit(0.0) - (gibbs(p1, "a", pk) - gibbs(p2, "b", pk)), Lit(0.0) < Lit(1.0)).memoised
+  }
+
+  private val (tIn, pIn) = (C("T_K"), C("P_bar"))
+  private val names = Seq("_qfmQC", "_qfmCS", "_qfmFR")
+
+  /** The three transition pressures (kbar) at `t`: quartz->coesite,
+    * coesite->stishovite, fayalite->ringwoodite. */
+  private def transitions(t: E): Seq[(String, Loop)] = names.zip(Seq(transition(quartz, coesite, t),
+    transition(coesite, stishovite, t), transition(fayalite, ringwoodite, t)))
+
+  /** Base fO2 (bar) at `t` K and `p` bar over the [[transitions]] columns
+    * (`fO2/QFM.py:12-102`): the buffer phases' VdP with polymorph
+    * transitions on top of O'Neill's 1-bar mu, less the 1-bar EOS terms. */
+  private def buffer(t: E, p: E): Loop = {
+    val Seq(qc, cs, fr) = names.map(C(_))
+    // Math.min(pk, x) for a transition x, which is never NaN or zero
+    def min(pk: E, x: E): E = If(x < pk, x, pk)
+    val pk = C("_pk")
+    def tait(ph: Phase, tag: String, at: E): E = ph.vdp(at, C(s"_pth$tag"), C(s"_p1$tag"))
+    def landauP(at: E): E = quartz.landau(at, t) - C("_ld0")
+    val mu1 = Lit(1.0 / 1e3)
+    closed(Seq("q" -> quartz, "f" -> fayalite, "m" -> magnetite).flatMap { case (tag, ph) =>
+        Seq(s"_pth$tag" -> ph.pth(t), s"_p1$tag" -> ph.part1(C(s"_pth$tag"))) } ++ Seq(
+        "_ld0" -> quartz.landau(Lit(0.0), t, vm = 0.0),
+        "_mu0" -> (Lit(-587474.0) + Lit(1584.427) * t - Lit(203.3164) * t * ln(t) +
+          Lit(0.092710) * t * t),
+        "_mu1" -> Lit(1e3) * (Lit(3.0) * (tait(quartz, "q", mu1) + landauP(mu1)) +
+          Lit(2.0) * tait(magnetite, "m", mu1) - Lit(3.0) * tait(fayalite, "f", mu1)),
+        "_pk" -> p / Lit(1e3),
+        "_s0" -> (tait(quartz, "q", min(pk, qc)) + landauP(min(pk, qc))),
+        "_s1" -> If(pk > qc,
+          C("_s0") + (coesite.vdpAt(min(pk, cs), t) - coesite.vdpAt(qc, t)), C("_s0")),
+        "_sio2" -> If(pk > qc && pk > cs,
+          C("_s1") + (stishovite.vdpAt(pk, t) - stishovite.vdpAt(cs, t)), C("_s1")),
+        "_f0" -> tait(fayalite, "f", min(pk, fr)),
+        "_fe2sio4" -> If(pk > fr,
+          C("_f0") + (ringwoodite.vdpAt(pk, t) - ringwoodite.vdpAt(fr, t)), C("_f0")),
+        "_mup" -> Lit(1e3) * (Lit(3.0) * C("_sio2") + Lit(2.0) * tait(magnetite, "m", pk) -
+          Lit(3.0) * C("_fe2sio4"))),
+      exp((C("_mu0") + (C("_mup") - C("_mu1"))) / (Lit(R) * t)))
+  }
+
+  /** fO2 (bar) at QFM over the columns T_K and P_bar as solver stages:
+    * the transitions, then `_qfm`. */
+  def fO2Stages: Seq[Seq[(String, E)]] = Seq(transitions(tIn), Seq("_qfm" -> buffer(tIn, pIn)))
+
+  /** `value` after the [[transitions]] at T_K, P_bar; `tree` names it. */
+  private def scalar(tree: String, tK: Double, pBar: Double)(value: => E): Double =
+    LoopExpression.scalar(s"QfmFull.$tree", Seq("T_K", "P_bar"))(
+      (Seq(transitions(tIn)), value))(Array(tK, pBar))
 
   /** Phase-transition pressures (kbar) at T: quartz→coesite,
     * coesite→stishovite, fayalite→ringwoodite. */
   def transitionPressures(tK: Double): (Double, Double, Double) = {
-    val a = atT(tK)
-    (a.pQtzCoe, a.pCoeStish, a.pFayRing)
+    val Seq(a, b, c) = names.map(n => scalar(n, tK, 0.0)(C(n)))
+    (a, b, c)
   }
 
-  /** Export hit/miss/fill/eviction counters for both memo caches
-    * (called by Verify/Bench after session build). */
-  def attachMetrics(spark: org.apache.spark.sql.SparkSession): Seq[MemoStats] = {
-    val t = MemoStats.attach(spark, "qfm.transitionCache")
-    val f = MemoStats.attach(spark, "qfm.fO2Cache")
-    transitionCache.attach(t)
-    fO2Cache.attach(f)
-    Seq(t, f)
-  }
-
-  /** (T, P) -> base fO2 memo, bounded like [[transitionCache]]: repeated
-    * conditions skip even the closed-form Tait arithmetic. */
-  private val fO2Cache = new Memo[(Double, Double), java.lang.Double](100000)
-
-  /** Spec hook: entries currently memoised (no-insertion law). */
-  private[graft] def fO2CacheSize: Int = fO2Cache.size
-
-  private[graft] def fO2Base(tK: Double, pBar: Double): java.lang.Double =
-    atT(tK).fO2(pBar)
+  /** The loop memo counts QFM's transition solves: its stats are attached
+    * once, by [[Deng2020.attachMetrics]] or
+    * [[LoopExpression.attachMetrics]]. */
+  def attachMetrics(spark: org.apache.spark.sql.SparkSession): Seq[MemoStats] = Nil
 
   /** Absolute fO2 (bar) at QFM + logshift, T (K), P (bar)
     * (`fO2/QFM.py:187-239`). */
   def fO2(tK: Double, pBar: Double, logshift: Double = 0.0): Double =
-    fO2Cache.getOrFill((tK, pBar))(fO2Base(tK, pBar)).doubleValue *
-      math.pow(10.0, logshift)
+    scalar("fO2", tK, pBar)(buffer(tIn, pIn)) * math.pow(10.0, logshift)
 
-  /** [[fO2]] with read-only memo probing (no insertion) — used when the
-    * auto probe says (T, P) is near-unique, where a write-through memo
-    * degenerates to pure insert+evict churn (r14: 2.9M evictions for
-    * nothing). Same value either way; the transition cache (keyed by T
-    * alone) still memoises the solver work inside. */
-  def fO2NoMemo(tK: Double, pBar: Double, logshift: Double = 0.0): Double =
-    fO2Cache.getNoInsert((tK, pBar))(fO2Base(tK, pBar)).doubleValue *
-      math.pow(10.0, logshift)
+  /** fO2 of the columns `t` and `p` at QFM + logshift: the buffer loop
+    * over the three transition loops. */
+  def column(t: Column, p: Column, logshift: Double = 0.0): Column = {
+    val in = Map("T_K" -> t, "P_bar" -> p)
+    LoopExpression.column(buffer(tIn, pIn),
+      in ++ transitions(tIn).map { case (n, l) => n -> LoopExpression.column(l, in) }) *
+      lit(math.pow(10.0, logshift))
+  }
 
-  val fO2Udf = udf((tK: Double, pBar: Double, shift: Double) =>
-    fO2(tK, pBar, shift))
-
-  private val fO2UdfNoMemo = udf((tK: Double, pBar: Double, shift: Double) =>
-    fO2NoMemo(tK, pBar, shift))
-
-  /** Attach an `fO2` column: one narrow per-row UDF stage (memoised per
-    * executor — see the scale note in the object doc), or the
-    * distinct+join-back plan for grid-like (T, P) — chosen by
-    * [[Fo2Dedup.choose]]'s bounded auto probe, or forced via
+  /** Attach an `fO2` column: the [[column]] per row, or once per distinct
+    * (T, P) joined back for grid-like conditions — chosen by
+    * [[Fo2Dedup.formulation]]'s bounded auto probe, or forced via
     * `spark.graft.fo2.dedupConditions`. */
   def withQfm(df: DataFrame, tCol: String, pCol: String,
               logshift: Double = 0.0, as: String = "fO2"): DataFrame =
     Fo2Dedup.formulation(df, tCol, pCol, "qfm") match {
       case Fo2Dedup.DedupPlan =>
-        Fo2Dedup.withDeduped(df, tCol, pCol, as)(
-          (t, p) => fO2Udf(t, p, lit(logshift)))
-      case Fo2Dedup.MemoUdf =>
-        df.withColumn(as, fO2Udf(col(tCol), col(pCol), lit(logshift)))
-      case Fo2Dedup.NoInsertUdf =>
-        // the probe MEASURED near-unique (T, P): read-only memo (free
-        // hits from earlier grid queries, zero insert/evict churn)
-        df.withColumn(as, fO2UdfNoMemo(col(tCol), col(pCol), lit(logshift)))
+        Fo2Dedup.withDeduped(df, tCol, pCol, as)((t, p) => column(t, p, logshift))
+      case _ => df.withColumn(as, column(col(tCol), col(pCol), logshift))
     }
 }

@@ -104,21 +104,27 @@ object Shishkina {
 
   // ---- scalar entry points: the trees above, evaluated ------------------
 
-  private def eval(c: Comp, e: CompCtx => E): Double =
-    LoopExpression.eval(e(CompCtx(c.names.toVector)), c.names.toSeq.zip(c.wt): _*)
+  private val (xIn, pIn) = (C("xfl"), C("P_bar"))
+
+  /** The tree `e` builds over `c`'s elements and the inputs xfl and P_bar,
+    * evaluated at `c` and those two inputs; `tree` names the tree. */
+  private def eval(tree: String, c: Comp, xFluid: Double, pBar: Double)(e: CompCtx => E): Double =
+    LoopExpression.scalar(s"Shishkina.$tree", c.names.toSeq ++ Seq("xfl", "P_bar"))(
+      (Nil, e(CompCtx(c.names.toVector))))(c.wt ++ Array(xFluid, pBar))
 
   def h2oSolubility(c: Comp, xFluid: Double, pBar: Double): Double =
-    eval(c, h2oSolubilityE(_, Lit(xFluid), Lit(pBar)))
+    eval("h2oSolubility", c, xFluid, pBar)(h2oSolubilityE(_, xIn, pIn))
 
   def co2Solubility(c: Comp, xFluid: Double, pBar: Double): Double =
-    eval(c, co2SolubilityE(_, Lit(xFluid), Lit(pBar)))
+    eval("co2Solubility", c, xFluid, pBar)(co2SolubilityE(_, xIn, pIn))
 
   def h2oSaturation(c: Comp, xFluid: Double = 1.0): Double =
-    eval(c, h2oSaturationE(_, Lit(xFluid)))
+    eval("h2oSaturation", c, xFluid, 0.0)(h2oSaturationE(_, xIn))
 
   def co2Saturation(c: Comp, xFluid: Double = 0.0): Double =
-    eval(c, co2SaturationE) / (1.0 - xFluid)
+    eval("co2Saturation", c, 0.0, 0.0)(co2SaturationE) / (1.0 - xFluid)
 
   def mixedSaturation(c: Comp): (Double, Double) =
-    (eval(c, mixedSaturationE(_)._1), eval(c, mixedSaturationE(_)._2))
+    (eval("mixedSaturation p", c, 0.0, 0.0)(mixedSaturationE(_)._1),
+      eval("mixedSaturation x", c, 0.0, 0.0)(mixedSaturationE(_)._2))
 }

@@ -1,8 +1,9 @@
 package graft.functions
 
-/** Root-finding primitives used inside row-local UDFs — ports of the
-  * scipy.optimize calls the reference makes (`brentq`, secant
-  * `root_scalar(x0,x1)`). Deterministic, allocation-free.
+/** Root-finding primitives — ports of the scipy.optimize calls the
+  * reference makes (`brentq`, secant `root_scalar(x0,x1)`), the
+  * references `E.secant` and `E.brent` follow op for op and the tests
+  * compare the trees against. Deterministic, allocation-free.
   */
 object Solver {
 

@@ -113,8 +113,8 @@ object Fo2Buffers {
     "iw_oneill1993", "fefeo_oneill_huebner")
 
   /** Name → expression for the closed-form buffers (absolute fO2 in bar,
-    * dfO2 shift applied). "qfm"/"iw" are NOT here — they need the
-    * DataFrame-level memoised-UDF dispatch. */
+    * dfO2 shift applied). "qfm"/"iw" are NOT here — they dispatch at the
+    * DataFrame level, where the formulation is chosen per input. */
   def dispatch(name: String, tK: E, pBar: E, logshift: Double): E =
     name match {
       case "qfm_1bar" => qfm1bar(tK, logshift)

@@ -132,6 +132,32 @@ class CseSpec extends SparkSpec {
     assert(E.toSql(C("a") / C("b")) == """("a" / "b")""")
   }
 
+  test("cos renders Java's NaN at ±Infinity inside a loop, where DuckDB raises") {
+    val l = closed(Seq("_c" -> cos(C("a"))), C("_c"))
+    val sql = Pipeline.toSql("t", Seq(Stage(Seq("y" -> l))), Nil)
+    assert(sql.contains("""cos((CASE WHEN isinf("a") THEN 'NaN'::DOUBLE ELSE "a" END))"""), sql)
+    // outside a loop a cos is DuckDB's
+    assert(E.toSql(cos(C("a"))) == """cos("a")""")
+  }
+
+  test("a loop is solved once per distinct input: rows with equal free " +
+    "columns share one loop row; NaN, -0.0 and null inputs get their own") {
+    val l = bisect(Nil, 0.0, 10.0, m => C("a") - m, C("a") > Lit(0.0))
+    val sql = Pipeline.toSql("t", Seq(Stage(Seq("id" -> C("id"), "y" -> l * C("b")))), Nil)
+    // the stage input is kept once; the loop seeds from its distinct
+    // non-null free columns, with their sign bits
+    assert(sql.contains("s0_in AS MATERIALIZED (SELECT * FROM t)"), sql)
+    assert(sql.contains("""(SELECT DISTINCT "a", signbit("a") AS "__s0" FROM s0_in """ +
+      """WHERE "a" IS NOT NULL)"""), sql)
+    // and joins back on both: DuckDB's = holds between 0.0 and -0.0, and
+    // between NaNs, which all get the one NaN row
+    assert(sql.contains("""FROM s0_in LEFT JOIN s0_l0_r ON s0_in."a" = s0_l0_r."s0_l0_r_k0" """ +
+      """AND signbit(s0_in."a") = s0_l0_r."s0_l0_r_s0")"""), sql)
+    // the columns the loop does not read are not in its key
+    assert(!sql.contains("""DISTINCT "a", "b""""), sql)
+    assert(!sql.contains("row_number"), sql)
+  }
+
   test("ln, log10 and sqrt render safe to evaluate on every row") {
     // outside a loop: NULL at and below 0 like Spark's Log; sqrt NaN below 0
     assert(E.toSql(ln(C("a"))) == """(CASE WHEN "a" > 0.0e0 THEN ln("a") END)""")

@@ -25,8 +25,8 @@ class Fo2DedupSpec extends SparkSpec {
   }
 
   /** `df` (with `T_K`, `P_bar`) as one fixed basalt at fO2 1e-8 bar,
-    * through the public API's deng2020 solver closure — which captures
-    * the Deng memo stats attached when it is built. */
+    * through the public API's deng2020 loop columns — whose memoised dVdP
+    * loop captures the loop memo stats attached when it is built. */
   private def dengFe3Fe2(df: DataFrame): DataFrame = {
     val oxides = Seq("SiO2" -> 48.5, "TiO2" -> 1.2, "Al2O3" -> 15.3,
       "FeO" -> 9.0, "MnO" -> 0.17, "MgO" -> 7.8, "CaO" -> 11.0,
@@ -75,11 +75,12 @@ class Fo2DedupSpec extends SparkSpec {
       == Fo2Dedup.NoInsertUdf)
     def rows(d: org.apache.spark.sql.DataFrame): Seq[Double] =
       d.orderBy("T_K").collect().map(_.getDouble(2)).toSeq
-    val (iwBefore, qfmBefore) = (IwFull.fO2CacheSize, QfmFull.fO2CacheSize)
+    val iwBefore = IwFull.fO2CacheSize
     val iwNo = rows(IwFull.withIw(df, "T_K", "P_bar"))
+    // QFM has no (T, P) memo: its buffer is closed form over the
+    // transitions, which the loop memo keeps per T
     val qfmNo = rows(QfmFull.withQfm(df, "T_K", "P_bar"))
-    assert(IwFull.fO2CacheSize == iwBefore &&
-      QfmFull.fO2CacheSize == qfmBefore,
+    assert(IwFull.fO2CacheSize == iwBefore,
       "read-only memo path inserted into the fO2 cache")
     // the same rows through the dedup plan (solve once per condition,
     // broadcast back): identical values — the formulation never changes
@@ -226,37 +227,43 @@ class Fo2DedupSpec extends SparkSpec {
     import org.apache.spark.sql.functions.{col, lit, sum}
     // attach FRESH counters to the live caches (what Bench/Verify do),
     // then push a real solve through every family via the public entry
-    // points, forced onto the memoised-UDF path. 8 partitions on the
+    // points, IW forced onto the memoised-UDF path. 8 partitions on the
     // 4-thread session: task threads add to the driver's shared counters
     // concurrently, and every add must land.
-    val qfmStats = QfmFull.attachMetrics(spark)
+    assert(QfmFull.attachMetrics(spark).isEmpty, "QFM counts in the loop memo")
     val iwStats = IwFull.attachMetrics(spark)
-    val deng = Deng2020.attachMetrics(spark)
+    val loops = Deng2020.attachMetrics(spark).dvdp
     val n = 400000L
     val df = spark.range(0, n, 1, 8).select(
       ((col("id") % 10).cast("double") * 50.0 + lit(1273.15)).as("T_K"),
       ((col("id") % 20).cast("double") * 250.0 + lit(1000.0)).as("P_bar"))
+    def lookups: Long = loops.hits.value + loops.misses.value
     spark.conf.set(Fo2Dedup.DedupKey, "false")
     try {
       QfmFull.withQfm(df, "T_K", "P_bar").agg(sum("fO2")).head()
+      // every row looks up its three transitions exactly once
+      assert(lookups == 3 * n, s"${loops.render}: $lookups lookups for $n QFM rows")
       IwFull.withIw(df, "T_K", "P_bar").agg(sum("fO2")).head()
     } finally spark.conf.unset(Fo2Dedup.DedupKey)
     dengFe3Fe2(df).agg(sum("Fe3Fe2")).head()
-    val top = (qfmStats ++ iwStats).filter(_.name.endsWith("fO2Cache"))
-    assert(top.size == 2, top.map(_.name).toString)
-    for (st <- top :+ deng.dvdp) {
+    // ... and its dVdP once
+    assert(lookups == 4 * n, s"${loops.render}: $lookups lookups for $n QFM and Deng rows")
+    val top = iwStats.filter(_.name.endsWith("fO2Cache"))
+    assert(top.size == 1, iwStats.map(_.name).toString)
+    for (st <- top) {
       // every row goes through the top-level cache exactly once
       assert(st.hits.value + st.misses.value == n,
         s"${st.name}: ${st.hits.value} hits + ${st.misses.value} misses != $n")
-    }
-    for (st <- top) {
       // the caches persist across suites, so the hit/miss split is not
       // pinned — but with 20 distinct (T, P) conditions (lcm(10,20)=20
       // joint values) a working cache must mostly hit
       assert(st.misses.value <= 20L,
         s"${st.name}: ${st.misses.value} misses for 20 distinct conditions")
     }
-    for (st <- qfmStats ++ iwStats ++ Seq(deng.vol, deng.dvdp)) {
+    // 10 temperatures: 30 transition solves; 10 x at most 12 lattice
+    // lengths of dVdP
+    assert(loops.misses.value <= 30L + 120L, loops.render)
+    for (st <- iwStats :+ loops) {
       // eviction accounting (the r9 concurrent-evictor bug): a cache can
       // never have dropped more entries than were ever inserted
       assert(st.evicted.value <= st.misses.value,
@@ -268,15 +275,15 @@ class Fo2DedupSpec extends SparkSpec {
       "reach the driver with its own stats detached, and no task's copy " +
       "outlives its task") {
     val deng = Deng2020.attachMetrics(spark)
+    val memo = graft.expressions.LoopExpression.memo
     val n = 4000L
     val df = spark.range(0, n, 1, 8).select(
       ((col("id") % 10).cast("double") * 50.0 + lit(1273.15)).as("T_K"),
       ((col("id") % 20).cast("double") * 250.0 + lit(1000.0)).as("P_bar"))
-    val fe3 = dengFe3Fe2(df) // the solver closure captures `deng` here
+    val fe3 = dengFe3Fe2(df) // the dVdP loop column captures `deng` here
     // detach the driver side: the task threads now see no stats, as on a
     // remote executor, and must republish their deserialized copies
-    Deng2020.volCache.attach(null)
-    Deng2020.dVdPCache.attach(null)
+    memo.attach(null)
     fe3.agg(sum("Fe3Fe2")).head()
     val lookups = deng.dvdpHits.value + deng.dvdpMisses.value
     // local task threads share one static, so a copy published by one task
@@ -284,7 +291,7 @@ class Fo2DedupSpec extends SparkSpec {
     // approximate at task boundaries
     assert(lookups > 0L && lookups <= n,
       s"$lookups dVdP lookups reached the driver for $n rows")
-    assert(Deng2020.currentMetrics.isEmpty,
+    assert(memo.attached.isEmpty,
       "a task's stats copy stayed published after its task completed")
   }
 
