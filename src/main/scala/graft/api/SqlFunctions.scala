@@ -26,7 +26,7 @@ object SqlFunctions {
     val ctx = graft.models.CompCtx(els.toVector)
     val t = C("T_K")
     /** P_sat after a mixed-saturation model's solver `stages`, over the
-      * composition array and T_K; its evaluators are built once. */
+      * composition array and T_K; its kernel compiles once per JVM. */
     def saturation(stages: Seq[Seq[(String, graft.expr.E)]],
                    p: graft.expr.E): (Seq[Double], Double) => Double = {
       val f = LoopExpression.staged(stages, p, els.toSeq :+ "T_K")

@@ -81,13 +81,14 @@ final case class Raw(column: Column, sql: String) extends E      // escape hatch
   * comparison with NaN is false, `ln`/`log10`/`sqrt` return Java's values
   * outside their domain, a division by zero gives Java's ±Infinity or NaN,
   * transcendentals are `java.lang.Math`'s. Spark runs a loop as one native
-  * expression ([[graft.expressions.LoopExpression]]); [[Pipeline.toSql]]
-  * renders it as a recursive CTE over the distinct values of its free
-  * columns.
+  * expression ([[graft.expressions.LoopExpression]]) that calls the loop's
+  * kernel, compiled once per JVM ([[graft.expressions.LoopKernel]]), as
+  * the scalar entry points do; [[Pipeline.toSql]] renders it as a
+  * recursive CTE over the distinct values of its free columns.
   *
   * A loop's result depends on its free columns alone. With `memo` set,
-  * Spark and the scalar evaluators keep each result in a bounded per-JVM
-  * memo keyed by the inputs' raw bits ([[graft.expressions.LoopExpression]]):
+  * its kernel keeps each result in a bounded per-JVM memo keyed by the
+  * inputs' raw bits ([[graft.expressions.LoopExpression]]):
   * the model code sets it on a solve whose inputs repeat across rows (one
   * keyed by temperature), never on a per-row one. */
 final case class Loop(lets: Seq[(String, E)], init: Seq[(String, E)],
@@ -744,7 +745,7 @@ object Pipeline {
   private val round = "__n"
   private def q(n: String): String = "\"" + n + "\""
 
-  private def loopsIn(n: Node): Seq[Loop] = n match {
+  private[graft] def loopsIn(n: Node): Seq[Loop] = n match {
     case l: Loop => Seq(l)
     case _       => n.children.flatMap(loopsIn)
   }

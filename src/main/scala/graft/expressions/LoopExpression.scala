@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{Block, CodegenContext, EmptyBlock, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.types.{DataType, DoubleType}
+import scala.util.control.NonFatal
 import graft.expr._
 import graft.functions.{Memo, MemoStats}
 
@@ -14,17 +15,16 @@ import graft.functions.{Memo, MemoStats}
   * loop's free columns, in [[E.freeVars]] order, as doubles; a null child
   * gives a null result, as a primitive-argument UDF does.
   *
-  * Generated code puts the whole loop in a method of its own
-  * (`ctx.addNewFunction`), which keeps the stage's method small and the
-  * loop under HotSpot's 8000-byte JIT limit. Generated code and the
-  * interpreted [[eval]] both compute with `java.lang.Math`: Catalyst's
-  * `Exp`/`Log`/`Pow` use `StrictMath`, which can differ in the last ulp
-  * from the `Math` of the scalar kernels.
+  * Both modes call the loop's one [[LoopKernel]], compiled once per JVM:
+  * generated code fills an argument buffer of its own and calls [[solve]],
+  * and the codegen-off [[eval]] calls it too. The kernel computes with
+  * `java.lang.Math`: Catalyst's `Exp`/`Log`/`Pow` use `StrictMath`, which
+  * can differ in the last ulp from the `Math` of the scalar kernels.
   *
   * A memoised loop ([[Loop.memo]]) reads and fills the per-JVM memo
-  * ([[LoopExpression.memo]]) in both modes. `stats` are the memo's stats
-  * attached when the column was built: a task republishes them where the
-  * memo has none attached, as on a remote executor ([[Memo.publish]]). */
+  * ([[LoopExpression.memo]]) inside its kernel. `stats` are the memo's
+  * stats attached when the column was built: a task republishes them where
+  * the memo has none attached, as on a remote executor ([[Memo.publish]]). */
 case class LoopExpression(loop: Loop, children: Seq[Expression])(
     val stats: Option[MemoStats]) extends Expression {
 
@@ -33,58 +33,34 @@ case class LoopExpression(loop: Loop, children: Seq[Expression])(
   override def toString: String = s"loop(${children.mkString(", ")})"
   override protected def otherCopyArgs: Seq[AnyRef] = stats :: Nil
 
-  @transient private lazy val names = E.freeVars(loop)
-  @transient private lazy val run = LoopExpression.evaluator(loop, names)
-  @transient private lazy val id = LoopExpression.idOf(loop)
+  @transient private lazy val kernel =
+    LoopKernel.Program(Nil, loop, E.freeVars(loop)).kernel
 
   override def eval(input: InternalRow): Any = {
     val xs = children.map(_.eval(input))
-    if (xs.contains(null)) null
-    else {
-      if (loop.memo) publish()
-      run(xs.map(_.asInstanceOf[Double]).toArray)
-    }
+    if (xs.contains(null)) null else solve(xs.map(_.asInstanceOf[Double]).toArray)
   }
 
-  private def publish(): Unit = stats.foreach(LoopExpression.memo.publish)
-
-  /** The memoised result at the inputs `xs`, or null (generated code). */
-  def lookup(xs: Array[Double]): java.lang.Double = {
-    publish()
-    LoopExpression.memo.lookup(LoopExpression.key(id, xs))
+  /** The loop at the inputs `xs` (called by generated code). */
+  def solve(xs: Array[Double]): Double = {
+    if (loop.memo) stats.foreach(LoopExpression.memo.publish)
+    kernel(xs)
   }
-
-  /** Memoise `v`, computed in `nanos`, at the inputs `xs` (generated code). */
-  def fill(xs: Array[Double], v: Double, nanos: Long): Unit =
-    LoopExpression.memo.fill(LoopExpression.key(id, xs), v, nanos)
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val args = children.map(_.genCode(ctx))
-    val name = ctx.freshName("graftLoop")
-    val fn = ctx.addNewFunction(name,
-      s"""private double $name(${names.indices.map(i => s"double a$i").mkString(", ")}) {
-         |${LoopExpression.javaBody(loop, names)}
-         |}""".stripMargin)
+    val self = ctx.addReferenceObj("graftLoop", this)
+    // one task thread runs an instance of the generated class
+    val xs = ctx.addMutableState("double[]", "graftLoopArgs",
+      v => s"$v = new double[${args.size}];")
     val isNull = (args.map(_.isNull.toString) :+ "false").mkString(" || ")
-    val call = s"$fn(${args.map(_.value).mkString(", ")})"
-    val solve = if (!loop.memo) s"${ev.value} = $call;" else {
-      val self = ctx.addReferenceObj("graftLoopExpr", this)
-      val (k, hit, t0) = (ctx.freshName("key"), ctx.freshName("hit"), ctx.freshName("t0"))
-      s"""double[] $k = new double[] {${args.map(_.value).mkString(", ")}};
-         |java.lang.Double $hit = $self.lookup($k);
-         |if ($hit != null) ${ev.value} = $hit.doubleValue();
-         |else {
-         |  long $t0 = System.nanoTime();
-         |  ${ev.value} = $call;
-         |  $self.fill($k, ${ev.value}, System.nanoTime() - $t0);
-         |}""".stripMargin
-    }
     ev.copy(code = args.map(_.code).foldLeft(EmptyBlock: Block)(_ + _) +
       code"""
         |boolean ${ev.isNull} = $isNull;
         |double ${ev.value} = -1.0;
         |if (!${ev.isNull}) {
-        |  $solve
+        |  ${args.indices.map(i => s"$xs[$i] = ${args(i).value};").mkString("\n")}
+        |  ${ev.value} = $self.solve($xs);
         |}
         |""".stripMargin)
   }
@@ -109,14 +85,14 @@ object LoopExpression {
     }
   }
 
-  private def key(id: Int, xs: Array[Double]): Key =
+  private[graft] def key(id: Int, xs: Array[Double]): Key =
     new Key(id, xs.map(java.lang.Double.doubleToRawLongBits))
 
   private val ids = new java.util.concurrent.ConcurrentHashMap[Loop, Integer]()
   private val lastId = new java.util.concurrent.atomic.AtomicInteger()
 
   /** The memo id of `l`, one per distinct memoised loop in this JVM. */
-  private def idOf(l: Loop): Int = ids.computeIfAbsent(l, _ => lastId.incrementAndGet())
+  private[graft] def idOf(l: Loop): Int = ids.computeIfAbsent(l, _ => lastId.incrementAndGet())
 
   /** Fresh stats on the loop memo, named `loop.memo` (called by
     * Verify/Bench after session build). */
@@ -133,154 +109,161 @@ object LoopExpression {
       expression(bind.getOrElse(n, F.col(n)).cast("double"))))(
       if (l.memo) memo.attached else None))
 
-  /** `e` evaluated with Java semantics at the inputs `env`. */
-  def eval(e: E, env: (String, Double)*): Double =
-    staged(Nil, e, env.map(_._1))(env.map(_._2).toArray)
-
-  private val evaluators =
+  private val scalars =
     new Memo[(String, Seq[String]), Array[Double] => Double](256)
 
-  /** Spec hook: evaluators built and kept. */
-  private[graft] def evaluatorCount: Int = evaluators.size
+  /** Spec hook: scalar entry points built and kept. */
+  private[graft] def scalarCount: Int = scalars.size
 
   /** The scalar entry point of a model written as a tree: `value` after
     * the solver `stages` that `build` makes, as a function of the inputs
-    * `names` ([[staged]]). Its evaluator is built once per JVM for each
-    * tree name `tree` (a name no other tree of the same inputs has) and
-    * input names, so a call builds no tree: building one of Allison's
-    * costs milliseconds. */
+    * `names` ([[staged]]). It is built once per JVM for each tree name
+    * `tree` (a name no other tree of the same inputs has) and input
+    * names, so a call builds no tree: building one of Allison's costs
+    * milliseconds. */
   def scalar(tree: String, names: Seq[String])(
       build: => (Seq[Seq[(String, E)]], E)): Array[Double] => Double =
-    evaluators.getOrFill((tree, names)) {
+    scalars.getOrFill((tree, names)) {
       val (stages, value) = build
       staged(stages, value, names)
     }
 
   /** `value` after the solver `stages` (named definitions, each reading
     * the inputs and the definitions before it), as a function of the
-    * inputs `names`: one evaluator per definition. */
+    * inputs `names`: one [[LoopKernel]] per distinct program and JVM. */
   def staged(stages: Seq[Seq[(String, E)]], value: E,
-             names: Seq[String]): Array[Double] => Double = {
-    val defs = stages.flatten
-    val each = defs.indices.map(i => evaluator(defs(i)._2, names ++ defs.take(i).map(_._1)))
-    val last = evaluator(value, names ++ defs.map(_._1))
-    xs => last(each.foldLeft(xs)((vs, f) => vs :+ f(vs)))
+             names: Seq[String]): Array[Double] => Double =
+    LoopKernel.Program(stages.flatten, value, names)
+}
+
+/** A [[LoopKernel.Program]] compiled to Java: the one rendering of loop
+  * semantics. Generated stage code, the codegen-off `eval`, the scalar
+  * entry points and the SQL UDFs all call it. It keeps no state, so one
+  * instance serves every thread of a JVM; it is never serialised. */
+abstract class LoopKernel {
+
+  /** The program's value at the inputs `x`, in its input order. */
+  def apply(x: Array[Double]): Double
+
+  // a memoised loop's method reads and fills the loop memo through these
+  protected final def lookup(loop: Int, x: Array[Double]): java.lang.Double =
+    LoopExpression.memo.lookup(LoopExpression.key(loop, x))
+
+  protected final def fill(loop: Int, x: Array[Double], v: Double, nanos: Long): Unit =
+    LoopExpression.memo.fill(LoopExpression.key(loop, x), v, nanos)
+}
+
+object LoopKernel {
+
+  /** `value` after the named definitions `defs` (each reading the inputs
+    * and the definitions before it), as a function of the inputs `names`.
+    * It ships as its tree; each JVM compiles its kernel on the first call,
+    * once per distinct program. */
+  final case class Program(defs: Seq[(String, E)], value: E, names: Seq[String])
+      extends (Array[Double] => Double) {
+    @transient lazy val kernel: LoopKernel = kernels.getOrFill(this)(compile(this))
+    def apply(x: Array[Double]): Double = kernel(x)
   }
 
-  /** `e` as a function of the inputs `names`, interpreted over one frame
-    * slot per name (inputs first, then every bound name). */
-  private def evaluator(e: E, names: Seq[String]): Array[Double] => Double = {
-    val slot = (names ++ bound(e)).distinct.zipWithIndex.toMap
-    val in = new Interpreter(slot, memoised(e).map(l => l -> E.freeVars(l).map(slot).toArray).toMap)
-    xs => in.value(e, java.util.Arrays.copyOf(xs, slot.size))
+  // outside Spark's generated-class cache, so a kernel evicts no stage class
+  private val kernels = new Memo[Program, LoopKernel](1024)
+
+  private def compile(p: Program): LoopKernel =
+    try cook(source(p)).getClazz.getConstructor().newInstance().asInstanceOf[LoopKernel]
+    catch { case NonFatal(e) => throw new IllegalStateException(s"the kernel of the loops " +
+      loopsIn(p).map(l => s"(state ${l.state}, result ${l.result})").mkString(", ").take(2000) +
+      s" over ${p.names} does not compile", e) }
+
+  /** The janino compilation of a kernel's class body `src`. */
+  private[graft] def cook(src: String): org.codehaus.janino.ClassBodyEvaluator = {
+    val c = new org.codehaus.janino.ClassBodyEvaluator()
+    c.setParentClassLoader(classOf[LoopKernel].getClassLoader)
+    c.setClassName("graft.expressions.CompiledLoopKernel")
+    c.setExtendedClass(classOf[LoopKernel])
+    c.cook(src)
+    c
   }
 
-  private def bound(n: Node): Seq[String] = n match {
-    case l: Loop => (l.lets ++ l.init ++ l.step).map(_._1)
-    case _       => n.children.flatMap(bound)
+  private def loopsIn(p: Program): Seq[Loop] =
+    (p.defs.map(_._2) :+ p.value).flatMap(Pipeline.loopsIn).distinct
+
+  /** The Java class body of `p`: a method `solve<i>` per loop (one local
+    * per bound name, its assignments in order), `memo<i>` around it for a
+    * memoised loop, and `apply` for the definitions and the value. */
+  private[graft] def source(p: Program): String = {
+    val loops = loopsIn(p)
+    val methods = loops.zipWithIndex.map { case (l, i) =>
+      val as = E.freeVars(l).indices.map(k => s"a$k")
+      val params = as.map("double " + _).mkString(", ")
+      lazy val id = LoopExpression.idOf(l) // only a memoised loop has one
+      s"""private double solve$i($params) {
+         |${body(l)}
+         |}""".stripMargin + (if (!l.memo) "" else
+      s"""
+         |private double memo$i($params) {
+         |  double[] k = new double[] {${as.mkString(", ")}};
+         |  Double hit = lookup($id, k);
+         |  if (hit != null) return hit.doubleValue();
+         |  long t0 = System.nanoTime();
+         |  double r = solve$i(${as.mkString(", ")});
+         |  fill($id, k, r, System.nanoTime() - t0);
+         |  return r;
+         |}""".stripMargin)
+    }
+    val scope = p.names.zipWithIndex.distinctBy(_._1).map { case (n, i) => n -> s"x[$i]" }.toMap ++
+      p.defs.map(_._1).zipWithIndex.map { case (n, i) => n -> s"d$i" }
+    def call(l: Loop): String = { // in scope: the value reads every definition
+      val i = loops.indexOf(l)
+      s"${if (l.memo) "memo" else "solve"}$i(${E.freeVars(l).map(scope).mkString(", ")})"
+    }
+    (methods ++ Seq("public double apply(double[] x) {") ++
+      p.defs.zipWithIndex.map { case ((_, e), i) => s"double d$i = ${java(e, scope, call)};" } ++
+      Seq(s"return ${java(p.value, scope, call)};", "}")).mkString("\n")
   }
 
-  private def memoised(n: Node): Seq[Loop] = n match {
-    case l: Loop => if (l.memo) Seq(l) else Nil
-    case _       => n.children.flatMap(memoised)
-  }
-
-  /** The tree walk over a frame: `slot` places each name, `keyed` gives
-    * each memoised loop the slots of its free columns. A closure ships it
-    * to executors, where each JVM gives the loops its own ids. */
-  private final class Interpreter(slot: Map[String, Int],
-                                  keyed: Map[Loop, Array[Int]]) extends Serializable {
-    @transient private lazy val ids = keyed.map { case (l, _) => l -> idOf(l) }
-
-    def value(e: E, fr: Array[Double]): Double = {
-      def v(x: E): Double = value(x, fr)
-      e match {
-        case C(n)     => fr(slot(n))
-        case Lit(x)   => x
-        case ILit(x)  => x.toDouble
-        case CastD(a) => v(a)
-        case Bin(op, l, r) =>
-          val (a, b) = (v(l), v(r))
-          op match { case "+" => a + b; case "-" => a - b; case "*" => a * b
-                     case "/" => a / b; case "%" => a % b }
-        case Fn("pow", List(a, b)) => Math.pow(v(a), v(b))
-        case Fn(fn, List(a)) if math1.contains(fn) => math1(fn)(v(a))
-        case If(c, t, f) => if (holds(c, fr)) v(t) else v(f)
-        case l: Loop if l.memo =>
-          val k = key(ids(l), keyed(l).map(fr(_)))
-          val hit = memo.lookup(k)
-          if (hit != null) hit.doubleValue
-          else {
-            val t0 = System.nanoTime()
-            val r = solve(l, fr)
-            memo.fill(k, r, System.nanoTime() - t0)
-            r
-          }
-        case l: Loop => solve(l, fr)
-        case _ => unsupported(e)
-      }
-    }
-
-    private def solve(l: Loop, fr: Array[Double]): Double = {
-      def run(as: Seq[(String, E)]): Unit = as.foreach { case (n, x) => fr(slot(n)) = value(x, fr) }
-      run(l.lets ++ l.init)
-      var n = 0
-      while (n < l.maxIter && holds(l.cond, fr)) { run(l.step); n += 1 }
-      value(l.result, fr)
-    }
-
-    private def holds(c: Cond, fr: Array[Double]): Boolean = c match {
-      case Cmp(op, l, r) =>
-        val (a, b) = (value(l, fr), value(r, fr))
-        op match { case "<" => a < b; case "<=" => a <= b; case ">" => a > b
-                   case ">=" => a >= b; case "=" => a == b }
-      case AndOr("AND", l, r) => holds(l, fr) && holds(r, fr)
-      case AndOr(_, l, r)     => holds(l, fr) || holds(r, fr)
-      case NotC(x)            => !holds(x, fr)
-    }
-  }
-
-  /** The one-argument `java.lang.Math` functions, by E name. */
-  private val math1: Map[String, Double => Double] = Map("exp" -> (Math.exp _),
-    "ln" -> (Math.log _), "log10" -> (Math.log10 _), "sqrt" -> (Math.sqrt _),
-    "abs" -> ((x: Double) => Math.abs(x)), "cos" -> (Math.cos _), "atan" -> (Math.atan _),
-    "rint" -> (Math.rint _), "ulp" -> ((x: Double) => Math.ulp(x)))
-  private val javaName = Map("ln" -> "log").withDefault(identity)
-
-  private def unsupported(e: E): Nothing =
-    throw new IllegalArgumentException(s"not computable with Java semantics: $e")
-
-  /** The Java method body of `l` over parameters `a0..` (`names` order):
-    * one local per bound name, the operations of [[evaluator]] in its
-    * order. */
-  private[graft] def javaBody(l: Loop, names: Seq[String]): String = {
-    val id = (names.zipWithIndex.map { case (n, i) => n -> s"a$i" } ++
-      bound(l).distinct.zipWithIndex.map { case (n, i) => n -> s"b$i" }).toMap
-    def j(e: E): String = e match {
-      case C(n)     => id(n)
-      case Lit(v)   => lit(v)
-      case ILit(v)  => lit(v.toDouble)
-      case CastD(a) => j(a)
-      case Bin(op, x, y) => s"(${j(x)} $op ${j(y)})"
-      case Fn(fn, args) if fn == "pow" || math1.contains(fn) =>
-        s"java.lang.Math.${javaName(fn)}(${args.map(j).mkString(", ")})"
-      case If(p, t, f) => s"(${jc(p)} ? ${j(t)} : ${j(f)})"
-      case _ => unsupported(e)
-    }
-    def jc(p: Cond): String = p match {
-      case Cmp(op, x, y)   => s"(${j(x)} ${if (op == "=") "==" else op} ${j(y)})"
-      case AndOr(op, x, y) => s"(${jc(x)} ${if (op == "AND") "&&" else "||"} ${jc(y)})"
-      case NotC(x)         => s"(!${jc(x)})"
-    }
+  /** The method body of `l` over parameters `a0..` ([[E.freeVars]] order). */
+  private def body(l: Loop): String = {
+    val id = (E.freeVars(l).zipWithIndex.map { case (n, i) => n -> s"a$i" } ++
+      (l.lets ++ l.init ++ l.step).map(_._1).distinct.zipWithIndex.map { case (n, i) => n -> s"b$i" }).toMap
+    def j(e: E): String = java(e, id, _ => throw new IllegalArgumentException("a loop holds no loop"))
     // a step temporary is declared in the loop body, afresh each round
     val declared = scala.collection.mutable.Set.empty[String]
     def assign(as: Seq[(String, E)]): Seq[String] = as.map { case (n, e) =>
       (if (declared.add(n)) "double " else "") + s"${id(n)} = ${j(e)};"
     }
     (assign(l.lets ++ l.init) ++
-      Seq("int it = 0;", s"while (it < ${l.maxIter} && ${jc(l.cond)}) {") ++
+      Seq("int it = 0;", s"while (it < ${l.maxIter} && ${cond(l.cond, j)}) {") ++
       assign(l.step) ++ Seq("it++;", "}", s"return ${j(l.result)};")).mkString("\n")
   }
+
+  /** `e` as a Java double expression: a name reads `id(name)`, a loop
+    * is `loop(it)`. */
+  private def java(e: E, id: String => String, loop: Loop => String): String = {
+    def j(e: E): String = e match {
+      case C(n)     => id(n)
+      case Lit(v)   => lit(v)
+      case ILit(v)  => lit(v.toDouble)
+      case CastD(a) => j(a)
+      case Bin(op, x, y) => s"(${j(x)} $op ${j(y)})"
+      case Fn(fn, args) if math.contains(fn) =>
+        s"java.lang.Math.${math(fn)}(${args.map(j).mkString(", ")})"
+      case If(p, t, f) => s"(${cond(p, j)} ? ${j(t)} : ${j(f)})"
+      case l: Loop     => loop(l)
+      case _ => throw new IllegalArgumentException(s"not computable with Java semantics: $e")
+    }
+    j(e)
+  }
+
+  private def cond(p: Cond, j: E => String): String = p match {
+    case Cmp(op, x, y)   => s"(${j(x)} ${if (op == "=") "==" else op} ${j(y)})"
+    case AndOr(op, x, y) => s"(${cond(x, j)} ${if (op == "AND") "&&" else "||"} ${cond(y, j)})"
+    case NotC(x)         => s"(!${cond(x, j)})"
+  }
+
+  /** The `java.lang.Math` method of each E function. */
+  private val math = Map("exp" -> "exp", "ln" -> "log", "log10" -> "log10", "sqrt" -> "sqrt",
+    "abs" -> "abs", "cos" -> "cos", "atan" -> "atan", "rint" -> "rint", "ulp" -> "ulp",
+    "pow" -> "pow")
 
   private def lit(v: Double): String =
     if (v.isNaN) "java.lang.Double.NaN"

@@ -55,9 +55,13 @@ object Pq {
       .map(_.getSeq[Double](1).toArray)
     var cents: Array[Array[Array[Double]]] =
       Array.tabulate(m)(s => init.map(v => v.slice(s * sub, (s + 1) * sub)))
+    // each subspace's slice once, in a projection below the explode:
+    // sliced inside it, every centroid's distance repeats the slice and
+    // the stage's consume method outgrows janino's 64 KB
+    val sliced = e.select((0 until m).map(s => slice(col("v"), s * sub + 1, sub).as(s"v$s")): _*)
     for (_ <- 1 to iters) {
-      val stacked = e.select(explode(array((0 until m).map { s =>
-          val vs = slice(col("v"), s * sub + 1, sub)
+      val stacked = sliced.select(explode(array((0 until m).map { s =>
+          val vs = col(s"v$s")
           struct(lit(s).as("s"),
             argminCode(d2Cols(vs, cents(s)))._1.as("cid"), vs.as("sv"))
         }: _*)).as("t"))

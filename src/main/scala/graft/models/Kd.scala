@@ -147,10 +147,10 @@ object Kd {
   }
 
   // The scalar and Column entry points run the same loops over arguments
-  // named x0, x1, ...
+  // named x0, x1, ...; a scalar one is built once per JVM
   private def args(n: Int): IndexedSeq[E] = (0 until n).map(i => C(s"x$i"))
-  private def scalar(l: Loop, xs: Double*): Double =
-    LoopExpression.eval(l, xs.indices.map(i => s"x$i" -> xs(i)): _*)
+  private def scalar(tree: String, l: => Loop, xs: Double*): Double =
+    LoopExpression.scalar(s"Kd.$tree", xs.indices.map(i => s"x$i"))((Nil, l))(xs.toArray)
   private def column(l: Loop, xs: Column*): Column =
     LoopExpression.column(l, xs.indices.map(i => s"x$i" -> xs(i)).toMap)
 
@@ -167,16 +167,16 @@ object Kd {
       siO2mp: Double, na2Omp: Double, k2Omp: Double, h2Omp: Double,
       feOmol: Double, mgOmol: Double,
       fe3fe2: Double, tK: Double, pBar: Double): Double =
-    scalar(toplis, siO2mp, na2Omp, k2Omp, h2Omp, feOmol, mgOmol, fe3fe2, tK, pBar)
+    scalar("toplis", toplis, siO2mp, na2Omp, k2Omp, h2Omp, feOmol, mgOmol, fe3fe2, tK, pBar)
 
   private[graft] def blundy2020Iterate(feOmol: Double, mgOmol: Double,
                                        fe3fe2Borisov: Double, tK: Double): Double =
-    scalar(blundy, feOmol, mgOmol, fe3fe2Borisov, tK)
+    scalar("blundy", blundy, feOmol, mgOmol, fe3fe2Borisov, tK)
 
   private[graft] def saper2022Iterate(feOmol: Double, mgOmol: Double,
                                       catSi: Double, catTi: Double, catNaK: Double,
                                       fe3fe2: Double, tK: Double): Double =
-    scalar(saper, feOmol, mgOmol, catSi, catTi, catNaK, fe3fe2, tK)
+    scalar("saper", saper, feOmol, mgOmol, catSi, catTi, catNaK, fe3fe2, tK)
 
   def blundy2020(feOmol: Column, mgOmol: Column, fe3fe2Borisov: Column,
                  tK: Column): Column =

@@ -4,13 +4,15 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.ScalaUDF
 import org.apache.spark.sql.functions.{col, lit}
 import graft.expr._
-import graft.expressions.LoopExpression
+import graft.expressions.{LoopExpression, LoopKernel}
 import graft.models.Kd
 
 /** The loop node ([[Loop]]) in Spark: generated code and interpreted
-  * evaluation agree bit for bit, a null input gives a null result, and the
-  * queries written with loops plan no UDF. */
-class LoopSpec extends SparkSpec {
+  * evaluation (the codegen-off `eval`, which calls the same compiled
+  * [[graft.expressions.LoopKernel]]) agree bit for bit, a null input gives
+  * a null result, the queries written with loops plan no UDF, and no stage
+  * falls back from generated code. */
+class LoopSpec extends SparkSpec with NoCodegenFallback {
 
   // the seed-42 sf0.001 and sf0.01 tables (TESTDATA.md), as committed for
   // the benchmark; the isobar grids sample one melt in 997, so they run at
@@ -121,17 +123,24 @@ class LoopSpec extends SparkSpec {
 
   test("every loop query's generated loop methods stay under HotSpot's " +
       "8000-byte JIT limit") {
-    import org.apache.spark.sql.catalyst.expressions.codegen.{CodeAndComment, CodeGenerator}
+    import scala.jdk.CollectionConverters._
+    import org.codehaus.janino.util.ClassFile
     for (q <- loopQueries; l <- planning[LoopExpression](Queries.queries(q)(spark, sf))
         .flatMap(_.expressions.flatMap(_.collect { case e: LoopExpression => e.loop })).distinct) {
-      val names = E.freeVars(l)
-      val body = s"""public Object generate(Object[] references) { return null; }
-         |private double loop(${names.indices.map(i => s"double a$i").mkString(", ")}) {
-         |${LoopExpression.javaBody(l, names)}
-         |}""".stripMargin
-      val size = CodeGenerator.compile(new CodeAndComment(body, Map.empty))._2.maxMethodCodeSize
-      assert(size < 8000, s"$q: a loop method of $size bytes")
+      val kernel = LoopKernel.cook(LoopKernel.source(LoopKernel.Program(Nil, l, E.freeVars(l))))
+      val maxMethodCodeSize = kernel.getBytecodes.values.asScala.flatMap { b =>
+        new ClassFile(new java.io.ByteArrayInputStream(b)).methodInfos.asScala
+          .flatMap(_.getAttributes.toSeq.collect { case c: ClassFile.CodeAttribute => c.code.length })
+      }.max
+      assert(maxMethodCodeSize < 8000, s"$q: a loop method of $maxMethodCodeSize bytes")
     }
+  }
+
+  test("a loop whose kernel does not compile fails with an error that names it") {
+    val l = E.closed(Seq("_least" -> Fn("least", List(C("a"), Lit(1.0)))), C("_least"))
+    val e = intercept[IllegalStateException](LoopExpression.staged(Nil, l, Seq("a"))(Array(2.0)))
+    assert(e.getMessage.contains("result C(_least)") && e.getMessage.contains("List(a)"),
+      e.getMessage)
   }
 
   test("loop names that differ only in case are rejected") {

@@ -16,9 +16,11 @@ import graft.ext.{Artifacts, Pq}
   *  - persistedIndex keying: the memo is keyed on the FULL (key, params)
   *    string, so the classic 32-bit String.hashCode collision ("Aa" vs
   *    "BB") serves each corpus its OWN index — the regression the r11
-  *    advice flagged.
+  *    advice flagged;
+  *  - no stage of training, encoding or search falls back from generated
+  *    code ([[NoCodegenFallback]]).
   */
-class PqSpec extends SparkSpec {
+class PqSpec extends SparkSpec with NoCodegenFallback {
 
   import spark.implicits._
 

@@ -292,8 +292,9 @@ class SolverKernelSpec extends SparkSpec {
     spark.udf.register("spec_scalars", (wt: Seq[Double], t: Double, p: Double) =>
       graft.functions.IaconoMarziano.mixedSaturation(
         graft.functions.IaconoMarziano.Comp(names, wt.toArray), t)._1 +
-        Deng2020.fe3Fe2(F.molNorm(names, wt.toArray), t, p, 1e-8))
-    val initial = LoopExpression.evaluatorCount
+        Deng2020.fe3Fe2(F.molNorm(names, wt.toArray), t, p, 1e-8) +
+        graft.models.Kd.toplisIterate(wt(0), wt(1), wt(2), wt(3), 0.1, 0.1, 0.2, t, p))
+    val initial = LoopExpression.scalarCount
     val sizes = (1 to 3).map { _ =>
       spark.sql(
         s"""SELECT sum(fe3fe2_oneill2006($arr, T_K, P_bar, 1e-8)),
@@ -301,11 +302,12 @@ class SolverKernelSpec extends SparkSpec {
            |  sum(saturation_pressure_im($arr, T_K)),
            |  sum(spec_scalars($arr, T_K, P_bar))
            |FROM melts_schema_cache""".stripMargin).collect()
-      LoopExpression.evaluatorCount
+      LoopExpression.scalarCount
     }
-    // one evaluator per entry point and schema (IM's P_sat, Deng's
-    // Fe3Fe2), whichever task builds it first; none per row or task
-    assert(sizes.distinct.size == 1 && sizes.head <= initial + 2,
-      s"evaluator-cache size $initial, then after each run: $sizes")
+    // one scalar entry point per model and schema (IM's P_sat, Deng's
+    // Fe3Fe2, Toplis's Kd), whichever task builds it first; none per row
+    // or task
+    assert(sizes.distinct.size == 1 && sizes.head <= initial + 3,
+      s"scalar-cache size $initial, then after each run: $sizes")
   }
 }
