@@ -38,9 +38,10 @@ import scala.util.control.NonFatal
   * solver-UDF cold spikes (armstrong 48 s cold / 2.6 s warm) that the
   * JSON could not explain because the GC/JIT/codegen/cache metrics only
   * went to stderr. Now `diag` embeds, per pass: GC time, JVM JIT (C1+C2)
-  * compilation time, whole-stage-codegen compile count, and the solver
-  * memo-cache accumulators; `slowest_cold` embeds per-query gc/jit/
-  * codegen deltas next to the cold/warm ratio. Reading rule (also in the
+  * compilation time, whole-stage-codegen compile count, the contention
+  * sentinel (`sentinel_s`, also in the compact line's `pass_diag`), and
+  * the solver memo-cache accumulators; `slowest_cold` embeds per-query
+  * gc/jit/codegen deltas next to the cold/warm ratio. Reading rule (also in the
   * artifact): a cold spike whose `jit_s` is of the same order as `sec`
   * while `warm_sec` is small is JVM JIT lag on the per-row solver loops
   * — a property of the fresh benchmark JVM, not of the plan.
@@ -48,6 +49,9 @@ import scala.util.control.NonFatal
 object Bench {
   /** One timed execution + the JVM-counter deltas it spanned. */
   final case class Timing(sec: Double, gcMs: Long, cgN: Long, jitMs: Long)
+
+  /** Rows summed by the contention sentinel run after every pass. */
+  val SentinelRows = 2000000L
 
   // JVM-level counters: GC time/count, whole-stage-codegen compile
   // count, and TOTAL JIT (C1+C2) compilation time — the last is what
@@ -90,28 +94,32 @@ object Bench {
 
     val memoStats = graft.functions.MemoStats.attachSolvers(spark)
 
-    // fO2 formulation auto-decisions (memo vs dedup — Fo2Dedup.choose):
-    // which regime each probed input landed in, with the probe estimates
-    def fo2DecisionsJson(): String =
-      graft.functions.Fo2Dedup.drainDecisions().map(_.json)
-        .mkString("[", ",", "]")
-
     def cacheJson(): String =
       memoStats.map(s => s""""${s.name.replace('.', '_')}":${s.json}""")
         .mkString("{", ",", "}")
 
+    // Contention sentinel: a fixed `spark.range` sum timed after each pass,
+    // outside every query's timing window. On a quiet host it reads the
+    // same in every pass; a slow one marks a pass run under contention.
+    def sentinel(): Double = {
+      val t0 = System.nanoTime()
+      spark.range(SentinelRows).selectExpr("sum(id)").collect()
+      (System.nanoTime() - t0) / 1e9
+    }
+
     def passDiag(tag: String, before: (Long, Long, Long, Long)): String = {
       val (gcMs0, gcN0, cgN0, jit0) = before
       val (gcMs1, gcN1, cgN1, jit1) = jvmStats()
+      val sentinelS = sentinel()
       val mean = org.apache.spark.metrics.source.CodegenMetrics
         .METRIC_COMPILATION_TIME.getSnapshot.getMean
       System.err.println(f"[bench] $tag: gc=${(gcMs1 - gcMs0) / 1000.0}%.1fs" +
         f" (${gcN1 - gcN0} collections), jit=${(jit1 - jit0) / 1000.0}%.1fs," +
-        f" codegenCompiles=${cgN1 - cgN0} (meanCompile=${mean}%.0fms);" +
-        f" ${memoStats.map(_.render).mkString("; ")}")
+        f" codegenCompiles=${cgN1 - cgN0} (meanCompile=${mean}%.0fms)," +
+        f" sentinel=$sentinelS%.3fs; ${memoStats.map(_.render).mkString("; ")}")
       f"""{"gc_s":${(gcMs1 - gcMs0) / 1000.0}%.1f,"gc_n":${gcN1 - gcN0},""" +
         f""""jit_s":${(jit1 - jit0) / 1000.0}%.1f,""" +
-        f""""codegen_compiles":${cgN1 - cgN0}}"""
+        f""""codegen_compiles":${cgN1 - cgN0},"sentinel_s":$sentinelS%.3f}"""
     }
 
     // SPARK_GRAFT_ONLY=q_a,q_b restricts the sweep for local iteration
@@ -233,7 +241,9 @@ object Bench {
         s""""cold_anomalies":${jsonList(coldAnomalies)},""" +
         f""""total_cold_explained":$totalColdExplained%.3f,""" +
         s""""caches":${cacheJson()},""" +
-        s""""fo2_decisions":${fo2DecisionsJson()},""" +
+        // kept for readers of earlier artifacts: fO2 has one formulation
+        // now, so there is no decision to report
+        s""""fo2_decisions":[],""" +
         s""""slowest_cold":$slowDiag,""" +
         """"reading_rule":"a cold spike with jit_s on the order of sec and a small warm_sec is JVM JIT (C2) lag on the per-row solver loops - a fresh-JVM property, not a plan defect; warm is min-of-2 post-cold passes, any query whose best warm still exceeded cold+5%+0.2s (an inversion a healthy JVM cannot produce) was re-timed twice at session end and the overall minimum kept, and warm_anomalies lists queries STILL inverted after that - their warm numbers are contention residue; cold_anomalies lists queries whose cold-minus-warm gap exceeds 2s with jit+gc covering under half of it (contention, not JIT) and total_cold_explained re-totals cold with those replaced by warm+jit+gc - compare total_warm and total_cold_explained across rounds"}"""
     // millisecond precision keeps the line compact enough for line-buffered

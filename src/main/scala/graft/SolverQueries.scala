@@ -66,9 +66,8 @@ object SolverQueries {
         "H2O_dissolved" -> E.round(d.h2o, 6), "CO2_dissolved" -> E.round(d.co2, 6)))
     },
     // Full QFM with EOS pressure terms: the transition bisections (memoised
-    // per T) and the closed-form buffer, through QfmFull.withQfm (which
-    // keeps Fo2Dedup's choice between dedup-in-plan and the plain column);
-    // the oracle renders the same trees as stages.
+    // per T) and the closed-form buffer, through QfmFull.withQfm's one
+    // column; the oracle renders the same trees as stages.
     Queries.meltQ("q_fo2_qfm_full") { m =>
       QfmFull.fO2Stages.foldLeft(m)(_ derive _).withStage(Seq("sample_id" -> C("sample_id"),
         "log10_fO2" -> E.round(E.log10(C("_qfm")), 6)))
@@ -77,7 +76,7 @@ object SolverQueries {
         .select(col("sample_id"), round(log10(col("fO2")), 6).as("log10_fO2"))
         .orderBy("sample_id")),
     // Full IW buffer (Hirschmann 2021): Vinet EOS + wustite equilibrium;
-    // a per-row memoised UDF (IwFull caches per (T,P) internally).
+    // a per-row UDF over Vinet grids memoised per (phase, P).
     // Full oracle: bisection volume/wustite solves + trapezoid VdP
     // replicated by IwSql (grids on DISTINCT P, mirroring the cache).
     Q("q_fo2_iw_full", (s, dir) => {

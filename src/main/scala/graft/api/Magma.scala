@@ -120,7 +120,8 @@ final class Melt(val mdf: MagmaDF, config: MagmaConfig = MagmaConfig.get) {
     * [[Fo2Buffers.allBuffers]] dispatches by name, mirroring the
     * reference's `calculate_fO2` (`fO2/fO2_calculate.py:11-25`): the
     * full-EOS "qfm" runs its transition and buffer loops, "iw" a per-row
-    * memoised UDF; the closed-form buffers compile to a single codegen'd
+    * UDF over its (phase, P)-memoised Vinet grids; both are one
+    * `withColumn`. The closed-form buffers compile to a single codegen'd
     * expression. */
   def withFO2(tCol: String = "T_K", pCol: String = "P_bar",
               as: String = "fO2"): Melt = {

@@ -168,6 +168,15 @@ object LoopKernel {
   // outside Spark's generated-class cache, so a kernel evicts no stage class
   private val kernels = new Memo[Program, LoopKernel](1024)
 
+  /** Fresh stats on the kernel memo, named `loop.kernels`: a miss is one
+    * janino compile and the fill time its compile time (called by
+    * Verify/Bench after session build). */
+  def attachMetrics(spark: org.apache.spark.sql.SparkSession): MemoStats = {
+    val s = MemoStats.attach(spark, "loop.kernels")
+    kernels.attach(s)
+    s
+  }
+
   private def compile(p: Program): LoopKernel =
     try cook(source(p)).getClazz.getConstructor().newInstance().asInstanceOf[LoopKernel]
     catch { case NonFatal(e) => throw new IllegalStateException(s"the kernel of the loops " +

@@ -3,8 +3,9 @@ package graft.expressions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -57,6 +58,66 @@ case class DotProduct(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotProduct =
     copy(left = newLeft, right = newRight)
+}
+
+/** The nearest of literal `centroids` to an array<double> vector, as
+  * struct<code: int, d2: double>: d2 is the squared L2 by the dot
+  * identity, `vv - 2·dot(v, c) + cc` with each dot summed like
+  * [[DotProduct]] and cc = Σ c², and ties go to the lowest code. That is
+  * the value and code of `least` over the K distance columns and the first
+  * `d === least` (NaN above every number, -0.0 equal to 0.0); a null
+  * vector gets the last code and a null d2, as that `CASE` chain did.
+  * One call per row, so a stage's generated code stays the same size at
+  * any centroid count (K inlined distances outgrew janino's 64 KB method
+  * limit). */
+case class NearestCentroid(child: Expression, centroids: Seq[Seq[Double]])
+    extends UnaryExpression {
+
+  override def dataType: DataType = StructType(Seq(
+    StructField("code", IntegerType, nullable = false), StructField("d2", DoubleType)))
+
+  @transient private lazy val cents: Array[Array[Double]] = centroids.map(_.toArray).toArray
+  @transient private lazy val norms: Array[Double] = cents.map(_.foldLeft(0.0)((cc, x) => cc + x * x))
+
+  /** Code and d2 of the centroid nearest to `v` (null: the last code). */
+  def nearest(v: ArrayData): InternalRow = {
+    if (v == null) return InternalRow(cents.length - 1, null)
+    val n = v.numElements()
+    var vv = 0.0
+    var i = 0
+    while (i < n) { vv += v.getDouble(i) * v.getDouble(i); i += 1 }
+    var best = 0
+    var bestD = 0.0
+    var j = 0
+    while (j < cents.length) {
+      val c = cents(j)
+      if (n != c.length)
+        throw new IllegalArgumentException(
+          s"NearestCentroid: vector length mismatch $n vs ${c.length}")
+      var dot = 0.0
+      i = 0
+      while (i < n) { dot += v.getDouble(i) * c(i); i += 1 }
+      val d = vv - 2.0 * dot + norms(j)
+      if (j == 0 || SQLOrderingUtil.compareDoubles(d, bestD) < 0) { best = j; bestD = d }
+      j += 1
+    }
+    InternalRow(best, bestD)
+  }
+
+  override def nullable: Boolean = false
+
+  override def eval(input: InternalRow): Any = nearest(child.eval(input).asInstanceOf[ArrayData])
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("nearestCentroid", this)
+    val v = child.genCode(ctx)
+    ev.copy(code = v.code + code"""
+      |InternalRow ${ev.value} = $self.nearest(${v.isNull} ? null : ${v.value});
+      |""".stripMargin, isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): NearestCentroid =
+    copy(child = newChild)
 }
 
 /** One-pass MinHash signature: word `shingleSize`-shingles of the token
@@ -187,6 +248,8 @@ object VectorExpressions {
   import org.apache.spark.sql.GraftSqlBridge.{column, expression}
   def dot(a: Column, b: Column): Column =
     column(DotProduct(expression(a), expression(b)))
+  def nearestCentroid(v: Column, centroids: Array[Array[Double]]): Column =
+    column(NearestCentroid(expression(v), centroids.map(_.toSeq).toSeq))
   def minhashSig(tokens: Column, k: Int, shingleSize: Int): Column =
     column(MinHashSig(expression(tokens), k, shingleSize))
   def simhash64(tokens: Column): Column =

@@ -3,6 +3,7 @@ package graft.ext
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, RepartitionOperation}
 import org.apache.spark.sql.functions.{col, xxhash64}
 
 /** Build-once/serve-many parquet artifact store shared by the persisted
@@ -91,7 +92,7 @@ private[graft] object Artifacts {
     * of its input instead of serving a stale artifact. */
   def fingerprint(df: DataFrame, id: String, payload: String): String = {
     val flat = org.apache.spark.sql.GraftSqlBridge.ofRows(df.sparkSession,
-      graft.functions.Fo2Dedup.stripRepartitions(df.queryExecution.analyzed))
+      stripRepartitions(df.queryExecution.analyzed))
     val parts = flat.select(col(id).cast("long"), xxhash64(col(id), col(payload)))
       .queryExecution.toRdd.mapPartitions { rows =>
         var n = 0L; var max = Long.MinValue; var seen = false; var x = 0L
@@ -106,4 +107,10 @@ private[graft] object Artifacts {
     s"${parts.map(_._1).sum}:$max:" +
       java.lang.Long.toHexString(parts.foldLeft(0L)(_ ^ _._3))
   }
+
+  /** `plan` without its repartition/coalesce nodes: they change layout,
+    * never content, so the fingerprint reads the scan directly instead of
+    * paying an exchange's map side. */
+  private def stripRepartitions(plan: LogicalPlan): LogicalPlan =
+    plan.transformUp { case r: RepartitionOperation => r.child }
 }

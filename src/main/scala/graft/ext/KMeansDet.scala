@@ -38,24 +38,13 @@ object KMeansDet {
     embeddings.select(col("vec_id"),
       quantize(col("embedding").cast("array<double>")).as("v"))
 
-  /** d2 to each centroid via the dot identity; all terms are exact dyadic
-    * rationals so least()/CASE pick the same argmin everywhere. cc is
-    * Scala-summed — exactness makes the summation order irrelevant. */
-  private def assign(e: DataFrame, cents: Array[Array[Double]]): DataFrame = {
-    val withVv = e.withColumn("vv", Similarity.dot(col("v"), col("v")))
-    val dcols = cents.zipWithIndex.map { case (c, j) =>
-      val cc = c.map(x => x * x).sum
-      (col("vv") - lit(2.0) * Similarity.dot(col("v"), array(c.map(lit): _*)) +
-        lit(cc)).as(s"d$j")
-    }
-    val dd = withVv.select(col("vec_id") +: col("v") +: dcols: _*)
-    val m = least(cents.indices.map(j => col(s"d$j")): _*)
-    val cid = cents.indices.tail.foldLeft(when(col("d0") === m, lit(0))) {
-      (acc, j) => acc.when(col(s"d$j") === m, lit(j))
-    }.otherwise(lit(cents.length - 1))
-    dd.withColumn("cid", cid).withColumn("dist2", m)
-      .select("vec_id", "v", "cid", "dist2")
-  }
+  /** Nearest centroid and its d2 via the dot identity
+    * ([[graft.expressions.NearestCentroid]]); all terms are exact dyadic
+    * rationals, so every engine picks the same argmin. */
+  private def assign(e: DataFrame, cents: Array[Array[Double]]): DataFrame =
+    e.select(col("vec_id"), col("v"),
+      graft.expressions.VectorExpressions.nearestCentroid(col("v"), cents).as("n"))
+      .select(col("vec_id"), col("v"), col("n.code").as("cid"), col("n.d2").as("dist2"))
 
   /** New centroids: exact long sums per (cluster, dim), mean re-snapped to
     * the grid with Spark's round (the same round the oracle calls). */

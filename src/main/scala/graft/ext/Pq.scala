@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.datasources.parquet.GraftParquet
 import org.apache.spark.sql.functions._
+import graft.expressions.VectorExpressions.nearestCentroid
 
 /** Product quantization (Jégou et al., "Product Quantization for Nearest
   * Neighbor Search", IEEE TPAMI 2011) — the memory-compression lever for
@@ -55,15 +56,14 @@ object Pq {
       .map(_.getSeq[Double](1).toArray)
     var cents: Array[Array[Array[Double]]] =
       Array.tabulate(m)(s => init.map(v => v.slice(s * sub, (s + 1) * sub)))
-    // each subspace's slice once, in a projection below the explode:
-    // sliced inside it, every centroid's distance repeats the slice and
-    // the stage's consume method outgrows janino's 64 KB
+    // each subspace's slice once, in a projection below the explode,
+    // which reads it twice (its nearest centroid and its coordinates)
     val sliced = e.select((0 until m).map(s => slice(col("v"), s * sub + 1, sub).as(s"v$s")): _*)
     for (_ <- 1 to iters) {
       val stacked = sliced.select(explode(array((0 until m).map { s =>
           val vs = col(s"v$s")
           struct(lit(s).as("s"),
-            argminCode(d2Cols(vs, cents(s)))._1.as("cid"), vs.as("sv"))
+            nearestCentroid(vs, cents(s)).getField("code").as("cid"), vs.as("sv"))
         }: _*)).as("t"))
         .select(col("t.s").as("s"), col("t.cid").as("cid"),
           posexplode(col("t.sv")).as(Seq("d", "x")))
@@ -109,15 +109,13 @@ object Pq {
     }.toSeq
   }
 
-  /** Argmin code (ties to the lowest code, matching the oracle's
-    * `ORDER BY d2, j` rank) and the min d2 itself. */
-  private def argminCode(ds: Seq[Column]): (Column, Column) = {
-    val m = least(ds: _*)
-    val code = ds.tail.zipWithIndex
-      .foldLeft(when(ds.head === m, lit(0))) { case (acc, (d, j)) =>
-        acc.when(d === m, lit(j + 1))
-      }.otherwise(lit(ds.length - 1))
-    (code, m)
+  /** `code_0..code_{M-1}`: the nearest codebook entry of each subspace of
+    * `v` ([[graft.expressions.NearestCentroid]]: the [[d2Cols]] doubles,
+    * ties to the lowest code like the oracle's `ORDER BY d2, j`). */
+  private def codeCols(v: Column, codebooks: Array[Array[Array[Double]]]): Seq[Column] = {
+    val sub = codebooks(0)(0).length
+    codebooks.indices.map(s => nearestCentroid(slice(v, s * sub + 1, sub), codebooks(s))
+      .getField("code").as(s"code_$s"))
   }
 
   /** Encode every vector: `vec_id, code_0..code_{M-1}, qerr` where qerr
@@ -129,14 +127,13 @@ object Pq {
     val sub = codebooks(0)(0).length
     val q = KMeansDet.quantize(col("embedding").cast("array<double>"))
     val base = embeddings.select(col("vec_id"), q.as("v"))
-    val parts = (0 until m).map { s =>
-      val vs = slice(col("v"), s * sub + 1, sub)
-      argminCode(d2Cols(vs, codebooks(s)))
-    }
-    base.select(
+    val parts = base.select(col("vec_id") +: (0 until m).map { s =>
+      nearestCentroid(slice(col("v"), s * sub + 1, sub), codebooks(s)).as(s"n$s")
+    }: _*)
+    parts.select(
       col("vec_id") +:
-        parts.zipWithIndex.map { case ((c, _), s) => c.as(s"code_$s") } :+
-        parts.map(_._2).reduce(_ + _).as("qerr"): _*)
+        (0 until m).map(s => col(s"n$s.code").as(s"code_$s")) :+
+        (0 until m).map(s => col(s"n$s.d2")).reduce(_ + _).as("qerr"): _*)
   }
 
   /** ADC top-k over LSH-bucket candidates: same hyperplane-bucket
@@ -191,12 +188,8 @@ object Pq {
         dtabCols(col("v"), codebooks): _*)
     // neighbor side carries ONLY (id, bucket, codes) — the compressed
     // representation; codes computed inline, no join
-    val codeParts = (0 until m).map { s =>
-      argminCode(d2Cols(slice(col("v"), s * sub + 1, sub), codebooks(s)))._1
-    }
     val right = base.select(
-      col("vec_id").as("nid") +: col("bucket") +:
-        codeParts.zipWithIndex.map { case (c, s) => c.as(s"code_$s") }: _*)
+      col("vec_id").as("nid") +: col("bucket") +: codeCols(col("v"), codebooks): _*)
     val pairs = left.join(right, "bucket").where(col("qid") =!= col("nid"))
     val ranked = pairs.withColumn("adist", round(adcFromTable(codebooks), 6))
       .withColumn("rk", row_number().over(
@@ -207,7 +200,7 @@ object Pq {
   }
 
   /** The coarse centroid array selected by a cell-id column: a literal
-    * CASE over the K cells (same shape as [[argminCode]]'s tie chain). */
+    * CASE over the K cells. */
   private def centroidFor(cid: Column,
                           cents: Array[Array[Double]]): Column = {
     val arrs = cents.map(c => array(c.map(lit): _*))
@@ -251,14 +244,13 @@ object Pq {
   def fitIndex(embeddings: DataFrame, coarseK: Int, coarseIters: Int,
                m: Int, pqK: Int, pqIters: Int, dim: Int): IvfPqIndex = {
     require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
-    val sub = dim / m
     val cells = KMeansDet.fitCentroids(
       embeddings.select(col("vec_id"),
         col("embedding").cast("array<double>").as("embedding")),
       coarseK, coarseIters)
     val q = KMeansDet.quantize(col("embedding").cast("array<double>"))
     val base = embeddings.select(col("vec_id"), q.as("v"))
-    val (cidCol, _) = argminCode(d2Cols(col("v"), cells))
+    val cidCol = nearestCentroid(col("v"), cells).getField("code")
     // Materialize (id, v, cell, res) ONCE: the coarseK-branch centroid
     // CASE inside `res` would otherwise be re-inlined by projection
     // collapse into every downstream d2 column of every PQ-fit job (an
@@ -275,12 +267,8 @@ object Pq {
     val codebooks = train(
       assigned.select(col("vec_id"), col("res").as("embedding")),
       m, pqK, pqIters, dim)
-    val codeParts = (0 until m).map { s =>
-      argminCode(d2Cols(slice(col("res"), s * sub + 1, sub), codebooks(s)))._1
-    }
     val codes = assigned.select(
-      col("vec_id").as("nid") +: col("cell") +:
-        codeParts.zipWithIndex.map { case (c, s) => c.as(s"code_$s") }: _*)
+      col("vec_id").as("nid") +: col("cell") +: codeCols(col("res"), codebooks): _*)
     IvfPqIndex(cells, codebooks, codes)
   }
 

@@ -4,8 +4,13 @@ package graft.functions
   * `fO2/IW.py`): Gibbs polynomials (Hidayat 2015 / Dinsdale 1991) with the
   * bcc magnetic correction, Vinet-EOS pressure terms (100-point trapezoid
   * VdP), min-Gibbs Fe-polymorph selection, and the wustite FeO-FeO1.5
-  * solid-solution equilibrium solved with Brent per (T,P). fO2 memoised per
-  * condition (the reference float32-coerces its result; we keep doubles).
+  * solid-solution equilibrium solved by bisection per (T,P) (the reference
+  * float32-coerces its result; we keep doubles).
+  *
+  * One rule, as for QFM: the expensive sub-solve is memoised on its own
+  * key and the per-row assembly is computed. Here the sub-solve is the
+  * 100-point Vinet grid, keyed on (phase, P) ([[vdpGrid]]); the Gibbs
+  * sums, the polymorph minimum and the wustite bisection run per row.
   */
 object IwFull {
 
@@ -116,7 +121,7 @@ object IwFull {
     * exp(alpha (T - 298.15)) is the ONLY T-dependence of the Vinet volume,
     * so across the many (T, P) conditions sharing a pressure the expensive
     * EOS inversions happen once (at sf0.1 each pressure recurs across ~250
-    * temperatures). Bounded like the fO2 cache. */
+    * temperatures). */
   // Memo, not raw get/put: computeIfAbsent pays each grid once per
   // executor (plain get/put lets every cold-executor task invert the same
   // 100-point Vinet grid concurrently before the first put lands), and
@@ -125,8 +130,7 @@ object IwFull {
   // stretches to the target pressure), so unlike deng2020's dVdP there is
   // no discrete re-key; when distinct pressures outgrow the cap at scale
   // the hit rate degrades gracefully and the evictions are counted
-  // ([[attachMetrics]]). The IN-PLAN fix for that regime is
-  // [[Fo2Dedup]]'s distinct+join-back, reachable via [[withIw]].
+  // ([[attachMetrics]]).
   private def vdpGrid(phase: String, pGPa: Double): (Array[Double], Array[Double]) =
     // Bound must exceed the working set (7 phases x ~10k distinct pressures
     // in the driver tables = 70k entries, ~110 MB) or the cache degrades.
@@ -185,40 +189,20 @@ object IwFull {
   private def gammaFeO1p5(x: Double): Double =
     (1.0 - x) * (1.0 - x) * (q00 + q10 - 2.0 * q10 * x)
 
-  // (T, P) -> base fO2 memo: continuous keys, so bounded with partial
-  // eviction + accumulators (see the gridCache note above).
-  private val cache = new Memo[(Double, Double), java.lang.Double](100000)
-
-  /** Spec hook: entries currently memoised (no-insertion law). */
-  private[graft] def fO2CacheSize: Int = cache.size
-
-  /** Export hit/miss/fill/eviction counters for both memo caches
-    * (called by Verify/Bench after session build). */
+  /** Export hit/miss/fill/eviction counters for the grid memo (called
+    * by Verify/Bench after session build). */
   def attachMetrics(spark: org.apache.spark.sql.SparkSession): Seq[MemoStats] = {
     val g = MemoStats.attach(spark, "iw.gridCache")
-    val f = MemoStats.attach(spark, "iw.fO2Cache")
     gridCache.attach(g)
-    cache.attach(f)
-    Seq(g, f)
+    Seq(g)
   }
 
   /** Absolute fO2 (bar) at IW + logshift (`fO2/IW.py:383-471`),
     * suppress_Fe_liquid = false (the reference default). */
   def fO2(tK: Double, pBar: Double, logshift: Double = 0.0): Double =
-    cache.getOrFill((tK, pBar))(fO2Base(tK, pBar)).doubleValue *
-      math.pow(10.0, logshift)
+    fO2Base(tK, pBar) * math.pow(10.0, logshift)
 
-  /** [[fO2]] with read-only memo probing (no insertion) — the
-    * near-unique-(T, P) formulation [[withIw]] picks when the auto probe
-    * says dedup=false: a write-through memo there is pure insert+evict
-    * churn (r14 bench: 2.98M evictions against 0.52M hits). The grid
-    * cache (keyed per phase × target pressure) still memoises the
-    * expensive Vinet integration inside. */
-  def fO2NoMemo(tK: Double, pBar: Double, logshift: Double = 0.0): Double =
-    cache.getNoInsert((tK, pBar))(fO2Base(tK, pBar)).doubleValue *
-      math.pow(10.0, logshift)
-
-  private def fO2Base(tK: Double, pBar: Double): java.lang.Double = {
+  private def fO2Base(tK: Double, pBar: Double): Double = {
     val gFeO = gibbsPhase("FeO", tK, pBar)
     val gFeO1p5 = gibbsPhase("FeO1.5", tK, pBar)
     val gO2 = gibbsPhase("O2", tK, pBar)
@@ -259,24 +243,10 @@ object IwFull {
   val fO2Udf = F.udf((tK: Double, pBar: Double, shift: Double) =>
     fO2(tK, pBar, shift))
 
-  private val fO2UdfNoMemo = F.udf((tK: Double, pBar: Double, shift: Double) =>
-    fO2NoMemo(tK, pBar, shift))
-
-  /** Attach an IW-buffer `fO2` column: the formulation (per-row memoised
-    * UDF vs distinct+join-back) is AUTO-probed per input — or forced by
-    * conf — exactly as in [[QfmFull.withQfm]]; see
-    * [[Fo2Dedup.formulation]]. A probe-measured near-unique regime runs
-    * the read-only memo — same values, zero insert/evict churn. */
+  /** Attach an IW-buffer `fO2` column: [[fO2Udf]] per row. The Vinet
+    * grids inside are memoised per (phase, P); the assembly over them is
+    * computed per row. */
   def withIw(df: DataFrame, tCol: String, pCol: String,
              logshift: Double = 0.0, as: String = "fO2"): DataFrame =
-    Fo2Dedup.formulation(df, tCol, pCol, "iw") match {
-      case Fo2Dedup.DedupPlan =>
-        Fo2Dedup.withDeduped(df, tCol, pCol, as)(
-          (t, p) => fO2Udf(t, p, F.lit(logshift)))
-      case Fo2Dedup.MemoUdf =>
-        df.withColumn(as, fO2Udf(F.col(tCol), F.col(pCol), F.lit(logshift)))
-      case Fo2Dedup.NoInsertUdf =>
-        df.withColumn(as,
-          fO2UdfNoMemo(F.col(tCol), F.col(pCol), F.lit(logshift)))
-    }
+    df.withColumn(as, fO2Udf(F.col(tCol), F.col(pCol), F.lit(logshift)))
 }

@@ -58,9 +58,11 @@ object MemoStats {
   }
 
   /** Fresh stats on every solver memo, in Bench artifact order: the loop
-    * memo (QFM's transitions, Deng's dVdP), then IW's two. */
+    * memo (QFM's transitions, Deng's dVdP), the loop kernels (a miss is a
+    * janino compile, its fill time the compile time), then IW's grids. */
   def attachSolvers(spark: SparkSession): Seq[MemoStats] =
-    graft.expressions.LoopExpression.attachMetrics(spark) +: IwFull.attachMetrics(spark)
+    Seq(graft.expressions.LoopExpression.attachMetrics(spark),
+      graft.expressions.LoopKernel.attachMetrics(spark)) ++ IwFull.attachMetrics(spark)
 }
 
 /** Bounded per-executor memo with PARTIAL eviction — the scale-safe
@@ -113,8 +115,8 @@ final class Memo[K, V](cap: Int) {
   // every lookup a miss) ALL reader threads observe size > cap at once;
   // without the CAS each would run its own evictSome pass — n_threads x
   // cap/8 entries dropped per breach (the r9 sf0.1 bench artifact showed
-  // iw.fO2Cache evicted=8.5M against only 2.2M inserts: concurrent
-  // iterators double-counting each other's removals). One thread evicts,
+  // IW's former (T, P) fO2 memo evicted=8.5M against only 2.2M inserts:
+  // concurrent iterators double-counting each other's removals). One thread evicts,
   // the rest proceed; size overshoots by at most the in-flight fills.
   private def evictIfFull(): Unit =
     if (m.size() > cap && evicting.compareAndSet(false, true))
@@ -155,21 +157,6 @@ final class Memo[K, V](cap: Int) {
 
   /** Drop every entry (spec hook: a path that must compute, not read). */
   private[graft] def clear(): Unit = m.clear()
-
-  /** Read-only lookup: a hit is served from the map, a miss computes
-    * WITHOUT inserting — the formulation for near-unique key streams
-    * (the fO2 auto-probe's dedup=false regime), where insertion buys no
-    * future hits and the write+evict churn is pure overhead (r14 bench:
-    * iw.fO2Cache 2.98M evictions against a ~0.15 steady-state hit rate).
-    * Hits/misses/fill time still feed the attached [[MemoStats]];
-    * evictions cannot occur. */
-  def getNoInsert(k: K)(fill: => V): V = {
-    val v = m.get(k)
-    val st = stats
-    if (v != null) { if (st != null) st.hits.add(1); v }
-    else if (st == null) fill
-    else { st.misses.add(1); timed(st)(fill) }
-  }
 
   private def timed(st: MemoStats)(fill: => V): V = {
     val t0 = System.nanoTime()

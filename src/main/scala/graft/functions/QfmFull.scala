@@ -16,8 +16,10 @@ import graft.expressions.LoopExpression
   * The three transition pressures depend on T alone: each is a bisection
   * over T ([[transitions]]), memoised per JVM ([[Loop.memo]]), so a JVM
   * solves each once per distinct temperature. The buffer at P is closed
-  * form over (T, P, the three transitions) ([[buffer]]). Queries, the
-  * [[withQfm]] column and the scalar functions all compute these trees. */
+  * form over (T, P, the three transitions) ([[buffer]]), computed per
+  * row: the expensive sub-solve is memoised on its own key, as IW's Vinet
+  * grids are on (phase, P) ([[IwFull]]). Queries, the [[withQfm]] column
+  * and the scalar functions all compute these trees. */
 object QfmFull {
 
   val R = 8.31446261815324
@@ -188,15 +190,10 @@ object QfmFull {
       lit(math.pow(10.0, logshift))
   }
 
-  /** Attach an `fO2` column: the [[column]] per row, or once per distinct
-    * (T, P) joined back for grid-like conditions — chosen by
-    * [[Fo2Dedup.formulation]]'s bounded auto probe, or forced via
-    * `spark.graft.fo2.dedupConditions`. */
+  /** Attach an `fO2` column: the [[column]] per row. Its transition
+    * solves are memoised per T in the loop memo; the buffer over them is
+    * closed form per row. */
   def withQfm(df: DataFrame, tCol: String, pCol: String,
               logshift: Double = 0.0, as: String = "fO2"): DataFrame =
-    Fo2Dedup.formulation(df, tCol, pCol, "qfm") match {
-      case Fo2Dedup.DedupPlan =>
-        Fo2Dedup.withDeduped(df, tCol, pCol, as)((t, p) => column(t, p, logshift))
-      case _ => df.withColumn(as, column(col(tCol), col(pCol), logshift))
-    }
+    df.withColumn(as, column(col(tCol), col(pCol), logshift))
 }

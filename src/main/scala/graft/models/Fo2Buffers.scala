@@ -7,7 +7,7 @@ import graft.expr.E._
   * Each takes T_K / P_bar expressions and a log-unit shift and returns
   * absolute fO2 (bar) as a single expression. The EOS-based pressure terms of
   * QFM/IW (Tait/Vinet integrals + phase-transition root finds) live in
-  * [[graft.functions.Fo2Udfs]].
+  * [[graft.functions.QfmFull]] and [[graft.functions.IwFull]].
   */
 object Fo2Buffers {
 
@@ -114,7 +114,7 @@ object Fo2Buffers {
 
   /** Name → expression for the closed-form buffers (absolute fO2 in bar,
     * dfO2 shift applied). "qfm"/"iw" are NOT here — they dispatch at the
-    * DataFrame level, where the formulation is chosen per input. */
+    * DataFrame level, as the columns of `QfmFull.withQfm`/`IwFull.withIw`. */
   def dispatch(name: String, tK: E, pBar: E, logshift: Double): E =
     name match {
       case "qfm_1bar" => qfm1bar(tK, logshift)

@@ -52,6 +52,16 @@ class BuildJobsSpec extends SparkSpec {
   private def pinned(q: String): Range =
     ranged.getOrElse(q, allowed.getOrElse(q, 0) to allowed.getOrElse(q, 0))
 
+  // first in the suite, so no earlier build in this JVM has seen the
+  // melts table
+  test("the first build of each fO2 EOS buffer query starts no Spark job") {
+    val sc = spark.sparkContext
+    for (q <- Seq("q_fo2_qfm_full", "q_fo2_iw_full")) {
+      val jobs = JobCounter.jobsOf(sc)(Queries.queries(q)(spark, sfDir))._2
+      assert(jobs == 0, s"$q: $jobs jobs on its first build")
+    }
+  }
+
   test("a second build of every registry query starts only its pinned " +
       "build-time jobs") {
     val sc = spark.sparkContext

@@ -143,6 +143,23 @@ class LoopSpec extends SparkSpec with NoCodegenFallback {
       e.getMessage)
   }
 
+  test("loop kernel compiles count in loop.kernels: a new program is one " +
+      "miss, a second column of the same program none") {
+    val stats = LoopKernel.attachMetrics(spark)
+    // a program no other test builds
+    val l = E.closed(Seq("_k" -> C("a") * Lit(1.0 / 7919.0)), C("_k"))
+    def run(name: String): Unit = {
+      spark.range(8).select(LoopExpression.column(l, Map("a" -> col("id"))).as(name)).collect()
+      ()
+    }
+    val m0 = stats.misses.value
+    run("first")
+    assert(stats.misses.value == m0 + 1, stats.render)
+    val h1 = stats.hits.value
+    run("second")
+    assert(stats.misses.value == m0 + 1 && stats.hits.value > h1, stats.render)
+  }
+
   test("loop names that differ only in case are rejected") {
     intercept[IllegalArgumentException] { // two bound names
       Loop(Seq("_k" -> C("a"), "_K" -> Lit(1.0)), Nil, Nil, Lit(0.0) < Lit(0.0), 0, C("_k"))

@@ -112,32 +112,6 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
-  /** The conf-keyed scale path for grid-like (T, P) workloads
-    * (SURVEY §2.7, Fo2Dedup): distinct conditions → solve once
-    * cluster-wide → broadcast-join back. Pinned: the flag-on plan must
-    * contain the distinct aggregate and a BROADCAST hash join — never a
-    * sort-merge join, whose fact-side exchange (the full-width table
-    * shuffled on continuous doubles) is exactly what the default memo
-    * path exists to avoid. */
-  test("fO2 dedupConditions=true plans distinct + broadcast join-back") {
-    spark.conf.set(graft.functions.Fo2Dedup.DedupKey, "true")
-    try {
-      for (name <- Seq("q_fo2_qfm_full", "q_fo2_iw_full")) {
-        val df = Queries.queries(name)(spark, sfDir)
-        val plan = df.queryExecution.executedPlan.toString
-        assert(plan.contains("HashAggregate"), s"$name: no distinct aggregate")
-        assert(plan.contains("BroadcastHashJoin"), s"$name: no broadcast join")
-        assert(!plan.contains("SortMergeJoin"),
-          s"$name: dedup path shuffles the fact table")
-        val n = PlanShape.of(df).shuffles
-        info(s"$name dedup-on: $n shuffle exchange(s)")
-        // repartition spread + the 2-column distinct agg + final orderBy;
-        // the fact table itself never shuffles
-        assert(n <= 4, s"$name dedup-on: $n shuffle exchanges > 4")
-      }
-    } finally spark.conf.unset(graft.functions.Fo2Dedup.DedupKey)
-  }
-
   /** Shuffle budgets for the heaviest warm queries (BENCH_r06 top-10 plus
     * the structural chains): the exact number of shuffle exchanges in the
     * planned physical tree, pinned so a refactor cannot silently add a

@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.ext.{PipelineOps, SemDedup, Similarity}
 
-/** Behavioural laws for SemDeDup and concat-and-chunk sequence packing. */
-class SemDedupPackSpec extends SparkSpec {
+/** Behavioural laws for SemDeDup and concat-and-chunk sequence packing;
+  * no stage falls back from generated code ([[NoCodegenFallback]]). */
+class SemDedupPackSpec extends SparkSpec with NoCodegenFallback {
 
   private val sf = "/root/testdata/sf0.001"
   private lazy val docs = Tables.read(spark, sf, "documents")
