@@ -408,7 +408,6 @@ object Queries {
     val refExpr: E = codes.init.zipWithIndex.foldRight(SLit(codes.last): E) {
       case ((code, i), rest) => If(bucket === ILit(i.toLong), SLit(code), rest)
     }
-    val inSet = codes.indices.filter(i => datasets.contains(codes(i)))
     val sql =
       s"""WITH r AS (SELECT "c_custkey" AS "sample_id", ${E.toSql(refExpr)}
          | AS "ref" FROM customer)

@@ -3,15 +3,16 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.expr.{C, E, Lit}
-import graft.functions.{Allison, Fe3Fe2Iterative, IaconoMarziano, Isobars, QfmFull, Shishkina}
+import graft.functions.{Allison, Fe3Fe2Iterative, IaconoMarziano, Isobars, IwFull, QfmFull,
+  Shishkina}
 import graft.models.{CompCtx, Fo2Buffers}
 import graft.Queries.Q
 
 /** Solver-backed operators. Every query carries a full DuckDB oracle: the
   * solvers are deterministic bisections, secants and Picard iterations
-  * written as [[graft.expr.Loop]]s and rendered by `Pipeline.toSql` as
-  * recursive CTEs, or still by hand: the IW buffer ([[IwSql]]) and the
-  * not-a-knot spline assembly ([[IsobarCurveSql]]).
+  * written as [[graft.expr.Loop]]s (the IW buffer's Vinet grids as vector
+  * loops) and rendered by `Pipeline.toSql` as recursive CTEs, or still by
+  * hand: the not-a-knot spline assembly ([[IsobarCurveSql]]).
   */
 object SolverQueries {
 
@@ -75,16 +76,16 @@ object SolverQueries {
       QfmFull.withQfm(Tables.meltsRangedDF(s, dir), "T_K", "P_bar", logshift = 0.0)
         .select(col("sample_id"), round(log10(col("fO2")), 6).as("log10_fO2"))
         .orderBy("sample_id")),
-    // Full IW buffer (Hirschmann 2021): Vinet EOS + wustite equilibrium;
-    // a per-row UDF over Vinet grids memoised per (phase, P).
-    // Full oracle: bisection volume/wustite solves + trapezoid VdP
-    // replicated by IwSql (grids on DISTINCT P, mirroring the cache).
-    Q("q_fo2_iw_full", (s, dir) => {
-      graft.functions.IwFull.withIw(Tables.meltsRangedDF(s, dir),
-          "T_K", "P_bar", logshift = 0.0, as = "fO2_iw")
-        .select(col("sample_id"), round(log10(col("fO2_iw")), 6).as("log10_fO2"))
-        .orderBy("sample_id")
-    }, Some(IwSql.sql)),
+    // Full IW buffer (Hirschmann 2021): Vinet EOS + wustite equilibrium,
+    // one per-row loop over the Vinet grids (vector loops memoised per
+    // (phase, P)), through IwFull.withIw's one column; the oracle renders
+    // the same tree.
+    Queries.meltQ("q_fo2_iw_full")(_.derive("_iw", IwFull.fO2E).withStage(Seq(
+        "sample_id" -> C("sample_id"), "log10_fO2" -> E.round(E.log10(C("_iw")), 6))))
+      .copy(build = (s, dir) =>
+        IwFull.withIw(Tables.meltsRangedDF(s, dir), "T_K", "P_bar", logshift = 0.0, as = "fO2_iw")
+          .select(col("sample_id"), round(log10(col("fO2_iw")), 6).as("log10_fO2"))
+          .orderBy("sample_id")),
     // Second solubility model family (config-dispatchable alternative):
     // the decoupled partial-pressure solve, written once as expressions
     // with the H2O bisection as a Loop (Shishkina.mixedSaturationE).

@@ -203,9 +203,6 @@ object Tables {
     Staged(MagmaSchema(olivineElements, olivinePass, CUnit.WtPc, CType.Oxide),
       Vector(olivineSource))
 
-  def olivinesDF(spark: SparkSession, dir: String): DataFrame =
-    Pipeline.applySpark(read(spark, dir, "orders"), Vector(olivineSource))
-
   // ---- plagioclase: from customer -------------------------------------
   val plagElements: Vector[String] =
     Vector("SiO2", "Al2O3", "CaO", "Na2O", "K2O", "FeO")
@@ -221,8 +218,6 @@ object Tables {
   def plag: Staged =
     Staged(MagmaSchema(plagElements, Vector("sample_id"), CUnit.WtPc, CType.Oxide),
       Vector(plagSource))
-  def plagDF(spark: SparkSession, dir: String): DataFrame =
-    Pipeline.applySpark(read(spark, dir, "customer"), Vector(plagSource))
 
   // ---- magnetite / ilmenite: from part --------------------------------
   val magnetiteElements: Vector[String] =
@@ -239,8 +234,6 @@ object Tables {
   def magnetite: Staged =
     Staged(MagmaSchema(magnetiteElements, Vector("sample_id"), CUnit.WtPc, CType.Oxide),
       Vector(magnetiteSource))
-  def magnetiteDF(spark: SparkSession, dir: String): DataFrame =
-    Pipeline.applySpark(read(spark, dir, "part"), Vector(magnetiteSource))
 
   val ilmeniteElements: Vector[String] =
     Vector("TiO2", "Al2O3", "FeO", "MnO", "MgO")
@@ -255,6 +248,4 @@ object Tables {
   def ilmenite: Staged =
     Staged(MagmaSchema(ilmeniteElements, Vector("sample_id"), CUnit.WtPc, CType.Oxide),
       Vector(ilmeniteSource))
-  def ilmeniteDF(spark: SparkSession, dir: String): DataFrame =
-    Pipeline.applySpark(read(spark, dir, "part"), Vector(ilmeniteSource))
 }

@@ -37,6 +37,9 @@ sealed trait E extends Node {
     case If(c, t, f)  => Seq(c, t, f)
     case CastD(a)     => Seq(a)
     case l: Loop      => l.parts
+    case Vec(xs)      => xs
+    case At(v, k)     => Seq(v, k)
+    case t: Trapz     => Seq(t.value, t.h)
     case _            => Nil
   }
 
@@ -48,6 +51,9 @@ sealed trait E extends Node {
     case If(c, t, e)   => If(g(c), f(t), f(e))
     case CastD(a)      => CastD(f(a))
     case l: Loop       => l.map(f, g)
+    case Vec(xs)       => Vec(xs.map(f))
+    case At(v, k)      => At(f(v), f(k))
+    case t: Trapz      => t.copy(value = f(t.value), h = f(t.h))
     case leaf          => leaf
   }
 }
@@ -68,14 +74,27 @@ final case class If(cond: Cond, t: E, f: E) extends E            // CASE WHEN
 final case class CastD(a: E) extends E                           // cast to double
 final case class Raw(column: Column, sql: String) extends E      // escape hatch
 
+// The vector value, computed with Java's semantics inside a [[Loop]] only:
+/** A vector loop's result per element: `xs.size` values ([[Loop.width]]). */
+final case class Vec(xs: List[E]) extends E
+/** Element `k` (an integer value, from 0) of the vector `v`: a vector loop
+  * ([[Loop.width]]) that the enclosing loop may hold. */
+final case class At(v: E, k: E) extends E
+/** The trapezoid fold over the `n` points k = 0, 1, ... of `value`, which
+  * reads k as `C(idx)`: from 0.0, in index order, the sum adds
+  * (0.5 (v(k) + v(k - 1))) h for each k from 1, where v(k) is `value` at k.
+  * Java computes each v(k) once and carries it to the next panel; SQL
+  * renders `list_reduce` over the panels, which sums in the same order. */
+final case class Trapz(idx: String, n: Int, value: E, h: E) extends E
+
 /** Per-row loop, the solver node. `lets` are per-row constants, evaluated
   * once and in order; `init` seeds the state, in order; while fewer than
   * `maxIter` rounds ran and `cond` holds, `step` runs its assignments in
   * order (a name not in `init` is a temporary of the round); `result`
   * reads the lets and the final state. A bound name is visible only after
-  * its binding, and a loop holds no loop. No two of its names, bound or
-  * read from the input, differ only in case: DuckDB resolves quoted names
-  * without regard to case.
+  * its binding, and a loop holds no loop but a memoised one (below). No
+  * two of its names, bound or read from the input, differ only in case:
+  * DuckDB resolves quoted names without regard to case.
   *
   * Inside a loop both backends compute with Java's double semantics: a
   * comparison with NaN is false, `ln`/`log10`/`sqrt` return Java's values
@@ -90,12 +109,21 @@ final case class Raw(column: Column, sql: String) extends E      // escape hatch
   * its kernel keeps each result in a bounded per-JVM memo keyed by the
   * inputs' raw bits ([[graft.expressions.LoopExpression]]):
   * the model code sets it on a solve whose inputs repeat across rows (one
-  * keyed by temperature), never on a per-row one. */
+  * keyed by temperature), never on a per-row one. A loop may hold a
+  * memoised loop that reads only the outer loop's free columns: its kernel
+  * looks it up where a branch reaches it, and SQL joins its result in.
+  *
+  * With `width` n > 0 the loop is a vector loop: it runs once per element
+  * index i = 0 .. n - 1, read as `C(Loop.index)`, and its value is the
+  * vector of its elements' results, a [[Vec]] of m values per element
+  * laid out value by value (value j of element i at j n + i). Only [[At]]
+  * reads it. */
 final case class Loop(lets: Seq[(String, E)], init: Seq[(String, E)],
                       step: Seq[(String, E)], cond: Cond, maxIter: Int,
-                      result: E, memo: Boolean = false) extends E {
+                      result: E, memo: Boolean = false, width: Int = 0) extends E {
   val state: Seq[String] = init.map(_._1)
-  val bound: Set[String] = (lets ++ init ++ step).map(_._1).toSet
+  val bound: Set[String] =
+    (lets ++ init ++ step).map(_._1).toSet ++ (if (width > 0) Set(Loop.index) else Set.empty)
 
   // computed once: Catalyst hashes a LoopExpression, this loop included,
   // each time a plan rule copies it
@@ -112,9 +140,19 @@ final case class Loop(lets: Seq[(String, E)], init: Seq[(String, E)],
   def parts: Seq[Node] =
     (lets ++ init ++ step).map(_._2) ++ Seq(cond, result)
 
+  /** The memoised loops this loop holds (computed once: a column asks per
+    * task). */
+  lazy val held: Seq[Loop] = parts.flatMap(Pipeline.loopsIn).distinct
+
+  /** A vector loop's values per element: its [[Vec]], or its result. */
+  def results: Seq[E] = result match {
+    case Vec(xs) => xs
+    case r       => Seq(r)
+  }
+
   def map(f: E => E, g: Cond => Cond): Loop = {
     def each(xs: Seq[(String, E)]) = xs.map { case (n, e) => n -> f(e) }
-    Loop(each(lets), each(init), each(step), g(cond), maxIter, f(result), memo)
+    copy(each(lets), each(init), each(step), g(cond), maxIter, f(result))
   }
 
   /** This loop with its results memoised per JVM. */
@@ -123,12 +161,13 @@ final case class Loop(lets: Seq[(String, E)], init: Seq[(String, E)],
   /** This loop with each bound name `n` renamed `f(n)`. */
   def renamed(f: String => String): Loop = {
     def r(e: E): E = e match {
-      case C(n) if bound(n) => C(f(n))
+      case C(n) if bound(n) && n != Loop.index => C(f(n))
+      case _: Loop          => e // it reads no bound name
       case _                => e.mapChildren(r, rc)
     }
     def rc(c: Cond): Cond = c.mapChildren(r, rc)
     def each(xs: Seq[(String, E)]) = xs.map { case (n, e) => f(n) -> r(e) }
-    Loop(each(lets), each(init), each(step), rc(cond), maxIter, r(result), memo)
+    copy(each(lets), each(init), each(step), rc(cond), maxIter, r(result))
   }
 
   locally { // lets and state are bound once; a bound name is read in scope
@@ -137,12 +176,13 @@ final case class Loop(lets: Seq[(String, E)], init: Seq[(String, E)],
       s"loop names bound twice: $defs, ${step.map(_._1)}")
     def check(scope: Set[String])(n: Node): Unit = n match {
       case C(x)    => require(!bound(x) || scope(x), s"loop name $x read before it is bound")
-      case _: Loop => throw new IllegalArgumentException("a loop holds no loop")
+      case l: Loop => require(l.memo && E.freeVars(l).forall(!bound(_)),
+        "a loop holds no loop but a memoised one over its free columns")
       case _       => n.children.foreach(check(scope))
     }
     def seq(scope: Set[String], xs: Seq[(String, E)]): Set[String] =
       xs.foldLeft(scope) { case (sc, (n, e)) => check(sc)(e); sc + n }
-    val after = seq(seq(Set.empty, lets), init)
+    val after = seq(seq(bound.filter(_ == Loop.index), lets), init)
     seq(after, step)
     Seq(cond, result).foreach(check(after))
     val alike = (bound.toSeq ++ E.freeVars(this)).groupBy(_.toLowerCase).values.filter(_.size > 1)
@@ -151,29 +191,38 @@ final case class Loop(lets: Seq[(String, E)], init: Seq[(String, E)],
 }
 
 object Loop {
+  /** The element index of a vector loop, as a double. */
+  val index = "__i"
+
   private val built = new graft.functions.Memo[java.nio.ByteBuffer, Loop](256)
 
   private def bytes(l: Loop): Array[Byte] = {
     val b = new java.io.ByteArrayOutputStream
     val o = new java.io.ObjectOutputStream(b)
-    o.writeObject((l.lets, l.init, l.step, l.cond, l.maxIter, l.result, l.memo))
+    o.writeObject((l.lets, l.init, l.step, l.cond, l.maxIter, l.result, l.memo, l.width))
     o.close()
     b.toByteArray
   }
 
   /** A loop's serialised form: the bytes of its parts, read back once per
     * JVM (classes through the task's context loader, as Spark's own
-    * deserialiser resolves them). */
+    * deserialiser resolves them). A loop's parts may hold a loop, read back
+    * while the outer one is, so the read runs outside the memo's fill; the
+    * first loop stored is the JVM's one instance. */
   private final class Wire(bytes: Array[Byte]) extends Serializable {
-    private def readResolve(): AnyRef = built.getOrFill(java.nio.ByteBuffer.wrap(bytes)) {
-      val in = new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(bytes)) {
-        override def resolveClass(d: java.io.ObjectStreamClass): Class[_] =
-          try Class.forName(d.getName, false, Thread.currentThread.getContextClassLoader)
-          catch { case _: ClassNotFoundException => super.resolveClass(d) }
+    private def readResolve(): AnyRef = {
+      val key = java.nio.ByteBuffer.wrap(bytes)
+      Option(built.lookup(key)).getOrElse {
+        val in = new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(bytes)) {
+          override def resolveClass(d: java.io.ObjectStreamClass): Class[_] =
+            try Class.forName(d.getName, false, Thread.currentThread.getContextClassLoader)
+            catch { case _: ClassNotFoundException => super.resolveClass(d) }
+        }
+        val (lets, init, step, cond, maxIter, result, memo, width) = in.readObject().asInstanceOf[
+          (Seq[(String, E)], Seq[(String, E)], Seq[(String, E)], Cond, Int, E, Boolean, Int)]
+        val l = Loop(lets, init, step, cond, maxIter, result, memo, width)
+        built.getOrFill(key)(l)
       }
-      val (lets, init, step, cond, maxIter, result, memo) = in.readObject().asInstanceOf[
-        (Seq[(String, E)], Seq[(String, E)], Seq[(String, E)], Cond, Int, E, Boolean)]
-      Loop(lets, init, step, cond, maxIter, result, memo)
     }
   }
 }
@@ -280,6 +329,8 @@ object E {
     case CastD(a)    => toColumn(a).cast("double")
     case Raw(c, _)   => c
     case l: Loop     => graft.expressions.LoopExpression.column(l)
+    case _: Vec | _: At | _: Trapz =>
+      throw new IllegalArgumentException("a vector is computed only inside a Loop")
   }
 
   def toCond(c: Cond): Column = c match {
@@ -349,10 +400,20 @@ object E {
       case If(c, t, f) => s"(CASE WHEN ${condSql(c, java)} THEN ${r(t)} ELSE ${r(f)} END)"
       case CastD(a)    => s"CAST(${r(a)} AS DOUBLE)"
       case Raw(_, s)   => s
+      case At(v, k) if java => s"${r(v)}[CAST(${r(k)} AS BIGINT) + 1]"
+      case Trapz(idx, n, value, h) if java => // DuckDB's list_reduce sums in index order
+        def at(k: E): String = r(Pipeline.substitute(value, Map(idx -> k)))
+        val k = C(idx)
+        s"list_reduce(list_prepend(0.0e0, list_transform(CAST(range(1, $n) AS DOUBLE[]), " +
+          s"${r(k)} -> ((0.5e0 * (${at(k)} + ${at(k - Lit(1.0))})) * ${r(h)}))), " +
+          "(\"__a\", \"__b\") -> (\"__a\" + \"__b\"))"
+      case _: Vec | _: At | _: Trapz =>
+        throw new IllegalArgumentException("a vector renders only inside a Loop")
       case _: Loop     =>
         throw new IllegalArgumentException("a Loop renders only inside Pipeline.toSql")
     }
   }
+
 
   def condSql(c: Cond): String = condSql(c, java = false)
 
@@ -380,6 +441,7 @@ object E {
     def go(n: Node, bound: Set[String]): Unit = n match {
       case C(x)    => if (!bound(x)) acc += x
       case l: Loop => val inner = bound ++ l.bound; l.parts.foreach(go(_, inner))
+      case t: Trapz => go(t.value, bound + t.idx); go(t.h, bound)
       case _       => n.children.foreach(go(_, bound))
     }
     go(e, Set.empty)
@@ -692,7 +754,7 @@ object Pipeline {
   /** `e` with each column ref replaced by its definition in `env`. A
     * [[Loop]] is kept as it is: it is opaque here, and a loop it reads
     * (an earlier stage's) could not be put inside it. */
-  private def substitute(e: E, env: Map[String, E]): E = e match {
+  private[expr] def substitute(e: E, env: Map[String, E]): E = e match {
     case C(n)    => env.getOrElse(n, e)
     case _: Loop => e
     case _       => e.mapChildren(substitute(_, env), substituteCond(_, env))
@@ -705,13 +767,16 @@ object Pipeline {
     * subquery: `(SELECT ... FROM lineitem)`.
     *
     * A stage holding [[Loop]]s first keeps its input in a MATERIALIZED CTE
-    * (`sI_in`), then solves each distinct loop once per distinct value of
-    * its free columns: a recursive CTE over `SELECT DISTINCT` of them, LEFT
-    * JOINed back on them. DuckDB's `=` holds between 0.0 and -0.0 and
-    * between NaNs, so the key also holds each column's `signbit`: a -0.0
-    * row and a NaN row each get their own loop row. Rows with a null free
-    * column are left out of the solve and get a null result, as null in
-    * gives null out. */
+    * (`sI_in`). A memoised loop ([[Loop.memo]]) is solved once per distinct
+    * value of its free columns: a recursive CTE over `SELECT DISTINCT` of
+    * them, LEFT JOINed back on them. DuckDB's `=` holds between 0.0 and
+    * -0.0 and between NaNs, so the key also holds each column's `signbit`:
+    * a -0.0 row and a NaN row each get their own loop row. Any other loop
+    * is solved once per row, keyed by the row number `__rid` the input
+    * then carries: its inputs seldom repeat, and a DISTINCT and a join-back
+    * on them cost more than they save. Rows with a null free column are
+    * left out of the solve and get a null result, as null in gives null
+    * out. */
   def toSql(source: String, stages: Seq[Stage], orderBy: Seq[String]): String = {
     val ctes = scala.collection.mutable.ArrayBuffer.empty[String]
     def select(cols: Seq[(String, E)]): String =
@@ -722,18 +787,13 @@ object Pipeline {
       if (loops.isEmpty) ctes += s"s$i AS (SELECT ${select(st.cols)} FROM $from)"
       else {
         val in = s"s${i}_in"
-        ctes += s"$in AS MATERIALIZED (SELECT * FROM $from)"
+        val rows = if (loops.forall(_.memo)) "" else s"row_number() OVER () AS ${q(rid)}, "
+        ctes += s"$in AS MATERIALIZED (SELECT $rows* FROM $from)"
         val names: Map[E, String] =
           loops.zipWithIndex.map { case (l, j) => (l: E) -> s"s${i}_l$j" }.toMap
         loops.foreach(l => ctes ++= loopCtes(l, names(l), in))
         val cols = st.cols.map { case (n, e) => n -> Cse.rewrite(e, names) }
-        val joins = loops.map { l =>
-          val r = s"${names(l)}_r"
-          val on = E.freeVars(l).zipWithIndex.map { case (c, k) =>
-            s"$in.${q(c)} = $r.${q(s"${r}_k$k")} AND signbit($in.${q(c)}) = $r.${q(s"${r}_s$k")}"
-          }
-          s" LEFT JOIN $r ON ${on.mkString(" AND ")}"
-        }
+        val joins = loops.map(l => s" LEFT JOIN ${names(l)}_r ${joinOn(l, in, s"${names(l)}_r")}")
         ctes += s"s$i AS (SELECT ${select(cols)} FROM $in${joins.mkString})"
       }
     }
@@ -743,6 +803,7 @@ object Pipeline {
   }
 
   private val round = "__n"
+  private val rid = "__rid"
   private def q(n: String): String = "\"" + n + "\""
 
   private[graft] def loopsIn(n: Node): Seq[Loop] = n match {
@@ -750,34 +811,57 @@ object Pipeline {
     case _       => n.children.flatMap(loopsIn)
   }
 
-  /** The recursive CTE `name` (one row per distinct input and round: the
-    * free columns with their sign bits as the key, round, the names the
-    * step, condition and result read, the state) and `name_r` (the key as
-    * `name_r_k<i>`/`name_r_s<i>`, and the result of the last round). The
-    * seed computes the lets and the initial state level by level over the
-    * distinct non-null inputs of `input`; the recursive member runs one step
-    * on the rows whose loop goes on; a row's last round is the one that
-    * produced no successor. */
+  /** The join condition of the result CTE `r` of `l` to the rows `in`: the
+    * row number of a per-row loop, the free columns and their sign bits of
+    * a memoised one. */
+  private def joinOn(l: Loop, in: String, r: String): String =
+    if (!l.memo) s"USING (${q(rid)})"
+    else E.freeVars(l).zipWithIndex.map { case (c, k) =>
+      s"$in.${q(c)} = $r.${q(s"${r}_k$k")} AND signbit($in.${q(c)}) = $r.${q(s"${r}_s$k")}"
+    }.mkString("ON ", " AND ", "")
+
+  /** The recursive CTE `name` (a row per key, element of a vector loop
+    * and round: the key, round, the names the step, condition and result
+    * read, the state) and `name_r` (the key, and the last round's result;
+    * a vector loop's lists its elements' values, value by value). A
+    * memoised loop is keyed by its free columns and their sign bits
+    * (`name_r_k<i>`/`name_r_s<i>`), over their distinct non-null values in
+    * `input`; any other by the row number, over the rows with no null free
+    * column. The seed joins in the results of the loops `l` holds, then
+    * computes the lets and the initial state level by level; the recursive
+    * member runs one step on the rows whose loop goes on; a row's last
+    * round is the one that produced no successor. */
   private def loopCtes(l: Loop, name: String, input: String): Seq[String] = {
     def sql(e: E): String = E.sql(e, java = true)
     val free = E.freeVars(l)
     require(free.nonEmpty, s"a loop rendered as SQL reads a column: $name")
+    val inner = l.held.zipWithIndex.map { case (h, j) => (h: E) -> s"${name}_j$j" }.toMap
+    val lr = l.map(Cse.rewrite(_, inner), Cse.rewriteCond(_, inner))
     val signs = free.indices.map(k => s"__s$k")
-    // inside a loop every read is a plain column ref: no loop nests
-    val read = (Seq(l.cond, l.result) ++ l.step.map(_._2)).flatMap(E.freeVars)
-    val temps = l.step.map(_._1).toSet -- l.state
-    val kept = free ++ signs ++ (read.distinct.filterNot(n => temps(n) || l.state.contains(n) ||
-      free.contains(n)) ++ l.state)
+    val ids = (if (l.memo) free ++ signs else Seq(rid)) ++
+      (if (l.width > 0) Seq(Loop.index) else Nil)
+    // inside a loop every read is a plain column ref
+    val read = (Seq(lr.cond) ++ lr.results ++ lr.step.map(_._2)).flatMap(E.freeVars)
+    val temps = lr.step.map(_._1).toSet -- lr.state
+    val kept = ids ++ (read.distinct.filterNot(n => temps(n) || lr.state.contains(n) ||
+      ids.contains(n)) ++ lr.state)
     val keep = kept.map(q).mkString(", ")
-    val distinct = s"SELECT DISTINCT ${free.map(q).mkString(", ")}, " +
-      free.zip(signs).map { case (c, s) => s"signbit(${q(c)}) AS ${q(s)}" }.mkString(", ") +
-      s" FROM $input WHERE ${free.map(c => s"${q(c)} IS NOT NULL").mkString(" AND ")}"
-    val seed = levels(l.lets ++ l.init).foldLeft(distinct) { (from, level) =>
+    val nonNull = s" FROM $input WHERE ${free.map(c => s"${q(c)} IS NOT NULL").mkString(" AND ")}"
+    val rows = if (l.memo) s"SELECT DISTINCT ${free.map(q).mkString(", ")}, " +
+        free.zip(signs).map { case (c, s) => s"signbit(${q(c)}) AS ${q(s)}" }.mkString(", ") + nonNull
+      else s"SELECT ${(rid +: free).map(q).mkString(", ")}$nonNull"
+    val elements = if (l.width == 0) rows else s"SELECT * FROM ($rows) CROSS JOIN " +
+      s"(SELECT CAST(range AS DOUBLE) AS ${q(Loop.index)} FROM range(0, ${l.width}))"
+    val joined = l.held.foldLeft(elements) { (from, h) =>
+      val r = s"${inner(h)}_r"
+      s"SELECT * FROM ($from) AS __f LEFT JOIN $r ${joinOn(h, "__f", r)}"
+    }
+    val seed = levels(lr.lets ++ lr.init).foldLeft(joined) { (from, level) =>
       s"SELECT *, ${level.map { case (n, e) => s"${sql(e)} AS ${q(n)}" }.mkString(", ")} FROM ($from)"
     }
-    val go = s"(${q(round)} < ${l.maxIter} AND ${E.condSql(l.cond, java = true)})"
+    val go = s"(${q(round)} < ${l.maxIter} AND ${E.condSql(lr.cond, java = true)})"
     var cols = kept.toSet
-    val stepped = levels(l.step).foldLeft(s"SELECT * FROM $name WHERE $go") {
+    val stepped = levels(lr.step).foldLeft(s"SELECT * FROM $name WHERE $go") {
       (from, level) =>
         val (re, add) = level.partition { case (n, _) => cols(n) }
         cols ++= add.map(_._1)
@@ -786,13 +870,16 @@ object Pipeline {
         val more = add.map { case (n, e) => s", ${sql(e)} AS ${q(n)}" }.mkString
         s"SELECT *$replace$more FROM ($from)"
     }
-    val key = free.indices.map(k => s"${q(free(k))} AS ${q(s"${name}_r_k$k")}, " +
-      s"${q(signs(k))} AS ${q(s"${name}_r_s$k")}").mkString(", ")
-    Seq(
+    val key = if (!l.memo) q(rid) else free.indices.map(k => s"${q(free(k))} AS " +
+      s"${q(s"${name}_r_k$k")}, ${q(signs(k))} AS ${q(s"${name}_r_s$k")}").mkString(", ")
+    val last = s"FROM $name WHERE NOT coalesce($go, false)"
+    val result = if (l.width == 0) s"${sql(lr.result)} AS ${q(name)} $last"
+      else lr.results.map(x => s"list(${sql(x)} ORDER BY ${q(Loop.index)})").mkString(" || ") +
+        s" AS ${q(name)} $last GROUP BY ${ids.init.map(q).mkString(", ")}"
+    l.held.flatMap(h => loopCtes(h, inner(h), input)) ++ Seq(
       s"$name AS (SELECT 0 AS ${q(round)}, $keep FROM ($seed) " +
         s"UNION ALL SELECT ${q(round)} + 1, $keep FROM ($stepped))",
-      s"${name}_r AS (SELECT $key, ${sql(l.result)} AS ${q(name)} FROM $name " +
-        s"WHERE NOT coalesce($go, false))")
+      s"${name}_r AS (SELECT $key, $result)")
   }
 
   /** Sequential assignments grouped into SELECT levels: an assignment sits

@@ -21,10 +21,11 @@ import graft.functions.{Memo, MemoStats}
   * `java.lang.Math`: Catalyst's `Exp`/`Log`/`Pow` use `StrictMath`, which
   * can differ in the last ulp from the `Math` of the scalar kernels.
   *
-  * A memoised loop ([[Loop.memo]]) reads and fills the per-JVM memo
-  * ([[LoopExpression.memo]]) inside its kernel. `stats` are the memo's
-  * stats attached when the column was built: a task republishes them where
-  * the memo has none attached, as on a remote executor ([[Memo.publish]]). */
+  * A memoised loop ([[Loop.memo]]), or one the loop holds, reads and fills
+  * the per-JVM memo ([[LoopExpression.memo]]) inside its kernel. `stats`
+  * are the memo's stats attached when the column was built: a task
+  * republishes them where the memo has none attached, as on a remote
+  * executor ([[Memo.publish]]). */
 case class LoopExpression(loop: Loop, children: Seq[Expression])(
     val stats: Option[MemoStats]) extends Expression {
 
@@ -41,9 +42,11 @@ case class LoopExpression(loop: Loop, children: Seq[Expression])(
     if (xs.contains(null)) null else solve(xs.map(_.asInstanceOf[Double]).toArray)
   }
 
+  @transient private lazy val memoised = LoopExpression.memoised(loop)
+
   /** The loop at the inputs `xs` (called by generated code). */
   def solve(xs: Array[Double]): Double = {
-    if (loop.memo) stats.foreach(LoopExpression.memo.publish)
+    if (memoised) stats.foreach(LoopExpression.memo.publish)
     kernel(xs)
   }
 
@@ -74,19 +77,36 @@ object LoopExpression {
   import org.apache.spark.sql.GraftSqlBridge.{column => toCol, expression}
 
   /** The per-JVM memo of every memoised loop, keyed by the loop's id and
-    * its inputs' raw bits: exact, since a loop is deterministic. */
-  private[graft] val memo = new Memo[Key, java.lang.Double](100000)
+    * its inputs' raw bits: exact, since a loop is deterministic. A value is
+    * a `java.lang.Double`, or a vector loop's `double[]`. The cap holds the
+    * registry's sf0.1 working set: IW's 7 vectors per distinct pressure
+    * (70,000), QFM's three transitions per temperature and Deng's dVdP per
+    * (T, lattice length). */
+  private[graft] val memo = new Memo[Key, AnyRef](200000)
 
-  private[graft] final class Key(val loop: Int, val bits: Array[Long]) {
-    override def hashCode: Int = 31 * loop + java.util.Arrays.hashCode(bits)
+  /** Whether `l` or a loop it holds (always memoised) is memoised. */
+  private def memoised(l: Loop): Boolean = l.memo || l.held.nonEmpty
+
+  private[graft] final class Key(val loop: Int, val bits: Array[Long], override val hashCode: Int) {
     override def equals(o: Any): Boolean = o match {
       case k: Key => k.loop == loop && java.util.Arrays.equals(k.bits, bits)
       case _      => false
     }
   }
 
-  private[graft] def key(id: Int, xs: Array[Double]): Key =
-    new Key(id, xs.map(java.lang.Double.doubleToRawLongBits))
+  // each input's bits are multiplied through before they fold into the
+  // hash: inputs are often whole numbers (T, P), whose low 32 bits are all
+  // zero, and a plain fold of those put most keys in a few tree bins
+  private[graft] def key(id: Int, xs: Array[Double]): Key = {
+    val bits = new Array[Long](xs.length)
+    var h = id; var i = 0
+    while (i < xs.length) {
+      bits(i) = java.lang.Double.doubleToRawLongBits(xs(i))
+      h = 31 * h + java.lang.Long.hashCode(bits(i) * 0x9E3779B97F4A7C15L)
+      i += 1
+    }
+    new Key(id, bits, h)
+  }
 
   private val ids = new java.util.concurrent.ConcurrentHashMap[Loop, Integer]()
   private val lastId = new java.util.concurrent.atomic.AtomicInteger()
@@ -107,7 +127,7 @@ object LoopExpression {
   def column(l: Loop, bind: Map[String, Column] = Map.empty): Column =
     toCol(LoopExpression(l, E.freeVars(l).map(n =>
       expression(bind.getOrElse(n, F.col(n)).cast("double"))))(
-      if (l.memo) memo.attached else None))
+      if (memoised(l)) memo.attached else None))
 
   private val scalars =
     new Memo[(String, Seq[String]), Array[Double] => Double](256)
@@ -147,10 +167,17 @@ abstract class LoopKernel {
 
   // a memoised loop's method reads and fills the loop memo through these
   protected final def lookup(loop: Int, x: Array[Double]): java.lang.Double =
-    LoopExpression.memo.lookup(LoopExpression.key(loop, x))
+    LoopExpression.memo.lookup(LoopExpression.key(loop, x)).asInstanceOf[java.lang.Double]
 
   protected final def fill(loop: Int, x: Array[Double], v: Double, nanos: Long): Unit =
-    LoopExpression.memo.fill(LoopExpression.key(loop, x), v, nanos)
+    LoopExpression.memo.fill(LoopExpression.key(loop, x), Double.box(v), nanos)
+
+  // ... and a memoised vector loop's, filled once per key and JVM while a
+  // concurrent caller of the key waits; its callers only read the array
+  protected final def fillOnce(loop: Int, x: Array[Double],
+                               solve: java.util.function.Supplier[AnyRef]): Array[Double] =
+    LoopExpression.memo.getOrFill(LoopExpression.key(loop, x))(solve.get())
+      .asInstanceOf[Array[Double]]
 }
 
 object LoopKernel {
@@ -193,21 +220,48 @@ object LoopKernel {
     c
   }
 
-  private def loopsIn(p: Program): Seq[Loop] =
-    (p.defs.map(_._2) :+ p.value).flatMap(Pipeline.loopsIn).distinct
+  /** The loops of `p` and the loops they hold, outer first. */
+  private def loopsIn(p: Program): Seq[Loop] = {
+    def all(l: Loop): Seq[Loop] = l +: l.held.flatMap(all)
+    (p.defs.map(_._2) :+ p.value).flatMap(Pipeline.loopsIn).flatMap(all).distinct
+  }
+
+  private def foldsIn(n: Node): Seq[Trapz] = n match {
+    case t: Trapz => Seq(t)
+    case _        => n.children.flatMap(foldsIn)
+  }
 
   /** The Java class body of `p`: a method `solve<i>` per loop (one local
     * per bound name, its assignments in order), `memo<i>` around it for a
-    * memoised loop, and `apply` for the definitions and the value. */
+    * memoised loop, `trapz<i>` per [[Trapz]] fold, and `apply` for the
+    * definitions and the value. A vector loop's methods return its
+    * `double[]`. */
   private[graft] def source(p: Program): String = {
     val loops = loopsIn(p)
+    val folds = (p.defs.map(_._2) :+ p.value).flatMap(foldsIn).distinct
+    // the call of a loop or a fold from code that reads a name n as id(n)
+    def call(id: String => String)(e: E): String = e match {
+      case l: Loop => val i = loops.indexOf(l)
+        s"${if (l.memo) "memo" else "solve"}$i(${E.freeVars(l).map(id).mkString(", ")})"
+      case t: Trapz => s"trapz${folds.indexOf(t)}(${E.freeVars(t).map(id).mkString(", ")})"
+      case _ => throw new IllegalArgumentException(s"not a call: $e")
+    }
     val methods = loops.zipWithIndex.map { case (l, i) =>
       val as = E.freeVars(l).indices.map(k => s"a$k")
       val params = as.map("double " + _).mkString(", ")
+      val t = if (l.width > 0) "double[]" else "double"
       lazy val id = LoopExpression.idOf(l) // only a memoised loop has one
-      s"""private double solve$i($params) {
-         |${body(l)}
-         |}""".stripMargin + (if (!l.memo) "" else
+      s"""private $t solve$i($params) {
+         |${body(l, call)}
+         |}""".stripMargin + (if (!l.memo) "" else if (l.width > 0)
+      // a vector loop's solve is long: one thread runs it, the others wait
+      s"""
+         |private double[] memo$i(${as.map("final double " + _).mkString(", ")}) {
+         |  return fillOnce($id, new double[] {${as.mkString(", ")}},
+         |    new java.util.function.Supplier() {
+         |      public Object get() { return solve$i(${as.mkString(", ")}); }
+         |    });
+         |}""".stripMargin else
       s"""
          |private double memo$i($params) {
          |  double[] k = new double[] {${as.mkString(", ")}};
@@ -218,36 +272,68 @@ object LoopKernel {
          |  fill($id, k, r, System.nanoTime() - t0);
          |  return r;
          |}""".stripMargin)
-    }
+    } ++ folds.zipWithIndex.map { case (t, i) => trapz(t, i, call) }
     val scope = p.names.zipWithIndex.distinctBy(_._1).map { case (n, i) => n -> s"x[$i]" }.toMap ++
       p.defs.map(_._1).zipWithIndex.map { case (n, i) => n -> s"d$i" }
-    def call(l: Loop): String = { // in scope: the value reads every definition
-      val i = loops.indexOf(l)
-      s"${if (l.memo) "memo" else "solve"}$i(${E.freeVars(l).map(scope).mkString(", ")})"
-    }
     (methods ++ Seq("public double apply(double[] x) {") ++
-      p.defs.zipWithIndex.map { case ((_, e), i) => s"double d$i = ${java(e, scope, call)};" } ++
-      Seq(s"return ${java(p.value, scope, call)};", "}")).mkString("\n")
+      p.defs.zipWithIndex.map { case ((_, e), i) => s"double d$i = ${java(e, scope, call(scope))};" } ++
+      Seq(s"return ${java(p.value, scope, call(scope))};", "}")).mkString("\n")
   }
 
-  /** The method body of `l` over parameters `a0..` ([[E.freeVars]] order). */
-  private def body(l: Loop): String = {
+  /** The method body of `l` over parameters `a0..` ([[E.freeVars]] order);
+    * a vector loop runs it per element, the index in `ix`. */
+  private def body(l: Loop, call: (String => String) => E => String): String = {
     val id = (E.freeVars(l).zipWithIndex.map { case (n, i) => n -> s"a$i" } ++
-      (l.lets ++ l.init ++ l.step).map(_._1).distinct.zipWithIndex.map { case (n, i) => n -> s"b$i" }).toMap
-    def j(e: E): String = java(e, id, _ => throw new IllegalArgumentException("a loop holds no loop"))
+      (l.lets ++ l.init ++ l.step).map(_._1).distinct.zipWithIndex.map { case (n, i) => n -> s"b$i" })
+      .toMap + (Loop.index -> "ix")
+    def j(e: E): String = java(e, id, call(id))
     // a step temporary is declared in the loop body, afresh each round
     val declared = scala.collection.mutable.Set.empty[String]
     def assign(as: Seq[(String, E)]): Seq[String] = as.map { case (n, e) =>
       (if (declared.add(n)) "double " else "") + s"${id(n)} = ${j(e)};"
     }
-    (assign(l.lets ++ l.init) ++
+    val run = assign(l.lets ++ l.init) ++
       Seq("int it = 0;", s"while (it < ${l.maxIter} && ${cond(l.cond, j)}) {") ++
-      assign(l.step) ++ Seq("it++;", "}", s"return ${j(l.result)};")).mkString("\n")
+      assign(l.step) ++ Seq("it++;", "}")
+    (if (l.width == 0) run :+ s"return ${j(l.result)};"
+    else Seq(s"double[] out = new double[${l.width * l.results.size}];",
+        s"for (int i0 = 0; i0 < ${l.width}; i0++) {", "double ix = i0;") ++ run ++
+      l.results.indices.map(k => s"out[${k * l.width} + i0] = ${j(l.results(k))};") ++
+      Seq("}", "return out;")).mkString("\n")
   }
 
-  /** `e` as a Java double expression: a name reads `id(name)`, a loop
-    * is `loop(it)`. */
-  private def java(e: E, id: String => String, loop: Loop => String): String = {
+  /** The method `trapz<i>` of the fold `t` over parameters `p0..`
+    * ([[E.freeVars]] order): the vectors it reads fetched once, then each
+    * point's value computed once and carried to the next panel. The index
+    * is the int `k`: an element read `v[(int) x]` of a double index costs
+    * ~4x the whole panel in C2-compiled code (OpenJDK 17, x86-64). */
+  private def trapz(t: Trapz, i: Int, call: (String => String) => E => String): String = {
+    val ps = E.freeVars(t).zipWithIndex.map { case (n, k) => n -> s"p$k" }
+    val id = ps.toMap + (t.idx -> "((double) k)")
+    val vectors = Pipeline.loopsIn(t).distinct
+    def j(e: E): String = java(e, id, {
+      case l: Loop if vectors.contains(l) => s"q${vectors.indexOf(l)}"
+      case e => throw new IllegalArgumentException(s"a fold holds no fold: $e")
+    }, Map(t.idx -> "k"))
+    (Seq(s"private double trapz$i(${ps.map("double " + _._2).mkString(", ")}) {") ++
+      vectors.zipWithIndex.map { case (l, k) => s"double[] q$k = ${call(id)(l)};" } ++
+      Seq("int k = 0;", s"double prev = ${j(t.value)};", "double s = 0.0;",
+        s"for (k = 1; k < ${t.n}; k++) {", s"double cur = ${j(t.value)};",
+        s"s = s + ((0.5D * (cur + prev)) * ${j(t.h)});", "prev = cur;", "}", "return s;", "}"))
+      .mkString("\n")
+  }
+
+  /** `e` as a Java double expression: a name reads `id(name)`, a loop or a
+    * fold is `call(it)`; an element index of whole literals, `+`, `-` and
+    * the int names `ints` is int arithmetic. */
+  private def java(e: E, id: String => String, call: E => String,
+                   ints: Map[String, String] = Map.empty): String = {
+    def int(e: E): Option[String] = e match {
+      case C(n) => ints.get(n)
+      case Lit(v) if v.isWhole && scala.math.abs(v) < 1e9 => Some(v.toInt.toString)
+      case Bin(op @ ("+" | "-"), x, y) => for (a <- int(x); b <- int(y)) yield s"($a $op $b)"
+      case _ => None
+    }
     def j(e: E): String = e match {
       case C(n)     => id(n)
       case Lit(v)   => lit(v)
@@ -257,7 +343,8 @@ object LoopKernel {
       case Fn(fn, args) if math.contains(fn) =>
         s"java.lang.Math.${math(fn)}(${args.map(j).mkString(", ")})"
       case If(p, t, f) => s"(${cond(p, j)} ? ${j(t)} : ${j(f)})"
-      case l: Loop     => loop(l)
+      case At(v, k)    => s"${j(v)}[${int(k).getOrElse(s"(int) ${j(k)}")}]"
+      case _: Loop | _: Trapz => call(e)
       case _ => throw new IllegalArgumentException(s"not computable with Java semantics: $e")
     }
     j(e)

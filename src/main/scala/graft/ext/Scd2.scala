@@ -83,7 +83,6 @@ object Scd2 {
   def snapshotMergeOracleSql(baseSql: String, nextSql: String, key: String,
                              attrs: Seq[String], t0: Long, t1: Long): String = {
     val k = s""""$key""""
-    def alist(side: String) = attrs.map(c => s"""$side."$c" AS "$c"""").mkString(", ")
     val same = attrs
       .map(c => s"""(b."$c" IS NOT DISTINCT FROM n."$c")""").mkString(" AND ")
     s"""WITH b AS ($baseSql), n AS ($nextSql),

@@ -1,17 +1,26 @@
 package graft.functions
 
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.{col, lit}
+import graft.expr._
+import graft.expr.E._
+import graft.expressions.LoopExpression
+
 /** Full Iron-Wustite buffer after Hirschmann (2021) (reference
   * `fO2/IW.py`): Gibbs polynomials (Hidayat 2015 / Dinsdale 1991) with the
   * bcc magnetic correction, Vinet-EOS pressure terms (100-point trapezoid
   * VdP), min-Gibbs Fe-polymorph selection, and the wustite FeO-FeO1.5
-  * solid-solution equilibrium solved by bisection per (T,P) (the reference
-  * float32-coerces its result; we keep doubles).
+  * solid-solution equilibrium solved by bisection per (T, P) (the
+  * reference float32-coerces its result; we keep doubles), written once as
+  * trees.
   *
   * One rule, as for QFM: the expensive sub-solve is memoised on its own
-  * key and the per-row assembly is computed. Here the sub-solve is the
-  * 100-point Vinet grid, keyed on (phase, P) ([[vdpGrid]]); the Gibbs
-  * sums, the polymorph minimum and the wustite bisection run per row.
-  */
+  * key and the per-row assembly is computed. Here the sub-solve is each
+  * phase's 100-point Vinet grid, a vector loop over P ([[grid]]) in the
+  * loop memo ([[Loop.memo]]); the Gibbs sums, the VdP folds over the grids,
+  * the polymorph minimum and the wustite bisection are one per-row loop
+  * ([[fO2E]]) that holds the seven grid loops. Queries, the [[withIw]]
+  * column and the scalar [[fO2]] all compute this tree. */
 object IwFull {
 
   val R = 8.31446261815324
@@ -56,197 +65,148 @@ object IwFull {
   private val fePolymorphs = Seq("Fe_fcc", "Fe_bcc-alpha", "Fe_HCP",
     "Fe_bcc-delta", "Fe_liquid")
 
-  private def gibbs0(tK: Double, p: G0): Double = {
+  private val (tIn, pIn) = (C("T_K"), C("P_bar"))
+
+  private def gibbs0(t: E, p: G0): E = {
     val (a, b, c, d, e, f, g, h, i) = p
-    a + b * tK + c * tK * math.log(tK) + d * math.log(tK) + e * tK * tK +
-      f * tK * tK * tK + g / tK + h * math.pow(tK, 7) + i * math.pow(tK, -9)
+    Lit(a) + Lit(b) * t + Lit(c) * t * ln(t) + Lit(d) * ln(t) + Lit(e) * t * t +
+      Lit(f) * t * t * t + Lit(g) / t + Lit(h) * pow(t, Lit(7.0)) + Lit(i) * pow(t, Lit(-9.0))
   }
 
-  private def g0Params(phase: String, tK: Double): G0 = {
-    if (phase == "O2" && tK < 1000.0) g0O2LowT
-    else if (tK > 1811.0) g0High(phase)
-    else g0Low(phase)
+  /** [[gibbs0]] with the low/high-T parameters, and O2's below 1000 K. */
+  private def gibbs0At(phase: String, t: E): E = {
+    val byT = If(t > Lit(1811.0), gibbs0(t, g0High(phase)), gibbs0(t, g0Low(phase)))
+    if (phase == "O2") If(t < Lit(1000.0), gibbs0(t, g0O2LowT), byT) else byT
   }
 
-  /** bcc-alpha magnetic Gibbs correction (`fO2/IW.py:130-157`). */
-  private def gibbsFeMagnetic(tK: Double): Double = {
-    val tc = 1043.0; val pf = 0.4; val beta = 2.22; val a = 1.55828482
-    val tau = tK / tc
-    val gm =
-      if (tK < tc) {
-        val term1 = (79.0 / tau) / (140.0 * pf)
-        val term2 = (474.0 / 497.0) * (1.0 / pf - 1.0) *
-          (math.pow(tau, 3) / 6.0 + math.pow(tau, 9) / 135.0 +
-            math.pow(tau, 15) / 600.0)
-        1.0 - (1.0 / a) * (term1 + term2)
-      } else
-        (-1.0 / a) * (math.pow(tau, -5) / 10.0 + math.pow(tau, -15) / 315.0 +
-          1.0 / 1500.0)
-    gm * (R * tK * math.log(beta + 1.0))
+  /** bcc-alpha magnetic Gibbs correction (`fO2/IW.py:130-157`): tc = 1043,
+    * pf = 0.4, beta = 2.22, a = 1.55828482. */
+  private def gibbsFeMagnetic(t: E): E = {
+    val (pf, a) = (0.4, 1.55828482)
+    val tau = t / Lit(1043.0)
+    val term1 = (Lit(79.0) / tau) / Lit(140.0 * pf)
+    val term2 = Lit((474.0 / 497.0) * (1.0 / pf - 1.0)) * (pow(tau, Lit(3.0)) / Lit(6.0) +
+      pow(tau, Lit(9.0)) / Lit(135.0) + pow(tau, Lit(15.0)) / Lit(600.0))
+    val gm = If(t < Lit(1043.0), Lit(1.0) - Lit(1.0 / a) * (term1 + term2),
+      Lit(-1.0 / a) * (pow(tau, Lit(-5.0)) / Lit(10.0) + pow(tau, Lit(-15.0)) / Lit(315.0) +
+        Lit(1.0 / 1500.0)))
+    gm * (Lit(R) * t * Lit(math.log(2.22 + 1.0)))
   }
 
   // ---- Vinet EOS (`EOSs/vinet.py`) --------------------------------------
 
-  private def vinetP(v: Double, v0: Double, k0: Double, kp0: Double): Double = {
-    val x = math.pow(v / v0, 1.0 / 3.0)
-    3.0 * k0 / (x * x) * (1.0 - x) * math.exp(1.5 * (kp0 - 1.0) * (1.0 - x))
+  /** vinetP (GPa) less `p` at the volume whose (V/V0)^(1/3) is `x`. */
+  private def vinetP(x: E, p: E, e: EosP): E = {
+    val (_, k0, kp0, _, _, _) = e
+    Lit(3.0 * k0) / (x * x) * (Lit(1.0) - x) * exp(Lit(1.5 * (kp0 - 1.0)) * (Lit(1.0) - x)) - p
   }
 
-  /** Room-T volume at pressure `pGPa`: Vinet inversion by 60 fixed
-    * bisection steps on [0.3 v0, 1.5 v0] — vinetP is strictly decreasing
-    * in V, so the root is unique. Deterministic straight-line IEEE
-    * arithmetic with no convergence branches, so the DuckDB oracle
-    * ([[graft.IwSql]]) replicates the solve exactly (the earlier seeded
-    * secant chained each grid point's start on the previous solution —
-    * fast, but a data-dependent path no SQL rendering could follow).
-    * Unbracketed inputs return v0, mirroring the old Brent fallback. */
-  private def vinetVRoom(pGPa: Double, p: EosP): Double = {
-    val (v0, k0, kp0, _, _, _) = p
-    def f(v: Double): Double = vinetP(v, v0, k0, kp0) - pGPa
-    if (!(f(v0 * 0.3) > 0.0) || !(f(v0 * 1.5) < 0.0)) return v0
-    var lo = v0 * 0.3
-    var hi = v0 * 1.5
-    var it = 0
-    while (it < 60) {
-      val mid = (lo + hi) * 0.5
-      if (f(mid) > 0.0) lo = mid else hi = mid
-      it += 1
-    }
-    (lo + hi) * 0.5
+  /** (V/V0)^(1/3) at the volume `v`. */
+  private def cbrt(v: E, e: EosP): E = pow(v / Lit(e._1), Lit(1.0 / 3.0))
+
+  private val points = 100
+
+  /** The T-independent part of one phase's 100-point V(P) grid at P_bar:
+    * at each grid pressure p_i = 1e-4 + i (P - 1e-4) / 99 GPa, the room-T
+    * volume (60 halvings of [0.3 v0, 1.5 v0], where vinetP decreases, so
+    * the root is unique; v0 when those do not bracket it) and the
+    * thermal-expansion coefficient at it: the first 100 values, then the
+    * next 100. The thermal factor exp(alpha (T - 298.15)) is the volume's
+    * only T-dependence, so the grid is memoised on P alone: across the
+    * many temperatures that share a pressure, the inversions run once. */
+  private def grid(phase: String): Loop = {
+    val e @ (v0, _, _, alpha0, delta0, kappa) = eos(phase)
+    val (lo, hi) = (v0 * 0.3, v0 * 1.5)
+    val pi = C("_pi")
+    val b = bisect(Seq("_pg" -> pIn / Lit(1e4), "_st" -> (C("_pg") - Lit(1e-4)) / Lit(points - 1.0),
+        "_pi" -> (Lit(1e-4) + C(Loop.index) * C("_st")), "_xlo" -> cbrt(Lit(lo), e),
+        "_xhi" -> cbrt(Lit(hi), e), "_flo" -> vinetP(C("_xlo"), pi, e),
+        "_fhi" -> vinetP(C("_xhi"), pi, e)),
+      lo, hi, _ => vinetP(C("_x"), pi, e), C("_flo") > Lit(0.0) && C("_fhi") < Lit(0.0), Lit(v0),
+      m => Seq("_x" -> cbrt(m, e)))
+    val alpha = Lit(alpha0) * exp(Lit(-delta0 / kappa) *
+      (Lit(1.0) - pow(b.result / Lit(v0), Lit(kappa))))
+    b.copy(result = Vec(List(b.result, alpha)), memo = true, width = points)
   }
 
-  /** The T-independent part of the 100-point V(P) integration grid for one
-    * phase: room-T volumes and thermal-expansion coefficients at each grid
-    * pressure. Cached per (phase, target pressure): the thermal factor
-    * exp(alpha (T - 298.15)) is the ONLY T-dependence of the Vinet volume,
-    * so across the many (T, P) conditions sharing a pressure the expensive
-    * EOS inversions happen once (at sf0.1 each pressure recurs across ~250
-    * temperatures). */
-  // Memo, not raw get/put: computeIfAbsent pays each grid once per
-  // executor (plain get/put lets every cold-executor task invert the same
-  // 100-point Vinet grid concurrently before the first put lands), and
-  // the bound evicts PARTIALLY on breach instead of clear-all — the grid
-  // key genuinely depends on continuous pGPa (the 100-point lattice
-  // stretches to the target pressure), so unlike deng2020's dVdP there is
-  // no discrete re-key; when distinct pressures outgrow the cap at scale
-  // the hit rate degrades gracefully and the evictions are counted
-  // ([[attachMetrics]]).
-  private def vdpGrid(phase: String, pGPa: Double): (Array[Double], Array[Double]) =
-    // Bound must exceed the working set (7 phases x ~10k distinct pressures
-    // in the driver tables = 70k entries, ~110 MB) or the cache degrades.
-    gridCache.getOrFill((phase, pGPa)) {
-    val p = eos(phase)
-    val (v0, _, _, alpha0, delta0, kappa) = p
-    val n = 100
-    val step = (pGPa - 1e-4) / (n - 1)
-    val vRoom = new Array[Double](n)
-    val alpha = new Array[Double](n)
-    var i = 0
-    while (i < n) {
-      val pi = 1e-4 + i * step
-      val v = vinetVRoom(pi, p)
-      vRoom(i) = v
-      alpha(i) = alpha0 * math.exp((-delta0 / kappa) *
-        (1.0 - math.pow(v / v0, kappa)))
-      i += 1
-    }
-    (vRoom, alpha)
-    }
-
-  private val gridCache =
-    new Memo[(String, Double), (Array[Double], Array[Double])](200000)
-
-  /** 100-point trapezoid of V dP from 1 bar to P (J/mol). */
-  private def vinetVdP(pGPa: Double, tK: Double, phase: String): Double = {
-    if (pGPa <= 1e-4) return 0.0
-    val (vRoom, alpha) = vdpGrid(phase, pGPa)
-    val n = vRoom.length
-    val step = (pGPa - 1e-4) / (n - 1)
-    val dT = tK - 298.15
-    var integral = 0.0
-    var prev = vRoom(0) * math.exp(alpha(0) * dT)
-    var i = 1
-    while (i < n) {
-      val vi = vRoom(i) * math.exp(alpha(i) * dT)
-      integral += 0.5 * (vi + prev) * step
-      prev = vi
-      i += 1
-    }
-    integral * 1000.0
+  /** 100-point trapezoid of V dP (J/mol) from 1 bar to P over the phase's
+    * [[grid]], at `dT` = T - 298.15 and the panel width `st` (GPa). */
+  private def vinetVdP(phase: String, dT: E, st: E): E = {
+    val (g, k) = (grid(phase), C("_k"))
+    Trapz("_k", points, At(g, k) * exp(At(g, Lit(points.toDouble) + k) * dT), st) * Lit(1000.0)
   }
 
   // ---- assembly (`fO2/IW.py:159-471`) -----------------------------------
 
-  private def gibbsPhase(phase: String, tK: Double, pBar: Double): Double = {
-    var g = gibbs0(tK, g0Params(phase, tK))
-    if (phase == "Fe_bcc-alpha") g += gibbsFeMagnetic(tK)
-    if (pBar > 1.0 && phase != "O2") g += vinetVdP(pBar / 1e4, tK, phase)
-    g
+  /** The Gibbs energy of `phase` at T and P as lets: the pressure-free
+    * part, then (bar O2) the Vinet VdP above 1 bar, none at or below 1e-4
+    * GPa; the grid is looked up only where the VdP is computed. */
+  private def gibbsPhase(phase: String, name: String): Seq[(String, E)] = {
+    val g0 = gibbs0At(phase, tIn)
+    val g = if (phase == "Fe_bcc-alpha") g0 + gibbsFeMagnetic(tIn) else g0
+    if (phase == "O2") Seq(name -> g)
+    else Seq(s"${name}Base" -> g, name -> If(pIn > Lit(1.0), C(s"${name}Base") +
+      If(C("_pg") <= Lit(1e-4), Lit(0.0), vinetVdP(phase, C("_dT"), C("_st"))), C(s"${name}Base")))
   }
 
-  private def gammaFeO(x: Double): Double =
-    (q00 + 2.0 * q10 * (1.0 - x)) * x * x
-  private def gammaFeO1p5(x: Double): Double =
-    (1.0 - x) * (1.0 - x) * (q00 + q10 - 2.0 * q10 * x)
+  private def gammaFeO(x: E): E = (Lit(q00) + Lit(2.0 * q10) * (Lit(1.0) - x)) * x * x
+  private def gammaFeO1p5(x: E): E =
+    (Lit(1.0) - x) * (Lit(1.0) - x) * (Lit(q00 + q10) - Lit(2.0 * q10) * x)
 
-  /** Export hit/miss/fill/eviction counters for the grid memo (called
-    * by Verify/Bench after session build). */
-  def attachMetrics(spark: org.apache.spark.sql.SparkSession): Seq[MemoStats] = {
-    val g = MemoStats.attach(spark, "iw.gridCache")
-    gridCache.attach(g)
-    Seq(g)
+  /** `Seq.min`'s choice between `x` and `y`, in the total order of
+    * `java.lang.Double.compare`: NaN above every number, -0.0 below 0.0. */
+  private def min(x: E, y: E): E = {
+    val plusZeroOverMinus = x === Lit(0.0) && Lit(1.0) / x > Lit(0.0) && Lit(1.0) / y < Lit(0.0)
+    If(NotC(y === y) || x < y || x === y && NotC(plusZeroOverMinus), x, y)
   }
 
-  /** Absolute fO2 (bar) at IW + logshift (`fO2/IW.py:383-471`),
-    * suppress_Fe_liquid = false (the reference default). */
-  def fO2(tK: Double, pBar: Double, logshift: Double = 0.0): Double =
-    fO2Base(tK, pBar) * math.pow(10.0, logshift)
-
-  private def fO2Base(tK: Double, pBar: Double): Double = {
-    val gFeO = gibbsPhase("FeO", tK, pBar)
-    val gFeO1p5 = gibbsPhase("FeO1.5", tK, pBar)
-    val gO2 = gibbsPhase("O2", tK, pBar)
-    val gFe = fePolymorphs.map(ph => gibbsPhase(ph, tK, pBar)).min
-    val dGFeOFeO1p5 = gFeO1p5 - gFeO - gO2 / 4.0
-    val dGFeWustite = 3.0 * gFeO - 2.0 * gFeO1p5 - gFe
-    // wustite solid-solution equilibrium (eq. 14, half stoichiometry)
-    def eqFn(x: Double): Double = {
-      val part1 = 0.5 * dGFeWustite +
-        R * tK * math.log(math.pow(1.0 - x, 1.5) / x)
-      part1 + 1.5 * gammaFeO(x) - gammaFeO1p5(x)
-    }
-    // 60 fixed bisection steps: eqFn is strictly decreasing in x (the
-    // ln((1-x)^1.5/x) term) and always bracketed (+inf at 0+, -inf at 1-);
-    // deterministic for the DuckDB oracle, unbracketed mirror of the old
-    // catch -> 1e-6
-    val x = {
-      if (!(eqFn(1e-6) > 0.0) || !(eqFn(1.0 - 1e-6) < 0.0)) 1e-6
-      else {
-        var lo = 1e-6
-        var hi = 1.0 - 1e-6
-        var it = 0
-        while (it < 60) {
-          val mid = (lo + hi) * 0.5
-          if (eqFn(mid) > 0.0) lo = mid else hi = mid
-          it += 1
-        }
-        (lo + hi) * 0.5
-      }
-    }
-    val muO2 = 4.0 * (dGFeOFeO1p5 + R * tK * math.log(x / (1.0 - x)) +
+  /** Base fO2 (bar) at IW over the columns T_K and P_bar
+    * (`fO2/IW.py:383-471`), suppress_Fe_liquid = false (the reference
+    * default): the wustite equilibrium (eq. 14, half stoichiometry) by 60
+    * halvings of [1e-6, 1 - 1e-6], where it decreases in x (the
+    * ln((1-x)^1.5/x) term); 1e-6 where they do not bracket it, as the
+    * reference's failed solve gave. */
+  val fO2E: Loop = {
+    val (t, g) = (tIn, (n: String) => C(s"_g$n"))
+    val fe = fePolymorphs.indices.map(i => s"Fe$i")
+    val gibbs = Seq("_dT" -> (t - Lit(298.15)), "_pg" -> pIn / Lit(1e4),
+        "_st" -> (C("_pg") - Lit(1e-4)) / Lit(points - 1.0)) ++
+      Seq("FeO" -> "FeO", "FeO1.5" -> "FeO15", "O2" -> "O2").flatMap { case (ph, n) =>
+        gibbsPhase(ph, s"_g$n") } ++
+      fePolymorphs.zip(fe).flatMap { case (ph, n) => gibbsPhase(ph, s"_g$n") } ++
+      fe.indices.tail.map(i => s"_gFeMin$i" ->
+        min(if (i == 1) g(fe.head) else g(s"FeMin${i - 1}"), g(fe(i))))
+    val dG15 = g("FeO15") - g("FeO") - g("O2") / Lit(4.0)
+    val dGw = Lit(3.0) * g("FeO") - Lit(2.0) * g("FeO15") - g(s"FeMin${fe.size - 1}")
+    def eqFn(x: E): E = Lit(0.5) * C("_dGw") + Lit(R) * t * ln(pow(Lit(1.0) - x, Lit(1.5)) / x) +
+      Lit(1.5) * gammaFeO(x) - gammaFeO1p5(x)
+    val (lo, hi) = (1e-6, 1.0 - 1e-6)
+    val b = bisect(gibbs ++ Seq("_dG15" -> dG15, "_dGw" -> dGw,
+        "_flo" -> eqFn(Lit(lo)), "_fhi" -> eqFn(Lit(hi))), lo, hi, eqFn,
+      C("_flo") > Lit(0.0) && C("_fhi") < Lit(0.0), Lit(1e-6))
+    val x = b.result
+    val muO2 = Lit(4.0) * (C("_dG15") + Lit(R) * t * ln(x / (Lit(1.0) - x)) +
       gammaFeO1p5(x) - gammaFeO(x))
-    math.exp(muO2 / (R * tK))
+    b.copy(result = exp(muO2 / (Lit(R) * t)))
   }
 
-  import org.apache.spark.sql.{functions => F, DataFrame}
+  /** The loop memo counts IW's grid solves: its stats are attached once,
+    * by [[Deng2020.attachMetrics]] or [[LoopExpression.attachMetrics]]. */
+  def attachMetrics(spark: org.apache.spark.sql.SparkSession): Seq[MemoStats] = Nil
 
-  val fO2Udf = F.udf((tK: Double, pBar: Double, shift: Double) =>
-    fO2(tK, pBar, shift))
+  /** Absolute fO2 (bar) at IW + logshift (`fO2/IW.py:383-471`). */
+  def fO2(tK: Double, pBar: Double, logshift: Double = 0.0): Double =
+    LoopExpression.scalar("IwFull.fO2", Seq("T_K", "P_bar"))((Nil, fO2E))(Array(tK, pBar)) *
+      math.pow(10.0, logshift)
 
-  /** Attach an IW-buffer `fO2` column: [[fO2Udf]] per row. The Vinet
-    * grids inside are memoised per (phase, P); the assembly over them is
-    * computed per row. */
+  /** fO2 of the columns `t` and `p` at IW + logshift. */
+  def column(t: Column, p: Column, logshift: Double = 0.0): Column =
+    LoopExpression.column(fO2E, Map("T_K" -> t, "P_bar" -> p)) * lit(math.pow(10.0, logshift))
+
+  /** Attach an IW-buffer `fO2` column: the [[column]] per row. Its Vinet
+    * grids are memoised per (phase, P) in the loop memo; the assembly over
+    * them is computed per row. */
   def withIw(df: DataFrame, tCol: String, pCol: String,
              logshift: Double = 0.0, as: String = "fO2"): DataFrame =
-    df.withColumn(as, fO2Udf(F.col(tCol), F.col(pCol), F.lit(logshift)))
+    df.withColumn(as, column(col(tCol), col(pCol), logshift))
 }

@@ -58,11 +58,12 @@ object MemoStats {
   }
 
   /** Fresh stats on every solver memo, in Bench artifact order: the loop
-    * memo (QFM's transitions, Deng's dVdP), the loop kernels (a miss is a
-    * janino compile, its fill time the compile time), then IW's grids. */
+    * memo (QFM's transitions, Deng's dVdP, IW's Vinet grids), then the
+    * loop kernels (a miss is a janino compile, its fill time the compile
+    * time). */
   def attachSolvers(spark: SparkSession): Seq[MemoStats] =
     Seq(graft.expressions.LoopExpression.attachMetrics(spark),
-      graft.expressions.LoopKernel.attachMetrics(spark)) ++ IwFull.attachMetrics(spark)
+      graft.expressions.LoopKernel.attachMetrics(spark))
 }
 
 /** Bounded per-executor memo with PARTIAL eviction — the scale-safe

@@ -18,8 +18,8 @@ import graft.expressions.LoopExpression
   * solves each once per distinct temperature. The buffer at P is closed
   * form over (T, P, the three transitions) ([[buffer]]), computed per
   * row: the expensive sub-solve is memoised on its own key, as IW's Vinet
-  * grids are on (phase, P) ([[IwFull]]). Queries, the [[withQfm]] column
-  * and the scalar functions all compute these trees. */
+  * grids are on (phase, P) in the same memo ([[IwFull]]). Queries, the
+  * [[withQfm]] column and the scalar functions all compute these trees. */
 object QfmFull {
 
   val R = 8.31446261815324

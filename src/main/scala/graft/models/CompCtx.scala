@@ -33,13 +33,6 @@ final case class CompCtx(elements: Vector[String]) {
   def anhydrous: CompCtx = without("H2O")
   def volatileFree: CompCtx = without("H2O", "CO2", "F", "S", "Cl")
 
-  /** Anhydrous-normalised wt.% (reference `_anhydrous_composition`,
-    * `tools/modify_compositions.py:77-91`). */
-  def wtAnhydrousNorm(e: String): E = {
-    val a = anhydrous
-    a.wt(e) / sumAll(a.elements.map(a.wt)) * Lit(100.0)
-  }
-
   /** Oxide for a cation symbol present in this composition (FeO for "Fe",
     * Fe2O3 for "Fe3", ...). */
   def oxideOf(cation: String): Option[String] =

@@ -22,13 +22,6 @@ object Fo2Buffers {
     exp(mu / (Lit(R) * tK)) * Lit(math.pow(10, logshift))
   }
 
-  /** log10(fO2) at QFM 1 bar — convenient for delta-QFM expressions. */
-  def log10Qfm1bar(tK: E): E = {
-    val mu = Lit(-587474.0) + Lit(1584.427) * tK -
-      Lit(203.3164) * tK * ln(tK) + Lit(0.092710) * tK * tK
-    mu / (Lit(R) * tK) / Lit(math.log(10.0))
-  }
-
   /** NNO, Campbell et al. (2009) high-pressure fit (`fO2/NNO.py:9-29`). */
   def nno(tK: E, pBar: E, logshift: Double = 0.0): E = {
     val p = pBar / Lit(1e4)

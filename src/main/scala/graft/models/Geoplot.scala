@@ -143,8 +143,6 @@ object TraceElements {
     "Sm" -> 1.079, "Eu" -> 1.066, "Gd" -> 1.053, "Tb" -> 1.040,
     "Dy" -> 1.027, "Y" -> 1.019, "Ho" -> 1.015, "Er" -> 1.004,
     "Tm" -> 0.994, "Yb" -> 0.985, "Lu" -> 0.977)
-  val divalentRadii: Map[String, Double] = Map(
-    "Mg" -> 0.89, "Ba" -> 1.42, "Ca" -> 1.12, "Eu" -> 1.25, "Sr" -> 1.26)
 
   /** `x / reservoir[element]` — the normalisation expression. */
   def normalise(x: E, element: String, reservoir: Map[String, Double]): E =

@@ -64,14 +64,6 @@ object StreamingOps {
       chunk
     }
 
-  /** Read the events table as a file-source stream (one-file-per-trigger
-    * emulation for tests; on a cluster this is a Kafka/file drop source). */
-  def eventsStream(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream
-      .schema("event_id BIGINT, ts BIGINT, user_id BIGINT, event_type STRING, " +
-        "value DOUBLE, props STRING")
-      .parquet(s"$dir/events.parquet")
-
   /** JSONL drop-folder ingest as a stream: the streaming twin of
     * [[graft.ext.CorpusIO.readJsonl]]. Schema is explicit (a streaming
     * source cannot infer, and at corpus scale we would not want it to);

@@ -142,7 +142,8 @@ class CseSpec extends SparkSpec {
 
   test("a loop is solved once per distinct input: rows with equal free " +
     "columns share one loop row; NaN, -0.0 and null inputs get their own") {
-    val l = bisect(Nil, 0.0, 10.0, m => C("a") - m, C("a") > Lit(0.0))
+    // a memoised loop: the one kind solved over distinct inputs
+    val l = bisect(Nil, 0.0, 10.0, m => C("a") - m, C("a") > Lit(0.0)).memoised
     val sql = Pipeline.toSql("t", Seq(Stage(Seq("id" -> C("id"), "y" -> l * C("b")))), Nil)
     // the stage input is kept once; the loop seeds from its distinct
     // non-null free columns, with their sign bits
@@ -156,6 +157,17 @@ class CseSpec extends SparkSpec {
     // the columns the loop does not read are not in its key
     assert(!sql.contains("""DISTINCT "a", "b""""), sql)
     assert(!sql.contains("row_number"), sql)
+  }
+
+  test("a loop that is not memoised is solved once per row, keyed by its " +
+    "row number; null inputs are left out of the solve") {
+    val l = bisect(Nil, 0.0, 10.0, m => C("a") - m, C("a") > Lit(0.0))
+    val sql = Pipeline.toSql("t", Seq(Stage(Seq("id" -> C("id"), "y" -> l * C("b")))), Nil)
+    assert(sql.contains("""s0_in AS MATERIALIZED (SELECT row_number() OVER () AS "__rid", * """ +
+      "FROM t)"), sql)
+    assert(sql.contains("""(SELECT "__rid", "a" FROM s0_in WHERE "a" IS NOT NULL)"""), sql)
+    assert(sql.contains("""FROM s0_in LEFT JOIN s0_l0_r USING ("__rid"))"""), sql)
+    assert(!sql.contains("DISTINCT"), sql)
   }
 
   test("ln, log10 and sqrt render safe to evaluate on every row") {

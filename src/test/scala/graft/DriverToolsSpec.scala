@@ -20,6 +20,32 @@ class DriverToolsSpec extends SparkSpec {
     assert(ok.exists(_.sec >= 0), ok)
   }
 
+  test("Bench's compact line over the full registry is one line of JSON that " +
+    "fits the stdout tail and carries warm seconds for its slowest cold queries") {
+    val names = SparkEntry.queries.keys.toSeq.sorted
+    assert(names.size >= 222, names.size)
+    // the longest names slowest, and wide values: the longest line
+    val cold = names.sortBy(n => (-n.length, n)).zipWithIndex
+      .map { case (n, i) => n -> (999.999 - i) }
+    val warm = cold.collect { case (n, c) if n != cold(1)._1 => n -> c / 7.0 }
+    val diag = """{"gc_s":99.9,"gc_n":9999,"jit_s":999.9,"codegen_compiles":99999,""" +
+      """"sentinel_s":99.999}"""
+    val line = Bench.compactLine(cold, warm, 99999.999, s"""{"cold":$diag,"warm":$diag}""",
+      Seq("q_failed_example"), "/data/graft/testdata/sf0.1")
+    assert(!line.contains('\n') && line.length <= 2000, s"${line.length} chars: $line")
+    val json = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    val queries = json.get("queries").fieldNames()
+    val kept = Iterator.continually(queries).takeWhile(_.hasNext).map(_.next()).toSeq
+    assert(kept.size > 10 && kept == cold.take(kept.size).map(_._1), kept)
+    assert(json.get("queries_omitted").asInt == names.size - kept.size)
+    val warmKept = (0 until json.get("queries_warm").size).map(json.get("queries_warm").get)
+    // the same queries in the same order; null where no warm pass succeeded
+    assert(warmKept.size == kept.size, warmKept)
+    for ((n, w) <- kept.zip(warmKept))
+      if (n == cold(1)._1) assert(w.isNull, n)
+      else assert(math.abs(w.asDouble - cold.toMap.apply(n) / 7.0) < 1e-3, s"$n: $w")
+  }
+
   test("DumpPlans.dump writes one PlanShape row per query in both modes") {
     val names = Seq("q_agg_lineitem", "q_tfidf_topterms")
     val out = Files.createTempDirectory("graft_plans").toString

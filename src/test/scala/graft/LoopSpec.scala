@@ -111,7 +111,7 @@ class LoopSpec extends SparkSpec with NoCodegenFallback {
 
   test("the loop queries plan no Scala UDF") {
     // the check sees a UDF where there is one
-    assert(udfs(Queries.queries("q_fo2_iw_full")(spark, sf)).nonEmpty)
+    assert(udfs(Queries.queries("q_isobar_curves")(spark, sf)).nonEmpty)
     for (q <- loopQueries) {
       val df = Queries.queries(q)(spark, sf)
       // the one exemption: the per-curve not-a-knot spline fit

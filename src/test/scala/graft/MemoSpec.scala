@@ -11,7 +11,7 @@ import graft.functions.{Deng2020, IwFull, QfmFull}
 /** The fO2 EOS buffers' one formulation and the memos under it: QFM's and
   * IW's `fO2` is one column per row over any input, and every solver memo
   * ([[graft.functions.Memo]]) is bounded and counts each lookup. */
-class Fo2DedupSpec extends SparkSpec {
+class MemoSpec extends SparkSpec {
 
   private def fixture = {
     import spark.implicits._
@@ -170,12 +170,12 @@ class Fo2DedupSpec extends SparkSpec {
 
   test("production fO2 memo caches: fresh accumulators count every call, " +
       "eviction accounting conserves (evicted <= inserted)") {
-    // attach FRESH counters to the live caches (what Bench/Verify do),
+    // attach FRESH counters to the live loop memo (what Bench/Verify do),
     // then push a real solve through every family via the public entry
     // points. 8 partitions on the 4-thread session: task threads add to
     // the driver's shared counters concurrently, and every add must land.
     assert(QfmFull.attachMetrics(spark).isEmpty, "QFM counts in the loop memo")
-    val iwStats = IwFull.attachMetrics(spark)
+    assert(IwFull.attachMetrics(spark).isEmpty, "IW counts in the loop memo")
     val loops = Deng2020.attachMetrics(spark).dvdp
     val n = 400000L
     val df = spark.range(0, n, 1, 8).select(
@@ -185,31 +185,31 @@ class Fo2DedupSpec extends SparkSpec {
     QfmFull.withQfm(df, "T_K", "P_bar").agg(sum("fO2")).head()
     // every row looks up its three transitions exactly once
     assert(lookups == 3 * n, s"${loops.render}: $lookups lookups for $n QFM rows")
+    val misses = loops.misses.value
     IwFull.withIw(df, "T_K", "P_bar").agg(sum("fO2")).head()
+    // every row looks up the grids of FeO, FeO1.5 and the five Fe
+    // polymorphs exactly once each (P > 1 bar; O2 has no volume term)
+    assert(lookups == 10 * n, s"${loops.render}: $lookups lookups for $n QFM and IW rows")
+    // the memo persists across suites, so the hit/miss split is not
+    // pinned — but with 20 distinct pressures a working memo fills at
+    // most 7 grids for each
+    assert(loops.misses.value - misses <= 7L * 20L,
+      s"${loops.render}: ${loops.misses.value - misses} IW misses for 7 phases x 20 pressures")
+    // at and below 1 bar no grid is looked up
+    IwFull.withIw(spark.range(0, 1000, 1, 4).select(lit(1473.15).as("T_K"),
+      when(col("id") % 2 === 0, lit(1.0)).otherwise(lit(0.5)).as("P_bar")), "T_K", "P_bar")
+      .agg(sum("fO2")).head()
+    assert(lookups == 10 * n, s"${loops.render}: grid lookups at P <= 1 bar")
     dengFe3Fe2(df).agg(sum("Fe3Fe2")).head()
-    // ... and its dVdP once
-    assert(lookups == 4 * n, s"${loops.render}: $lookups lookups for $n QFM and Deng rows")
-    assert(iwStats.map(_.name) == Seq("iw.gridCache"), iwStats.map(_.name).toString)
-    for (st <- iwStats) {
-      // every row looks up the grids of FeO, FeO1.5 and the five Fe
-      // polymorphs exactly once each (P > 1 bar; O2 has no volume term)
-      assert(st.hits.value + st.misses.value == 7 * n,
-        s"${st.name}: ${st.hits.value} hits + ${st.misses.value} misses != 7 x $n")
-      // the caches persist across suites, so the hit/miss split is not
-      // pinned — but with 20 distinct pressures a working cache fills at
-      // most 7 grids for each
-      assert(st.misses.value <= 7L * 20L,
-        s"${st.name}: ${st.misses.value} misses for 7 phases x 20 pressures")
-    }
-    // 10 temperatures: 30 transition solves; 10 x at most 12 lattice
-    // lengths of dVdP
-    assert(loops.misses.value <= 30L + 120L, loops.render)
-    for (st <- iwStats :+ loops) {
-      // eviction accounting (the r9 concurrent-evictor bug): a cache can
-      // never have dropped more entries than were ever inserted
-      assert(st.evicted.value <= st.misses.value,
-        s"${st.name}: evicted ${st.evicted.value} > inserted ${st.misses.value}")
-    }
+    // ... and Deng's dVdP once
+    assert(lookups == 11 * n, s"${loops.render}: $lookups lookups for $n QFM, IW and Deng rows")
+    // 10 temperatures: 30 transition solves; 20 pressures: 140 IW grids;
+    // 10 x at most 12 lattice lengths of dVdP
+    assert(loops.misses.value <= 30L + 140L + 120L, loops.render)
+    // eviction accounting (the r9 concurrent-evictor bug): a memo can
+    // never have dropped more entries than were ever inserted
+    assert(loops.evicted.value <= loops.misses.value,
+      s"evicted ${loops.evicted.value} > inserted ${loops.misses.value}")
   }
 
   test("closure-captured Deng memo stats republish per task: counts " +
